@@ -18,11 +18,14 @@ object Tables {
     * byte-range-splits a huge single-row-group file into many
     * partitions of which only ONE emits rows, so `rdd.getNumPartitions`
     * overstates parallelism exactly where it matters — r11 ADVICE).
-    * Footer reads are driver-side metadata, done once per path per JVM. */
+    * Footer reads are driver-side metadata, done once per path per JVM.
+    * A failed read answers `Int.MaxValue` (unknown ⇒ assume splittable)
+    * WITHOUT memoizing it, so a transient IO error cannot pin "no
+    * spread" for the life of the JVM. */
   private val rowGroupCounts =
     scala.collection.concurrent.TrieMap.empty[String, Int]
-  private def rowGroups(spark: SparkSession, path: String): Int =
-    rowGroupCounts.getOrElseUpdate(path, try {
+  private[graft] def rowGroups(spark: SparkSession, path: String): Int =
+    rowGroupCounts.getOrElse(path, try {
       val conf = spark.sessionState.newHadoopConf()
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(conf)
@@ -31,12 +34,14 @@ object Tables {
           fs.listStatus(p).filter(f => f.isFile &&
             f.getPath.getName.endsWith(".parquet"))
         else Array(fs.getFileStatus(p))
-      files.map { f =>
+      val n = files.map { f =>
         val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
         try rd.getRowGroups.size finally rd.close()
       }.sum
-    } catch { case _: Throwable => Int.MaxValue }) // unknown ⇒ assume splittable
+      rowGroupCounts(path) = n
+      n
+    } catch { case _: Throwable => Int.MaxValue })
 
   /** Spread a freshly-scanned frame to the session's parallelism when
     * the scan itself cannot (guide §2.5 "input skew: one huge

@@ -424,15 +424,6 @@ SELECT va, vb, cosine FROM pairs WHERE cosine >= $CosThreshold ORDER BY va, vb""
   // ---------------------------------------------------------------- q25
   val CcIters = 8
 
-  /** Min-label propagation — the loop lives in
-    * [[graft.graph.ConnectedComponents]] since r6 (the facade exposes
-    * it on caller schemas); q25 keeps this forwarding alias because its
-    * `init` carries the FULL corpus (isolated docs become their own
-    * singleton clusters), which the edge-derived facade can't know. */
-  private[graft] def propagateLabels(und: DataFrame, init: DataFrame,
-                                     maxIters: Int): (DataFrame, Int) =
-    graft.graph.ConnectedComponents.propagate(und, init, maxIters)
-
   /** Near-dup clusters: connected components over the LSH candidate
     * pairs via iterative min-label propagation (round cap 8 — far
     * beyond the tiny cluster diameters here, with early exit on
@@ -444,9 +435,11 @@ SELECT va, vb, cosine FROM pairs WHERE cosine >= $CosThreshold ORDER BY va, vb""
     val und = cand.select(col("da").as("a"), col("db").as("b"))
       .unionAll(cand.select(col("db").as("a"), col("da").as("b")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the FULL corpus as init (not ConnectedComponents.run's edge-derived
+    // vertex set): isolated docs become their own singleton clusters
     val init = corpus(spark, sfDir)
       .select(col("doc_id").as("id"), col("doc_id").as("lbl"))
-    val (labels, _) = propagateLabels(und, init, CcIters)
+    val (labels, _) = graft.graph.ConnectedComponents.propagate(und, init, CcIters)
     und.unpersist()
     graft.Checkpoints.deferFree(labels)
     labels.select(col("id").as("doc_id"), col("lbl").as("cluster"),
@@ -911,7 +904,7 @@ ORDER BY t.doc_id"""
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val init = corpus(spark, sfDir)
       .select(col("doc_id").as("id"), col("doc_id").as("lbl"))
-    val (labels, _) = propagateLabels(und, init, CcIters)
+    val (labels, _) = graft.graph.ConnectedComponents.propagate(und, init, CcIters)
     und.unpersist()
     graft.Checkpoints.deferFree(labels)
     val len = corpus(spark, sfDir)

@@ -8,27 +8,20 @@ import org.apache.spark.sql.functions._
   * every page from the trusted set?), and the distance twin of
   * [[ConnectedComponents]]' min-label loop.
   *
-  * Scale shape: FRONTIER-based (r10). In an unweighted graph the first
-  * round that reaches a vertex reaches it at its true distance (level-
-  * synchronous BFS invariant), so settled vertices never change — each
-  * round therefore expands only the vertices settled in the PREVIOUS
-  * round, not the whole settled set. Per round that is one equi-join
-  * of the cached edge frame to the (shrinking) frontier, a partial-
-  * agged min per dst, and a left-anti join against the settled union;
-  * total join work across the loop is O(edges), where the former
-  * full-state formulation re-pushed every settled vertex every round
-  * (O(rounds × edges)) and re-checkpointed the full O(n) state each
-  * round. State is append-only: each round checkpoints only its OWN
-  * fresh pairs, the settled set is a lazy union of those materialized
-  * segments, and the union is compacted every [[CompactEvery]]
-  * segments so the plan (and the anti-join's scan list) stays bounded
-  * on long-diameter graphs. Early exit fires only at the fixed point,
-  * where further rounds are the identity — so a budget-K run is
-  * result-identical to exactly-K unrolled rounds whether or not the
-  * graph converged inside the budget (the q66 equality argument; the
-  * q69 oracle leans on it). Rounds needed = eccentricity of the seed
-  * set, so the budget is the caller's radius bound, not a correctness
-  * knob.
+  * Scale shape: FRONTIER-based ([[VertexLoop.frontier]]). In an
+  * unweighted graph the first round that reaches a vertex reaches it
+  * at its true distance (level-synchronous BFS invariant), so each
+  * round expands only the vertices settled in the PREVIOUS round. Per
+  * round that is one equi-join of the cached edge frame to the
+  * (shrinking) frontier, a partial-agged min per dst, and a left-anti
+  * join against the settled union; total join work across the loop is
+  * O(edges), where the former full-state formulation re-pushed every
+  * settled vertex every round (O(rounds × edges)). The fixed-point
+  * exit makes a budget-K run result-identical to exactly-K unrolled
+  * rounds whether or not the graph converged inside the budget (the
+  * q66 equality argument; the q69 oracle leans on it). Rounds needed =
+  * eccentricity of the seed set, so the budget is the caller's radius
+  * bound, not a correctness knob.
   */
 object Bfs {
 
@@ -46,10 +39,9 @@ object Bfs {
     * @return (id, dist) — dist is NULL for vertices unreached within
     *         `maxIters` hops. CONSUME BEFORE DRAIN: the returned join
     *         is lazy over localCheckpoint segments that are already
-    *         [[graft.Checkpoints.deferFree]]'d (and compaction defers
-    *         the then-live frontier segment the same way), so a caller
-    *         that calls `Checkpoints.drain` before materializing the
-    *         result would read unpersisted, lineage-truncated blocks —
+    *         [[graft.Checkpoints.deferFree]]'d, so a caller that calls
+    *         `Checkpoints.drain` before materializing the result would
+    *         read unpersisted, lineage-truncated blocks —
     *         unrecoverable by recompute. Materialize (count/collect/
     *         write/localCheckpoint) first; the bench/Verify
     *         drain-BETWEEN-queries contract does exactly that. */
@@ -69,51 +61,13 @@ object Bfs {
     val seg0 = verts
       .join(seeds.select(col("id")), Seq("id"), "left_semi")
       .select(col("id"), lit(0L).as("dist"))
-      .localCheckpoint()
-    val segments = scala.collection.mutable.ListBuffer(seg0)
-    var settled = seg0 // lazy union of materialized segments
-    var frontier = seg0
-    var rounds = 0
-    var done = false
-    while (rounds < maxIters && !done) {
-      val pulled = e.join(frontier, col("src") === col("id"))
+    val settled = VertexLoop.frontier(seg0, Seq("id"), maxIters) { frontier =>
+      e.join(frontier, col("src") === col("id"))
         .groupBy(col("dst")).agg((min(col("dist")) + 1L).as("dist"))
         .select(col("dst").as("id"), col("dist"))
-      val fresh = pulled
-        .join(settled.select(col("id")), Seq("id"), "left_anti")
-        .localCheckpoint()
-      if (fresh.isEmpty) {
-        graft.Checkpoints.free(fresh)
-        done = true
-      } else {
-        segments += fresh
-        settled = settled.unionByName(fresh)
-        frontier = fresh
-        // Long-diameter loops: an unbounded union grows the plan (and
-        // the per-round anti-join's scan list) linearly, turning total
-        // planning + scan cost quadratic in rounds. Compact every
-        // [[CompactEvery]] segments — one O(settled) copy per
-        // compaction keeps total copy cost at rounds/C full snapshots
-        // instead of the one-per-round the pre-r10 shape paid.
-        if (segments.size >= CompactEvery) {
-          val merged = settled.localCheckpoint()
-          segments.foreach { s =>
-            if (s ne fresh) graft.Checkpoints.free(s)
-            else graft.Checkpoints.deferFree(s) // still the live frontier
-          }
-          segments.clear()
-          segments += merged
-          settled = merged
-        }
-      }
-      rounds += 1
     }
     e.unpersist()
-    segments.foreach(graft.Checkpoints.deferFree(_))
     graft.Checkpoints.deferFree(verts)
     verts.join(settled, Seq("id"), "left").select(col("id"), col("dist"))
   }
-
-  /** Segment-union compaction interval (see the loop comment). */
-  private val CompactEvery = 8
 }

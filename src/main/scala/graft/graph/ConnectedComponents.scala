@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is one groupBy(min) over the edge frame
   * joined to the current labels — hash-partitioned equi-joins, partial
-  * aggregation, one checkpointed label snapshot live at a time
-  * (Checkpoints.rotate). Convergence is detected (a round that changes
-  * no label ends the loop) rather than guessed, because component
-  * diameter isn't known a priori at 100× data; early exit is
+  * aggregation, run by [[VertexLoop.iterate]]. Convergence is detected
+  * (a round that changes no label ends the loop) rather than guessed,
+  * because component diameter isn't known a priori at 100× data; early
+  * exit is
   * result-identical to running the full budget (the update is monotone
   * and idempotent at the fixed point). Plain min-label propagation
   * needs O(diameter) rounds; for web-scale graphs with long chains,
@@ -28,29 +28,20 @@ object ConnectedComponents {
     * rounds ran (moved here from DedupQueries in r6 — q25 and the
     * facade share this loop).
     *
-    * @return (labels(id, lbl, chg), rounds actually run) */
+    * @return (labels(id, lbl, chg), rounds actually run) — the
+    *         snapshot itself, so the caller can free its blocks */
   private[graft] def propagate(und: DataFrame, init: DataFrame,
-                               maxIters: Int): (DataFrame, Int) = {
-    var labels = init.select(col("id"), col("lbl")).localCheckpoint()
-    var rounds = 0
-    var converged = false
-    while (rounds < maxIters && !converged) {
+                               maxIters: Int): (DataFrame, Int) =
+    VertexLoop.iterate(init.select(col("id"), col("lbl")), maxIters,
+        VertexLoop.unchanged) { labels =>
       val pulled = und.join(labels.select(col("id"), col("lbl")), col("b") === col("id"))
         .groupBy(col("a")).agg(min(col("lbl")).as("ml"))
         .withColumnRenamed("a", "mid")
-      val next = labels.join(pulled, col("id") === col("mid"), "left")
+      labels.join(pulled, col("id") === col("mid"), "left")
         .select(col("id"),
           least(col("lbl"), coalesce(col("ml"), col("lbl"))).as("lbl"),
           (coalesce(col("ml"), col("lbl")) < col("lbl")).as("chg"))
-      labels = graft.Checkpoints.rotate(next, labels)
-      rounds += 1
-      // one limit-1 job on the already-materialized checkpoint
-      converged = labels.filter(col("chg")).isEmpty
     }
-    // return the checkpoint itself (not a projection) so the caller can
-    // deferFree its blocks; it carries (id, lbl, chg)
-    (labels, rounds)
-  }
 
   /** (id, component) for every endpoint of `edges(src, dst)` —
     * component = minimum vertex id reachable over undirected paths.

@@ -42,9 +42,7 @@ object GraphXLinkRank {
     // twice with no shared partitioner.
     val vmap = LinkRank.vmapFor(spark, WebGraph.vertices(edges), cacheKey)
 
-    val edgeRdd: RDD[Edge[Unit]] = edges
-      .join(vmap.withColumnRenamed("id", "src").withColumnRenamed("vid", "svid"), "src")
-      .join(vmap.withColumnRenamed("id", "dst").withColumnRenamed("vid", "dvid"), "dst")
+    val edgeRdd: RDD[Edge[Unit]] = VertexLoop.vidEdges(edges, vmap)
       .select(col("svid"), col("dvid")).rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), ()))
 

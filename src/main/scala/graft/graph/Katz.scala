@@ -25,7 +25,7 @@ import org.apache.spark.storage.StorageLevel
   *    frame, never edges;
   *  - each neighbor sum grids its terms round(,12) and accumulates as
   *    DECIMAL(38,12) (the q261 association-free discipline);
-  *  - state is checkpoint-rotated (one live snapshot). */
+  *  - rounds run through [[VertexLoop.iterate]]. */
 object Katz {
 
   /** @return (id, katz) — raw truncated-Katz scores after `iters`
@@ -33,10 +33,7 @@ object Katz {
   def run(spark: SparkSession, edges: DataFrame, alpha: Double = 0.125,
           iters: Int = 5, cacheKey: Option[String] = None): DataFrame = {
     val vmap = LinkRank.vmapFor(spark, WebGraph.vertices(edges), cacheKey)
-    def mapped: DataFrame = edges
-      .join(vmap.withColumnRenamed("id", "src").withColumnRenamed("vid", "svid"), "src")
-      .join(vmap.withColumnRenamed("id", "dst").withColumnRenamed("vid", "dvid"), "dst")
-      .select(col("svid"), col("dvid"))
+    def mapped: DataFrame = VertexLoop.vidEdges(edges, vmap).select(col("svid"), col("dvid"))
     val e = cacheKey match {
       case Some(k) =>
         graft.SessionCache.cached(spark, s"katz-e:$k")(mapped.repartition(col("dvid")))
@@ -47,14 +44,12 @@ object Katz {
     def decSum(c: Column) =
       sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
 
-    var x = verts.select(col("vid"), lit(1.0).as("x")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val nx = verts
+    val (x, _) = VertexLoop.iterate(verts.select(col("vid"), lit(1.0).as("x")), iters) { x =>
+      verts
         .join(e.join(x, col("svid") === col("vid")).drop("vid")
             .groupBy(col("dvid")).agg(decSum(col("x") * alpha).as("s")),
           col("vid") === col("dvid"), "left")
         .select(col("vid"), (lit(1.0) + coalesce(col("s"), lit(0.0))).as("x"))
-      x = graft.Checkpoints.rotate(nx, x)
     }
     val out = x.join(vmap, "vid").select(col("id"), col("x").as("katz"))
     graft.Checkpoints.deferFree(x)

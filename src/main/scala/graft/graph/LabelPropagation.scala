@@ -21,10 +21,10 @@ import org.apache.spark.sql.expressions.Window
   * Scale shape (the ConnectedComponents loop contract): each round is
   * one equi-join of the edge frame to the current label frame, a
   * partial-agged (vertex, label) count, and a per-vertex top-1 window —
-  * all hash-partitioned on vertex id; one checkpointed label snapshot
-  * lives at a time (Checkpoints.rotate). Early exit fires only at the
-  * fixed point, where further rounds are identity — so budget-K with
-  * early exit ≡ exactly-K rounds, the q66/q69 oracle-equality argument.
+  * all hash-partitioned on vertex id, run by [[VertexLoop.iterate]].
+  * Early exit fires only at the fixed point, where further rounds are
+  * identity — so budget-K with early exit ≡ exactly-K rounds, the
+  * q66/q69 oracle-equality argument.
   * (Synchronous LPA can 2-cycle on bipartite regions; those never
   * reach the fixed point and simply run the full budget — identical on
   * both engines.)
@@ -54,10 +54,7 @@ object LabelPropagation {
       .select(col("id"), coalesce(col("seed_lbl"), lit(-1L)).as("lbl"),
         col("seed_lbl").isNotNull.as("is_seed"))
 
-    var labels = init.localCheckpoint()
-    var rounds = 0
-    var converged = false
-    while (rounds < maxIters && !converged) {
+    val (labels, _) = VertexLoop.iterate(init, maxIters, VertexLoop.unchanged) { labels =>
       // neighbor label histogram, labeled (>=0) neighbors only
       val pulled = und
         .join(labels.select(col("id"), col("lbl")), col("b") === col("id"))
@@ -67,16 +64,13 @@ object LabelPropagation {
       val best = pulled.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("a").as("mid"), col("lbl").as("best"))
-      val next = labels.join(best, col("id") === col("mid"), "left")
+      labels.join(best, col("id") === col("mid"), "left")
         .select(col("id"),
           when(col("is_seed"), col("lbl"))
             .otherwise(coalesce(col("best"), col("lbl"))).as("lbl"),
           col("is_seed"),
           (!col("is_seed") && coalesce(col("best"), col("lbl")) =!= col("lbl"))
             .as("chg"))
-      labels = graft.Checkpoints.rotate(next, labels)
-      rounds += 1
-      converged = labels.filter(col("chg")).isEmpty
     }
     und.unpersist()
     graft.Checkpoints.deferFree(labels)

@@ -44,10 +44,8 @@ object LinkPrediction {
     // re-established on the original ids after the map-back.
     val vmap = LinkRank.vmapFor(edges.sparkSession,
       und0.select(col("a").as("id")).distinct(), None)
-    val und = und0
-      .join(vmap.select(col("id").as("a"), col("vid").as("va")), "a")
-      .join(vmap.select(col("id").as("b"), col("vid").as("vb")), "b")
-      .select(col("va").as("a"), col("vb").as("b"))
+    val und = VertexLoop.vidEdges(und0.select(col("a").as("src"), col("b").as("dst")), vmap)
+      .select(col("svid").as("a"), col("dvid").as("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = und.groupBy(col("a").as("w")).agg(count(lit(1)).as("deg"))
     val capped = if (degreeCap > 0) deg.filter(col("deg") <= degreeCap) else deg

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.MathFunctions
@@ -26,11 +26,10 @@ import graft.functions.MathFunctions
   *    the big edge table);
   *  - the per-iteration contribution aggregation is a groupBy(dst) with
   *    map-side partial aggregation;
-  *  - dangling mass is a scalar agg collected to the driver (O(1) rows)
-  *    and injected as a literal — never a per-row join;
-  *  - lineage is truncated every iteration with localCheckpoint (on a
-  *    real cluster swap in checkpoint-to-DFS) so 9 iterations don't
-  *    build a 9-deep re-plan.
+  *  - dangling mass is a 1-row aggregate broadcast into the same job —
+  *    never a per-row join;
+  *  - rounds run through [[VertexLoop.iterate]] (on a real cluster swap
+  *    in checkpoint-to-DFS).
   */
 object LinkRank {
 
@@ -79,97 +78,20 @@ object LinkRank {
                  tol: Option[Double] = None,
                  normalize: Boolean = true): (DataFrame, Int) = {
 
-    // The edge list is consumed by outdeg, the join base, and (via the
-    // caller's init) the vertex set. Pass an already-cached frame
-    // (WebGraph.cachedEdges) so the derivation runs once per session —
-    // run() does not persist/unpersist it, the cache is caller-owned.
-
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-
-    // Dense long vertex ids: web URLs are long strings, and the 9
-    // iterations shuffle on the vertex key every step — mapping to an
-    // 8-byte surrogate once (and back once at the end) shrinks every
-    // iteration's shuffle/sort keys. The mapping is checkpointed so
-    // monotonically_increasing_id is assigned exactly once.
-    // With cacheKey set, (vmap, eod) are loop-invariant per GRAPH, not
-    // per run — q01/q02/q10 all rank the same page graph, so the id
-    // mapping and the joined edge side build once per session.
-    val vmap = vmapFor(spark, init.select(col("id")), cacheKey)
-
-    // (svid, dvid, od): the loop-invariant edge side, long keys,
-    // partitioned once.
-    val eod = eodFor(spark, edges, vmap, cacheKey)
-
-    // Vertex frame with loop-invariant flags, keyed by vid.
-    val base = init.join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .join(vmap, "id")
-      .select(col("vid"), col("score"),
-        col("od").isNull.as("dangling"),
-        (if (trustedMode) abs(col("score") - 1.0) < 1e-3 else lit(false)).as("trusted"))
-      .repartition(col("vid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // One pass for both loop constants.
-    val cnts = base.agg(count(lit(1)),
-      coalesce(sum(when(col("trusted"), 1L).otherwise(0L)), lit(0L))).first()
-    val n = cnts.getLong(0).toDouble
-    val divisor = if (trustedMode) cnts.getLong(1).toDouble else n
-
-    var ranks = base.localCheckpoint()
-    base.unpersist()
-
-    var rounds = 0
-    var converged = false
-    while (rounds < iters && !converged) {
-      // Dangling mass as a 1-row aggregate cross-joined in (broadcast
-      // nested loop of a single row): the whole update is ONE job —
-      // no driver round-trip between reading D and applying it.
-      val dang = ranks.filter(col("dangling"))
-        .agg(coalesce(sum(col("score")), lit(0.0)).as("ds"))
-      val dTerm =
-        if (trustedMode) when(col("trusted"), col("ds") / lit(divisor)).otherwise(lit(0.0))
-        else col("ds") / lit(n)
-      val contribs = eod
-        .join(ranks.select(col("vid"), col("score")), eod("svid") === col("vid"))
-        .groupBy(col("dvid")).agg(sum(col("score") / col("od")).as("contrib"))
-        .withColumnRenamed("dvid", "cid")
-      val newScore = lit((1.0 - damping) / n) +
-        lit(damping) * (coalesce(col("contrib"), lit(0.0)) + dTerm)
-      val prevCp = ranks
-      val deltaCols = // only carried (and paid for) in tolerance mode
-        if (tol.isDefined) Seq(abs(newScore - col("score")).as("delta")) else Seq.empty
-      ranks = ranks
-        .join(contribs, col("vid") === col("cid"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("vid") +: col("dangling") +: col("trusted") +:
-          newScore.as("score") +: deltaCols: _*)
-      // Checkpoint every iteration: the next step's dangling-mass
-      // broadcast subplan reads `ranks` too, so an unmaterialized chain
-      // would be recomputed once per consumer — measured worse than the
-      // extra materialization barrier (batching every 3 steps was tried
-      // and reverted). rotate() frees the predecessor's blocks, so the
-      // loop holds exactly one live rank snapshot instead of piling up
-      // one block set per iteration for the life of the session.
-      ranks = graft.Checkpoints.rotate(ranks, prevCp)
-      rounds += 1
-      tol.foreach { eps => // one scalar job on the materialized snapshot
+    // one scalar job per round on the materialized snapshot
+    val converged: DataFrame => Boolean = tol.fold((_: DataFrame) => false) { eps =>
+      ranks => {
         val d = ranks.agg(max(col("delta"))).first()
-        converged = d.isNullAt(0) || d.getDouble(0) < eps // null = empty graph
+        d.isNullAt(0) || d.getDouble(0) < eps // null = empty graph
       }
     }
+    // delta is only carried (and paid for) in tolerance mode
+    val (ranks, rounds, vmap, eod, n) = dampedLoop(spark, edges, init, iters,
+      damping, trustedMode, cacheKey, converged,
+      s => if (tol.isDefined) Seq(abs(s - col("score")).as("delta")) else Nil)
 
-    if (!normalize) {
-      // raw damped scores (warm-start food): nothing is materialized
-      // beyond the loop's checkpoint, so every block is freed at the
-      // caller's drain, after its action.
-      val out = ranks.join(vmap, "vid").select(col("id"), col("score"))
-      graft.Checkpoints.deferFree(ranks)
-      if (cacheKey.isEmpty) {
-        eod.unpersist()
-        graft.Checkpoints.deferCleanup(spark)(() => graft.Checkpoints.free(vmap))
-      }
-      return (out, rounds)
-    }
+    if (!normalize) // raw damped scores (warm-start food)
+      return (release(spark, ranks, vmap, eod, cacheKey), rounds)
 
     // Log-normal CDF normalization — two explicit passes (sum, then
     // squared deviations) so the oracle's CTE arithmetic is identical.
@@ -195,6 +117,110 @@ object LinkRank {
     (out, rounds)
   }
 
+  /** [[runCounted]]'s and [[runTrace]]'s damped loop: the id map, the
+    * edge side and the loop init (with the loop constants N and the
+    * dangling divisor), then up to `iters` updates through
+    * [[VertexLoop.iterate]]. Snapshots carry
+    * (vid, dangling, trusted, score) plus `extra(score')`.
+    *
+    * Every update is checkpointed: the next step's dangling-mass
+    * broadcast subplan reads the snapshot too, so an unmaterialized
+    * chain would be recomputed once per consumer — measured worse than
+    * the extra materialization barrier (batching every 3 steps was
+    * tried and reverted).
+    *
+    * @return (last snapshot, rounds, vmap, eod, N) */
+  private def dampedLoop(spark: SparkSession, edges: DataFrame, init: DataFrame,
+                         iters: Int, damping: Double, trustedMode: Boolean,
+                         cacheKey: Option[String], stop: DataFrame => Boolean,
+                         extra: Column => Seq[Column])
+      : (DataFrame, Int, DataFrame, DataFrame, Double) = {
+    // The edge list is consumed by outdeg, the join base, and (via the
+    // caller's init) the vertex set. Pass an already-cached frame
+    // (WebGraph.cachedEdges) so the derivation runs once per session —
+    // the loop does not persist/unpersist it, the cache is caller-owned.
+    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
+
+    // Dense long vertex ids: web URLs are long strings, and every
+    // iteration shuffles on the vertex key — mapping to an 8-byte
+    // surrogate once (and back once at the end) shrinks every
+    // iteration's shuffle/sort keys. With cacheKey set, (vmap, eod) are
+    // loop-invariant per GRAPH, not per run — q01/q02/q10 all rank the
+    // same page graph, so the id mapping and the joined edge side build
+    // once per session.
+    val vmap = vmapFor(spark, init.select(col("id")), cacheKey)
+    val eod = eodFor(spark, edges, vmap, cacheKey)
+
+    // Vertex frame with loop-invariant flags, keyed by vid.
+    val base = init.join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
+      .join(vmap, "id")
+      .select(col("vid"), col("score"),
+        col("od").isNull.as("dangling"),
+        (if (trustedMode) abs(col("score") - 1.0) < 1e-3 else lit(false)).as("trusted"))
+      .repartition(col("vid"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+    // One pass for both loop constants.
+    val cnts = base.agg(count(lit(1)),
+      coalesce(sum(when(col("trusted"), 1L).otherwise(0L)), lit(0L))).first()
+    val n = cnts.getLong(0).toDouble
+    val divisor = if (trustedMode) cnts.getLong(1).toDouble else n
+    val dTerm =
+      if (trustedMode) when(col("trusted"), col("ds") / lit(divisor)).otherwise(lit(0.0))
+      else col("ds") / lit(n)
+
+    val (ranks, rounds) = VertexLoop.iterate(base, iters, stop) { cp =>
+      dampedStep(cp.select(col("vid"), col("dangling"), col("trusted"), col("score")),
+        eod, damping, col("score") / col("od"), lit((1.0 - damping) / n), dTerm) { s =>
+        Seq(col("vid"), col("dangling"), col("trusted"), s.as("score")) ++ extra(s)
+      }
+    }
+    (ranks, rounds, vmap, eod, n)
+  }
+
+  /** One synchronous damped update of `ranks(vid, dangling, score, …)`
+    * over the loop-invariant edge side `eod(svid, dvid, …)`:
+    *   score' = teleport + d · (Σ_{u→v} edgeContrib + dangling)
+    * `edgeContrib` is evaluated per edge after the score join
+    * (score / od for the uniform walk); `teleport` and `dangling` per
+    * vertex, with the previous snapshot's dangling mass as `ds`. The
+    * dangling mass is a 1-row aggregate cross-joined in (a broadcast
+    * nested loop of one row), so the whole update is ONE job — no
+    * driver round-trip between reading D and applying it. `out` maps
+    * score' to the output columns. */
+  private[graph] def dampedStep(ranks: DataFrame, eod: DataFrame, damping: Double,
+                                edgeContrib: Column, teleport: Column,
+                                dangling: Column)
+                               (out: Column => Seq[Column]): DataFrame = {
+    val dang = ranks.filter(col("dangling"))
+      .agg(coalesce(sum(col("score")), lit(0.0)).as("ds"))
+    val contribs = eod
+      .join(ranks.select(col("vid"), col("score")), eod("svid") === col("vid"))
+      .groupBy(col("dvid")).agg(sum(edgeContrib).as("contrib"))
+      .withColumnRenamed("dvid", "cid")
+    val newScore = teleport +
+      lit(damping) * (coalesce(col("contrib"), lit(0.0)) + dangling)
+    ranks
+      .join(contribs, col("vid") === col("cid"), "left")
+      .crossJoin(broadcast(dang))
+      .select(out(newScore): _*)
+  }
+
+  /** The raw (id, score) result of a damped loop. The last snapshot's
+    * blocks are freed at the caller's drain, after its action; without
+    * a `cacheKey` the run-local edge side goes now and the id map at
+    * the drain. */
+  private[graph] def release(spark: SparkSession, ranks: DataFrame, vmap: DataFrame,
+                             eod: DataFrame, cacheKey: Option[String]): DataFrame = {
+    val out = ranks.join(vmap, "vid").select(col("id"), col("score"))
+    graft.Checkpoints.deferFree(ranks)
+    if (cacheKey.isEmpty) {
+      eod.unpersist()
+      graft.Checkpoints.deferCleanup(spark)(() => graft.Checkpoints.free(vmap))
+    }
+    out
+  }
+
   /** The loop-invariant edge side (svid, dvid, od): edges joined with
     * out-degrees, both endpoints mapped to 8-byte surrogate ids,
     * hash-partitioned on svid ONCE so every iteration's contribution
@@ -204,10 +230,8 @@ object LinkRank {
   private[graph] def eodFor(spark: SparkSession, edges: DataFrame,
                             vmap: DataFrame,
                             cacheKey: Option[String]): DataFrame = {
-    def build: DataFrame = edges
-      .join(edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src")
-      .join(vmap.withColumnRenamed("id", "src").withColumnRenamed("vid", "svid"), "src")
-      .join(vmap.withColumnRenamed("id", "dst").withColumnRenamed("vid", "dvid"), "dst")
+    def build: DataFrame = VertexLoop
+      .vidEdges(edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src"), vmap)
       .select(col("svid"), col("dvid"), col("od"))
       .repartition(col("svid"))
     cacheKey match {
@@ -251,45 +275,24 @@ object LinkRank {
   def runTrace(spark: SparkSession, edges: DataFrame, init: DataFrame,
                iters: Int = 9, damping: Double = 0.85,
                cacheKey: Option[String] = None): DataFrame = {
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val vmap = vmapFor(spark, init.select(col("id")), cacheKey)
-    val eod = eodFor(spark, edges, vmap, cacheKey)
-    val base = init.join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .join(vmap, "id")
-      .select(col("vid"), col("score"), col("od").isNull.as("dangling"))
-      .repartition(col("vid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = base.count().toDouble
-    var cp = base.localCheckpoint()
-    base.unpersist()
-    var ranks = cp
-    val trace = Seq.newBuilder[(Int, Double, Double, Double)]
-    for (k <- 1 to iters) {
-      val dang = ranks.filter(col("dangling"))
-        .agg(coalesce(sum(col("score")), lit(0.0)).as("ds"))
-      val contribs = eod
-        .join(ranks.select(col("vid"), col("score")), eod("svid") === col("vid"))
-        .groupBy(col("dvid")).agg(sum(col("score") / col("od")).as("contrib"))
-        .withColumnRenamed("dvid", "cid")
-      val newScore = lit((1.0 - damping) / n) +
-        lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("ds") / lit(n))
-      val next = ranks
-        .join(contribs, col("vid") === col("cid"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("vid"), col("dangling"), newScore.as("score"),
-          abs(newScore - col("score")).as("delta"), col("ds"))
-      cp = graft.Checkpoints.rotate(next, cp)
-      val st = cp.agg(max(col("ds")), sum(col("delta")), sum(col("score"))).first()
-      trace += ((k, st.getDouble(0), st.getDouble(1), st.getDouble(2)))
-      ranks = cp.select(col("vid"), col("dangling"), col("score"))
-    }
-    graft.Checkpoints.deferFree(cp)
+    val trace = Seq.newBuilder[(Double, Double, Double)]
+    val (ranks, _, vmap, eod, _) = dampedLoop(spark, edges, init, iters, damping,
+      trustedMode = false, cacheKey,
+      stop = { cp =>
+        val st = cp.agg(max(col("ds")), sum(col("delta")), sum(col("score"))).first()
+        trace += ((st.getDouble(0), st.getDouble(1), st.getDouble(2)))
+        false
+      },
+      extra = s => Seq(abs(s - col("score")).as("delta"), col("ds")))
+    // the trace is driver-side rows: nothing reads the loop state again
+    graft.Checkpoints.free(ranks)
     if (cacheKey.isEmpty) {
       eod.unpersist()
-      graft.Checkpoints.deferCleanup(spark)(() => graft.Checkpoints.free(vmap))
+      graft.Checkpoints.free(vmap)
     }
     import spark.implicits._
-    trace.result()
+    trace.result().zipWithIndex
+      .map { case ((ds, l1, mass), k) => (k + 1, ds, l1, mass) }
       .toDF("round", "raw_ds", "raw_l1", "raw_mass")
       .select(col("round"),
         round(col("raw_ds"), 6).as("dangling_mass"),

@@ -14,15 +14,7 @@ import org.apache.spark.sql.functions._
   * equi-join of the cached edge side to the current pairs, a partial-
   * agged min per (dst, seed), and a left-anti join against the pairs
   * already settled (first reach IS the min distance in an unweighted
-  * graph, so settled pairs never change — the loop only APPENDS).
-  * Because the state is append-only, each round checkpoints only its
-  * OWN fresh pairs and `reached` stays a lazy union of those
-  * materialized segments — re-checkpointing the full union every round
-  * (the former shape) copied the entire O(n·K) state once per round,
-  * turning total materialization cost from O(n·K) into O(rounds·n·K).
-  * The early exit fires when a round settles nothing, which is the
-  * fixed point (the q66 equality argument: a budget-K run equals K
-  * unrolled rounds).
+  * graph, so settled pairs never change): [[VertexLoop.frontier]].
   */
 object MultiBfs {
 
@@ -38,51 +30,13 @@ object MultiBfs {
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seg0 = seeds.select(col("id"), col("id").as("seed"), lit(0L).as("dist"))
-      .localCheckpoint()
-    val segments = scala.collection.mutable.ListBuffer(seg0)
-    var reached = seg0 // lazy union of materialized segments
-    var frontier = seg0
-    var rounds = 0
-    var done = false
-    while (rounds < maxIters && !done) {
-      // expand only the LAST round's new pairs: older pairs already
-      // pushed their neighbors in the round they were settled
-      val pulled = e.join(frontier, col("src") === col("id"))
+    val reached = VertexLoop.frontier(seg0, Seq("id", "seed"), maxIters) { frontier =>
+      e.join(frontier, col("src") === col("id"))
         .groupBy(col("dst"), col("seed"))
         .agg((min(col("dist")) + 1L).as("dist"))
         .select(col("dst").as("id"), col("seed"), col("dist"))
-      val fresh = pulled.join(reached.select(col("id"), col("seed")),
-          Seq("id", "seed"), "left_anti")
-        .localCheckpoint()
-      if (fresh.isEmpty) {
-        graft.Checkpoints.free(fresh)
-        done = true
-      } else {
-        segments += fresh
-        reached = reached.unionByName(fresh)
-        frontier = fresh
-        // Bound the union plan: past [[CompactEvery]] segments the
-        // per-round anti-join re-plans and re-scans a linearly growing
-        // scan list (quadratic in rounds) — compact to ONE snapshot,
-        // paying rounds/C full copies instead of one per round.
-        if (segments.size >= CompactEvery) {
-          val merged = reached.localCheckpoint()
-          segments.foreach { s =>
-            if (s ne fresh) graft.Checkpoints.free(s)
-            else graft.Checkpoints.deferFree(s) // still the live frontier
-          }
-          segments.clear()
-          segments += merged
-          reached = merged
-        }
-      }
-      rounds += 1
     }
     e.unpersist()
-    segments.foreach(graft.Checkpoints.deferFree(_))
     reached
   }
-
-  /** Segment-union compaction interval (see the loop comment). */
-  private val CompactEvery = 8
 }

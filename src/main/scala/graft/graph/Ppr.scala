@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Personalized PageRank (random walk with restart) on DataFrames —
   * the seed-centric member of the rank family next to LinkRank's
@@ -21,8 +20,8 @@ import org.apache.spark.storage.StorageLevel
   * Scale posture: identical to LinkRank (shared code) — the
   * (svid, dvid, od) edge side is built/partitioned once per graph and
   * SessionCache-shared with LinkRank/TrustRank loops on the same
-  * graph; dangling mass is a 1-row broadcast aggregate inside the
-  * iteration's job; checkpoint rotation holds one live snapshot.
+  * graph; each round is [[LinkRank.dampedStep]] under
+  * [[VertexLoop.iterate]].
   *
   * Float-grid caveat (the LinkRank convention, accepted here too): the
   * per-round contribution sum runs in IEEE double with
@@ -45,50 +44,26 @@ object Ppr {
     val vmap = LinkRank.vmapFor(spark, WebGraph.vertices(edges), cacheKey)
     val eod = LinkRank.eodFor(spark, edges, vmap, cacheKey)
 
-    // |S| as an O(1)-row driver scalar (the dangling-mass pattern);
-    // seeds outside the graph's vertex set are ignored by the join.
+    // |S| as a driver scalar; seeds outside the graph's vertex set are
+    // ignored by the join.
     val seedVids = seeds.select(col("id")).distinct().join(vmap, "id")
       .select(col("vid").as("svid_seed"))
-    val base = vmap
+    val ns = seedVids.count()
+    require(ns > 0, s"Ppr.run: empty seed set (no seed id is a graph vertex)")
+
+    val rInit = when(col("svid_seed").isNotNull, lit(1.0 / ns)).otherwise(lit(0.0))
+    val init = vmap
       .join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
       .join(seedVids, col("vid") === col("svid_seed"), "left")
       .select(col("vid"), col("od").isNull.as("dangling"),
-        col("svid_seed").isNotNull.as("seed"))
+        rInit.as("r"), rInit.as("score"))
       .repartition(col("vid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ns = base.agg(coalesce(sum(when(col("seed"), 1L).otherwise(0L)),
-      lit(0L))).first().getLong(0)
-    require(ns > 0, s"Ppr.run: empty seed set (no seed id is a graph vertex)")
-
-    val rInit = when(col("seed"), lit(1.0 / ns)).otherwise(lit(0.0))
-    var ranks = base.select(col("vid"), col("dangling"),
-      rInit.as("r"), rInit.as("score")).localCheckpoint()
-    base.unpersist()
-
-    val oneMinusD = 1.0 - damping
-    for (_ <- 1 to iters) {
-      val dang = ranks.filter(col("dangling"))
-        .agg(coalesce(sum(col("score")), lit(0.0)).as("ds"))
-      val contribs = eod
-        .join(ranks.select(col("vid"), col("score")), eod("svid") === col("vid"))
-        .groupBy(col("dvid")).agg(sum(col("score") / col("od")).as("contrib"))
-        .withColumnRenamed("dvid", "cid")
-      val newScore = lit(oneMinusD) * col("r") +
-        lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("ds") * col("r"))
-      val prevCp = ranks
-      ranks = ranks
-        .join(contribs, col("vid") === col("cid"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("vid"), col("dangling"), col("r"), newScore.as("score"))
-      ranks = graft.Checkpoints.rotate(ranks, prevCp)
+    val (ranks, _) = VertexLoop.iterate(init, iters) { ranks =>
+      LinkRank.dampedStep(ranks, eod, damping, col("score") / col("od"),
+        lit(1.0 - damping) * col("r"), col("ds") * col("r")) { s =>
+        Seq(col("vid"), col("dangling"), col("r"), s.as("score"))
+      }
     }
-
-    val out = ranks.join(vmap, "vid").select(col("id"), col("score"))
-    graft.Checkpoints.deferFree(ranks)
-    if (cacheKey.isEmpty) {
-      eod.unpersist()
-      graft.Checkpoints.deferCleanup(spark)(() => graft.Checkpoints.free(vmap))
-    }
-    out
+    LinkRank.release(spark, ranks, vmap, eod, cacheKey)
   }
 }

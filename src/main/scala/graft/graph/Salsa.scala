@@ -39,10 +39,7 @@ object Salsa {
           cacheKey: Option[String] = None): DataFrame = {
     val ids = WebGraph.vertices(edges)
     val vmap = LinkRank.vmapFor(spark, ids, cacheKey)
-    def mapped: DataFrame = edges
-      .join(vmap.withColumnRenamed("id", "src").withColumnRenamed("vid", "svid"), "src")
-      .join(vmap.withColumnRenamed("id", "dst").withColumnRenamed("vid", "dvid"), "dst")
-      .select(col("svid"), col("dvid"))
+    def mapped: DataFrame = VertexLoop.vidEdges(edges, vmap).select(col("svid"), col("dvid"))
     def cache(df: DataFrame, key: String): DataFrame = cacheKey match {
       case Some(k) => graft.SessionCache.cached(spark, s"salsa-$key:$k")(df)
       case None => df.persist(StorageLevel.MEMORY_AND_DISK)

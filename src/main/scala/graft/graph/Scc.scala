@@ -36,9 +36,7 @@ object Scc {
   def run(spark: SparkSession, edges: DataFrame, numIter: Int,
           cacheKey: Option[String] = None): DataFrame = {
     val vmap = LinkRank.vmapFor(spark, WebGraph.vertices(edges), cacheKey)
-    val edgeRdd = edges
-      .join(vmap.withColumnRenamed("id", "src").withColumnRenamed("vid", "svid"), "src")
-      .join(vmap.withColumnRenamed("id", "dst").withColumnRenamed("vid", "dvid"), "dst")
+    val edgeRdd = VertexLoop.vidEdges(edges, vmap)
       .select(col("svid"), col("dvid")).rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), ()))
     val graph = Graph.fromEdges(edgeRdd, (),

@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
   * each round is one groupBy(dst).min(dist + w) over the edge frame
   * joined to the current frontier — hash-partitioned equi-joins with
   * partial aggregation, nothing vertex-level ever broadcast or
-  * collected, one checkpointed snapshot live at a time
-  * (Checkpoints.rotate). Early exit fires only at the fixed point,
-  * where further relaxation rounds are the identity — so a budget-K
-  * run is result-identical to exactly-K unrolled rounds (the q66
-  * fixed-point equality argument; the q87 oracle leans on it). With
+  * collected, run by [[VertexLoop.iterate]]. Early exit fires only at
+  * the fixed point, where further relaxation rounds are the identity —
+  * so a budget-K run is result-identical to exactly-K unrolled rounds
+  * (the q66 fixed-point equality argument; the q87 oracle leans on
+  * it). With
   * non-negative integer costs every relaxation stays in exact int64
   * arithmetic, so the result is association-free and hash-gateable.
   */
@@ -43,21 +43,14 @@ object Sssp {
     val init = vertices.select(col("id"))
       .join(seeds.select(col("id")).distinct().withColumn("cost", lit(0L)),
         Seq("id"), "left")
-    var dist = init.localCheckpoint()
-    var rounds = 0
-    var converged = false
-    while (rounds < maxIters && !converged) {
+    val (dist, _) = VertexLoop.iterate(init, maxIters, VertexLoop.unchanged) { dist =>
       val pulled = e.join(dist.filter(col("cost").isNotNull), col("src") === col("id"))
         .groupBy(col("dst")).agg(min(col("cost") + col("w")).as("mc"))
-      val next = dist.join(pulled, col("id") === col("dst"), "left")
+      dist.join(pulled, col("id") === col("dst"), "left")
         .select(col("id"),
           least(col("cost"), col("mc")).as("cost"), // least skips nulls
           (coalesce(col("mc") < col("cost"), lit(false)) ||
             (col("cost").isNull && col("mc").isNotNull)).as("chg"))
-      dist = graft.Checkpoints.rotate(next, dist)
-      rounds += 1
-      // one limit-1 job on the already-materialized checkpoint
-      converged = dist.filter(col("chg")).isEmpty
     }
     e.unpersist()
     graft.Checkpoints.deferFree(dist)

@@ -16,10 +16,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape (the LinkRank audit carries over verbatim): 8-byte
   * surrogate ids via [[LinkRank.vmapFor]]; the loop-invariant edge
-  * side (svid, dvid, w, sw) is hash-partitioned ONCE on svid and
-  * every iteration shuffles only the 8-byte score frame; dangling
-  * mass is a 1-row broadcast aggregate inside the same job; one
-  * checkpointed rank snapshot live at a time (Checkpoints.rotate).
+  * side (svid, dvid, p) is hash-partitioned ONCE on svid and every
+  * iteration shuffles only the 8-byte score frame; each round is
+  * [[LinkRank.dampedStep]] under [[VertexLoop.iterate]].
   * Raw damped scores are returned (no CDF normalization) — weighted
   * rank is an analytics signal, not the reference's 0–10 UI scale.
   */
@@ -35,10 +34,7 @@ object WeightedRank {
     val vmap = LinkRank.vmapFor(spark, init.select(col("id")),
       cacheKey.map(k => s"w:$k"))
 
-    def buildEdgeSide: DataFrame = wedges
-      .join(sw, "src")
-      .join(vmap.select(col("id").as("src"), col("vid").as("svid")), "src")
-      .join(vmap.select(col("id").as("dst"), col("vid").as("dvid")), "dst")
+    def buildEdgeSide: DataFrame = VertexLoop.vidEdges(wedges.join(sw, "src"), vmap)
       .select(col("svid"), col("dvid"),
         (col("w").cast("double") / col("sw")).as("p"))
       .repartition(col("svid"))
@@ -56,31 +52,14 @@ object WeightedRank {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = base.count().toDouble
 
-    var ranks = base.localCheckpoint()
-    base.unpersist()
-    var rounds = 0
-    while (rounds < iters) {
-      val dang = ranks.filter(col("dangling"))
-        .agg(coalesce(sum(col("score")), lit(0.0)).as("ds"))
-      val contribs = eod
-        .join(ranks.select(col("vid"), col("score")), eod("svid") === col("vid"))
-        .groupBy(col("dvid")).agg(sum(col("score") * col("p")).as("contrib"))
-        .withColumnRenamed("dvid", "cid")
-      val prevCp = ranks
-      ranks = ranks
-        .join(contribs, col("vid") === col("cid"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("vid"), col("dangling"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("contrib"), lit(0.0)) + col("ds") / lit(n)))
-            .as("score"))
-      ranks = graft.Checkpoints.rotate(ranks, prevCp)
-      rounds += 1
+    val (ranks, _) = VertexLoop.iterate(base, iters) { ranks =>
+      LinkRank.dampedStep(ranks, eod, damping, col("score") * col("p"),
+        lit((1.0 - damping) / n), col("ds") / lit(n)) { s =>
+        Seq(col("vid"), col("dangling"), s.as("score"))
+      }
     }
-    val out = ranks.join(vmap, "vid").select(col("id"), col("score"))
-    graft.Checkpoints.deferFree(ranks)
-    if (cacheKey.isEmpty) graft.Checkpoints.deferCleanup(spark)(
-      () => graft.Checkpoints.free(vmap))
+    val out = LinkRank.release(spark, ranks, vmap, eod, cacheKey)
+    if (cacheKey.isEmpty) graft.Checkpoints.free(eod) // a checkpoint, not a cache
     out
   }
 }

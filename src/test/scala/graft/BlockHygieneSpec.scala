@@ -38,7 +38,7 @@ class BlockHygieneSpec extends GraftSpec {
     val init = und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
       .distinct().withColumn("lbl", col("id"))
     val before = persistentRdds
-    val (labels, rounds) = dedup.DedupQueries.propagateLabels(und, init, maxIters = 8)
+    val (labels, rounds) = graph.ConnectedComponents.propagate(und, init, maxIters = 8)
     assert(rounds < 8, s"expected early convergence, ran $rounds rounds")
     val got = labels.select(col("id"), col("lbl")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -46,5 +46,32 @@ class BlockHygieneSpec extends GraftSpec {
     Checkpoints.free(labels)
     assert(persistentRdds - before <= 0,
       s"label loop leaked: before=$before after=${persistentRdds}")
+  }
+
+  test("every VertexLoop engine frees its loop state at drain (no cacheKey)") {
+    val edges = graph.WebGraph.edges(spark, sfDir).localCheckpoint()
+    val wedges = edges.withColumn("w", lit(1L))
+    val verts = graph.WebGraph.vertices(edges)
+    val seeds = verts.orderBy(col("id")).limit(3)
+    val engines: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "WeightedRank" -> (() => graph.WeightedRank.run(spark, wedges,
+        graph.LinkRank.uniformInit(edges), iters = 3)),
+      "Ppr" -> (() => graph.Ppr.run(spark, edges, seeds, iters = 3)),
+      "Katz" -> (() => graph.Katz.run(spark, edges, iters = 3)),
+      "Sssp" -> (() => graph.Sssp.run(wedges, verts, seeds, maxIters = 3)),
+      "LabelPropagation" -> (() => graph.LabelPropagation.run(edges,
+        seeds.withColumn("lbl", lit(1L)), maxIters = 3)),
+      "Bfs" -> (() => graph.Bfs.run(edges, verts, seeds, maxIters = 3)),
+      "MultiBfs" -> (() => graph.MultiBfs.run(edges, seeds, maxIters = 3)),
+      "LinkRank.runTrace" -> (() => graph.LinkRank.runTrace(spark, edges,
+        graph.LinkRank.uniformInit(edges), iters = 3)))
+    for ((name, run) <- engines) {
+      val before = persistentRdds
+      assert(run().count() > 0, s"$name returned no rows")
+      Checkpoints.drain(spark)
+      assert(persistentRdds <= before,
+        s"$name leaked: before=$before after=$persistentRdds")
+    }
+    Checkpoints.free(edges)
   }
 }

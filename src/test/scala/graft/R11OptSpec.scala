@@ -8,6 +8,8 @@ package graft
   *  - the spread gate reads parquet FOOTER row groups, not RDD
   *    partitions (r11 ADVICE: byte-range splits of one huge row group
   *    parallelize the plan, not the data);
+  *  - a failed footer read is not memoized (a transient IO error must
+  *    not pin the gate for the life of the JVM);
   *  - the spread is transparent to predicate pushdown (filters still
   *    reach the parquet scan through the Repartition);
   *  - TempDirs.ephemeral yields a writable per-run scratch dir and
@@ -47,6 +49,18 @@ class R11OptSpec extends GraftSpec {
       s"quantity filter must reach the scan through Repartition:\n$plan")
     assert(plan.contains("ReadSchema") && !plan.contains("l_comment"),
       "column pruning must reach the scan through Repartition")
+  }
+
+  test("a failed row-group footer read is not memoized") {
+    val d = TempDirs.ephemeral("graft_rowgroups_")
+    val path = d.resolve("t").toString
+    try {
+      assert(Tables.rowGroups(spark, path) == Int.MaxValue,
+        "a path that does not exist yet must read as unknown")
+      spark.range(10).coalesce(1).write.parquet(path)
+      assert(Tables.rowGroups(spark, path) == 1,
+        "once written, the same path must report its real row groups")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
   }
 
   test("TempDirs.ephemeral is writable and prefers tmpfs when present") {

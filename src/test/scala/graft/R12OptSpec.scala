@@ -25,9 +25,16 @@ class R12OptSpec extends GraftSpec {
       .queryExecution.executedPlan.toString
     assert(under.contains("BroadcastHashJoin"),
       s"fixture host graph is under the gate — wedge joins must broadcast:\n$under")
-    val past = graft.graph.Triangles.run(edges, broadcastEdges = true,
+    // pin Spark's own size-based broadcast off while planning past the
+    // gate: the fixture is tiny, so without the pin the planner would
+    // broadcast it by itself and the assert would measure that, not
+    // the gate
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val past = try graft.graph.Triangles.run(edges, broadcastEdges = true,
         maxBroadcastEdges = 1L)
       .queryExecution.executedPlan.toString
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     assert(!past.contains("BroadcastHashJoin"),
       s"past the gate the explicit broadcast hint must vanish:\n$past")
     // same result either side of the gate (the gate is a plan property,
