@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -24,10 +25,16 @@ import org.apache.spark.storage.StorageLevel
   * registered on first insert), and [[clear]] can be called explicitly
   * (tests, multi-session drivers) — so a long-lived driver that cycles
   * sessions does not accumulate dead entries.
+  *
+  * An entry is a persisted DataFrame ([[cached]]) or RDD ([[cachedRdd]]);
+  * both count against the same cap and are unpersisted on eviction.
   */
 object SessionCache {
+  /** A memoized value and the release of its blocks. */
+  private final case class Entry(value: AnyRef, release: () => Unit)
+
   private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Entry]
   private val hooked =
     scala.collection.concurrent.TrieMap.empty[SparkSession, Boolean]
   /** Access order per entry: larger = more recent. */
@@ -54,20 +61,34 @@ object SessionCache {
 
   private def drop(k: (SparkSession, String)): Unit = {
     stamps.remove(k)
-    memo.remove(k).foreach { df =>
-      try { df.unpersist(blocking = false); Checkpoints.free(df) }
-      catch { case _: Throwable => () }
+    memo.remove(k).foreach { e =>
+      try e.release() catch { case _: Throwable => () }
     }
   }
 
   def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    memoize(spark, key) {
+      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
+      df.count()
+      Entry(df, () => { df.unpersist(blocking = false); Checkpoints.free(df) })
+    }.asInstanceOf[DataFrame]
+
+  /** [[cached]] for an RDD: persisted and materialized once per (session, key). */
+  def cachedRdd[T](spark: SparkSession, key: String)(build: => RDD[T]): RDD[T] =
+    memoize(spark, key) {
+      val rdd = build.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.count()
+      Entry(rdd, () => { rdd.unpersist(blocking = false); () })
+    }.asInstanceOf[RDD[T]]
+
+  private def memoize(spark: SparkSession, key: String)(build: => Entry): AnyRef =
     synchronized {
       touches.incrementAndGet()
       val k = (spark, key)
       memo.get(k) match {
-        case Some(df) =>
+        case Some(e) =>
           stamps(k) = tick.incrementAndGet()
-          df
+          e.value
         case None =>
           builds.incrementAndGet()
           hooked.getOrElseUpdate(spark, {
@@ -77,9 +98,8 @@ object SessionCache {
             })
             true
           })
-          val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-          df.count()
-          memo(k) = df
+          val e = build
+          memo(k) = e
           stamps(k) = tick.incrementAndGet()
           val cap = maxEntries(spark)
           var mine = memo.keys.filter(_._1 eq spark)
@@ -87,7 +107,7 @@ object SessionCache {
             drop(mine.minBy(stamps.getOrElse(_, 0L)))
             mine = memo.keys.filter(_._1 eq spark)
           }
-          df
+          e.value
       }
     }
 

@@ -14,13 +14,16 @@ import graft.functions.MathFunctions
   * GraphXLinkRankSpec asserts both backends agree on the reference's
   * gold fixtures and on the derived sf graph.
   *
-  * When to prefer which: the DataFrame engine integrates with Catalyst
-  * (AQE, codegen, cache reuse with the rest of a query) and is the
-  * driver-verified default; this backend demonstrates the Pregel-style
-  * message-passing formulation (aggregateMessages + per-step dangling
-  * scalar), which co-partitions messages with the edge RDD and avoids
-  * per-iteration plan re-optimization — attractive when the rank loop
-  * dominates and the graph fits GraphX's partitioning model.
+  * When to prefer which: both run one Spark job per round with the
+  * edge side co-partitioned and built once. The DataFrame engine is the
+  * driver-verified default: its prologue and epilogue are Catalyst
+  * plans that share the session's id map and CSR edge side with the
+  * rest of a query, and its kernel ([[DampedRank]]) also carries the
+  * trusted (TrustRank), personalized (Ppr) and weighted variants and
+  * the tolerance halt. This backend demonstrates the same loop as
+  * GraphX's Pregel-style message passing (aggregateMessages + a
+  * per-step dangling scalar) for uniform LinkRank only, and is the
+  * kernel's cross-backend check.
   */
 object GraphXLinkRank {
 

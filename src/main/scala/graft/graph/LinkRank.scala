@@ -1,8 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.MathFunctions
 
 /** Iterative LinkRank / TrustRank on DataFrames.
@@ -20,16 +20,20 @@ import graft.functions.MathFunctions
   * l = ln(v), mu = mean(l), sigma = population stdev (1e-10 when 0),
   * final = Phi_{mu,sigma}(l) * scale.
   *
-  * Scale posture (100 TB / 1000 executors):
-  *  - edges+outdeg are joined once, hash-partitioned on src, cached;
-  *    every iteration's join reuses that partitioning (no re-shuffle of
-  *    the big edge table);
-  *  - the per-iteration contribution aggregation is a groupBy(dst) with
-  *    map-side partial aggregation;
-  *  - dangling mass is a 1-row aggregate broadcast into the same job —
-  *    never a per-row join;
-  *  - rounds run through [[VertexLoop.iterate]] (on a real cluster swap
-  *    in checkpoint-to-DFS).
+  * Scale posture (100 TB / 1000 executors): the rounds run on
+  * [[DampedRank]], one Spark job each —
+  *  - edges are mapped once per graph into CSR partitions
+  *    hash-partitioned on the source vid (out-degrees counted inside
+  *    each partition) and co-partitioned with the vertex scores (no
+  *    re-shuffle of the big edge table);
+  *  - a round's contributions are summed per destination inside each
+  *    edge partition, so its one shuffle carries one block per
+  *    (edge partition, vertex partition) pair;
+  *  - the dangling mass (and the tolerance / trace scalars) come back
+  *    with the action that materializes the round — never a per-row
+  *    join or a second job;
+  *  - each round is local-checkpointed and the previous one released
+  *    (on a real cluster swap in checkpoint-to-DFS).
   */
 object LinkRank {
 
@@ -57,8 +61,8 @@ object LinkRank {
     * damped update contracts by `damping` per round regardless of n,
     * but the needed accuracy depends on downstream use); tolerance is
     * the scale-correct generalization, same shape as q25's
-    * convergence-stop. Cost: one O(1)-row max-aggregate job per round
-    * on the already-checkpointed snapshot.
+    * convergence-stop. Cost: none — max|v' − v| comes back with the
+    * round's one job.
     *
     * `normalize = false` skips the log-normal CDF and returns the RAW
     * damped iterate — the representation a warm start needs: feeding a
@@ -77,29 +81,24 @@ object LinkRank {
                  cacheKey: Option[String] = None,
                  tol: Option[Double] = None,
                  normalize: Boolean = true): (DataFrame, Int) = {
-
-    // one scalar job per round on the materialized snapshot
-    val converged: DataFrame => Boolean = tol.fold((_: DataFrame) => false) { eps =>
-      ranks => {
-        val d = ranks.agg(max(col("delta"))).first()
-        d.isNullAt(0) || d.getDouble(0) < eps // null = empty graph
+    val halt: (DampedRank.Stats, DampedRank.Stats) => Boolean =
+      tol.fold((_: DampedRank.Stats, _: DampedRank.Stats) => false) { eps =>
+        (_, st) => st.n == 0 || st.maxDelta < eps // n = 0: the empty graph
       }
-    }
-    // delta is only carried (and paid for) in tolerance mode
-    val (ranks, rounds, vmap, eod, n) = dampedLoop(spark, edges, init, iters,
-      damping, trustedMode, cacheKey, converged,
-      s => if (tol.isDefined) Seq(abs(s - col("score")).as("delta")) else Nil)
+    val (run, vmap) = dampedLoop(spark, edges, init, iters, damping, trustedMode,
+      cacheKey)(halt)
 
     if (!normalize) // raw damped scores (warm-start food)
-      return (release(spark, ranks, vmap, eod, cacheKey), rounds)
+      return (release(spark, run, vmap, cacheKey), run.rounds)
 
     // Log-normal CDF normalization — two explicit passes (sum, then
     // squared deviations) so the oracle's CTE arithmetic is identical.
     // The string id comes back via one final join against the mapping.
-    val logs = ranks.join(vmap, "vid")
+    val n = run.first.n.toDouble
+    val logs = run.frame.join(vmap, "vid")
       .select(col("id"), log(col("score")).as("l"))
       .localCheckpoint()
-    graft.Checkpoints.free(ranks) // logs is materialized; last iter's blocks can go
+    run.free() // logs is materialized; the loop's blocks can go
     val mu = logs.agg(sum(col("l"))).first().getDouble(0) / n
     val sig0 = math.sqrt(
       logs.agg(sum((col("l") - lit(mu)) * (col("l") - lit(mu)))).first().getDouble(0) / n)
@@ -110,135 +109,71 @@ object LinkRank {
     // `out` still reads logs' blocks lazily — free them at the harness
     // drain after the caller's action, not now.
     graft.Checkpoints.deferFree(logs)
-    if (cacheKey.isEmpty) {
-      eod.unpersist() // session-cached eod/vmap are shared, caller-owned
-      graft.Checkpoints.free(vmap) // logs is materialized; the id map can go
-    }
-    (out, rounds)
+    if (cacheKey.isEmpty) graft.Checkpoints.free(vmap) // session-cached vmaps are shared
+    (out, run.rounds)
   }
 
-  /** [[runCounted]]'s and [[runTrace]]'s damped loop: the id map, the
-    * edge side and the loop init (with the loop constants N and the
-    * dangling divisor), then up to `iters` updates through
-    * [[VertexLoop.iterate]]. Snapshots carry
-    * (vid, dangling, trusted, score) plus `extra(score')`.
-    *
-    * Every update is checkpointed: the next step's dangling-mass
-    * broadcast subplan reads the snapshot too, so an unmaterialized
-    * chain would be recomputed once per consumer — measured worse than
-    * the extra materialization barrier (batching every 3 steps was
-    * tried and reverted).
-    *
-    * @return (last snapshot, rounds, vmap, eod, N) */
+  /** [[runCounted]]'s and [[runTrace]]'s damped loop on [[DampedRank]]:
+    * the id map, the CSR edge side (freed after the loop unless it is
+    * the session's), and up to `iters` updates from `init` — uniform
+    * restart, or TrustRank's dangling mass split over the trusted
+    * vertices (initial score within 1e-3 of 1.0). `stop` sees each
+    * round's scalars; they ride the round's one job.
+    * @return (the run, vmap) */
   private def dampedLoop(spark: SparkSession, edges: DataFrame, init: DataFrame,
                          iters: Int, damping: Double, trustedMode: Boolean,
-                         cacheKey: Option[String], stop: DataFrame => Boolean,
-                         extra: Column => Seq[Column])
-      : (DataFrame, Int, DataFrame, DataFrame, Double) = {
-    // The edge list is consumed by outdeg, the join base, and (via the
-    // caller's init) the vertex set. Pass an already-cached frame
-    // (WebGraph.cachedEdges) so the derivation runs once per session —
-    // the loop does not persist/unpersist it, the cache is caller-owned.
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-
-    // Dense long vertex ids: web URLs are long strings, and every
-    // iteration shuffles on the vertex key — mapping to an 8-byte
-    // surrogate once (and back once at the end) shrinks every
-    // iteration's shuffle/sort keys. With cacheKey set, (vmap, eod) are
-    // loop-invariant per GRAPH, not per run — q01/q02/q10 all rank the
-    // same page graph, so the id mapping and the joined edge side build
-    // once per session.
+                         cacheKey: Option[String])
+                        (stop: (DampedRank.Stats, DampedRank.Stats) => Boolean)
+      : (DampedRank.Result, DataFrame) = {
+    // Dense long vertex ids: web URLs are long strings, and every round
+    // shuffles on the vertex key — mapping to an 8-byte surrogate once
+    // (and back once at the end) shrinks every round's shuffle. With
+    // cacheKey set, the id map and the edge side are loop-invariant per
+    // GRAPH, not per run — q01/q02/q10 all rank the same page graph, so
+    // both build once per session.
     val vmap = vmapFor(spark, init.select(col("id")), cacheKey)
-    val eod = eodFor(spark, edges, vmap, cacheKey)
-
-    // Vertex frame with loop-invariant flags, keyed by vid.
-    val base = init.join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .join(vmap, "id")
-      .select(col("vid"), col("score"),
-        col("od").isNull.as("dangling"),
-        (if (trustedMode) abs(col("score") - 1.0) < 1e-3 else lit(false)).as("trusted"))
-      .repartition(col("vid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // One pass for both loop constants.
-    val cnts = base.agg(count(lit(1)),
-      coalesce(sum(when(col("trusted"), 1L).otherwise(0L)), lit(0L))).first()
-    val n = cnts.getLong(0).toDouble
-    val divisor = if (trustedMode) cnts.getLong(1).toDouble else n
-    val dTerm =
-      if (trustedMode) when(col("trusted"), col("ds") / lit(divisor)).otherwise(lit(0.0))
-      else col("ds") / lit(n)
-
-    val (ranks, rounds) = VertexLoop.iterate(base, iters, stop) { cp =>
-      dampedStep(cp.select(col("vid"), col("dangling"), col("trusted"), col("score")),
-        eod, damping, col("score") / col("od"), lit((1.0 - damping) / n), dTerm) { s =>
-        Seq(col("vid"), col("dangling"), col("trusted"), s.as("score")) ++ extra(s)
-      }
-    }
-    (ranks, rounds, vmap, eod, n)
+    val csr = csrFor(spark, edges, vmap, cacheKey)
+    val trusted = when(abs(col("score") - 1.0) < 1e-3, 1.0).otherwise(0.0).as("p")
+    val state = init.join(vmap, "id")
+      .select(Seq(col("vid"), col("score").cast("double")) ++
+        (if (trustedMode) Seq(trusted) else Nil): _*)
+    val run = DampedRank.run(csr, state, damping, iters) { first =>
+      val n = first.n.toDouble
+      // TrustRank: p = 1 on trusted vertices, Σp = |trusted|
+      if (trustedMode)
+        DampedRank.Restart((1.0 - damping) / n, 0.0, 0.0,
+          if (first.pSum > 0) 1.0 / first.pSum else 0.0)
+      else DampedRank.Restart((1.0 - damping) / n, 0.0, 1.0 / n, 0.0)
+    }(stop)
+    if (cacheKey.isEmpty) csr.unpersist(blocking = false)
+    (run, vmap)
   }
 
-  /** One synchronous damped update of `ranks(vid, dangling, score, …)`
-    * over the loop-invariant edge side `eod(svid, dvid, …)`:
-    *   score' = teleport + d · (Σ_{u→v} edgeContrib + dangling)
-    * `edgeContrib` is evaluated per edge after the score join
-    * (score / od for the uniform walk); `teleport` and `dangling` per
-    * vertex, with the previous snapshot's dangling mass as `ds`. The
-    * dangling mass is a 1-row aggregate cross-joined in (a broadcast
-    * nested loop of one row), so the whole update is ONE job — no
-    * driver round-trip between reading D and applying it. `out` maps
-    * score' to the output columns. */
-  private[graph] def dampedStep(ranks: DataFrame, eod: DataFrame, damping: Double,
-                                edgeContrib: Column, teleport: Column,
-                                dangling: Column)
-                               (out: Column => Seq[Column]): DataFrame = {
-    val dang = ranks.filter(col("dangling"))
-      .agg(coalesce(sum(col("score")), lit(0.0)).as("ds"))
-    val contribs = eod
-      .join(ranks.select(col("vid"), col("score")), eod("svid") === col("vid"))
-      .groupBy(col("dvid")).agg(sum(edgeContrib).as("contrib"))
-      .withColumnRenamed("dvid", "cid")
-    val newScore = teleport +
-      lit(damping) * (coalesce(col("contrib"), lit(0.0)) + dangling)
-    ranks
-      .join(contribs, col("vid") === col("cid"), "left")
-      .crossJoin(broadcast(dang))
-      .select(out(newScore): _*)
-  }
-
-  /** The raw (id, score) result of a damped loop. The last snapshot's
-    * blocks are freed at the caller's drain, after its action; without
-    * a `cacheKey` the run-local edge side goes now and the id map at
-    * the drain. */
-  private[graph] def release(spark: SparkSession, ranks: DataFrame, vmap: DataFrame,
-                             eod: DataFrame, cacheKey: Option[String]): DataFrame = {
-    val out = ranks.join(vmap, "vid").select(col("id"), col("score"))
-    graft.Checkpoints.deferFree(ranks)
-    if (cacheKey.isEmpty) {
-      eod.unpersist()
-      graft.Checkpoints.deferCleanup(spark)(() => graft.Checkpoints.free(vmap))
+  /** The raw (id, score) result of a damped run. The run's blocks are
+    * freed at the caller's drain, after its action; so is a run-local
+    * id map. */
+  private[graph] def release(spark: SparkSession, run: DampedRank.Result, vmap: DataFrame,
+                             cacheKey: Option[String]): DataFrame = {
+    val out = run.frame.join(vmap, "vid").select(col("id"), col("score"))
+    graft.Checkpoints.deferCleanup(spark) { () =>
+      run.free()
+      if (cacheKey.isEmpty) graft.Checkpoints.free(vmap)
     }
     out
   }
 
-  /** The loop-invariant edge side (svid, dvid, od): edges joined with
-    * out-degrees, both endpoints mapped to 8-byte surrogate ids,
-    * hash-partitioned on svid ONCE so every iteration's contribution
-    * join reuses the partitioning. Shared across every rank-family loop
-    * on the same graph (LinkRank / TrustRank / PPR) via SessionCache
-    * when `cacheKey` is set. */
-  private[graph] def eodFor(spark: SparkSession, edges: DataFrame,
-                            vmap: DataFrame,
-                            cacheKey: Option[String]): DataFrame = {
-    def build: DataFrame = VertexLoop
-      .vidEdges(edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src"), vmap)
-      .select(col("svid"), col("dvid"), col("od"))
-      .repartition(col("svid"))
-    cacheKey match {
-      case Some(k) => graft.SessionCache.cached(spark, s"rank-eod:$k")(build)
-      case None => build.persist(StorageLevel.MEMORY_AND_DISK)
+  /** The loop-invariant edge side as [[DampedRank]] CSR partitions:
+    * every edge with both endpoints mapped to 8-byte surrogate ids
+    * (svid, dvid), out-degrees counted per source inside the partition
+    * (an edge whose dst is not in `vmap` keeps a null dvid, so it still
+    * counts). Shared across every rank-family loop on the same graph
+    * (LinkRank / TrustRank / PPR) via SessionCache when `cacheKey` is
+    * set; otherwise the caller unpersists it. */
+  private[graph] def csrFor(spark: SparkSession, edges: DataFrame, vmap: DataFrame,
+                            cacheKey: Option[String]): RDD[DampedRank.EdgePart] =
+    DampedRank.edgesFor(spark, cacheKey.map(k => s"rank-eod:$k")) {
+      VertexLoop.vidEdges(edges, vmap, dstJoin = "left").select(col("svid"), col("dvid"))
     }
-  }
 
   /** Dense long surrogate ids for a vertex set `ids(id)` → (id, vid).
     * Checkpointed so monotonically_increasing_id is assigned exactly
@@ -267,29 +202,23 @@ object LinkRank {
     * for each round k, the dangling mass redistributed INTO the round
     * (Σ score of out-degree-0 vertices of r_{k−1}), the L1 step size
     * Σ|r_k − r_{k−1}| (the quantity a tolerance halt like q97's
-    * thresholds), and the total raw mass Σ r_k. Same loop shape as
-    * [[run]] (surrogate ids, loop-invariant cached edge side, one live
-    * checkpoint); the trace costs ONE extra 1-row aggregate per round,
-    * and the returned frame is O(iters) rows assembled on the driver.
+    * thresholds), and the total raw mass Σ r_k. Same loop as [[run]]
+    * ([[DampedRank]]); the trace's scalars come back with each round's
+    * one job, and the returned frame is O(iters) rows assembled on the
+    * driver.
     */
   def runTrace(spark: SparkSession, edges: DataFrame, init: DataFrame,
                iters: Int = 9, damping: Double = 0.85,
                cacheKey: Option[String] = None): DataFrame = {
     val trace = Seq.newBuilder[(Double, Double, Double)]
-    val (ranks, _, vmap, eod, _) = dampedLoop(spark, edges, init, iters, damping,
-      trustedMode = false, cacheKey,
-      stop = { cp =>
-        val st = cp.agg(max(col("ds")), sum(col("delta")), sum(col("score"))).first()
-        trace += ((st.getDouble(0), st.getDouble(1), st.getDouble(2)))
-        false
-      },
-      extra = s => Seq(abs(s - col("score")).as("delta"), col("ds")))
-    // the trace is driver-side rows: nothing reads the loop state again
-    graft.Checkpoints.free(ranks)
-    if (cacheKey.isEmpty) {
-      eod.unpersist()
-      graft.Checkpoints.free(vmap)
+    val (run, vmap) = dampedLoop(spark, edges, init, iters, damping,
+      trustedMode = false, cacheKey) { (prev, st) =>
+      trace += ((prev.dangling, st.l1Delta, st.mass))
+      false
     }
+    // the trace is driver-side rows: nothing reads the loop state again
+    run.free()
+    if (cacheKey.isEmpty) graft.Checkpoints.free(vmap)
     import spark.implicits._
     trace.result().zipWithIndex
       .map { case ((ds, l1, mass), k) => (k + 1, ds, l1, mass) }

@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * probabilities (visit rates of the restarting walk), not the
   * [0,scale] CDF grid of LinkRank.
   *
-  * Scale posture: identical to LinkRank (shared code) — the
-  * (svid, dvid, od) edge side is built/partitioned once per graph and
+  * Scale posture: identical to LinkRank (shared code) — the CSR edge
+  * side ([[LinkRank.csrFor]]) is built once per graph and
   * SessionCache-shared with LinkRank/TrustRank loops on the same
-  * graph; each round is [[LinkRank.dampedStep]] under
-  * [[VertexLoop.iterate]].
+  * graph; each round is one [[DampedRank]] job with r as the personal
+  * weight.
   *
   * Float-grid caveat (the LinkRank convention, accepted here too): the
   * per-round contribution sum runs in IEEE double with
@@ -40,9 +40,8 @@ object Ppr {
   def run(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
           iters: Int = 6, damping: Double = 0.85,
           cacheKey: Option[String] = None): DataFrame = {
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
     val vmap = LinkRank.vmapFor(spark, WebGraph.vertices(edges), cacheKey)
-    val eod = LinkRank.eodFor(spark, edges, vmap, cacheKey)
+    val csr = LinkRank.csrFor(spark, edges, vmap, cacheKey)
 
     // |S| as a driver scalar; seeds outside the graph's vertex set are
     // ignored by the join.
@@ -51,19 +50,14 @@ object Ppr {
     val ns = seedVids.count()
     require(ns > 0, s"Ppr.run: empty seed set (no seed id is a graph vertex)")
 
-    val rInit = when(col("svid_seed").isNotNull, lit(1.0 / ns)).otherwise(lit(0.0))
-    val init = vmap
-      .join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .join(seedVids, col("vid") === col("svid_seed"), "left")
-      .select(col("vid"), col("od").isNull.as("dangling"),
-        rInit.as("r"), rInit.as("score"))
-      .repartition(col("vid"))
-    val (ranks, _) = VertexLoop.iterate(init, iters) { ranks =>
-      LinkRank.dampedStep(ranks, eod, damping, col("score") / col("od"),
-        lit(1.0 - damping) * col("r"), col("ds") * col("r")) { s =>
-        Seq(col("vid"), col("dangling"), col("r"), s.as("score"))
-      }
-    }
-    LinkRank.release(spark, ranks, vmap, eod, cacheKey)
+    // the restart vector r is both the initial score and the personal
+    // weight: teleport (1-d)·r_v, dangling share r_v
+    val r = when(col("svid_seed").isNotNull, lit(1.0 / ns)).otherwise(lit(0.0))
+    val state = vmap.join(seedVids, col("vid") === col("svid_seed"), "left")
+      .select(col("vid"), r.as("score"), r.as("p"))
+    val run = DampedRank.run(csr, state, damping, iters)(_ =>
+      DampedRank.Restart(0.0, 1.0 - damping, 0.0, 1.0))()
+    if (cacheKey.isEmpty) csr.unpersist(blocking = false)
+    LinkRank.release(spark, run, vmap, cacheKey)
   }
 }

@@ -8,7 +8,9 @@ import graft.Checkpoints
   * "one dataflow join plus a group-by per superstep"): each engine
   * supplies the per-round plan, this object owns the round count, the
   * materialization barrier between rounds and the block lifecycle of
-  * the loop state.
+  * the loop state. The damped rank family (LinkRank, TrustRank, Ppr,
+  * WeightedRank) runs on the fixed-dataflow [[DampedRank]] kernel
+  * instead.
   */
 private[graft] object VertexLoop {
 
@@ -101,8 +103,9 @@ private[graft] object VertexLoop {
 
   /** Map a string-id edge frame `edges(src, dst, …)` to 8-byte surrogate
     * ids through `vmap(id, vid)`: two equi-joins adding `svid`/`dvid`
-    * (the other edge columns ride along). */
-  def vidEdges(edges: DataFrame, vmap: DataFrame): DataFrame = edges
+    * (the other edge columns ride along); `dstJoin = "left"` keeps edges
+    * whose dst is not in `vmap`, with a null `dvid`. */
+  def vidEdges(edges: DataFrame, vmap: DataFrame, dstJoin: String = "inner"): DataFrame = edges
     .join(vmap.withColumnRenamed("id", "src").withColumnRenamed("vid", "svid"), "src")
-    .join(vmap.withColumnRenamed("id", "dst").withColumnRenamed("vid", "dvid"), "dst")
+    .join(vmap.withColumnRenamed("id", "dst").withColumnRenamed("vid", "dvid"), Seq("dst"), dstJoin)
 }

@@ -64,11 +64,37 @@ class BlockHygieneSpec extends GraftSpec {
       "Bfs" -> (() => graph.Bfs.run(edges, verts, seeds, maxIters = 3)),
       "MultiBfs" -> (() => graph.MultiBfs.run(edges, seeds, maxIters = 3)),
       "LinkRank.runTrace" -> (() => graph.LinkRank.runTrace(spark, edges,
-        graph.LinkRank.uniformInit(edges), iters = 3)))
+        graph.LinkRank.uniformInit(edges), iters = 3)),
+      "LinkRank.runCounted(tol)" -> (() => graph.LinkRank.runCounted(spark, edges,
+        graph.LinkRank.uniformInit(edges), iters = 3, tol = Some(1e-12))._1))
     for ((name, run) <- engines) {
       val before = persistentRdds
       assert(run().count() > 0, s"$name returned no rows")
       Checkpoints.drain(spark)
+      assert(persistentRdds <= before,
+        s"$name leaked: before=$before after=$persistentRdds")
+    }
+    Checkpoints.free(edges)
+  }
+
+  test("the damped-rank kernel frees its CSR, vertex and score RDDs (cacheKey)") {
+    val edges = graph.WebGraph.edges(spark, sfDir).localCheckpoint()
+    val verts = graph.WebGraph.vertices(edges)
+    val first = verts.orderBy(col("id")).first().getString(0)
+    val trusted = verts.withColumn("score", when(col("id") === first, 1.0).otherwise(0.0))
+    val seeds = verts.orderBy(col("id")).limit(3)
+    val key = Some("hygiene")
+    val engines: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "TrustRank" -> (() => graph.LinkRank.run(spark, edges, trusted, iters = 3,
+        trustedMode = true, cacheKey = key)),
+      "Ppr" -> (() => graph.Ppr.run(spark, edges, seeds, iters = 3, cacheKey = key)))
+    for ((name, run) <- engines) {
+      SessionCache.clear(spark)
+      val before = persistentRdds
+      assert(run().count() > 0, s"$name returned no rows")
+      assert(SessionCache.contains(spark, "rank-eod:hygiene"), s"$name built no shared CSR")
+      Checkpoints.drain(spark)
+      SessionCache.clear(spark)
       assert(persistentRdds <= before,
         s"$name leaked: before=$before after=$persistentRdds")
     }

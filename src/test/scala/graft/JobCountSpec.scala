@@ -73,32 +73,47 @@ class JobCountSpec extends GraftSpec {
     SessionCache.clear(spark)
   }
 
-  test("DataFrame rank loop: fixed marginal jobs per additional iteration") {
-    val edges = graph.WebGraph.cachedEdges(spark, sfDir)
-    val init = graph.LinkRank.uniformInit(edges)
-    edges.count()
+  // The DataFrame rank family runs its rounds on graph.DampedRank: ONE
+  // job per round (local edge scan + one contribution shuffle + the
+  // action that materializes the round and returns its scalars). AQE
+  // stays on for the session — it still plans the one-time prologue
+  // (id map, CSR edge side, vertex side) and epilogue joins; the loop
+  // body is a fixed RDD dataflow it never re-plans. Pinned exactly so a
+  // second pass per round (say a separate halt or trace aggregate)
+  // trips at 2/round.
+  private def marginal(name: String)(run: Int => org.apache.spark.sql.DataFrame): Unit = {
     def jobsAt(iters: Int): Long = {
       val n = JobMeter.measure(spark) {
-        graph.LinkRank.run(spark, edges, init, iters = iters)
-          .write.format("noop").mode("overwrite").save()
+        run(iters).write.format("noop").mode("overwrite").save()
       }
       Checkpoints.drain(spark)
       n
     }
     val j3 = jobsAt(3)
     val j9 = jobsAt(9)
-    info(s"dataframe jobs: iters=3 -> $j3, iters=9 -> $j9")
-    // 7 = the round's ONE localCheckpoint action decomposed by AQE into
-    // stage-jobs (dangling agg exchange, its broadcast build, the
-    // contribution shuffle, final stage, ...) — pipelined pieces of a
-    // single pass, not extra passes. Probed: AQE off runs the same
-    // round in 3 jobs at identical wall time; AQE stays on because its
-    // runtime skew-splitting is the 100 TB posture. Pinned exactly so
-    // a real extra pass (say a second scalar collect per round) trips
-    // this at 8/round.
-    assert(j9 - j3 == 7L * 6L,
-      s"marginal cost must stay at 7 AQE stage-jobs/iteration, got ${(j9 - j3) / 6.0}")
+    info(s"$name jobs: iters=3 -> $j3, iters=9 -> $j9")
+    assert(j9 - j3 == 6L,
+      s"$name: marginal cost must be exactly 1 job/round, got ${(j9 - j3) / 6.0}")
     SessionCache.clear(spark)
+  }
+
+  test("DataFrame rank loop: fixed marginal jobs per additional iteration") {
+    val edges = graph.WebGraph.cachedEdges(spark, sfDir)
+    val init = graph.LinkRank.uniformInit(edges)
+    edges.count()
+    marginal("LinkRank.run")(iters => graph.LinkRank.run(spark, edges, init, iters = iters))
+  }
+
+  test("rank loop with tol, runTrace and Ppr: exactly ONE job per additional round") {
+    val edges = graph.WebGraph.cachedEdges(spark, sfDir)
+    val init = graph.LinkRank.uniformInit(edges)
+    val seeds = graph.WebGraph.vertices(edges).orderBy("id").limit(3)
+    edges.count()
+    // tol 0.0 never halts: every budgeted round runs its halt test
+    marginal("runCounted(tol)")(iters => graph.LinkRank.runCounted(spark, edges, init,
+      iters = iters, tol = Some(0.0))._1)
+    marginal("runTrace")(iters => graph.LinkRank.runTrace(spark, edges, init, iters = iters))
+    marginal("Ppr")(iters => graph.Ppr.run(spark, edges, seeds, iters = iters))
   }
 
   // Absolute ceilings for the multi-round driver rows: measured-at-pin

@@ -149,6 +149,80 @@ class LinkRankSpec extends GraftSpec {
     assert(warm.keySet === cold.keySet) // vertex domain preserved
   }
 
+  /** The scaladoc update of graph.DampedRank on plain Scala collections:
+    *   s'_v = t_v + d·(Σ_{u→v} w_uv·s_u + D·g_v),  w_uv = w_e / Σw_out(u),
+    * D = Σ s over vertices with no out-edge. */
+  private def reference(vertices: Seq[String], edges: Seq[(String, String, Double)],
+                        init: Map[String, Double], damping: Double, iters: Int)
+                       (t: String => Double, g: String => Double): Map[String, Double] = {
+    val wOut = edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._3).sum }
+    val dangling = vertices.filterNot(wOut.contains)
+    var s = init
+    for (_ <- 1 to iters) {
+      val dMass = dangling.map(s).sum
+      val in = edges.groupBy(_._2).map { case (v, es) =>
+        v -> es.map { case (u, _, w) => w / wOut(u) * s(u) }.sum
+      }
+      s = vertices.map(v => v -> (t(v) + damping * (in.getOrElse(v, 0.0) + dMass * g(v)))).toMap
+    }
+    s
+  }
+
+  test("kernel raw iterate equals a plain-Scala run of the damped update (1e-12)") {
+    import graft.graph.{Ppr, WeightedRank}
+    val d = 0.85
+    def raw(df: org.apache.spark.sql.DataFrame): Map[String, Double] =
+      df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    def close(what: String, got: Map[String, Double], want: Map[String, Double]): Unit = {
+      assert(got.keySet == want.keySet, what)
+      want.foreach { case (v, x) =>
+        assert(math.abs(got(v) - x) < 1e-12, s"$what, $v: ${got(v)} vs $x")
+      }
+    }
+    // c is dangling; d only links out; z (init only) has no edge at all
+    val links = Seq("a" -> "b", "b" -> "c", "a" -> "c", "d" -> "c")
+    val e = links.toDF("src", "dst")
+    val unit = links.map { case (u, v) => (u, v, 1.0) }
+    val verts = Seq("a", "b", "c", "d", "z")
+    val init = Map("a" -> 1.0, "b" -> 0.5, "c" -> 2.0, "d" -> 0.1, "z" -> 0.3)
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    // more partitions than vertices: most kernel partitions are empty
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try {
+      val n = verts.size.toDouble
+      val lr = raw(LinkRank.runCounted(spark, e, init.toSeq.toDF("id", "score"),
+        normalize = false)._1)
+      close("LinkRank", lr, reference(verts, unit, init, d, 9)(_ => (1 - d) / n, _ => 1 / n))
+
+      val abc = Seq("a", "b", "c")
+      val flat = Map("a" -> 1.0, "b" -> 2.0, "c" -> 3.0)
+      val none = raw(LinkRank.runCounted(spark, Seq.empty[(String, String)].toDF("src", "dst"),
+        flat.toSeq.toDF("id", "score"), normalize = false)._1)
+      close("all-dangling", none, reference(abc, Nil, flat, d, 9)(_ => (1 - d) / 3, _ => 1.0 / 3))
+
+      val seed = init.map { case (v, _) => v -> (if (v == "a") 1.0 else 0.0) }
+      val tr = raw(LinkRank.runCounted(spark, e, seed.toSeq.toDF("id", "score"),
+        trustedMode = true, normalize = false)._1)
+      close("TrustRank", tr, reference(verts, unit, seed, d, 9)(_ => (1 - d) / n,
+        v => if (v == "a") 1.0 else 0.0))
+
+      val r = Map("a" -> 0.5, "b" -> 0.0, "c" -> 0.5, "d" -> 0.0)
+      val ppr = raw(Ppr.run(spark, e, Seq("a", "c", "q").toDF("id"), iters = 6))
+      close("Ppr", ppr, reference(r.keys.toSeq, unit, r, d, 6)(v => (1 - d) * r(v), r))
+
+      val w = Seq(("a", "b", 3.0), ("a", "c", 1.0), ("b", "c", 2.0), ("c", "a", 5.0),
+        ("d", "c", 0.5))
+      val ones = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0, "d" -> 1.0)
+      val wr = raw(WeightedRank.run(spark, w.toDF("src", "dst", "w"),
+        ones.toSeq.toDF("id", "score")))
+      close("WeightedRank", wr, reference(ones.keys.toSeq, w, ones, d, 9)(_ => (1 - d) / 4,
+        _ => 0.25))
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      Checkpoints.drain(spark)
+    }
+  }
+
   test("edge dedup matches removeDuplicateLinks semantics") {
     val raw = Seq(
       ("http://a.com/x", " http://b.com/y#frag"),

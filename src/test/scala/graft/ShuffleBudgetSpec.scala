@@ -54,13 +54,29 @@ object ShuffleMeter {
   * only exchange), never corpus × features. Operators with budget 0
   * (none today, but the strongest contract available) must stay at
   * exactly zero. Regenerate after an intentional plan change with
-  * SPARK_GRAFT_RECORD_BUDGETS=1 sbt "testOnly graft.ShuffleBudgetSpec".
+  * SPARK_GRAFT_FULL_TESTS=1 SPARK_GRAFT_RECORD_BUDGETS=1
+  * sbt "testOnly graft.ShuffleBudgetSpec" — the record path refuses to
+  * run without SPARK_GRAFT_FULL_TESTS=1 and names the @SlowSuite
+  * suites a default run skips.
   */
 @SlowSuite
 class ShuffleBudgetSpec extends GraftSpec {
 
   private val budgetPath = java.nio.file.Paths.get("bench/shuffle_budgets.json")
   private val recordMode = sys.env.get("SPARK_GRAFT_RECORD_BUDGETS").contains("1")
+  private val fullTests = sys.env.get("SPARK_GRAFT_FULL_TESTS").contains("1")
+
+  /** The @SlowSuite classes on the test classpath — what a default
+    * (non-full) test run skips. */
+  private def slowSuites: Seq[String] = {
+    val root = new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val pkg = new java.io.File(root, "graft")
+    Option(pkg.listFiles).toSeq.flatten.map(_.getName)
+      .filter(n => n.endsWith(".class") && !n.contains("$"))
+      .map(n => Class.forName("graft." + n.stripSuffix(".class"), false, getClass.getClassLoader))
+      .filter(_.isAnnotationPresent(classOf[SlowSuite]))
+      .map(_.getSimpleName).sorted
+  }
 
   private def parseBudgets(): Map[String, Long] = {
     val text = new String(java.nio.file.Files.readAllBytes(budgetPath), "UTF-8")
@@ -69,6 +85,12 @@ class ShuffleBudgetSpec extends GraftSpec {
   }
 
   test("every driver query stays within its committed shuffle-record budget (sf0.001, cold)") {
+    if (recordMode && !fullTests) {
+      val skipped = slowSuites.mkString(", ")
+      println(s"ShuffleBudgetSpec: a default run skips the SlowSuite suites: $skipped")
+      fail("refusing to re-record shuffle budgets without SPARK_GRAFT_FULL_TESTS=1 " +
+        s"(a default run skips the SlowSuite suites: $skipped)")
+    }
     val names = SparkEntry.queries.keys.toSeq.sorted
     // other suites' cached blocks can force mid-query RDD eviction +
     // stage RECOMPUTATION, which re-executes shuffle writes and
