@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Lifecycle management for `localCheckpoint` blocks and per-query
+import scala.util.control.NonFatal
+
+/** Query-scoped lifecycle for `localCheckpoint` blocks and per-query
   * caches.
   *
   * `Dataset.localCheckpoint()` materializes the plan into block-manager
@@ -10,34 +12,55 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * updates, 8 label-propagation rounds) every iteration's blocks pile
   * up until the session dies, and a 32-query bench session drags ~40
   * orphaned block sets behind it (measured: q11 went 1.8s isolated →
-  * 56s inside the r2 bench). Two remedies here:
+  * 56s inside the r2 bench).
   *
-  *  - [[rotate]]: checkpoint the next iteration, then unpersist the
-  *    predecessor's RDD — the loop holds exactly one live block set
-  *    (same pattern as GraphXLinkRank's prev.unpersist).
-  *  - [[deferFree]]/[[deferUnpersist]]: a returned lazy DataFrame may
-  *    still read a checkpoint/cache, so its blocks can only be freed
-  *    after the caller's action completes. Queries register the
-  *    cleanup; the harness (Bench/Verify) calls [[drain]] between
-  *    queries.
+  * One rule: a block made here ([[materialize]], [[cache]], every
+  * snapshot [[rotate]] makes) is released at the session's next
+  * [[drain]] from the moment it is made, because a returned lazy
+  * DataFrame may still read it until the caller's action completes.
+  * [[free]] and [[rotate]] only release a block EARLIER, when the code
+  * knows nothing reads it any more (an iterative loop holds exactly one
+  * live snapshot that way), and [[drain]] skips blocks already
+  * released. The harness (Bench/Verify) calls [[drain]] between
+  * queries. Frames built inside `SessionCache.cached` are owned by the
+  * memo instead and are not made here.
   */
 object Checkpoints {
 
   private val pending =
     scala.collection.concurrent.TrieMap.empty[SparkSession, java.util.Queue[() => Unit]]
 
-  /** Checkpoint `next` eagerly, then free the predecessor iteration's
+  /** Checkpoint `df` eagerly; its blocks are released at the next
+    * [[drain]] unless [[free]]d first. */
+  def materialize(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint()
+    deferCleanup(cp.sparkSession)(() => free(cp))
+    cp
+  }
+
+  /** Mark `df` for a lazy columnar cache, filled by its first action;
+    * unpersisted at the next [[drain]]. Returns `df`. */
+  def cache(df: DataFrame): DataFrame = {
+    df.cache()
+    deferCleanup(df.sparkSession) { () =>
+      if (df.storageLevel.isValid) df.unpersist(blocking = false)
+    }
+    df
+  }
+
+  /** [[materialize]] `next`, then free the predecessor iteration's
     * checkpoint blocks. Returns the new checkpoint. */
   def rotate(next: DataFrame, prev: DataFrame): DataFrame = {
-    val cp = next.localCheckpoint()
+    val cp = materialize(next)
     free(prev)
     cp
   }
 
-  /** Unpersist the RDD behind an eagerly localCheckpoint'ed frame
-    * (no-op for plans that are not a materialized LogicalRDD). */
+  /** Release the blocks behind an eagerly checkpointed frame now (no-op
+    * for plans that are not a materialized LogicalRDD, and for blocks
+    * already released). */
   def free(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.unpersist(blocking = false))
+    checkpointRdd(df).filter(_.getStorageLevel.isValid).foreach(_.unpersist(blocking = false))
 
   private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.logical match {
@@ -45,30 +68,19 @@ object Checkpoints {
       case _ => None
     }
 
-  private def defer(spark: SparkSession)(f: () => Unit): Unit =
+  /** Run an arbitrary cleanup at the next [[drain]] — for resources the
+    * DataFrame helpers can't reach (persisted RDDs, GraphX graphs). */
+  def deferCleanup(spark: SparkSession)(f: () => Unit): Unit =
     pending.getOrElseUpdate(spark, new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]())
       .add(f)
 
-  /** Free this checkpoint's blocks at the next [[drain]] (the caller's
-    * pending action still reads them). Returns `df` for chaining. */
-  def deferFree(df: DataFrame): DataFrame = { defer(df.sparkSession)(() => free(df)); df }
-
-  /** Unpersist this cached frame at the next [[drain]]. */
-  def deferUnpersist(df: DataFrame): DataFrame = {
-    defer(df.sparkSession)(() => { df.unpersist(blocking = false); () }); df
-  }
-
-  /** Run an arbitrary cleanup at the next [[drain]] — for resources the
-    * DataFrame helpers can't reach (persisted RDDs, GraphX graphs). */
-  def deferCleanup(spark: SparkSession)(f: () => Unit): Unit = defer(spark)(f)
-
-  /** Run every deferred cleanup registered for `spark`. Harness calls
-    * this after each query's action completes. */
+  /** Release every block and run every cleanup still registered for
+    * `spark`. Harness calls this after each query's action completes. */
   def drain(spark: SparkSession): Unit =
     pending.remove(spark).foreach { q =>
       var f = q.poll()
       while (f != null) {
-        try f() catch { case _: Throwable => () }
+        try f() catch { case NonFatal(_) => () }
         f = q.poll()
       }
     }

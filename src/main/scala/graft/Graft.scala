@@ -218,11 +218,10 @@ object Graft {
     import graft.dedup.DedupQueries.{K, bands, candidates}
     // the signature scan feeds the band join AND both pair sides —
     // cache it once (freed at the caller's next drain)
-    val sigs = Checkpoints.deferUnpersist(docs
+    val sigs = Checkpoints.cache(docs
       .select(id.as("doc_id"), minhashSignature(text).as("mhs"))
       .select(col("doc_id") +:
-        (0 until K).map(j => element_at(col("mhs"), j + 1).as(s"mh$j")): _*)
-      .cache())
+        (0 until K).map(j => element_at(col("mhs"), j + 1).as(s"mh$j")): _*))
     val cand = candidates(bands(sigs))
     val sa = sigs.toDF("da" +: (0 until K).map(j => s"a$j"): _*)
     val sb = sigs.toDF("db" +: (0 until K).map(j => s"b$j"): _*)
@@ -631,10 +630,10 @@ object Graft {
     * mod out-degree over the dst-sorted adjacency — reruns reproduce
     * the identical corpus. Returns (walk_id, host, step).
     *
-    * Post-drain contract (see [[logregFit]]): the per-step frontiers
-    * are localCheckpoint'ed and freed at the next `Checkpoints.drain`
-    * — consume the result before a drain; it is not re-executable
-    * afterwards. */
+    * Post-drain contract (see [[logregFit]]): the adjacency and the
+    * per-step frontiers are [[Checkpoints.materialize]]d, so the next
+    * `Checkpoints.drain` releases them — consume the result before a
+    * drain; it is not re-executable afterwards. */
   def randomWalks(edges: DataFrame, src: Column, dst: Column,
                   len: Int = 8): DataFrame = {
     val e = edges.select(src.as("src"), dst.as("dst"))
@@ -642,23 +641,19 @@ object Graft {
     // checkpoint the adjacency and each frontier — the union would
     // otherwise re-execute step k's join chain once per later step
     // (quadratic; the q151 lesson, 11.4s → 2.5s at sf0.1)
-    val adj = Checkpoints.deferFree(e
+    val adj = Checkpoints.materialize(e
       .withColumn("rn", row_number().over(bysrc.orderBy(col("dst"))))
-      .withColumn("deg", count(lit(1)).over(bysrc))
-      .localCheckpoint())
-    var cur = graph.WebGraph.vertices(e)
-      .select(col("id").as("walk_id"), col("id").as("host"), lit(0).as("step"))
-      .localCheckpoint()
-    Checkpoints.deferFree(cur)
+      .withColumn("deg", count(lit(1)).over(bysrc)))
+    var cur = Checkpoints.materialize(graph.WebGraph.vertices(e)
+      .select(col("id").as("walk_id"), col("id").as("host"), lit(0).as("step")))
     val frames = Seq.newBuilder[DataFrame]
     frames += cur
     for (step <- 1 to len) {
       val pick = pmod(graft.functions.MathFunctions.hash32(
         concat(col("walk_id"), lit("#"), lit(step.toString))), col("deg")) + 1
-      cur = cur.join(adj, col("host") === col("src") && col("rn") === pick)
-        .select(col("walk_id"), col("dst").as("host"), lit(step).as("step"))
-        .localCheckpoint()
-      Checkpoints.deferFree(cur)
+      cur = Checkpoints.materialize(
+        cur.join(adj, col("host") === col("src") && col("rn") === pick)
+        .select(col("walk_id"), col("dst").as("host"), lit(step).as("step")))
       frames += cur
     }
     frames.result().reduce(_ unionByName _)
@@ -831,11 +826,13 @@ object Graft {
     * (n_rows, intercept, b_x, mean_logloss, accuracy).
     *
     * The returned frame is EAGER (the fit runs now, not at first
-    * action) and its lineage is truncated by `localCheckpoint` with the
-    * backing blocks freed at the session's next `Checkpoints.drain` —
-    * consume (collect/write) it before a drain; re-executing it after
-    * one fails with a missing-checkpoint-block error rather than
-    * silently recomputing. Same contract as [[randomWalks]]. */
+    * action) and reads [[Checkpoints.materialize]]d blocks only: the
+    * per-row input and the last round's coefficients (each earlier
+    * round's are released as the next one is made). The session's next
+    * `Checkpoints.drain` releases both — consume (collect/write) the
+    * frame before a drain; re-executing it after one fails with a
+    * missing-checkpoint-block error rather than silently recomputing.
+    * Same contract as [[randomWalks]]. */
   def logregFit(df: DataFrame, x: Column, y: Column,
                 iters: Int = 3): DataFrame =
     operators.Glm.logregFit(df, x, y, iters)

@@ -5,6 +5,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import scala.util.control.NonFatal
+
 /** Session-scoped memo for expensive derived inputs shared by several
   * queries (cleaned edge set, minhash signatures, ...). One eager
   * materialization per (session, key).
@@ -62,7 +64,7 @@ object SessionCache {
   private def drop(k: (SparkSession, String)): Unit = {
     stamps.remove(k)
     memo.remove(k).foreach { e =>
-      try e.release() catch { case _: Throwable => () }
+      try e.release() catch { case NonFatal(_) => () }
     }
   }
 
@@ -123,6 +125,6 @@ object SessionCache {
   def clear(spark: SparkSession): Unit = {
     memo.keys.filter(_._1 eq spark).foreach(drop)
     hooked.remove(spark)
-    try Checkpoints.drain(spark) catch { case _: Throwable => () }
+    try Checkpoints.drain(spark) catch { case NonFatal(_) => () }
   }
 }

@@ -111,9 +111,8 @@ WHERE rank <= $K ORDER BY qid, rank"""
   /** The per-config coded frame (vec_id, v, nrm, bands), cached. */
   private def codedFor(spark: SparkSession, sfDir: String,
                        bandBits: Int, bandCount: Int): DataFrame =
-    graft.Checkpoints.deferUnpersist(vecs(spark, sfDir)
-      .withColumn("bands", VF.lshBands(col("v"), Dims, bandBits, bandCount))
-      .cache())
+    graft.Checkpoints.cache(vecs(spark, sfDir)
+      .withColumn("bands", VF.lshBands(col("v"), Dims, bandBits, bandCount)))
 
   /** LSH candidate pairs for any (bandBits, bandCount) config: THIN
     * distinct (qid, vec_id) rows — the band join and dedup shuffle
@@ -196,11 +195,10 @@ WHERE rank <= $K ORDER BY qid, rank"""
     val e = vecs(spark, sfDir)
     // 64 rows, but each broadcast consumer would re-run the full-scan
     // top-k behind it — cache so the scan happens once.
-    val cents = graft.Checkpoints.deferUnpersist(e
+    val cents = graft.Checkpoints.cache(e
       .orderBy(graft.functions.MathFunctions.universalHash(col("vec_id"), 1), col("vec_id"))
       .limit(KCents)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
-      .cache())
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn")))
     // assignment: nearest centroid per vector (broadcast centroids)
     val wAssign = Window.partitionBy(col("vec_id"))
       .orderBy(col("ccos").desc, col("cid"))
@@ -209,14 +207,13 @@ WHERE rank <= $K ORDER BY qid, rank"""
     // subplan executes once per consumer (no ReusedExchange across the
     // two — the consumers project different columns). Cache it once;
     // the harness drain unpersists after the caller's action.
-    val assigned = graft.Checkpoints.deferUnpersist(
+    val assigned = graft.Checkpoints.cache(
       e.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("v"), col("nrm"), col("cid"),
           round(VF.cosineByNorm(col("v"), col("cv"), col("nrm"), col("cn")), 6).as("ccos"))
         .withColumn("arank", row_number().over(wAssign))
         .filter(col("arank") === 1)
-        .select(col("vec_id"), col("v"), col("nrm"), col("cid"))
-        .cache())
+        .select(col("vec_id"), col("v"), col("nrm"), col("cid")))
     (cents, assigned)
   }
 
@@ -360,12 +357,12 @@ FROM errs ORDER BY vec_id"""
     * rounds, final per-vector assignment (vec_id, v, cid, d2). */
   private[graft] def kmeansFit(e0: DataFrame, k: Int, iters: Int,
                                dims: Int, seed: Int): DataFrame = {
-    val e = graft.Checkpoints.deferUnpersist(e0.cache())
-    var cents = e
+    val e = graft.Checkpoints.cache(e0)
+    // k rows; checkpointed to keep the iteration plan shallow
+    var cents = graft.Checkpoints.materialize(e
       .orderBy(graft.functions.MathFunctions.universalHash(col("vec_id"), seed), col("vec_id"))
       .limit(k)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-      .localCheckpoint() // k rows; keeps the iteration plan shallow
+      .select(col("vec_id").as("cid"), col("v").as("cv")))
     for (_ <- 1 to iters) {
       val next = kmAssign(e, cents)
         .groupBy(col("cid"))
@@ -375,7 +372,6 @@ FROM errs ORDER BY vec_id"""
           array((1 to dims).map(i => round(col(s"s$i") / col("cnt"), 6)): _*).as("cv"))
       cents = graft.Checkpoints.rotate(next, cents)
     }
-    graft.Checkpoints.deferFree(cents)
     kmAssign(e, cents)
   }
 
@@ -504,8 +500,8 @@ FROM allrows ORDER BY qid"""
     * point is then a measured trade, not a guess. */
   def q99AnnFrontier(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val exact = graft.Checkpoints.deferUnpersist(
-      q30KnnBrute(spark, sfDir).select(col("qid"), col("neighbor")).cache())
+    val exact = graft.Checkpoints.cache(
+      q30KnnBrute(spark, sfDir).select(col("qid"), col("neighbor")))
     val (cents, assigned) = ivfParts(spark, sfDir)
     // one cached vector base serves every config's scoring join
     val base = assigned.select(col("vec_id"), col("v"), col("nrm"))
@@ -563,8 +559,7 @@ FROM allrows ORDER BY qid"""
       .filter(col("qid") =!= col("vec_id"))
       .select(explode(ivfCfgArr).as("cfg"), col("qid"), col("vec_id"))
       .filter(col("cfg").isNotNull)
-    val candAll = graft.Checkpoints.deferUnpersist(
-      (lshFrames :+ ivfFrame).reduce(_ unionAll _).cache())
+    val candAll = graft.Checkpoints.cache((lshFrames :+ ivfFrame).reduce(_ unionAll _))
     val q = base.select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val w = Window.partitionBy(col("cfg"), col("qid"))
       .orderBy(col("cosine").desc, col("vec_id"))
@@ -863,12 +858,11 @@ ORDER BY qid"""
                            iters: Int, seed: Int): DataFrame = {
     val subDim = dims / nSubs
     val e = e0.select(col("vec_id"), col("v"))
-    val subs = graft.Checkpoints.deferUnpersist(e
+    val subs = graft.Checkpoints.cache(e
       .select(col("vec_id"), explode(sequence(lit(0), lit(nSubs - 1))).as("m"),
         col("v"))
       .select(col("m"), col("vec_id"),
-        slice(col("v"), col("m") * subDim + 1, lit(subDim)).as("sv"))
-      .cache())
+        slice(col("v"), col("m") * subDim + 1, lit(subDim)).as("sv")))
     val seedIds = e
       .orderBy(graft.functions.MathFunctions.universalHash(col("vec_id"), seed),
         col("vec_id"))
@@ -882,9 +876,10 @@ ORDER BY qid"""
           min(struct(col("d2"), col("cid"))).as("dm"))
         .select(col("m"), col("vec_id"), col("mm.cid").as("cid"),
           col("mm.sv").as("sv"), col("dm.d2").as("d2"))
-    var cents = subs.join(broadcast(seedIds), col("vec_id") === col("seed_id"))
-      .select(col("m"), col("vec_id").as("cid"), col("sv").as("cv"))
-      .localCheckpoint() // nSubs·k rows; keeps the loop plan shallow
+    // nSubs·k rows; checkpointed to keep the loop plan shallow
+    var cents = graft.Checkpoints.materialize(
+      subs.join(broadcast(seedIds), col("vec_id") === col("seed_id"))
+        .select(col("m"), col("vec_id").as("cid"), col("sv").as("cv")))
     for (_ <- 1 to iters) {
       val next = assign(cents)
         .groupBy(col("m"), col("cid"))
@@ -895,7 +890,6 @@ ORDER BY qid"""
             .as("cv"))
       cents = graft.Checkpoints.rotate(next, cents)
     }
-    graft.Checkpoints.deferFree(cents)
     // d2 is 6dp-gridded per row, so the census mean must be an exact
     // DECIMAL sum + one division — a double avg() is association-order
     // dependent and flipped a boundary cell at sf0.1 (0.0872505).
@@ -1115,18 +1109,16 @@ GROUP BY l.label ORDER BY l.label""".stripMargin
     val e = vecs(spark, sfDir)
     val q = e.filter(col("vec_id") === 0)
       .select(col("v").as("qv"), col("nrm").as("qn"))
-    val cand = graft.Checkpoints.deferFree(e.filter(col("vec_id") =!= 0)
+    val cand = graft.Checkpoints.materialize(e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("v"), col("nrm"),
         round(VF.cosineByNorm(col("qv"), col("v"), col("qn"), col("nrm")), 6)
           .as("rel"))
-      .orderBy(col("rel").desc, col("vec_id")).limit(MmrCandidates)
-      .localCheckpoint())
-    var sel = graft.Checkpoints.deferFree(cand
+      .orderBy(col("rel").desc, col("vec_id")).limit(MmrCandidates))
+    var sel = graft.Checkpoints.materialize(cand
       .orderBy(col("rel").desc, col("vec_id")).limit(1)
       .select(col("vec_id"), col("v"), col("nrm"), col("rel"),
-        lit(1).as("pick"), col("rel").as("mmr"), lit(0.0).as("max_sim"))
-      .localCheckpoint())
+        lit(1).as("pick"), col("rel").as("mmr"), lit(0.0).as("max_sim")))
     for (r <- 2 to MmrPicks) {
       val s = sel.select(col("vec_id").as("sid"), col("v").as("sv"),
         col("nrm").as("sn"))
@@ -1141,7 +1133,7 @@ GROUP BY l.label ORDER BY l.label""".stripMargin
         .select(col("vec_id"), col("v"), col("nrm"), col("rel"),
           lit(r).as("pick"), mmrScore.as("mmr"), col("max_sim"))
         .orderBy(mmrScore.desc, col("vec_id")).limit(1)
-      sel = graft.Checkpoints.deferFree(sel.unionByName(pick).localCheckpoint())
+      sel = graft.Checkpoints.materialize(sel.unionByName(pick))
     }
     sel.select(col("pick"), col("vec_id"), col("rel"),
       round(col("max_sim"), 6).as("max_sim"), col("mmr"))

@@ -251,9 +251,9 @@ ORDER BY c.da, c.db"""
   /** 64-bit SimHash over word tokens + 16-bit-band candidate join +
     * hamming filter. */
   def q22SimHash(spark: SparkSession, sfDir: String): DataFrame = {
-    // deferUnpersist: the returned frame reads sig twice (both sides of
-    // the band join); the harness drain frees it after the action.
-    val sig = graft.Checkpoints.deferUnpersist(simhashSigNative(spark, sfDir).cache())
+    // cached: the returned frame reads sig twice (both sides of the
+    // band join); the harness drain frees it after the action.
+    val sig = graft.Checkpoints.cache(simhashSigNative(spark, sfDir))
     val bandsDf = simhashBands(sig)
     val a = bandsDf.select(col("doc_id").as("da"), col("simlo").as("loa"),
       col("simhi").as("hia"), col("band"), col("key"))
@@ -307,11 +307,10 @@ SELECT da, db, hamming FROM pairs WHERE hamming <= $MaxHamming ORDER BY da, db""
     // intersection is a merge-walk on the two candidate arrays —
     // the r4-early formulation exploded both sets and re-grouped the
     // matches (two shuffles of every shingle of every candidate doc).
-    val sets = graft.Checkpoints.deferUnpersist(
+    val sets = graft.Checkpoints.cache(
       corpus(spark, sfDir)
         .select(col("doc_id"), call_function("graft_shingle_set", col("text")).as("s"))
-        .select(col("doc_id"), col("s"), size(col("s")).as("n"))
-        .cache())
+        .select(col("doc_id"), col("s"), size(col("s")).as("n")))
     val cand = candidates(bands(cachedSignatures(spark, sfDir)))
     val sa = sets.toDF("da", "sa", "na")
     val sb = sets.toDF("db", "sb", "nb")
@@ -383,7 +382,7 @@ ORDER BY c.da, c.db"""
       .select(col("vec_id"), col("pos").as("band"), col("col").as("key"))
 
   def q24EmbeddingDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val vc = graft.Checkpoints.deferUnpersist(embCorpus(spark, sfDir).cache())
+    val vc = graft.Checkpoints.cache(embCorpus(spark, sfDir))
     val banded = embBands(vc)
     val cand = banded.toDF("va", "band", "key")
       .join(banded.toDF("vb", "band", "key"), Seq("band", "key"))
@@ -432,16 +431,14 @@ SELECT va, vb, cosine FROM pairs WHERE cosine >= $CosThreshold ORDER BY va, vb""
     * per near-dup group" primitive of a training-data pipeline. */
   def q25DupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val cand = candidates(bands(cachedSignatures(spark, sfDir)))
-    val und = cand.select(col("da").as("a"), col("db").as("b"))
-      .unionAll(cand.select(col("db").as("a"), col("da").as("b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = graft.Checkpoints.cache(cand.select(col("da").as("a"), col("db").as("b"))
+      .unionAll(cand.select(col("db").as("a"), col("da").as("b"))))
     // the FULL corpus as init (not ConnectedComponents.run's edge-derived
     // vertex set): isolated docs become their own singleton clusters
     val init = corpus(spark, sfDir)
       .select(col("doc_id").as("id"), col("doc_id").as("lbl"))
     val (labels, _) = graft.graph.ConnectedComponents.propagate(und, init, CcIters)
     und.unpersist()
-    graft.Checkpoints.deferFree(labels)
     labels.select(col("id").as("doc_id"), col("lbl").as("cluster"),
         (col("id") === col("lbl")).as("is_canonical"))
       .orderBy(col("doc_id"))
@@ -751,11 +748,10 @@ ORDER BY c.doc_id"""
     * pipeline. Same blocked shape as q23: compiled in-row shingle
     * sets, merge-walk intersection, candidates only (never all-pairs). */
   def q104Containment(spark: SparkSession, sfDir: String): DataFrame = {
-    val sets = graft.Checkpoints.deferUnpersist(
+    val sets = graft.Checkpoints.cache(
       corpus(spark, sfDir)
         .select(col("doc_id"), call_function("graft_shingle_set", col("text")).as("s"))
-        .select(col("doc_id"), col("s"), size(col("s")).as("n"))
-        .cache())
+        .select(col("doc_id"), col("s"), size(col("s")).as("n")))
     val cand = candidates(bands(cachedSignatures(spark, sfDir)))
     val sa = sets.toDF("da", "sa", "na")
     val sb = sets.toDF("db", "sb", "nb")
@@ -833,9 +829,8 @@ ORDER BY c.da, c.db"""
       .select(col("hlo"), col("hhi")).distinct()
     val train = c.filter(pmod(col("doc_id"), lit(NgramDecontMod)) =!= 0)
     // two consumers (hits, totals) — cache or the gram subtree runs twice
-    val pg = graft.Checkpoints.deferUnpersist(hashed(train)
-      .groupBy(col("doc_id"), col("hlo"), col("hhi")).agg(count(lit(1)).as("occ"))
-      .cache())
+    val pg = graft.Checkpoints.cache(hashed(train)
+      .groupBy(col("doc_id"), col("hlo"), col("hhi")).agg(count(lit(1)).as("occ")))
     val hits = pg.join(bench, Seq("hlo", "hhi"), "left_semi")
       .groupBy(col("doc_id")).agg(sum(col("occ")).as("hit_grams"))
     val tot = pg.groupBy(col("doc_id")).agg(sum(col("occ")).as("n_grams"))
@@ -899,14 +894,12 @@ ORDER BY t.doc_id"""
     * size (bounded by duplication multiplicity, not corpus size). */
   def q117Survivor(spark: SparkSession, sfDir: String): DataFrame = {
     val cand = candidates(bands(cachedSignatures(spark, sfDir)))
-    val und = cand.select(col("da").as("a"), col("db").as("b"))
-      .unionAll(cand.select(col("db").as("a"), col("da").as("b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = graft.Checkpoints.cache(cand.select(col("da").as("a"), col("db").as("b"))
+      .unionAll(cand.select(col("db").as("a"), col("da").as("b"))))
     val init = corpus(spark, sfDir)
       .select(col("doc_id").as("id"), col("doc_id").as("lbl"))
     val (labels, _) = graft.graph.ConnectedComponents.propagate(und, init, CcIters)
     und.unpersist()
-    graft.Checkpoints.deferFree(labels)
     val len = corpus(spark, sfDir)
       .select(col("doc_id"), length(col("text")).as("n_chars"))
     val byCluster = Window.partitionBy(col("cluster"))
@@ -1122,11 +1115,10 @@ ORDER BY da, db"""
     * the candidate pairs only — the published AllPairs plan, made
     * relational. */
   def q149SetSimJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val sets = graft.Checkpoints.deferUnpersist(
+    val sets = graft.Checkpoints.cache(
       corpus(spark, sfDir)
         .select(col("doc_id"), call_function("graft_shingle_set", col("text")).as("s"))
-        .select(col("doc_id"), col("s"), size(col("s")).as("n"))
-        .cache())
+        .select(col("doc_id"), col("s"), size(col("s")).as("n")))
     // p = n − ⌈t·n⌉ + 1, with ⌈num·n/den⌉ = (num·n + den − 1) div den
     val prefLen = (col("n") - expr(s"($SetSimNum * n + ${SetSimDen - 1}) div $SetSimDen")
       + 1).cast("int")
@@ -1263,15 +1255,13 @@ FROM stats"""
     * loop; the survivor pick is one partial-agged min per duplicate. */
   def q174SemDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ann.AnnQueries
-    val corpus = graft.Checkpoints.deferUnpersist(
-      embCorpus(spark, sfDir).cache())
+    val corpus = graft.Checkpoints.cache(embCorpus(spark, sfDir))
     val assign = AnnQueries.kmeansFit(corpus.select(col("vec_id"), col("v")),
       AnnQueries.KmK, AnnQueries.KmIters, EmbDims, seed = 2)
-    val a = graft.Checkpoints.deferUnpersist(assign
+    val a = graft.Checkpoints.cache(assign
       .select(col("vec_id"), col("cid"))
       .join(corpus, "vec_id")
-      .select(col("vec_id"), col("cid"), col("v"), col("nrm"))
-      .cache())
+      .select(col("vec_id"), col("cid"), col("v"), col("nrm")))
     val pairs = a.toDF("da", "cid", "va_v", "na")
       .join(a.toDF("db", "cid", "vb_v", "nb"), "cid")
       .filter(col("da") < col("db"))
@@ -1338,14 +1328,13 @@ ORDER BY f.vec_id"""
     * agg, one df census, a df-capped self-join, O(pairs) census,
     * top-K. */
   def q242SharedNgrams(spark: SparkSession, sfDir: String): DataFrame = {
-    val pg = graft.Checkpoints.deferUnpersist(corpus(spark, sfDir)
+    val pg = graft.Checkpoints.cache(corpus(spark, sfDir)
       .filter(size(split(col("text"), " ")) >= SharedGramN)
       .select(col("doc_id"),
         explode(call_function("graft_gram_hashes", col("text"), lit(SharedGramN)))
           .as("gh"))
       .select(col("doc_id"), col("gh.hlo").as("hlo"), col("gh.hhi").as("hhi"))
-      .distinct()
-      .cache()) // feeds doc totals, the df census AND both join sides
+      .distinct()) // feeds doc totals, the df census AND both join sides
     val doctot = pg.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
     val keep = pg.groupBy(col("hlo"), col("hhi")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= SharedDfCap)
@@ -1425,26 +1414,23 @@ ORDER BY f.vec_id"""
       sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     val docs = Tables.documents(spark, sfDir, spreadScan = true)
       .select(col("doc_id"), col("source"), col("text"))
-    val tf = graft.Checkpoints.deferFree(docs
+    val tf = graft.Checkpoints.materialize(docs
       .select(col("doc_id"), col("source"),
         explode(split(col("text"), " ")).as("term"))
       .groupBy(col("doc_id"), col("source"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("tf")))
     val dfq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
-    val w = graft.Checkpoints.deferFree(tf
+    val w = graft.Checkpoints.materialize(tf
       .join(broadcast(dfq), "term").crossJoin(broadcast(n))
       .select(col("doc_id"), col("source"), col("term"),
-        (col("tf") * log((col("n") + 1.0) / (col("df") + 1.0))).as("w"))
-      .localCheckpoint())
+        (col("tf") * log((col("n") + 1.0) / (col("df") + 1.0))).as("w")))
     val nrm = w.groupBy(col("doc_id"))
       .agg(sqrt(dec12(col("w") * col("w"))).as("nm"))
-    val wn = graft.Checkpoints.deferFree(w.join(nrm, "doc_id")
+    val wn = graft.Checkpoints.materialize(w.join(nrm, "doc_id")
       .filter(col("nm") > 0)
       .select(col("doc_id"), col("source"), col("term"),
-        (col("w") / col("nm")).as("wn"))
-      .localCheckpoint())
+        (col("w") / col("nm")).as("wn")))
     // the product terms are 1e-12-gridded via floor(x·10¹² + 0.5) and
     // carried as SCALED INT64 through the wedge-heavy aggregation —
     // q79's discipline: a long add per wedge row instead of a
@@ -1554,19 +1540,17 @@ FROM ranked WHERE rank <= $TfidfPairTopK ORDER BY rank"""
       col("len").as("la"), col("pre").as("pa"))
     val b = d.select(col("lang"), col("doc_id").as("db"), col("source").as("sb"),
       col("len").as("lb"), col("pre").as("pb"))
-    val pat = graft.Checkpoints.deferFree(a.join(b, "lang")
+    val pat = graft.Checkpoints.materialize(a.join(b, "lang")
       .filter(col("da") < col("db"))
       .select(
         when(col("sa") === col("sb"), 1L).otherwise(0L).as("g1"),
         when(lit(10) * least(col("la"), col("lb")) >=
           lit(9) * greatest(col("la"), col("lb")), 1L).otherwise(0L).as("g2"),
         when(col("pa") === col("pb"), 1L).otherwise(0L).as("g3"))
-      .groupBy(col("g1"), col("g2"), col("g3")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint())
-    var em = spark.range(1).select(lit(0.05).as("p"),
+      .groupBy(col("g1"), col("g2"), col("g3")).agg(count(lit(1)).as("cnt")))
+    var em = graft.Checkpoints.materialize(spark.range(1).select(lit(0.05).as("p"),
       lit(0.9).as("m1"), lit(0.9).as("m2"), lit(0.9).as("m3"),
-      lit(0.3).as("u1"), lit(0.3).as("u2"), lit(0.3).as("u3"))
-      .localCheckpoint()
+      lit(0.3).as("u1"), lit(0.3).as("u2"), lit(0.3).as("u3")))
     def fac(prob: Column, g: Column): Column =
       when(g === 1L, prob).otherwise(lit(1.0) - prob)
     def post: Column = {
@@ -1580,7 +1564,7 @@ FROM ranked WHERE rank <= $TfidfPairTopK ORDER BY rank"""
     for (_ <- 1 to LkEmRounds) {
       val g = pat.crossJoin(broadcast(em))
         .select(col("g1"), col("g2"), col("g3"), col("cnt"), post.as("g"))
-      scored = if (scored == null) g.localCheckpoint()
+      scored = if (scored == null) graft.Checkpoints.materialize(g)
                else graft.Checkpoints.rotate(g, scored)
       val ne = scored.agg(
         round(dec12(col("cnt") * col("g")) / dec12(col("cnt")), 12).as("p"),
@@ -1607,8 +1591,6 @@ FROM ranked WHERE rank <= $TfidfPairTopK ORDER BY rank"""
           wfac(col("m2"), col("u2"), col("g2")) *
           wfac(col("m3"), col("u3"), col("g3"))), 6).as("match_weight"))
       .orderBy(col("g1").desc, col("g2").desc, col("g3").desc)
-    graft.Checkpoints.deferFree(scored)
-    graft.Checkpoints.deferFree(em)
     out
   }
 
@@ -1674,7 +1656,7 @@ FROM g$LkEmRounds ORDER BY g1 DESC, g2 DESC, g3 DESC"""
     * both the gate and the join) and broadcast it only while it is
     * broadcast-sized. Blocks are deferred to the per-query drain. */
   private def sizeGatedBroadcast(df: DataFrame): DataFrame = {
-    val cp = graft.Checkpoints.deferFree(df.localCheckpoint())
+    val cp = graft.Checkpoints.materialize(df)
     if (cp.count() <= VocabBroadcastMax) broadcast(cp) else cp
   }
 

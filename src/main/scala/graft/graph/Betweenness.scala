@@ -32,14 +32,12 @@ object Betweenness {
     // partition once on src — the join key of BOTH the forward σ pulls
     // and the backward δ joins (the Bfs discipline): per-level joins
     // reuse the persisted partitioning instead of re-shuffling edges.
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.Checkpoints.cache(edges.select(col("src"), col("dst"))
+      .repartition(col("src")))
     // forward: (seed, id, lvl, sigma) — level-sliced shortest-path DAG
     var levels = Vector(
-      graft.Checkpoints.deferFree(seeds
-        .select(col("id"), col("id").as("seed"), lit(1L).as("sigma"))
-        .localCheckpoint()))
+      graft.Checkpoints.materialize(seeds
+        .select(col("id"), col("id").as("seed"), lit(1L).as("sigma"))))
     var settled = levels.head.select(col("id"), col("seed"))
     for (_ <- 1 to rounds) {
       val prev = levels.last
@@ -47,9 +45,8 @@ object Betweenness {
         .groupBy(col("dst"), col("seed"))
         .agg(sum(col("sigma")).as("sigma"))
         .select(col("dst").as("id"), col("seed"), col("sigma"))
-      val fresh = graft.Checkpoints.deferFree(pulled
-        .join(settled, Seq("id", "seed"), "left_anti")
-        .localCheckpoint())
+      val fresh = graft.Checkpoints.materialize(pulled
+        .join(settled, Seq("id", "seed"), "left_anti"))
       levels = levels :+ fresh
       settled = settled.unionByName(fresh.select(col("id"), col("seed")))
     }
@@ -65,7 +62,7 @@ object Betweenness {
       val dw = deltaNext
         .select(col("id").as("dwid"), col("seed").as("dwseed"),
           col("delta").as("wdelta"))
-      val d = graft.Checkpoints.deferFree(cur
+      val d = graft.Checkpoints.materialize(cur
         .join(e, col("id") === col("src"))
         .join(succ, col("dst") === col("wid") && col("seed") === col("wseed"))
         .join(dw, col("wid") === col("dwid") && col("seed") === col("dwseed"),
@@ -75,8 +72,7 @@ object Betweenness {
           round(col("sigma") / col("wsigma").cast("double")
             * (lit(1.0) + coalesce(col("wdelta"), lit(0.0))), 12)
             .cast(DecimalType(38, 12))), lit(0).cast(DecimalType(38, 12)))
-          .cast("double").as("delta"))
-        .localCheckpoint())
+          .cast("double").as("delta")))
       acc += d
       deltaNext = d
     }

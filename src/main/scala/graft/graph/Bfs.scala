@@ -38,10 +38,9 @@ object Bfs {
     *              are ignored by construction of the init join).
     * @return (id, dist) — dist is NULL for vertices unreached within
     *         `maxIters` hops. CONSUME BEFORE DRAIN: the returned join
-    *         is lazy over localCheckpoint segments that are already
-    *         [[graft.Checkpoints.deferFree]]'d, so a caller that calls
-    *         `Checkpoints.drain` before materializing the result would
-    *         read unpersisted, lineage-truncated blocks —
+    *         is lazy over checkpoint segments that the next
+    *         `Checkpoints.drain` releases; reading it after that drain
+    *         would read unpersisted, lineage-truncated blocks —
     *         unrecoverable by recompute. Materialize (count/collect/
     *         write/localCheckpoint) first; the bench/Verify
     *         drain-BETWEEN-queries contract does exactly that. */
@@ -52,12 +51,11 @@ object Bfs {
     // so only the (shrinking) frontier rides an exchange per round —
     // without it each round re-shuffles the whole edge frame (guide
     // §2.4 "two operations keyed the same way share one exchange").
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.Checkpoints.cache(edges.select(col("src"), col("dst"))
+      .repartition(col("src")))
     // one scan of the vertex frame, reused by the seed join and the
     // final left join (a lazy `vertices` would be recomputed by each)
-    val verts = vertices.select(col("id")).localCheckpoint()
+    val verts = graft.Checkpoints.materialize(vertices.select(col("id")))
     val seg0 = verts
       .join(seeds.select(col("id")), Seq("id"), "left_semi")
       .select(col("id"), lit(0L).as("dist"))
@@ -67,7 +65,6 @@ object Bfs {
         .select(col("dst").as("id"), col("dist"))
     }
     e.unpersist()
-    graft.Checkpoints.deferFree(verts)
     verts.join(settled, Seq("id"), "left").select(col("id"), col("dist"))
   }
 }

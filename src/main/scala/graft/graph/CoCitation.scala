@@ -43,9 +43,8 @@ object CoCitation {
   def run(spark: SparkSession, edges: DataFrame, degreeCap: Int = 0,
           cacheKey: Option[String] = None): DataFrame = {
     val vmap = LinkRank.vmapFor(spark, WebGraph.vertices(edges), cacheKey)
-    val e = graft.Checkpoints.deferFree(VertexLoop.vidEdges(edges, vmap)
-      .select(col("svid").as("vs"), col("dvid").as("vd"))
-      .localCheckpoint())
+    val e = graft.Checkpoints.materialize(VertexLoop.vidEdges(edges, vmap)
+      .select(col("svid").as("vs"), col("dvid").as("vd")))
     // eager checkpoint ⇒ the count is a cheap block scan; the wedge
     // self-join broadcasts only while the frame is broadcast-sized
     val small = e.count() <= BroadcastMaxEdges

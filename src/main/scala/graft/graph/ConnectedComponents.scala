@@ -29,7 +29,8 @@ object ConnectedComponents {
     * facade share this loop).
     *
     * @return (labels(id, lbl, chg), rounds actually run) — the
-    *         snapshot itself, so the caller can free its blocks */
+    *         snapshot itself: a caller may free it early, otherwise
+    *         it is released at the next drain */
   private[graft] def propagate(und: DataFrame, init: DataFrame,
                                maxIters: Int): (DataFrame, Int) =
     VertexLoop.iterate(init.select(col("id"), col("lbl")), maxIters,
@@ -53,16 +54,14 @@ object ConnectedComponents {
     // partition once on the per-round join key (b — the label pull
     // side): the distinct leaves und partitioned on (a,b), which every
     // propagation round would otherwise re-shuffle to align on b.
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
+    val und = graft.Checkpoints.cache(edges.select(col("src").as("a"), col("dst").as("b"))
       .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
       .filter(col("a") =!= col("b")).distinct()
-      .repartition(col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("b")))
     val init = und.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
     val (labels, _) = propagate(und, init, maxIters)
     und.unpersist()
-    graft.Checkpoints.deferFree(labels)
     labels.select(col("id"), col("lbl").as("component"))
   }
 }

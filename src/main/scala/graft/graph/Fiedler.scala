@@ -22,9 +22,9 @@ object Fiedler {
   /** (round, lambda2, n_pos, n_neg, cut_edges, n_edges) per power
     * round. `edges` must expose the columns named by `src`/`dst`. */
   def run(edges: DataFrame, src: Column, dst: Column, rounds: Int): DataFrame = {
-    val und = graft.Checkpoints.deferUnpersist(edges.select(
+    val und = graft.Checkpoints.cache(edges.select(
         least(src, dst).as("u"), greatest(src, dst).as("v"))
-      .filter(col("u") =!= col("v")).distinct().cache())
+      .filter(col("u") =!= col("v")).distinct())
     val deg = und.select(col("u").as("id"))
       .unionAll(und.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
@@ -41,7 +41,7 @@ object Fiedler {
     var v = deg.select(col("id"), col("d"),
       (pmod(graft.functions.MathFunctions.hash32(col("id")), lit(1000L))
         .cast("double") / lit(1000.0) - lit(0.5)).as("raw"))
-    v = normalized(centered(v)).localCheckpoint()
+    v = graft.Checkpoints.materialize(normalized(centered(v)))
     var out: Seq[DataFrame] = Nil
     for (r <- 1 to rounds) {
       // the score frame is O(vertices of a bounded graph) — broadcast
@@ -59,17 +59,16 @@ object Fiedler {
       // 1-row-aggregate action, and an unmaterialized y would re-run
       // the matvec (edge join + shuffle) once PER job — measured 5×
       // the shuffle budget. One matvec per round, read four times.
-      val y = graft.Checkpoints.deferFree(v.join(av, Seq("id"), "left")
+      val y = graft.Checkpoints.materialize(v.join(av, Seq("id"), "left")
         .crossJoin(broadcast(cRow))
         .select(col("id"), col("d"),
           round((col("c") - col("d")) * col("x") + coalesce(col("av"), lit(0.0)), 6)
-            .as("raw"))
-        .localCheckpoint())
+            .as("raw")))
       val lam = v.join(broadcast(y.select(col("id"), col("raw").as("y"))), "id")
         .agg(dsum(round(col("x") * col("y"), 6)).cast("double").as("lam_m"))
         .crossJoin(broadcast(cRow))
         .select((col("c") - col("lam_m")).as("lambda2"))
-      val vNext = normalized(centered(y)).localCheckpoint()
+      val vNext = graft.Checkpoints.materialize(normalized(centered(y)))
       val cut = und
         .join(broadcast(vNext.select(col("id").as("u"), col("x").as("xu"))), "u")
         .join(broadcast(vNext.select(col("id").as("v"), col("x").as("xv"))), "v")
@@ -82,10 +81,8 @@ object Fiedler {
       out = out :+ lam.crossJoin(broadcast(sizes)).crossJoin(broadcast(cut))
         .select(lit(r).as("round"), round(col("lambda2"), 6).as("lambda2"),
           col("n_pos"), col("n_neg"), col("cut_edges"), col("n_edges"))
-      graft.Checkpoints.deferFree(v)
       v = vNext
     }
-    graft.Checkpoints.deferFree(v)
     out.reduce(_ unionAll _).orderBy(col("round"))
   }
 

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** HITS hubs & authorities (Kleinberg, JACM'99) — the second classic
   * link-analysis family next to the reference's PageRank variants: a
@@ -35,7 +34,7 @@ object Hits {
     def mapped: DataFrame = VertexLoop.vidEdges(edges, vmap).select(col("svid"), col("dvid"))
     def cache(df: DataFrame, key: String): DataFrame = cacheKey match {
       case Some(k) => graft.SessionCache.cached(spark, s"hits-$key:$k")(df)
-      case None => df.persist(StorageLevel.MEMORY_AND_DISK)
+      case None => graft.Checkpoints.cache(df)
     }
     val eS = cache(mapped.repartition(col("svid")), "es")
     val eD = cache(mapped.repartition(col("dvid")), "ed")
@@ -44,7 +43,7 @@ object Hits {
     // state: raw (pre-normalization) per-vertex sums; the normalizer is
     // folded in where the frame is consumed, same association as the
     // oracle's `a / (SELECT sum(a) FROM af_k)`
-    var hubRaw = verts.select(col("vid"), lit(1.0).as("h")).localCheckpoint()
+    var hubRaw = graft.Checkpoints.materialize(verts.select(col("vid"), lit(1.0).as("h")))
     var authNorm: DataFrame = null
     var authRaw: DataFrame = null
     def normalized(raw: DataFrame, c: String): DataFrame = {
@@ -59,7 +58,7 @@ object Hits {
           col("vid") === col("dvid"), "left")
         .select(col("vid"), coalesce(col("a"), lit(0.0)).as("a"))
       authRaw =
-        if (authRaw == null) ra.localCheckpoint()
+        if (authRaw == null) graft.Checkpoints.materialize(ra)
         else graft.Checkpoints.rotate(ra, authRaw)
       val an = normalized(authRaw, "a")
       val rh = verts
@@ -76,12 +75,7 @@ object Hits {
         "vid")
       .join(vmap, "vid")
       .select(col("id"), col("auth"), col("hub"))
-    graft.Checkpoints.deferFree(authRaw)
-    graft.Checkpoints.deferFree(hubRaw)
-    if (cacheKey.isEmpty) {
-      eS.unpersist(); eD.unpersist()
-      graft.Checkpoints.deferCleanup(spark)(() => graft.Checkpoints.free(vmap))
-    }
+    if (cacheKey.isEmpty) { eS.unpersist(); eD.unpersist() }
     out
   }
 }

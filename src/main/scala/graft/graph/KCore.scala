@@ -50,13 +50,11 @@ object KCore {
     // `b` (measured: the per-round edge shuffle dominated q89's 200 MB
     // shuffle volume at sf0.1). Persisted partitioning is reused by
     // every round's join; only the small removed set shuffles per round.
-    val e = und.select(col("a"), col("b"))
-      .repartition(col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.Checkpoints.cache(und.select(col("a"), col("b"))
+      .repartition(col("b")))
     // full degrees once (symmetric frame: every vertex appears as `a`);
     // the loop maintains them incrementally from here
-    val deg0 = graft.Checkpoints.deferFree(
-      e.groupBy(col("a")).agg(count(lit(1)).as("deg")).localCheckpoint())
+    val deg0 = graft.Checkpoints.materialize(e.groupBy(col("a")).agg(count(lit(1)).as("deg")))
     var cur = deg0
     var aliveN = cur.count()
     var rounds = 0
@@ -70,9 +68,9 @@ object KCore {
       val next = surv.join(delta, Seq("a"), "left")
         .select(col("a"),
           (col("deg") - coalesce(col("d"), lit(0L))).as("deg"))
-      val cp = next.localCheckpoint()
+      val cp = graft.Checkpoints.materialize(next)
       // deg0's blocks outlive the loop (the final all-vertices join
-      // reads them; deferFree'd above) — rotate only loop snapshots
+      // reads them until drain) — rotate only loop snapshots
       if (!(cur eq deg0)) graft.Checkpoints.free(cur)
       cur = cp
       rounds += 1
@@ -86,7 +84,6 @@ object KCore {
       .select(col("id"), coalesce(col("in_core"), lit(false)).as("in_core"),
         coalesce(col("core_deg"), lit(0L)).as("core_deg"))
     e.unpersist()
-    graft.Checkpoints.deferFree(cur)
     out
   }
 }

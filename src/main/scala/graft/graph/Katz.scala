@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.storage.StorageLevel
 
 /** Katz centrality (Katz 1953) — the attenuated-path-count member of
   * the eigenvector family: x(v) counts ALL walks ending at v, a walk
@@ -37,7 +36,7 @@ object Katz {
     val e = cacheKey match {
       case Some(k) =>
         graft.SessionCache.cached(spark, s"katz-e:$k")(mapped.repartition(col("dvid")))
-      case None => mapped.repartition(col("dvid")).persist(StorageLevel.MEMORY_AND_DISK)
+      case None => graft.Checkpoints.cache(mapped.repartition(col("dvid")))
     }
     val verts = vmap.select(col("vid"))
 
@@ -52,11 +51,7 @@ object Katz {
         .select(col("vid"), (lit(1.0) + coalesce(col("s"), lit(0.0))).as("x"))
     }
     val out = x.join(vmap, "vid").select(col("id"), col("x").as("katz"))
-    graft.Checkpoints.deferFree(x)
-    if (cacheKey.isEmpty) {
-      e.unpersist()
-      graft.Checkpoints.deferCleanup(spark)(() => graft.Checkpoints.free(vmap))
-    }
+    if (cacheKey.isEmpty) e.unpersist()
     out
   }
 }

@@ -39,11 +39,10 @@ object LabelPropagation {
     // partition once on the per-round join key (b — the neighbor-label
     // pull side), the ConnectedComponents discipline: rounds reuse the
     // persisted partitioning instead of re-shuffling the edge frame.
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
+    val und = graft.Checkpoints.cache(edges.select(col("src").as("a"), col("dst").as("b"))
       .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
       .filter(col("a") =!= col("b")).distinct()
-      .repartition(col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("b")))
     val verts = und.select(col("a").as("id")).distinct()
     // Conflicting duplicate seed rows are resolved to min(lbl) BEFORE the
     // join: a duplicated (id, lbl) pair would otherwise duplicate the
@@ -73,7 +72,6 @@ object LabelPropagation {
             .as("chg"))
     }
     und.unpersist()
-    graft.Checkpoints.deferFree(labels)
     labels.select(col("id"), col("lbl"), col("is_seed"))
   }
 }

@@ -44,9 +44,9 @@ object LinkPrediction {
     // re-established on the original ids after the map-back.
     val vmap = LinkRank.vmapFor(edges.sparkSession,
       und0.select(col("a").as("id")).distinct(), None)
-    val und = VertexLoop.vidEdges(und0.select(col("a").as("src"), col("b").as("dst")), vmap)
-      .select(col("svid").as("a"), col("dvid").as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = graft.Checkpoints.cache(
+      VertexLoop.vidEdges(und0.select(col("a").as("src"), col("b").as("dst")), vmap)
+        .select(col("svid").as("a"), col("dvid").as("b")))
     val deg = und.groupBy(col("a").as("w")).agg(count(lit(1)).as("deg"))
     val capped = if (degreeCap > 0) deg.filter(col("deg") <= degreeCap) else deg
     // the wedge center's score term rides the NEIGHBOR-LIST rows (one
@@ -83,7 +83,6 @@ object LinkPrediction {
         round(col("ti_sum").cast("double") / lit(1e12), 6).as("aa_score"),
         coalesce(!col("adjacent"), lit(true)).as("is_new"))
     und.unpersist(blocking = false)
-    graft.Checkpoints.deferFree(vmap)
     scored
   }
 }

@@ -95,9 +95,8 @@ object LinkRank {
     // squared deviations) so the oracle's CTE arithmetic is identical.
     // The string id comes back via one final join against the mapping.
     val n = run.first.n.toDouble
-    val logs = run.frame.join(vmap, "vid")
-      .select(col("id"), log(col("score")).as("l"))
-      .localCheckpoint()
+    val logs = graft.Checkpoints.materialize(run.frame.join(vmap, "vid")
+      .select(col("id"), log(col("score")).as("l")))
     run.free() // logs is materialized; the loop's blocks can go
     val mu = logs.agg(sum(col("l"))).first().getDouble(0) / n
     val sig0 = math.sqrt(
@@ -106,9 +105,6 @@ object LinkRank {
 
     val out = logs.select(col("id"),
       (MathFunctions.normalCdf(col("l"), lit(mu), lit(sigma)) * lit(scale)).as("score"))
-    // `out` still reads logs' blocks lazily — free them at the harness
-    // drain after the caller's action, not now.
-    graft.Checkpoints.deferFree(logs)
     if (cacheKey.isEmpty) graft.Checkpoints.free(vmap) // session-cached vmaps are shared
     (out, run.rounds)
   }
@@ -150,15 +146,13 @@ object LinkRank {
   }
 
   /** The raw (id, score) result of a damped run. The run's blocks are
-    * freed at the caller's drain, after its action; so is a run-local
-    * id map. */
+    * freed at the caller's drain, after its action (a run-local id map
+    * is released there too, as a [[graft.Checkpoints.materialize]]d
+    * frame). */
   private[graph] def release(spark: SparkSession, run: DampedRank.Result, vmap: DataFrame,
                              cacheKey: Option[String]): DataFrame = {
     val out = run.frame.join(vmap, "vid").select(col("id"), col("score"))
-    graft.Checkpoints.deferCleanup(spark) { () =>
-      run.free()
-      if (cacheKey.isEmpty) graft.Checkpoints.free(vmap)
-    }
+    graft.Checkpoints.deferCleanup(spark)(() => run.free())
     out
   }
 
@@ -179,16 +173,15 @@ object LinkRank {
     * Checkpointed so monotonically_increasing_id is assigned exactly
     * once (a recompute could reassign); shared by both rank backends,
     * and across queries of the same graph via SessionCache when
-    * `cacheKey` is set. */
+    * `cacheKey` is set (otherwise released at the next drain). */
   private[graph] def vmapFor(spark: SparkSession, ids: DataFrame,
                              cacheKey: Option[String]): DataFrame = {
-    def build: DataFrame = ids
+    def mapped: DataFrame = ids
       .repartition(col("id"))
       .withColumn("vid", monotonically_increasing_id())
-      .localCheckpoint()
     cacheKey match {
-      case Some(k) => graft.SessionCache.cached(spark, s"rank-vmap:$k")(build)
-      case None => build
+      case Some(k) => graft.SessionCache.cached(spark, s"rank-vmap:$k")(mapped.localCheckpoint())
+      case None => graft.Checkpoints.materialize(mapped)
     }
   }
 

@@ -26,9 +26,8 @@ object MultiBfs {
     // partition once on the per-round join key (the Bfs discipline):
     // every round's frontier join reuses the persisted partitioning
     // instead of re-shuffling the whole edge frame.
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.Checkpoints.cache(edges.select(col("src"), col("dst"))
+      .repartition(col("src")))
     val seg0 = seeds.select(col("id"), col("id").as("seed"), lit(0L).as("dist"))
     val reached = VertexLoop.frontier(seg0, Seq("id", "seed"), maxIters) { frontier =>
       e.join(frontier, col("src") === col("id"))

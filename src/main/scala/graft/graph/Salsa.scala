@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.storage.StorageLevel
 
 /** SALSA — the Stochastic Approach for Link-Structure Analysis (Lempel
   * & Moran, WWW'00): HITS's mutual-reinforcement loop with the raw
@@ -42,7 +41,7 @@ object Salsa {
     def mapped: DataFrame = VertexLoop.vidEdges(edges, vmap).select(col("svid"), col("dvid"))
     def cache(df: DataFrame, key: String): DataFrame = cacheKey match {
       case Some(k) => graft.SessionCache.cached(spark, s"salsa-$key:$k")(df)
-      case None => df.persist(StorageLevel.MEMORY_AND_DISK)
+      case None => graft.Checkpoints.cache(df)
     }
     val dout = mapped.groupBy(col("svid")).agg(count(lit(1)).as("od"))
     val din = mapped.groupBy(col("dvid")).agg(count(lit(1)).as("idg"))
@@ -53,7 +52,7 @@ object Salsa {
     def decSum(c: org.apache.spark.sql.Column) =
       sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
 
-    var hub = verts.select(col("vid"), lit(1.0).as("h")).localCheckpoint()
+    var hub = graft.Checkpoints.materialize(verts.select(col("vid"), lit(1.0).as("h")))
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
       val ra = verts
@@ -61,7 +60,7 @@ object Salsa {
             .groupBy(col("dvid")).agg(decSum(col("h") / col("od")).as("a")),
           col("vid") === col("dvid"), "left")
         .select(col("vid"), coalesce(col("a"), lit(0.0)).as("a"))
-      auth = if (auth == null) ra.localCheckpoint()
+      auth = if (auth == null) graft.Checkpoints.materialize(ra)
              else graft.Checkpoints.rotate(ra, auth)
       val rh = verts
         .join(eD.join(auth, col("dvid") === col("vid")).drop("vid")
@@ -76,12 +75,7 @@ object Salsa {
       .select(col("vid"), (col("h") / col("s")).as("hub"))
     val out = an.join(hn, "vid").join(vmap, "vid")
       .select(col("id"), col("auth"), col("hub"))
-    graft.Checkpoints.deferFree(auth)
-    graft.Checkpoints.deferFree(hub)
-    if (cacheKey.isEmpty) {
-      eS.unpersist(); eD.unpersist()
-      graft.Checkpoints.deferCleanup(spark)(() => graft.Checkpoints.free(vmap))
-    }
+    if (cacheKey.isEmpty) { eS.unpersist(); eD.unpersist() }
     out
   }
 }

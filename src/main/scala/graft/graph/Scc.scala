@@ -39,9 +39,10 @@ object Scc {
     val edgeRdd = VertexLoop.vidEdges(edges, vmap)
       .select(col("svid"), col("dvid")).rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val graph = Graph.fromEdges(edgeRdd, (),
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    val scc = graph.stronglyConnectedComponents(numIter)
+    val scc = GraphXLinkRank.releasedAtDrain(spark) {
+      Graph.fromEdges(edgeRdd, (), StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
+        .stronglyConnectedComponents(numIter)
+    }
 
     import spark.implicits._
     val comp = scc.vertices.toDF("vid", "comp")
@@ -52,11 +53,6 @@ object Scc {
     val out = labeled.join(canon, "comp")
       .select(col("id"), col("scc"))
     val sizes = out.groupBy(col("scc")).agg(count(lit(1)).as("scc_size"))
-    val res = out.join(sizes, "scc").select(col("id"), col("scc"), col("scc_size"))
-    graft.Checkpoints.deferCleanup(spark) { () =>
-      scc.unpersist(blocking = false)
-      graph.unpersist(blocking = false)
-    }
-    res
+    out.join(sizes, "scc").select(col("id"), col("scc"), col("scc_size"))
   }
 }

@@ -35,9 +35,8 @@ object Sssp {
     // partition once on the per-round join key (the Bfs discipline):
     // every relaxation round reuses the persisted partitioning instead
     // of re-shuffling the whole edge frame.
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = graft.Checkpoints.cache(edges.select(col("src"), col("dst"), col("w"))
+      .repartition(col("src")))
     // Seeds are deduped defensively: duplicate ids would multiply rows
     // through this left join and ride every relaxation round after it.
     val init = vertices.select(col("id"))
@@ -53,7 +52,6 @@ object Sssp {
             (col("cost").isNull && col("mc").isNotNull)).as("chg"))
     }
     e.unpersist()
-    graft.Checkpoints.deferFree(dist)
     dist.select(col("id"), col("cost"))
   }
 }

@@ -30,10 +30,10 @@ object Triangles {
     * wedge generation and closure then run map-side. */
   def run(edges: DataFrame, broadcastEdges: Boolean = false,
           maxBroadcastEdges: Long = CoCitation.BroadcastMaxEdges): DataFrame = {
-    val und = graft.Checkpoints.deferUnpersist(edges.select(
+    val und = graft.Checkpoints.cache(edges.select(
         least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().cache())
+      .filter(col("u") =!= col("v")).distinct())
     // SIZE-GATED even when the caller asks (r12, q308's discipline): a
     // caller's "known-bounded" claim is not a plan property — past
     // maxBroadcastEdges (default CoCitation.BroadcastMaxEdges) the joins

@@ -22,12 +22,12 @@ private[graft] object VertexLoop {
     * A caller may persist `init` to share it with a pre-loop scalar
     * job; it is unpersisted as soon as its checkpoint exists.
     *
-    * @return (last snapshot, rounds run) — the caller owns the
-    *         snapshot's blocks (free or deferFree them). */
+    * @return (last snapshot, rounds run) — the snapshot is released at
+    *         the next drain; a caller done with it may free it earlier. */
   def iterate(init: DataFrame, maxRounds: Int,
               stop: DataFrame => Boolean = _ => false)
              (step: DataFrame => DataFrame): (DataFrame, Int) = {
-    var cur = init.localCheckpoint()
+    var cur = Checkpoints.materialize(init)
     init.unpersist()
     var rounds = 0
     var done = false
@@ -59,21 +59,20 @@ private[graft] object VertexLoop {
     * round. Compacting every [[CompactEvery]] segments pays rounds/C
     * full copies and keeps the plan bounded.
     *
-    * @return the settled union. CONSUME BEFORE DRAIN: every segment is
-    *         [[Checkpoints.deferFree]]'d, so the result must be
-    *         materialized before the caller's `Checkpoints.drain`. */
+    * @return the settled union. CONSUME BEFORE DRAIN: every live
+    *         segment is released at the caller's next
+    *         `Checkpoints.drain`. */
   def frontier(seg0: DataFrame, keys: Seq[String], maxRounds: Int)
               (expand: DataFrame => DataFrame): DataFrame = {
-    val first = seg0.localCheckpoint()
+    val first = Checkpoints.materialize(seg0)
     val segments = scala.collection.mutable.ListBuffer(first)
     var settled = first
     var front = first
     var rounds = 0
     var done = false
     while (rounds < maxRounds && !done) {
-      val fresh = expand(front)
-        .join(settled.select(keys.map(col): _*), keys, "left_anti")
-        .localCheckpoint()
+      val fresh = Checkpoints.materialize(expand(front)
+        .join(settled.select(keys.map(col): _*), keys, "left_anti"))
       if (fresh.isEmpty) {
         Checkpoints.free(fresh)
         done = true
@@ -82,11 +81,9 @@ private[graft] object VertexLoop {
         settled = settled.unionByName(fresh)
         front = fresh
         if (segments.size >= CompactEvery) {
-          val merged = settled.localCheckpoint()
-          segments.foreach { s =>
-            if (s ne fresh) Checkpoints.free(s)
-            else Checkpoints.deferFree(s) // still the live frontier
-          }
+          val merged = Checkpoints.materialize(settled)
+          // `fresh` is still the live frontier
+          segments.filterNot(_ eq fresh).foreach(Checkpoints.free)
           segments.clear()
           segments += merged
           settled = merged
@@ -94,7 +91,6 @@ private[graft] object VertexLoop {
       }
       rounds += 1
     }
-    segments.foreach(Checkpoints.deferFree(_))
     settled
   }
 

@@ -710,12 +710,11 @@ ORDER BY s.doc_id, s.shot_id"""
         .select((col("doc_id") + PhashNearOffset).as("doc_id"),
           concat(expr("substring(text, 1, length(text) div 2)"), lit("Z"),
             expr("substring(text, length(text) div 2 + 2, 2147483647)")).as("text")))
-    val sig = graft.Checkpoints.deferFree(corpus
+    val sig = graft.Checkpoints.materialize(corpus
       .filter(length(col("text")) >= graft.plans.PhashMath.Pixels)
       .select(col("doc_id"), call_function("graft_phash", col("text")).as("ph"))
       .select(col("doc_id"),
-        element_at(col("ph"), 1).as("ph_lo"), element_at(col("ph"), 2).as("ph_hi"))
-      .localCheckpoint())
+        element_at(col("ph"), 1).as("ph_lo"), element_at(col("ph"), 2).as("ph_hi")))
     val bands = sig.select(col("doc_id"), explode(array(
         struct(lit(0).as("bi"), expr("ph_lo div 65536").as("bv")),
         struct(lit(1).as("bi"), pmod(col("ph_lo"), lit(65536L)).as("bv")),

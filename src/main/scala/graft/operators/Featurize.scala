@@ -27,16 +27,14 @@ object Featurize {
     // runs ONCE and the distinct+groupBy chain isn't re-executed per
     // consumer (the repo's multi-consumer discipline; noveltyScores
     // pattern)
-    val docs = graft.Checkpoints.deferFree(
-      df.select(id.as("doc_id"), label.as("label"), text.as("text"))
-        .localCheckpoint())
+    val docs = graft.Checkpoints.materialize(
+      df.select(id.as("doc_id"), label.as("label"), text.as("text")))
     val present = docs
       .select(col("doc_id"), col("label"), explode(split(col("text"), " ")).as("term"))
       .distinct()
-    val byTermLabel = graft.Checkpoints.deferFree(
+    val byTermLabel = graft.Checkpoints.materialize(
       present.groupBy(col("term"), col("label"))
-        .agg(count(lit(1)).as("a"))
-        .localCheckpoint())
+        .agg(count(lit(1)).as("a")))
     val byTerm = byTermLabel.groupBy(col("term"))
       .agg(sum(col("a")).as("t_df"))
     val labelTotals = docs.groupBy(col("label")).agg(count(lit(1)).as("n_label"))
@@ -82,17 +80,14 @@ object Featurize {
     // both so the scan and the tokenize explode each run ONCE (the
     // docstring's "ONE tokenize" claim, now held by materialization
     // rather than by luck of lineage)
-    val docs = graft.Checkpoints.deferFree(
-      df.select(id.as("doc_id"), label.as("label"), text.as("text"))
-        .localCheckpoint())
-    val tok = graft.Checkpoints.deferFree(
+    val docs = graft.Checkpoints.materialize(
+      df.select(id.as("doc_id"), label.as("label"), text.as("text")))
+    val tok = graft.Checkpoints.materialize(
       docs.select(col("doc_id"), col("label"),
-        explode(split(col("text"), " ")).as("term"))
-        .localCheckpoint())
+        explode(split(col("text"), " ")).as("term")))
     // counts feeds 3 branches (classTotals, vocab, grid)
-    val counts = graft.Checkpoints.deferFree(
-      tok.groupBy(col("label"), col("term")).agg(count(lit(1)).as("n_lt"))
-        .localCheckpoint())
+    val counts = graft.Checkpoints.materialize(
+      tok.groupBy(col("label"), col("term")).agg(count(lit(1)).as("n_lt")))
     val classTotals = counts.groupBy(col("label")).agg(sum(col("n_lt")).as("t_l"))
     val vocab = counts.select(col("term")).distinct()
     val vSize = vocab.agg(count(lit(1)).as("v"))
@@ -164,13 +159,12 @@ object Featurize {
     // hash32 of the space-joined 3-gram — same md5 bytes, so the
     // oracle replay is unchanged. Checkpointed because the gram frame
     // feeds BOTH the first-appearance aggregate and the join back.
-    val grams = graft.Checkpoints.deferFree(base
+    val grams = graft.Checkpoints.materialize(base
       .repartition(col("doc_id"))
       .select(col("doc_id"),
         explode(call_function("graft_gram_hashes", col("text"), lit(3))).as("gh"))
       .select(col("doc_id"), col("gh.hlo").as("g"))
-      .distinct()
-      .localCheckpoint())
+      .distinct())
     val firstSeen = grams.groupBy(col("g")).agg(min(col("doc_id")).as("first_doc"))
     grams.join(firstSeen, "g")
       .groupBy(col("doc_id"))

@@ -77,8 +77,8 @@ object Glm {
     // a 3× shuffle-budget breach inside the full suite). Truncating
     // the lineage makes recomputation impossible — the per-row frame
     // is materialized once, disk-backed, and freed at drain.
-    val base = graft.Checkpoints.deferFree(
-      df.select(x.cast("double").as("x"), y.cast("double").as("y")).localCheckpoint())
+    val base = graft.Checkpoints.materialize(
+      df.select(x.cast("double").as("x"), y.cast("double").as("y")))
     var coef = spark.range(1).select(lit(0.0).as("b0"), lit(0.0).as("b1"))
     for (_ <- 1 to iters) {
       val p = lit(1.0) / (lit(1.0) + exp(-(col("b0") + col("b1") * col("x"))))
@@ -90,11 +90,11 @@ object Glm {
           sum(g(w * col("x") * col("x"))).cast("double").as("swxx"),
           sum(g(w * z)).cast("double").as("swz"),
           sum(g(w * col("x") * z)).cast("double").as("swxz"))
-      coef = m.select(
+      // 1 row; checkpointed to keep the loop plan shallow
+      coef = graft.Checkpoints.rotate(m.select(
         expr(LogregB1).as("b1"),
         expr(s"(swz - ($LogregB1) * swx) / sw").as("b0"))
-        .select(col("b0"), col("b1"))
-        .localCheckpoint() // 1 row; keeps the loop plan shallow
+        .select(col("b0"), col("b1")), coef)
     }
     val p = lit(1.0) / (lit(1.0) + exp(-(col("b0") + col("b1") * col("x"))))
     base.crossJoin(broadcast(coef))

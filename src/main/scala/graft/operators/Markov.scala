@@ -61,9 +61,8 @@ object Markov {
     // O(1)-row aggregate that cannot itself OOM), fail loudly past the
     // cap. The frame is checkpointed so the corpus shuffle behind it
     // runs once, not once for the count and again for the collect.
-    val transDf = graft.Checkpoints.deferFree(
-      raw.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint())
+    val transDf = graft.Checkpoints.materialize(
+      raw.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt")))
     val nPairs = transDf.count()
     if (nPairs > maxPairs) throw new IllegalArgumentException(
       s"graft markovAttribution: the event log produces $nPairs distinct " +

@@ -31,11 +31,10 @@ object Spectral {
   def pcaTopComponent(vecs: DataFrame, id: Column, vec: Column,
                       dim: Int, rounds: Int): DataFrame = {
     val spark = vecs.sparkSession
-    val exploded = graft.Checkpoints.deferFree(
+    val exploded = graft.Checkpoints.materialize(
       vecs.select(id.as("vec_id"), vec.as("embedding"))
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j", "x")))
-        .select(col("vec_id"), col("j"), col("x").cast("double").as("x"))
-        .localCheckpoint())
+        .select(col("vec_id"), col("j"), col("x").cast("double").as("x")))
     val trace = exploded.agg(gsum(col("x") * col("x")).as("trace"))
     val v0 = 1.0 / math.sqrt(dim.toDouble)
     var v = spark.range(dim).select(col("id").cast("int").as("j"),
@@ -48,10 +47,9 @@ object Spectral {
       // checkpoint the matvec result: the Rayleigh row, the norm
       // broadcast, and the next round's v would otherwise each re-run
       // the two corpus-scale joins (the q151 union lesson)
-      val y = graft.Checkpoints.deferFree(exploded.join(dots, "vec_id")
+      val y = graft.Checkpoints.materialize(exploded.join(dots, "vec_id")
         .groupBy(col("j"))
-        .agg(gsum(col("x") * col("dot")).as("y"))
-        .localCheckpoint())
+        .agg(gsum(col("x") * col("dot")).as("y")))
       val lamNorm = y.join(broadcast(v), "j")
         .agg(gsum(col("v") * col("y")).as("lambda"),
           gsum(col("y") * col("y")).as("ynorm2"))
@@ -61,11 +59,9 @@ object Spectral {
           // re-rounding it was the r9 half-ulp cell
           col("lambda"),
           (g6(col("lambda") / col("trace")) / lit(1e6)).as("explained_share"))
-      v = y.crossJoin(broadcast(lamNorm))
-        .select(col("j"), (g6(col("y") / sqrt(col("ynorm2"))) / lit(1e6)).as("v"))
-        .localCheckpoint()
+      v = graft.Checkpoints.materialize(y.crossJoin(broadcast(lamNorm))
+        .select(col("j"), (g6(col("y") / sqrt(col("ynorm2"))) / lit(1e6)).as("v")))
     }
-    graft.Checkpoints.deferFree(v)
     out.reduce(_ unionAll _).orderBy(col("round"))
   }
 }

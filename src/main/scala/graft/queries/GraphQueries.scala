@@ -1304,23 +1304,19 @@ ORDER BY deg.community"""
       // final union's plan would otherwise re-evaluate step k's whole
       // join chain once per later step (steps 0..8 union = 36 join
       // executions instead of 8 — measured 11.4s → ~3s at sf0.1)
-      val adj = graft.Checkpoints.deferFree(hedges
+      val adj = graft.Checkpoints.materialize(hedges
         .withColumn("rn", row_number().over(bysrc.orderBy(col("dst"))))
-        .withColumn("deg", count(lit(1)).over(bysrc))
-        .localCheckpoint())
-      var cur = WebGraph.vertices(hedges)
-        .select(col("id").as("walk_id"), col("id").as("host"), lit(0).as("step"))
-        .localCheckpoint()
-      graft.Checkpoints.deferFree(cur)
+        .withColumn("deg", count(lit(1)).over(bysrc)))
+      var cur = graft.Checkpoints.materialize(WebGraph.vertices(hedges)
+        .select(col("id").as("walk_id"), col("id").as("host"), lit(0).as("step")))
       val frames = Seq.newBuilder[DataFrame]
       frames += cur
       for (step <- 1 to WalkLen) {
         val pick = pmod(graft.functions.MathFunctions.hash32(
           concat(col("walk_id"), lit("#"), lit(step.toString))), col("deg")) + 1
-        cur = cur.join(adj, col("host") === col("src") && col("rn") === pick)
-          .select(col("walk_id"), col("dst").as("host"), lit(step).as("step"))
-          .localCheckpoint()
-        graft.Checkpoints.deferFree(cur)
+        cur = graft.Checkpoints.materialize(
+          cur.join(adj, col("host") === col("src") && col("rn") === pick)
+          .select(col("walk_id"), col("dst").as("host"), lit(step).as("step")))
         frames += cur
       }
       frames.result().reduce(_ unionByName _)
@@ -1379,12 +1375,11 @@ ORDER BY walk_id, step"""
     val a = walks.select(col("walk_id"), col("host").as("ha"), col("step").as("sa"))
     val b = walks.select(col("walk_id").as("wb"), col("host").as("hb"),
       col("step").as("sb"))
-    val pairs = graft.Checkpoints.deferFree(a
+    val pairs = graft.Checkpoints.materialize(a
       .join(b, col("walk_id") === col("wb")
         && (col("sb") - col("sa")).isin(1, 2) && col("ha") =!= col("hb"))
       .select(least(col("ha"), col("hb")).as("na"),
-        greatest(col("ha"), col("hb")).as("nb"))
-      .localCheckpoint()) // feeds the pair census AND the 1-row total
+        greatest(col("ha"), col("hb")).as("nb"))) // feeds the pair census AND the 1-row total
     val pc = pairs.groupBy(col("na"), col("nb")).agg(count(lit(1)).as("n_pair"))
     val occ = walks.groupBy(col("host")).agg(count(lit(1)).as("c"))
     val tot = pairs.agg(count(lit(1)).as("np"))
@@ -1795,13 +1790,13 @@ ${(1 to MatchRounds).map(r => s"SELECT * FROM c$r").mkString("\nUNION ALL\n")}
     // checkpoint: und feeds deg + the club-edge join, and deg feeds
     // three consumers — unmaterialized, the distinct/groupBy would
     // re-execute once per consumer (measured 45k shuffle records → 15k)
-    val und = graft.Checkpoints.deferFree(WebGraph.cachedHostEdges(spark, sfDir)
+    val und = graft.Checkpoints.materialize(WebGraph.cachedHostEdges(spark, sfDir)
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint())
-    val deg = graft.Checkpoints.deferFree(
+      .distinct())
+    val deg = graft.Checkpoints.materialize(
       und.select(col("u").as("id")).unionAll(und.select(col("v").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("d")).localCheckpoint())
+        .groupBy(col("id")).agg(count(lit(1)).as("d")))
     val ks = RichClubKs
     val kCol = explode(lit(ks.toArray)).as("k")
     val clubSizes = deg.select(col("d"), kCol)
@@ -1959,9 +1954,8 @@ GROUP BY 1 ORDER BY host"""
     val hedges = WebGraph.cachedHostEdges(spark, sfDir)
     val seeds = WebGraph.vertices(hedges).orderBy(col("id")).limit(EffDiamSeeds)
     val pairs = graft.graph.MultiBfs.run(hedges, seeds, EffDiamMaxRounds)
-    val hist = graft.Checkpoints.deferFree(pairs.filter(col("dist") > 0)
-      .groupBy(col("dist").as("d")).agg(count(lit(1)).as("n"))
-      .localCheckpoint())
+    val hist = graft.Checkpoints.materialize(pairs.filter(col("dist") > 0)
+      .groupBy(col("dist").as("d")).agg(count(lit(1)).as("n")))
     val tot = hist.agg(sum(col("n")).as("nt"))
     val w = Window.orderBy(col("d"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2030,37 +2024,33 @@ ORDER BY c.d""".stripMargin
     * the identical set over `MisRounds` unrolled MATERIALIZED rounds. */
   def q263Mis(spark: SparkSession, sfDir: String): DataFrame = {
     val hedges = WebGraph.cachedHostEdges(spark, sfDir)
-    val und = graft.Checkpoints.deferFree(hedges
+    val und = graft.Checkpoints.materialize(hedges
       .select(col("src").as("a"), col("dst").as("b"))
       .unionByName(hedges.select(col("dst").as("a"), col("src").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint())
+      .filter(col("a") =!= col("b")).distinct())
     val verts = WebGraph.vertices(hedges)
-    var alive = graft.Checkpoints.deferFree(verts.localCheckpoint())
+    var alive = graft.Checkpoints.materialize(verts)
     val sels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to MisRounds) {
-      val pri = graft.Checkpoints.deferFree(alive
+      val pri = graft.Checkpoints.materialize(alive
         .withColumn("p", graft.functions.MathFunctions.hash32(
-          concat(lit(s"mis:$r:"), col("id"))))
-        .localCheckpoint())
+          concat(lit(s"mis:$r:"), col("id")))))
       val nbr = pri.select(col("id").as("nid"), col("p").as("np"))
       val losers = pri.join(und, col("id") === col("a"))
         .join(nbr, col("b") === col("nid"))
         .filter(col("np") < col("p") ||
           (col("np") === col("p") && col("nid") < col("id")))
         .select(col("id")).distinct()
-      val sel = graft.Checkpoints.deferFree(pri.select(col("id"))
+      val sel = graft.Checkpoints.materialize(pri.select(col("id"))
         .join(losers, Seq("id"), "left_anti")
-        .withColumn("rnd", lit(r))
-        .localCheckpoint())
+        .withColumn("rnd", lit(r)))
       sels += sel
       val removed = sel.select(col("id"))
         .unionByName(und.join(sel.select(col("id").as("a")), Seq("a"))
           .select(col("b").as("id")))
         .distinct()
-      alive = graft.Checkpoints.deferFree(alive
-        .join(removed, Seq("id"), "left_anti")
-        .localCheckpoint())
+      alive = graft.Checkpoints.materialize(alive
+        .join(removed, Seq("id"), "left_anti"))
     }
     val mis = sels.reduce(_ unionByName _)
     val unresolved = alive.agg(count(lit(1)).as("n_unresolved"))

@@ -937,11 +937,11 @@ FROM fin"""
   def q235BoostRound(spark: SparkSession, sfDir: String): DataFrame = {
     val dec = DecimalType(38, 6)
     def g(c: Column) = round(c, 6).cast(dec)
-    val hist = graft.Checkpoints.deferFree(labeledUsers(spark, sfDir)
+    // O(distinct x); feeds both rounds + the acc pass
+    val hist = graft.Checkpoints.materialize(labeledUsers(spark, sfDir)
       .groupBy(col("x"))
       .agg(sum(col("y")).cast("long").as("np"),
-        (count(lit(1)) - sum(col("y")).cast("long")).as("nn"))
-      .localCheckpoint()) // O(distinct x); feeds both rounds + the acc pass
+        (count(lit(1)) - sum(col("y")).cast("long")).as("nn")))
     val w = Window.orderBy(col("x"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
@@ -1130,13 +1130,12 @@ ORDER BY round"""
   def q189AlsSweep(spark: SparkSession, sfDir: String): DataFrame = {
     def g(c: Column) = round(c, 6).cast(DecimalType(38, 6))
     def asDbl(c: Column) = c.cast("double")
-    val inter = graft.Checkpoints.deferUnpersist(
+    val inter = graft.Checkpoints.cache(
       Tables.lineitem(spark, sfDir, spreadScan = true)
         .join(Tables.orders(spark, sfDir, spreadScan = true),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("u"), col("l_partkey").as("i"),
-          col("l_quantity").as("r"))
-        .cache())
+          col("l_quantity").as("r")))
     def initF(id: Column, seed: Int): Column =
       lit(0.5) + pmod(graft.functions.MathFunctions.universalHash(id, seed),
         lit(1000L)).cast("double") / 2000.0
@@ -1156,11 +1155,10 @@ ORDER BY round"""
           asDbl(col("a12d")).as("a12"), asDbl(col("a22d")).as("a22"),
           asDbl(col("b1d")).as("b1"), asDbl(col("b2d")).as("b2"))
         .select(col(key), expr(AlsF1).as("f1"), expr(AlsF2).as("f2"))
-    val uf = graft.Checkpoints.deferUnpersist(
-      solveSide(inter.join(vi, "i"), "u").cache())
+    val uf = graft.Checkpoints.cache(solveSide(inter.join(vi, "i"), "u"))
     // half-step 2: items from the new users
-    val vf = graft.Checkpoints.deferUnpersist(solveSide(
-      inter.join(uf.select(col("u"), col("f1"), col("f2")), "u"), "i").cache())
+    val vf = graft.Checkpoints.cache(solveSide(
+      inter.join(uf.select(col("u"), col("f1"), col("f2")), "u"), "i"))
     val half = inter
       .join(uf.select(col("u"), col("f1").as("uf1"), col("f2").as("uf2")), "u")
       .join(vi.select(col("i"), col("f1").as("if1"), col("f2").as("if2")), "i")
@@ -1346,8 +1344,7 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
       .select(col("x"), col("y"),
         pmod(MF.hash32(concat(lit("cv:"), col("o_custkey").cast("string"))),
           lit(CvFolds)).as("fold"))
-    val custCk = graft.Checkpoints.deferFree(
-      cust0.localCheckpoint()) // feeds the moment pass AND the scoring join
+    val custCk = graft.Checkpoints.materialize(cust0) // feeds the moment pass AND the scoring join
     val fm = custCk.groupBy(col("fold"))
       .agg(count(lit(1)).as("n"), sum(g(col("x"))).as("sx"),
         sum(g(col("y"))).as("sy"), sum(g(col("x") * col("x"))).as("sxx"),
@@ -1424,11 +1421,10 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
     * confusion aggregation; marginals and κ live on O(classes²)
     * rows. */
   def q236RaterAgreement(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = graft.Checkpoints.deferFree(
+    val cells = graft.Checkpoints.materialize(
       graft.text.TextQueries.q40LangId(spark, sfDir)
         .groupBy(col("lang"), col("detected"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint()) // feeds marginals, agreement AND the output
+        .agg(count(lit(1)).as("n"))) // feeds marginals, agreement AND the output
     val rowM = cells.groupBy(col("lang")).agg(sum(col("n")).as("rn"))
     val colM = cells.groupBy(col("detected")).agg(sum(col("n")).as("cn"))
     val nTot = cells.agg(sum(col("n")).as("nt"),
@@ -1581,20 +1577,17 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
   def q246Kruskal(spark: SparkSession, sfDir: String): DataFrame = {
     val pool = Tables.events(spark, sfDir)
       .select(round(col("value"), 6).as("v"), col("event_type").as("grp"))
-    val byvg = graft.Checkpoints.deferFree(pool
-      .groupBy(col("v"), col("grp")).agg(count(lit(1)).as("ng"))
-      .localCheckpoint())
+    val byvg = graft.Checkpoints.materialize(pool
+      .groupBy(col("v"), col("grp")).agg(count(lit(1)).as("ng")))
     val w = Window.orderBy(col("v")).rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = graft.Checkpoints.deferFree(byvg.groupBy(col("v"))
+    val ranked = graft.Checkpoints.materialize(byvg.groupBy(col("v"))
       .agg(sum(col("ng")).as("t"))
-      .withColumn("cum_before", coalesce(sum(col("t")).over(w), lit(0L)))
-      .localCheckpoint())
-    val rg = graft.Checkpoints.deferFree(byvg.join(ranked, Seq("v"))
+      .withColumn("cum_before", coalesce(sum(col("t")).over(w), lit(0L))))
+    val rg = graft.Checkpoints.materialize(byvg.join(ranked, Seq("v"))
       .groupBy(col("grp"))
       .agg(sum(col("ng")).as("n_g"),
         sum((col("ng") * (col("cum_before") + (col("t") + 1) / lit(2.0)))
-          .cast(DecimalType(38, 6))).as("rgd"))
-      .localCheckpoint())
+          .cast(DecimalType(38, 6))).as("rgd")))
     val tot = ranked.agg(sum(col("t")).as("n"),
       sum((col("t").cast("double") * col("t") * col("t") - col("t"))
         .cast(DecimalType(38, 6))).as("tiesd"))
@@ -1672,10 +1665,9 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
     * Weights are pure-hash (q47's convention), so reruns and the oracle
     * replay the identical resample. */
   def q250Bootstrap(spark: SparkSession, sfDir: String): DataFrame = {
-    val pool = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val pool = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
-      .select(col("event_id"), round(col("value"), 6).as("v"))
-      .localCheckpoint())
+      .select(col("event_id"), round(col("value"), 6).as("v")))
     val wt = BootLadder.foldRight(lit(6): Column) { case ((thr, k), acc) =>
       when(col("u") < thr, lit(k)).otherwise(acc) }
     // the checkpointed pool lands in few partitions (small filter
@@ -1771,31 +1763,28 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
           s" div $DbscanDayCell").as("y"))
       .agg(count(lit(1)).as("cnt"))
     val thr = cells.agg(percentile(col("cnt").cast("double"), lit(0.75)).as("t"))
-    val dense = graft.Checkpoints.deferFree(cells.crossJoin(broadcast(thr))
+    val dense = graft.Checkpoints.materialize(cells.crossJoin(broadcast(thr))
       .filter(col("cnt").cast("double") > col("t"))
       .select(col("x"), col("y"), col("cnt"),
-        (col("x") * 1000000L + col("y")).as("cid"))
-      .localCheckpoint())
+        (col("x") * 1000000L + col("y")).as("cid")))
     val offs = for { dx <- -1 to 1; dy <- -1 to 1 if dx != 0 || dy != 0 }
       yield struct(lit(dx).as("dx"), lit(dy).as("dy"))
-    val adj = graft.Checkpoints.deferFree(dense
+    val adj = graft.Checkpoints.materialize(dense
       .select(col("cid"), explode(array(offs: _*)).as("o"), col("x"), col("y"))
       .select(col("cid"), (col("x") + col("o.dx")).as("nx"),
         (col("y") + col("o.dy")).as("ny"))
       .join(dense.select(col("x").as("nx"), col("y").as("ny"),
         col("cid").as("nid")), Seq("nx", "ny"))
-      .select(col("cid"), col("nid"))
-      .localCheckpoint())
+      .select(col("cid"), col("nid")))
     var labels = dense.select(col("cid"), col("cid").as("lbl"))
     for (_ <- 1 to DbscanRounds) {
       val mins = adj
         .join(labels.select(col("cid").as("nid"), col("lbl")), Seq("nid"))
         .groupBy(col("cid")).agg(min(col("lbl")).as("ml"))
-      labels = graft.Checkpoints.deferFree(labels
+      labels = graft.Checkpoints.materialize(labels
         .join(mins, Seq("cid"), "left")
         .select(col("cid"),
-          least(col("lbl"), coalesce(col("ml"), col("lbl"))).as("lbl"))
-        .localCheckpoint())
+          least(col("lbl"), coalesce(col("ml"), col("lbl"))).as("lbl")))
     }
     labels.join(dense, Seq("cid"))
       .groupBy(col("lbl").as("cluster"))
@@ -1867,10 +1856,9 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
     * joined to the O(users) first-purchase frame; everything after is
     * a bounded 16×16 coalition enumeration of broadcast literals. */
   def q256Shapley(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val ev = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_type"),
-        expr("ts div 1000").as("ts_us"))
-      .localCheckpoint())
+        expr("ts div 1000").as("ts_us")))
     val firstp = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id")).agg(min(col("ts_us")).as("fp"))
     val before = col("fp").isNull || col("ts_us") < col("fp")
@@ -1883,12 +1871,11 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
         max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
       .groupBy(col("mask")).agg(sum(col("conv")).as("n_conv"))
     val coal = spark.range(16).select(col("id").cast("long").as("s"))
-    val v = graft.Checkpoints.deferFree(coal
+    val v = graft.Checkpoints.materialize(coal
       .join(broadcast(bymask),
         col("mask").bitwiseAND(lit(15L) - col("s")) === 0L,
         "left")
-      .groupBy(col("s")).agg(coalesce(sum(col("n_conv")), lit(0L)).as("v"))
-      .localCheckpoint())
+      .groupBy(col("s")).agg(coalesce(sum(col("n_conv")), lit(0L)).as("v")))
     val chan = ShapleyChannels.map { case (c, b) =>
       struct(lit(c).as("channel"), lit(b.toLong).as("bit")) }
     val chanDf = spark.range(1)
@@ -1994,16 +1981,14 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("g1"))
     val w = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = graft.Checkpoints.deferFree(pool.groupBy(col("v"))
+    val cum = graft.Checkpoints.materialize(pool.groupBy(col("v"))
       .agg(sum(col("g1")).as("t1"), sum(lit(1L) - col("g1")).as("t2"))
       .select(col("v"), sum(col("t1")).over(w).as("c1"),
-        sum(col("t2")).over(w).as("c2"))
-      .localCheckpoint())
+        sum(col("t2")).over(w).as("c2")))
     val n = cum.agg(max(col("c1")).as("n1"), max(col("c2")).as("n2"))
-    val dnum = graft.Checkpoints.deferFree(cum.crossJoin(broadcast(n))
+    val dnum = graft.Checkpoints.materialize(cum.crossJoin(broadcast(n))
       .select(col("v"), col("n1"), col("n2"),
-        abs(col("c1") * col("n2") - col("c2") * col("n1")).as("dn"))
-      .localCheckpoint())
+        abs(col("c1") * col("n2") - col("c2") * col("n1")).as("dn")))
     val mx = dnum.agg(max(col("dn")).as("dmax"))
     val loc = dnum.crossJoin(broadcast(mx))
       .filter(col("dn") === col("dmax"))
@@ -2069,12 +2054,11 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
     * (identical Horner ordering both engines); the sort, ladder and
     * cutoff all run on exactly 24 rows. */
   def q258BhFdr(spark: SparkSession, sfDir: String): DataFrame = {
-    val byh = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val byh = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(expr("(ts div 3600000000000) % 24").as("hod"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("isp"))
       .groupBy(col("hod"))
-      .agg(count(lit(1)).as("nh"), sum(col("isp")).as("kh"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("nh"), sum(col("isp")).as("kh")))
     val tot = byh.agg((sum(col("kh")).cast("double") / sum(col("nh"))).as("p0"))
     val zv = (col("kh") / col("nh").cast("double") - col("p0")) /
       sqrt(col("p0") * (lit(1.0) - col("p0")) / col("nh"))
@@ -2084,9 +2068,8 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
         round(zv, 6).as("zv"),
         round(lit(2.0) * (lit(1.0) - MF.normalCdf(abs(zv), lit(0.0), lit(1.0))), 6)
           .as("p"))
-    val ranked = graft.Checkpoints.deferFree(scored
-      .withColumn("rnk", row_number().over(Window.orderBy(col("p"), col("hod"))))
-      .localCheckpoint())
+    val ranked = graft.Checkpoints.materialize(scored
+      .withColumn("rnk", row_number().over(Window.orderBy(col("p"), col("hod")))))
     val cutoff = ranked.agg(coalesce(max(
       when(col("p") <= col("rnk") * BhAlpha / BhM, col("rnk"))), lit(0))
       .as("kstar"))
@@ -2146,9 +2129,8 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
     * corpus total + day span) and O(types) closed-form arithmetic on
     * broadcast scalars. */
   def q270PowerAnalysis(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
-      .select(col("event_type"), expr("ts div 86400000000000").as("day"))
-      .localCheckpoint())
+    val ev = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
+      .select(col("event_type"), expr("ts div 86400000000000").as("day")))
     val tot = ev.agg(count(lit(1)).as("n"),
       countDistinct(col("day")).as("n_days"))
     val share = col("n_type").cast("double") / col("n")
@@ -2219,10 +2201,9 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
         (MF.hash32(concat(lit("conf:"), col("event_id").cast("string")))
           % 4).as("fold"))
     val xm = pool0.agg(min(col("x0")).as("xmin"))
-    val pool = graft.Checkpoints.deferFree(pool0.crossJoin(broadcast(xm))
+    val pool = graft.Checkpoints.materialize(pool0.crossJoin(broadcast(xm))
       .select(col("event_id"), (col("x0") - col("xmin")).as("x"),
-        col("y"), col("fold"))
-      .localCheckpoint())
+        col("y"), col("fold")))
     val tm = pool.filter(col("fold") <= 1)
       .agg(count(lit(1)).as("n"),
         sum(col("x").cast(DecimalType(38, 6))).cast("double").as("sx"),
@@ -2408,14 +2389,13 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
           expr("ts div 86400000000000") === AbLastDay, 1L).otherwise(0L))
           .as("converted"))
     val mx = perUser.agg(max(col("n_ev")).as("max_ev"))
-    val bins = graft.Checkpoints.deferFree(perUser.crossJoin(broadcast(mx))
+    val bins = graft.Checkpoints.materialize(perUser.crossJoin(broadcast(mx))
       .withColumn("bin", expr("least((n_ev * 10) div max_ev, 9)"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_users"),
         sum(col("n_ev")).as("s_ev"),
         sum(col("converted")).as("s_conv"),
-        max(col("max_ev")).as("max_ev"))
-      .localCheckpoint())
+        max(col("max_ev")).as("max_ev")))
     val bj = bins.select(col("bin").as("jb"))
     val bk = bins.select(col("bin").as("kb"))
     val bt = bins.select(col("bin").as("tb"), col("n_users").as("tn"),
@@ -2494,21 +2474,19 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
     * their terms round(,12) into DECIMAL(38,12) so even the tiny
     * exchanges are association-free. */
   def q278JackknifeRatio(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val daily = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .groupBy(expr("ts div 86400000000000").as("day"))
       .agg(count(lit(1)).as("n_d"),
-        dsum(round(col("value"), 6)).as("s_d"))
-      .localCheckpoint())
+        dsum(round(col("value"), 6)).as("s_d")))
     val tot = daily.agg(sum(col("n_d")).as("n"),
       sum(col("s_d")).cast(DecimalType(38, 6)).as("s"),
       count(lit(1)).as("d"))
-    val loo = graft.Checkpoints.deferFree(daily.crossJoin(broadcast(tot))
+    val loo = graft.Checkpoints.materialize(daily.crossJoin(broadcast(tot))
       .select(col("day"),
         ((col("s") - col("s_d")).cast("double") / (col("n") - col("n_d")))
           .as("r"),
-        col("n"), col("s"), col("d"))
-      .localCheckpoint())
+        col("n"), col("s"), col("d")))
     val jm = loo.agg((sum(round(col("r"), 12).cast(DecimalType(38, 12)))
       .cast("double") / max(col("d"))).as("rbar"))
     loo.crossJoin(broadcast(jm))
@@ -2578,19 +2556,18 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
     // count, because AQE's advisory-size coalescing would collapse this
     // small-bytes/compute-heavy frame to one partition and serialize
     // every round's decimal aggregation behind a single core
-    val vals = graft.Checkpoints.deferFree(Tables.orders(spark, sfDir)
+    val vals = graft.Checkpoints.materialize(Tables.orders(spark, sfDir)
       .select(round(col("o_totalprice") * 100).cast("long").as("cents"))
       .groupBy(col("cents")).agg(count(lit(1)).as("cnt"))
-      .repartition(spark.sparkContext.defaultParallelism, col("cents"))
-      .localCheckpoint())
+      .repartition(spark.sparkContext.defaultParallelism, col("cents")))
     val mm = vals.agg((min(col("cents")) / 100.0).as("lo"),
       (max(col("cents")) / 100.0).as("hi"))
-    var centers = mm.select(explode(array((1 to FcmClusters).map { j =>
-        struct(lit(j).as("j"),
-          (col("lo") + (col("hi") - col("lo")) * lit(j * 0.25)).as("c"))
-      }: _*)).as("jc"))
-      .select(col("jc.j").as("j"), col("jc.c").as("c"))
-      .localCheckpoint()
+    var centers = graft.Checkpoints.materialize(
+      mm.select(explode(array((1 to FcmClusters).map { j =>
+          struct(lit(j).as("j"),
+            (col("lo") + (col("hi") - col("lo")) * lit(j * 0.25)).as("c"))
+        }: _*)).as("jc"))
+        .select(col("jc.j").as("j"), col("jc.c").as("c")))
     // memberships are RATIOS of the inverse-square weights, so a
     // constant rescale is identity math — but it moves the weights
     // from ~1e-10 (where the 12dp grid keeps 2 significant digits)
@@ -2641,7 +2618,6 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
       .join(centers, "j")
       .select(col("j"), round(col("c"), 6).as("center"), col("mass"))
       .orderBy(col("j"))
-    graft.Checkpoints.deferFree(centers)
     out
   }
 
@@ -2706,13 +2682,12 @@ GROUP BY u.j, c.c ORDER BY u.j"""
     val ud = Tables.events(spark, sfDir)
       .groupBy(col("user_id"), expr("ts div 86400000000000").as("day"))
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-    val arms = graft.Checkpoints.deferFree(ud
+    val arms = graft.Checkpoints.materialize(ud
       .withColumn("arm",
         when(pmod(MF.hash32(concat(lit("ab:"), col("user_id").cast("string"))),
           lit(2)) === 0, "A").otherwise("B"))
       .groupBy(col("day"), col("arm"))
-      .agg(count(lit(1)).as("n"), sum(col("conv")).as("x"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("n"), sum(col("conv")).as("x")))
     val t22 = arms.filter(col("arm") === "A")
       .select(col("day"), col("n").as("na"), col("x").as("xa"))
       .join(arms.filter(col("arm") === "B")
@@ -2793,10 +2768,9 @@ FROM agg"""
     * partial-agg to the FOUR (arm × period) cells; the midpoint is a
     * 1-row broadcast; everything after is 1-row arithmetic. */
   def q289Did(spark: SparkSession, sfDir: String): DataFrame = {
-    val ud = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val ud = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .groupBy(col("user_id"), expr("ts div 86400000000000").as("day"))
-      .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-      .localCheckpoint())
+      .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv")))
     val mid = ud.agg(expr("(min(day) + max(day)) div 2").as("m"))
     val cells = ud
       .withColumn("arm",
@@ -2882,12 +2856,11 @@ FROM r"""
     * int64/DECIMAL until the final closed form. */
   def q290FixedEffects(spark: SparkSession, sfDir: String): DataFrame = {
     val dec6 = DecimalType(38, 6)
-    val panel = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val panel = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .groupBy(col("user_id"), expr("ts div 86400000000000").as("day"))
       .agg(count(lit(1)).as("x"),
         coalesce(sum(when(col("event_type") === "purchase",
-          round(col("value"), 6).cast(dec6))), lit(0).cast(dec6)).as("y"))
-      .localCheckpoint())
+          round(col("value"), 6).cast(dec6))), lit(0).cast(dec6)).as("y")))
     val um = panel.groupBy(col("user_id")).agg(
       (sum(col("x")).cast("double") / count(lit(1))).as("xu"),
       (sum(col("y")).cast("double") / count(lit(1))).as("yu"))
@@ -2972,15 +2945,13 @@ FROM tw t CROSS JOIN gm g"""
     * and the stage count is a fixed constant. */
   def q292GbmRounds(spark: SparkSession, sfDir: String): DataFrame = {
     def dec12w(c: Column) = round(c, 12).cast(DecimalType(38, 12))
-    val hist = graft.Checkpoints.deferFree(labeledUsers(spark, sfDir)
+    val hist = graft.Checkpoints.materialize(labeledUsers(spark, sfDir)
       .groupBy(col("x")).agg(count(lit(1)).as("n"),
-        sum(col("y")).cast("long").as("p"))
-      .localCheckpoint())
+        sum(col("y")).cast("long").as("p")))
     val f0 = hist.agg((sum(col("p")).cast("double") / sum(col("n"))).as("f0"),
       sum(col("n")).as("nt"))
-    var h = hist.crossJoin(broadcast(f0.select(col("f0"))))
-      .select(col("x"), col("n"), col("p"), col("f0").as("f"))
-      .localCheckpoint()
+    var h = graft.Checkpoints.materialize(hist.crossJoin(broadcast(f0.select(col("f0"))))
+      .select(col("x"), col("n"), col("p"), col("f0").as("f")))
     val ntF = broadcast(f0.select(col("nt")))
     def mseOf(frame: DataFrame): DataFrame = frame
       .agg(sum(dec12w(col("p") * (lit(1.0) - col("f")) * (lit(1.0) - col("f"))
@@ -2993,10 +2964,9 @@ FROM tw t CROSS JOIN gm g"""
     // h snapshot, which the next rotate() frees — a lazy plan would
     // chase freed checkpoint blocks at action time
     val stages = scala.collection.mutable.ArrayBuffer(
-      graft.Checkpoints.deferFree(
+      graft.Checkpoints.materialize(
         mseOf(h).select(lit(0).as("stage"), lit(-1.0).as("split_x"),
-          lit(0.0).as("gamma_left"), lit(0.0).as("gamma_right"), col("mse"))
-          .localCheckpoint()))
+          lit(0.0).as("gamma_left"), lit(0.0).as("gamma_right"), col("mse"))))
     for (k <- 1 to GbmStages) {
       val cum = h
         .withColumn("nl", sum(col("n")).over(w))
@@ -3004,28 +2974,24 @@ FROM tw t CROSS JOIN gm g"""
           .cast("double"))
       val tot = h.agg(sum(col("n")).as("nt2"),
         sum(dec12w(col("p") - col("n") * col("f"))).cast("double").as("rt"))
-      val pick = cum.crossJoin(broadcast(tot))
+      val pick = graft.Checkpoints.materialize(cum.crossJoin(broadcast(tot))
         .filter(col("nl") < col("nt2"))
         .select(col("x"), col("nl"), col("rl"), col("nt2"), col("rt"),
           (col("rl") * col("rl") / col("nl") + (col("rt") - col("rl")) *
             (col("rt") - col("rl")) / (col("nt2") - col("nl"))).as("gain"))
         .orderBy(col("gain").desc, col("x")).limit(1)
         .select(col("x").as("sx"), (col("rl") / col("nl")).as("gl"),
-          ((col("rt") - col("rl")) / (col("nt2") - col("nl"))).as("gr"))
-        .localCheckpoint()
+          ((col("rt") - col("rl")) / (col("nt2") - col("nl"))).as("gr")))
       val nh = h.crossJoin(broadcast(pick))
         .select(col("x"), col("n"), col("p"),
           (col("f") + lit(GbmNu) * when(col("x") <= col("sx"), col("gl"))
             .otherwise(col("gr"))).as("f"))
       h = graft.Checkpoints.rotate(nh, h)
-      stages += graft.Checkpoints.deferFree(pick.crossJoin(mseOf(h))
+      stages += graft.Checkpoints.materialize(pick.crossJoin(mseOf(h))
         .select(lit(k).as("stage"), col("sx").as("split_x"),
           round(col("gl"), 6).as("gamma_left"), round(col("gr"), 6).as("gamma_right"),
-          col("mse"))
-        .localCheckpoint())
-      graft.Checkpoints.deferFree(pick)
+          col("mse")))
     }
-    graft.Checkpoints.deferFree(h)
     stages.reduce(_ unionAll _).orderBy(col("stage"))
   }
 
@@ -3158,12 +3124,11 @@ FROM agg"""
     * four estimator sums are 12dp-gridded DECIMAL algebra on that
     * tiny frame. */
   def q294OffPolicy(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val cells = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .groupBy(col("event_type"),
         expr("(ts div 3600000000000) % 24").as("hod"))
       .agg(count(lit(1)).as("n_c"),
-        sum(round(col("value"), 6).cast(DecimalType(38, 6))).cast("double").as("sv_c"))
-      .localCheckpoint())
+        sum(round(col("value"), 6).cast(DecimalType(38, 6))).cast("double").as("sv_c")))
     val hods = cells.groupBy(col("hod")).agg(sum(col("n_c")).as("n_h"))
     val tot = cells.agg(sum(col("n_c")).as("n"),
       countDistinct(col("event_type")).as("n_types"))
@@ -3232,16 +3197,15 @@ FROM agg a CROSS JOIN tot t"""
   def q297Raking(spark: SparkSession, sfDir: String): DataFrame = {
     def dec12(c: Column): Column =
       sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
-    val cells = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val cells = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .groupBy(col("event_type"),
         expr("(ts div 3600000000000) % 24").as("hod"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("n")))
     val tot = broadcast(cells.agg(sum(col("n")).as("n_all"),
       countDistinct(col("event_type")).as("n_t"),
       countDistinct(col("hod")).as("n_h")))
-    var cur = cells.select(col("event_type"), col("hod"), col("n"),
-      lit(1.0).as("w")).localCheckpoint()
+    var cur = graft.Checkpoints.materialize(cells.select(col("event_type"), col("hod"), col("n"),
+      lit(1.0).as("w")))
     for (_ <- 1 to RakeRounds) {
       val rowm = cur.groupBy(col("event_type"))
         .agg(dec12(col("w") * col("n")).as("mass"))
@@ -3267,7 +3231,6 @@ FROM agg a CROSS JOIN tot t"""
       .select(col("event_type"), col("hod"), col("n"), round(col("w"), 6).as("w"),
         round(col("row_err_max"), 6).as("row_err_max"))
       .orderBy(col("event_type"), col("hod"))
-    graft.Checkpoints.deferFree(cur)
     out
   }
 

@@ -70,11 +70,10 @@ object PartsuppQueries {
           .select(col("n_nationkey"), col("n_name"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-    val rs = graft.Checkpoints.deferFree(Tables.partsupp(spark, sfDir)
+    val rs = graft.Checkpoints.materialize(Tables.partsupp(spark, sfDir)
       .join(broadcast(regionSupp), col("ps_suppkey") === col("s_suppkey"))
       .select(col("ps_partkey"), col("ps_supplycost"), col("s_suppkey"),
-        col("s_name"), col("s_acctbal"), col("n_name"))
-      .localCheckpoint())
+        col("s_name"), col("s_acctbal"), col("n_name")))
     val minCost = rs.groupBy(col("ps_partkey"))
       .agg(min(col("ps_supplycost")).as("min_cost"))
     rs.join(minCost, Seq("ps_partkey"))
@@ -201,11 +200,10 @@ object PartsuppQueries {
           .filter(col("n_name").isin(Q11Nations: _*))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
-    val byPart = graft.Checkpoints.deferFree(Tables.partsupp(spark, sfDir)
+    val byPart = graft.Checkpoints.materialize(Tables.partsupp(spark, sfDir)
       .join(broadcast(natSupp), col("ps_suppkey") === col("s_suppkey"))
       .groupBy(col("ps_partkey"))
-      .agg(dsum(col("ps_supplycost") * col("ps_availqty")).as("value_dec"))
-      .localCheckpoint())
+      .agg(dsum(col("ps_supplycost") * col("ps_availqty")).as("value_dec")))
     val total = byPart.agg(sum(col("value_dec")).as("total"),
       count(lit(1)).as("np"))
     byPart.crossJoin(broadcast(total))

@@ -1420,12 +1420,11 @@ ORDER BY c.cohort, c.offset_days"""
     val expDf = spark.range(1).select(explode(array(expLits: _*)).as("e"))
       .select(col("e.digit").as("digit"), col("e.p").as("p"))
     val tot = obs.agg(sum(col("n_obs")).as("n"))
-    val cells = graft.Checkpoints.deferFree(expDf
+    val cells = graft.Checkpoints.materialize(expDf
       .join(obs, Seq("digit"), "left")
       .crossJoin(broadcast(tot))
       .select(col("digit"), coalesce(col("n_obs"), lit(0L)).as("n_obs"),
-        col("n"), round(col("n") * col("p"), 6).as("n_exp"))
-      .localCheckpoint())
+        col("n"), round(col("n") * col("p"), 6).as("n_exp")))
     val chi = cells.agg(
       sum(round((col("n_obs") - col("n_exp")) * (col("n_obs") - col("n_exp"))
         / col("n_exp"), 6).cast(DecimalType(38, 6))).as("chi2d"))

@@ -320,7 +320,7 @@ object StorageQueries {
     ev.write.mode("overwrite")
       .option("header", "true").option("nullValue", "\\N")
       .csv(dir)
-    val res = spark.read.schema(ev.schema)
+    val res = graft.Checkpoints.materialize(spark.read.schema(ev.schema)
       .option("header", "true").option("nullValue", "\\N")
       .csv(dir)
       .groupBy(col("event_type"))
@@ -330,9 +330,7 @@ object StorageQueries {
         sum(expr("ts % 1000000007")).as("ts_mod_sum"),
         asD(dsum(col("value"))).as("total_value"),
         sum(MF.hash32(col("props"))).as("props_checksum"))
-      .orderBy(col("event_type"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+      .orderBy(col("event_type")))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
@@ -377,15 +375,13 @@ object StorageQueries {
       .write.mode("overwrite").parquet(s"$tmp/batch=2")
     val merged = spark.read.option("mergeSchema", "true")
       .option("basePath", tmp).parquet(s"$tmp/batch=1", s"$tmp/batch=2")
-    val res = merged.groupBy(col("batch"))
+    val res = graft.Checkpoints.materialize(merged.groupBy(col("batch"))
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col("o_orderpriority").isNull, 1L).otherwise(0L))
           .as("null_priority"),
         countDistinct(col("o_orderpriority")).as("n_priorities"),
         asD(dsum(col("o_totalprice"))).as("total_value"))
-      .orderBy(col("batch"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+      .orderBy(col("batch")))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator()
@@ -465,15 +461,13 @@ object StorageQueries {
     val tmp = graft.TempDirs.ephemeral("graft_q184_")
     val dir = tmp.resolve("events_orc").toString
     ev.write.mode("overwrite").orc(dir)
-    val res = spark.read.orc(dir)
+    val res = graft.Checkpoints.materialize(spark.read.orc(dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(expr("ts % 1000000007")).as("ts_mod_sum"),
         asD(dsum(col("value"))).as("total_value"),
         sum(MF.hash32(col("props"))).as("props_checksum"))
-      .orderBy(col("event_type"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+      .orderBy(col("event_type")))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
@@ -530,7 +524,7 @@ object StorageQueries {
     // reference EVERY schema column: CSV column pruning skips token
     // parsing for unused columns, and unparsed tokens can't flag the
     // record — a pruned read would report everything as clean
-    val res = spark.read.schema(schema)
+    val res = graft.Checkpoints.materialize(spark.read.schema(schema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .csv(dir)
@@ -540,9 +534,7 @@ object StorageQueries {
       .agg(count(lit(1)).as("n_rows"),
         sum(pmod(col("o_orderkey"), lit(97L))).as("key_checksum"),
         asD(dsum(coalesce(col("o_totalprice"), lit(0.0)))).as("value_mass"))
-      .orderBy(col("status"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+      .orderBy(col("status")))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
@@ -657,12 +649,11 @@ object StorageQueries {
       .select(concat(lit("c:"), col("c_custkey").cast("string")).as("key"))
     val probes = Tables.customer(spark, sfDir)
       .select(concat(lit("p:"), col("c_custkey").cast("string")).as("key"))
-    val mpos = graft.Checkpoints.deferFree(keys.crossJoin(broadcast(ms))
+    val mpos = graft.Checkpoints.materialize(keys.crossJoin(broadcast(ms))
       .select(col("m"), explode(array((0 until BloomFprK).map { j =>
         pmod(MF.universalHash(MF.hash32(col("key")), j), col("m"))
       }: _*)).as("pos"))
-      .distinct()
-      .localCheckpoint())
+      .distinct())
     val nmem = keys.agg(count(lit(1)).as("n_members"))
     val ppos = probes.crossJoin(broadcast(ms))
       .select(col("key") +: col("m") +: (0 until BloomFprK).map { j =>

@@ -81,10 +81,8 @@ object StreamBatchQueries {
       .start().awaitTermination()
     // Materialize eagerly so the temp sink files can be deleted before
     // the caller consumes the frame.
-    val res = spark.read.parquet(outDir)
-      .orderBy(col("window_start_us"), col("event_type"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
+      .orderBy(col("window_start_us"), col("event_type")))
     try { // best-effort temp cleanup; the result no longer reads it
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
@@ -155,10 +153,8 @@ object StreamBatchQueries {
       .option("path", outDir).option("checkpointLocation", cpDir)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .start().awaitTermination()
-    val res = spark.read.parquet(outDir)
-      .orderBy(col("user_id"), col("session_start_us"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
+      .orderBy(col("user_id"), col("session_start_us")))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
@@ -224,13 +220,11 @@ object StreamBatchQueries {
       .option("path", outDir).option("checkpointLocation", cpDir)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .start().awaitTermination()
-    val res = spark.read.parquet(outDir)
+    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"),
         countDistinct(col("user_id")).as("n_users"))
-      .orderBy(col("event_type"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+      .orderBy(col("event_type")))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
@@ -282,13 +276,11 @@ object StreamBatchQueries {
       .option("path", outDir).option("checkpointLocation", cpDir)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .start().awaitTermination()
-    val res = spark.read.parquet(outDir)
+    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("eid")).as("n_errors_with_click"))
-      .orderBy(col("user_id"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+      .orderBy(col("user_id")))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
@@ -359,8 +351,7 @@ object StreamBatchQueries {
       .option("path", outDir).option("checkpointLocation", cpDir)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .start().awaitTermination()
-    val sink = spark.read.parquet(outDir).localCheckpoint()
-    graft.Checkpoints.deferFree(sink)
+    val sink = graft.Checkpoints.materialize(spark.read.parquet(outDir))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
@@ -464,10 +455,8 @@ object StreamBatchQueries {
       .option("path", outDir).option("checkpointLocation", cpDir)
       .outputMode("append").trigger(Trigger.AvailableNow())
       .start().awaitTermination()
-    val res = spark.read.parquet(outDir)
-      .orderBy(col("user_id"), col("session_start_us"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
+      .orderBy(col("user_id"), col("session_start_us")))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse

@@ -934,12 +934,11 @@ object TimeseriesQueries {
     * interpolation) is round(,6)-gridded with the identical
     * association on both engines. */
   def q241GapFill(spark: SparkSession, sfDir: String): DataFrame = {
-    val obs = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val obs = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(col("event_type"),
         expr(s"ts div $GapFillHourNs").as("h"), col("value"))
       .groupBy(col("event_type"), col("h"))
-      .agg(round(dsum(round(col("value"), 6)).cast("double"), 6).as("v"))
-      .localCheckpoint())
+      .agg(round(dsum(round(col("value"), 6)).cast("double"), 6).as("v")))
     val bounds = obs.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
     val grid = obs.select(col("event_type")).distinct()
       .crossJoin(broadcast(bounds))
@@ -1032,12 +1031,11 @@ object TimeseriesQueries {
     * Sample size, not corpus size, is the cost knob — at any SF the
     * operator reads the scan once and pays sample²/2 slope rows. */
   def q244TheilSen(spark: SparkSession, sfDir: String): DataFrame = {
-    val samp = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val samp = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase" &&
         pmod(MF.hash32(concat(lit("ts:"), col("event_id").cast("string"))),
           lit(TheilSenSampleMod)) === 0)
-      .select(expr("ts div 1000000000").as("x"), round(col("value"), 6).as("y"))
-      .localCheckpoint())
+      .select(expr("ts div 1000000000").as("x"), round(col("value"), 6).as("y")))
     val n = samp.count()
     require(n <= TheilSenMaxSample,
       s"q244: sample $n exceeds cap $TheilSenMaxSample — raise " +
@@ -1106,11 +1104,10 @@ object TimeseriesQueries {
     * statistic is an exact integer sum, and the tie/variance terms are
     * DECIMAL sums of exact integers. */
   def q248MannKendall(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = graft.Checkpoints.deferFree(Tables.events(spark, sfDir, spreadScan = true)
+    val hourly = graft.Checkpoints.materialize(Tables.events(spark, sfDir, spreadScan = true)
       .groupBy(col("event_type"), expr("ts div 3600000000000").as("h"))
       .agg(round(sum(round(col("value"), 6).cast(DecimalType(38, 6)))
-        .cast("double"), 6).as("v"))
-      .localCheckpoint())
+        .cast("double"), 6).as("v")))
     val b = hourly.select(col("event_type").as("tb"),
       col("h").as("hb"), col("v").as("vb"))
     // the checkpointed hourly frame lands in few partitions (tiny), so
@@ -1211,11 +1208,10 @@ object TimeseriesQueries {
     * prefix sums in the identical ORDER BY h sequence, so the doubles
     * agree bit for bit. */
   def q253Cusum(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val hourly = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .groupBy(col("event_type"), expr("ts div 3600000000000").as("h"))
       .agg(round(sum(round(col("value"), 6).cast(DecimalType(38, 6)))
-        .cast("double") / count(lit(1)), 6).as("m"))
-      .localCheckpoint())
+        .cast("double") / count(lit(1)), 6).as("m")))
     val sd = sqrt((col("n") * col("smm") - col("sm") * col("sm"))
       / (col("n").cast("double") * col("n")))
     val params = hourly.groupBy(col("event_type"))
@@ -1310,12 +1306,11 @@ object TimeseriesQueries {
     * LLR walk is one ordered prefix-sum window over the O(days) frame
     * — both engines accumulate in the identical day order. */
   def q269Sprt(spark: SparkSession, sfDir: String): DataFrame = {
-    val byday = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val byday = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(expr("ts div 86400000000000").as("day"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("isp"))
       .groupBy(col("day"))
-      .agg(count(lit(1)).as("n"), sum(col("isp")).as("k"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("n"), sum(col("isp")).as("k")))
     val p0c = col("k_tot").cast("double") / col("n_tot")
     val p1c = least(lit(SprtLift) * p0c, lit(0.999))
     val consts = byday.agg(sum(col("k")).as("k_tot"), sum(col("n")).as("n_tot"))
@@ -1326,7 +1321,7 @@ object TimeseriesQueries {
         round(p0c, 6).as("p0r"), round(p1c, 6).as("p1r"))
     val w = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val st = graft.Checkpoints.deferFree(byday.crossJoin(broadcast(consts))
+    val st = graft.Checkpoints.materialize(byday.crossJoin(broadcast(consts))
       .select(col("day"), col("n"), col("k"),
         round(col("k") * col("c1") + (col("n") - col("k")) * col("c2"), 12)
           .as("llr0"),
@@ -1335,8 +1330,7 @@ object TimeseriesQueries {
       .withColumn("state",
         when(col("cum_llr") >= col("a_bound"), "accept_h1")
           .when(col("cum_llr") <= col("b_bound"), "accept_h0")
-          .otherwise("continue"))
-      .localCheckpoint())
+          .otherwise("continue")))
     val dec = st.agg(coalesce(min(when(col("state") =!= "continue",
       col("day"))), lit(-1L)).as("decision_day"))
     st.crossJoin(broadcast(dec))
@@ -1529,18 +1523,16 @@ object TimeseriesQueries {
     * the 4-harmonic explode, and both projections stay on that frame;
     * means are a per-type broadcast join. */
   def q284Periodogram(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val hourly = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(col("event_type"), expr("ts div 3600000000000").as("h"))
-      .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("c"))
-      .localCheckpoint())
+      .groupBy(col("event_type"), col("h")).agg(count(lit(1)).as("c")))
     val grid = hourly.groupBy(col("event_type"))
       .agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
       .select(col("event_type"), explode(sequence(col("lo"), col("hi"))).as("h"))
     // x feeds both the mean scan and the projection — checkpoint once
-    val x = graft.Checkpoints.deferFree(
+    val x = graft.Checkpoints.materialize(
       grid.join(hourly, Seq("event_type", "h"), "left")
-        .select(col("event_type"), col("h"), coalesce(col("c"), lit(0L)).as("cnt"))
-        .localCheckpoint())
+        .select(col("event_type"), col("h"), coalesce(col("c"), lit(0L)).as("cnt")))
     val mu = x.groupBy(col("event_type"))
       .agg((sum(col("cnt")).cast("double") / count(lit(1))).as("m"))
     val cosArr = array(DftCos.map(s => lit(s.toDouble)): _*)
@@ -1614,20 +1606,18 @@ FROM pw ORDER BY event_type, k"""
     * (types×days×24) grid, the seasonal join is (day−1, hr+1) against
     * the same gridded frame, error sums 12dp-gridded DECIMAL. */
   def q296ForecastEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val hourly = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(col("event_type"), expr("ts div 86400000000000").as("day"),
         expr("(ts div 3600000000000) % 24").as("hr"))
       .groupBy(col("event_type"), col("day"), col("hr"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("c")))
     val grid = hourly.select(col("event_type"), col("day")).distinct()
       .select(col("event_type"), col("day"),
         explode(sequence(lit(0L), lit(23L))).as("hr"))
-    val x = graft.Checkpoints.deferFree(
+    val x = graft.Checkpoints.materialize(
       grid.join(hourly, Seq("event_type", "day", "hr"), "left")
         .select(col("event_type"), col("day"), col("hr"),
-          coalesce(col("c"), lit(0L)).as("cnt"))
-        .localCheckpoint())
+          coalesce(col("c"), lit(0L)).as("cnt")))
     val w = Window.partitionBy(col("event_type"), col("day"))
       .orderBy(col("hr")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val u = when(col("hr") === 0, col("cnt"))
@@ -1738,12 +1728,11 @@ FROM err ORDER BY event_type"""
         when(pmod(MF.hash32(concat(lit("ab:"), col("user_id").cast("string"))),
           lit(2)) === 0, 1L).otherwise(0L))
     val end = Tables.events(spark, sfDir).agg(expr("max(ts) div 1000").as("corpus_end"))
-    val subj = graft.Checkpoints.deferFree(u.crossJoin(broadcast(end))
+    val subj = graft.Checkpoints.materialize(u.crossJoin(broadcast(end))
       .select(col("g"),
         when(col("p").isNotNull, expr(s"(p - f) div $KmHourUs"))
           .otherwise(expr(s"(corpus_end - f) div $KmHourUs")).as("t"),
-        when(col("p").isNotNull, 1L).otherwise(0L).as("death"))
-      .localCheckpoint())
+        when(col("p").isNotNull, 1L).otherwise(0L).as("death")))
     val gt = subj.groupBy(col("t"), col("g"))
       .agg(count(lit(1)).as("n_here"), sum(col("death")).as("d_here"))
     val grid = subj.select(col("t")).distinct()
@@ -1853,12 +1842,11 @@ FROM agg"""
     * pivot (deterministic — no ordered string agg), and the motif
     * count is one tiny self-aggregate. */
   def q301Sax(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val hourly = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(col("event_type"), expr("ts div 86400000000000").as("day"),
         expr("(ts div 3600000000000) % 24").as("hr"))
       .groupBy(col("event_type"), col("day"), col("hr"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("c")))
     val grid = hourly.select(col("event_type"), col("day")).distinct()
       .select(col("event_type"), col("day"),
         explode(sequence(lit(0L), lit(23L))).as("hr"))
@@ -1886,7 +1874,7 @@ FROM agg"""
       .agg(concat((0 until SaxSegments).map { i =>
         max(when(col("seg") === i, col("sym")))
       }: _*).as("word"))
-    val wd = graft.Checkpoints.deferFree(words.localCheckpoint())
+    val wd = graft.Checkpoints.materialize(words)
     val cnts = wd.groupBy(col("event_type"), col("word"))
       .agg(count(lit(1)).as("word_days"))
     wd.join(cnts, Seq("event_type", "word"))

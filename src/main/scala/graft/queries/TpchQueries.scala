@@ -486,12 +486,11 @@ object TpchQueries {
     // localCheckpoint: the aggregate feeds BOTH the max subquery and
     // the argmax filter — without materialization each branch re-scans
     // the fact (2 lineitem scans; the plan spec pins 1)
-    val bySupp = graft.Checkpoints.deferFree(Tables.lineitem(spark, sfDir)
+    val bySupp = graft.Checkpoints.materialize(Tables.lineitem(spark, sfDir)
       .filter(col("l_shipdate") >= lit(Q15From).cast("timestamp") &&
         col("l_shipdate") < lit(Q15Until).cast("timestamp"))
       .groupBy(col("l_suppkey"))
-      .agg(dsum(rev).as("rev_dec"))
-      .localCheckpoint())
+      .agg(dsum(rev).as("rev_dec")))
     val maxRev = bySupp.agg(max(col("rev_dec")).as("rmax"))
     bySupp.crossJoin(broadcast(maxRev))
       .filter(col("rev_dec") === col("rmax"))

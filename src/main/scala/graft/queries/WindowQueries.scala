@@ -696,13 +696,12 @@ FROM scored ORDER BY user_id""".stripMargin
   def q252SeqMining(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
-    val tri = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val tri = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"),
         col("event_type").as("t1"), expr("ts div 1000").as("ts_us"))
       .withColumn("t2", lead(col("t1"), 1).over(w))
       .withColumn("t3", lead(col("t1"), 2).over(w))
-      .select(col("user_id"), col("t1"), col("t2"), col("t3"))
-      .localCheckpoint())
+      .select(col("user_id"), col("t1"), col("t2"), col("t3")))
     val tsup = tri.filter(col("t3").isNotNull)
       .groupBy(col("t1"), col("t2"), col("t3"))
       .agg(count(lit(1)).as("n_occ"),
@@ -777,25 +776,22 @@ FROM scored ORDER BY user_id""".stripMargin
       .groupBy(col("event_type").as("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
     val rowtot = Window.partitionBy(col("from_type"))
-    val trans = graft.Checkpoints.deferFree(cnt
+    val trans = graft.Checkpoints.materialize(cnt
       .select(col("from_type"), col("to_type"),
-        round(col("n").cast("double") / sum(col("n")).over(rowtot), 12).as("pr"))
-      .localCheckpoint())
+        round(col("n").cast("double") / sum(col("n")).over(rowtot), 12).as("pr")))
     var pi = trans.select(col("from_type").as("st")).distinct()
       .select(col("st"), lit(0.2).as("pi"))
     for (_ <- 1 to EntropyRatePiRounds) {
-      pi = graft.Checkpoints.deferFree(trans
+      pi = graft.Checkpoints.materialize(trans
         .join(pi.select(col("st").as("from_type"), col("pi")), Seq("from_type"))
         .groupBy(col("to_type").as("st"))
         .agg(round(sum(round(col("pi") * col("pr"), 12)
-          .cast(DecimalType(38, 12))).cast("double"), 12).as("pi"))
-        .localCheckpoint())
+          .cast(DecimalType(38, 12))).cast("double"), 12).as("pi")))
     }
     val hrow = trans.groupBy(col("from_type").as("st"))
       .agg(round(-sum(round(col("pr") * log(col("pr")), 12)
         .cast(DecimalType(38, 12))).cast("double"), 12).as("h_row"))
-    val joined = graft.Checkpoints.deferFree(pi.join(hrow, Seq("st"))
-      .localCheckpoint())
+    val joined = graft.Checkpoints.materialize(pi.join(hrow, Seq("st")))
     val hall = joined.agg(round(sum(round(col("pi") * col("h_row"), 12)
       .cast(DecimalType(38, 12))).cast("double"), 6).as("h_rate"))
     joined.crossJoin(broadcast(hall))
@@ -877,18 +873,16 @@ ORDER BY p.st"""
     * carries (user, window) pairs — 7× the user-day frame, never the
     * event stream. */
   def q265WindowDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    val ud = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val ud = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(col("user_id"), expr("ts div 86400000000000").as("day"))
-      .distinct()
-      .localCheckpoint())
+      .distinct())
     val span = ud.agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
-    val expanded = graft.Checkpoints.deferFree(ud
+    val expanded = graft.Checkpoints.materialize(ud
       .select(col("user_id"), col("day"),
         explode(sequence(col("day"),
           col("day") + (WindowDistinctDays - 1))).as("win"))
       .crossJoin(broadcast(span))
-      .filter(col("win") >= col("dmin") && col("win") <= col("dmax"))
-      .localCheckpoint())
+      .filter(col("win") >= col("dmin") && col("win") <= col("dmax")))
     val winu = expanded.groupBy(col("win"))
       .agg(countDistinct(col("user_id")).as("n_active"))
     val wind = expanded.groupBy(col("win")).agg(count(lit(1)).as("n_user_days"))
@@ -945,7 +939,7 @@ ORDER BY p.st"""
       .orderBy(col("ts_us"), col("event_id"))
     val bySess = Window.partitionBy(col("user_id"), col("session_id"))
       .orderBy(col("ts_us"), col("event_id"))
-    val cnts = graft.Checkpoints.deferFree(Tables.events(spark, sfDir)
+    val cnts = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .select(col("user_id"), expr("ts div 1000").as("ts_us"),
         col("event_type"), col("event_id"))
       .withColumn("prev_us", lag(col("ts_us"), 1).over(byUser))
@@ -956,18 +950,14 @@ ORDER BY p.st"""
       .withColumn("to_type",
         coalesce(lead(col("event_type"), 1).over(bySess), lit("__end")))
       .groupBy(col("event_type").as("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("n")))
     val wf = Window.partitionBy(col("from_type"))
-    val probs = graft.Checkpoints.deferFree(cnts
+    val probs = graft.Checkpoints.materialize(cnts
       .select(col("from_type"), col("to_type"), col("n"),
-        (col("n").cast("double") / sum(col("n")).over(wf)).as("p"))
-      .localCheckpoint())
-    val states = graft.Checkpoints.deferFree(
-      cnts.select(col("from_type").as("s")).distinct().localCheckpoint())
-    var ph = states.select(col("s"),
-      when(col("s") === "purchase", lit(1.0)).otherwise(lit(0.0)).as("ph"))
-      .localCheckpoint()
+        (col("n").cast("double") / sum(col("n")).over(wf)).as("p")))
+    val states = graft.Checkpoints.materialize(cnts.select(col("from_type").as("s")).distinct())
+    var ph = graft.Checkpoints.materialize(states.select(col("s"),
+      when(col("s") === "purchase", lit(1.0)).otherwise(lit(0.0)).as("ph")))
     for (_ <- 1 to AbsorbSteps) {
       val nxt = states
         .join(probs.filter(col("from_type") =!= "purchase")
@@ -996,7 +986,6 @@ ORDER BY p.st"""
         round(coalesce(col("pd"), lit(0.0)), 6).as("p_direct"),
         round(col("ph"), 6).as("p_hit"))
       .orderBy(col("state"))
-    graft.Checkpoints.deferFree(ph)
     out
   }
 

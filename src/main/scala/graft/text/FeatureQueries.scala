@@ -342,7 +342,7 @@ object FeatureQueries {
     val w = split(col("text"), " ")
     val pairs = transform(sequence(lit(1), size(w) - 1),
       i => struct(element_at(w, i).as("w1"), element_at(w, i + 1).as("w2")))
-    val agg = graft.Checkpoints.deferFree(Tables.documents(spark, sfDir, spreadScan = true)
+    val agg = graft.Checkpoints.materialize(Tables.documents(spark, sfDir, spreadScan = true)
       .filter(size(w) >= 2)
       .select(
         (pmod(MF.hash32(concat(lit("lm:"), col("doc_id"))), lit(LmTrainMod))
@@ -350,11 +350,9 @@ object FeatureQueries {
         col("lang"), explode(pairs).as("p"))
       .groupBy(col("is_train"), col("lang"),
         col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint())
-    val train = graft.Checkpoints.deferFree(agg.filter(col("is_train"))
-      .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("c2"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("n")))
+    val train = graft.Checkpoints.materialize(agg.filter(col("is_train"))
+      .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("c2")))
     val c1 = train.groupBy(col("w1"))
       .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1fwd"))
     val rev = train.groupBy(col("w2")).agg(count(lit(1)).as("n1rev"))
@@ -441,14 +439,13 @@ object FeatureQueries {
     * held-out side is a left-semi-style membership flag + one
     * aggregate per language. */
   def q267OovRate(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = graft.Checkpoints.deferFree(Tables.documents(spark, sfDir)
+    val toks = graft.Checkpoints.materialize(Tables.documents(spark, sfDir)
       .select(col("lang"),
         (pmod(MF.hash32(concat(lit("lm:"), col("doc_id"))), lit(LmTrainMod))
           < LmTrainPct).as("is_train"),
         explode(split(col("text"), " ")).as("term"))
       .groupBy(col("is_train"), col("lang"), col("term"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("n")))
     val vocab = toks.filter(col("is_train"))
       .groupBy(col("term")).agg(sum(col("n")).as("c"))
       .orderBy(col("c").desc, col("term")).limit(OovVocabK)

@@ -599,12 +599,11 @@ object PipelineQueries {
     * — the corpus is read once and every exchange is
     * aggregate-sized. */
   def q239KAnonymity(spark: SparkSession, sfDir: String): DataFrame = {
-    val cls = graft.Checkpoints.deferFree(Tables.customer(spark, sfDir)
+    val cls = graft.Checkpoints.materialize(Tables.customer(spark, sfDir)
       .select(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal") / lit(KAnonBalBand)).cast("long").as("bal_band"))
       .groupBy(col("c_nationkey"), col("c_mktsegment"), col("bal_band"))
-      .agg(count(lit(1)).as("class_size"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("class_size")))
     val total = cls.agg(sum(col("class_size")).as("n_total"))
     cls.groupBy(col("class_size"))
       .agg(count(lit(1)).as("n_classes"), sum(col("class_size")).as("n_rows"))
@@ -655,50 +654,44 @@ object PipelineQueries {
     val tf = Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    val tfidf = graft.Checkpoints.deferFree {
+    val tfidf = {
       val nd = tf.agg(countDistinct(col("doc_id")).as("n"))
       val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      tf.join(df, Seq("term")).crossJoin(broadcast(nd))
+      graft.Checkpoints.materialize(tf.join(df, Seq("term")).crossJoin(broadcast(nd))
         .select(col("doc_id"), col("term"),
           round(col("tf") * log(col("n").cast("double") / col("df") + 1.0), 12)
-            .as("a"))
-        .localCheckpoint()
+            .as("a")))
     }
-    val terms = graft.Checkpoints.deferFree(
-      tfidf.select(col("term")).distinct().localCheckpoint())
+    val terms = graft.Checkpoints.materialize(tfidf.select(col("term")).distinct())
     val v0 = terms.crossJoin(broadcast(terms.agg(count(lit(1)).as("nt"))))
       .select(col("term"),
         round(lit(1.0) / sqrt(col("nt").cast("double")), 12).as("v"))
     def powerLoop(deflateAgainst: Option[DataFrame]): DataFrame = {
       var v = v0
       for (_ <- 1 to LsaRounds) {
-        val u = graft.Checkpoints.deferFree(tfidf.join(v, Seq("term"))
+        val u = graft.Checkpoints.materialize(tfidf.join(v, Seq("term"))
           .groupBy(col("doc_id"))
           .agg(sum(round(col("a") * col("v"), 12).cast(dec12))
-            .cast("double").as("u"))
-          .localCheckpoint())
-        var w = graft.Checkpoints.deferFree(tfidf.join(u, Seq("doc_id"))
+            .cast("double").as("u")))
+        var w = graft.Checkpoints.materialize(tfidf.join(u, Seq("doc_id"))
           .groupBy(col("term"))
           .agg(sum(round(col("a") * col("u"), 12).cast(dec12))
-            .cast("double").as("w"))
-          .localCheckpoint())
+            .cast("double").as("w")))
         deflateAgainst.foreach { v1f =>
           val v1 = v1f.select(col("term"), col("v").as("v1"))
           val pr = w.join(v1, Seq("term"))
             .agg(sum(round(col("w") * col("v1"), 12).cast(dec12))
               .cast("double").as("pr"))
-          w = graft.Checkpoints.deferFree(w.join(v1, Seq("term"), "left")
+          w = graft.Checkpoints.materialize(w.join(v1, Seq("term"), "left")
             .crossJoin(broadcast(pr))
             .select(col("term"),
               round(col("w") - col("pr") * coalesce(col("v1"), lit(0.0)), 12)
-                .as("w"))
-            .localCheckpoint())
+                .as("w")))
         }
         val nrm = w.agg(sqrt(sum(round(col("w") * col("w"), 12).cast(dec12))
           .cast("double")).as("n"))
-        v = graft.Checkpoints.deferFree(w.crossJoin(broadcast(nrm))
-          .select(col("term"), round(col("w") / col("n"), 12).as("v"))
-          .localCheckpoint())
+        v = graft.Checkpoints.materialize(w.crossJoin(broadcast(nrm))
+          .select(col("term"), round(col("w") / col("n"), 12).as("v")))
       }
       v
     }
@@ -816,10 +809,9 @@ WHERE rk <= $LsaTopTerms ORDER BY component, abs(loading) DESC, term"""
       .agg(count(lit(1)).as("c"))
     val wsrc = Window.partitionBy(col("source")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wv = graft.Checkpoints.deferFree(vals
+    val wv = graft.Checkpoints.materialize(vals
       .withColumn("cb", coalesce(sum(col("c")).over(wsrc), lit(0L)))
-      .withColumn("nsrc", sum(col("c")).over(Window.partitionBy(col("source"))))
-      .localCheckpoint())
+      .withColumn("nsrc", sum(col("c")).over(Window.partitionBy(col("source")))))
     val ref = wv.select(col("source").as("rsource"), col("nsrc").as("na"))
       .distinct().orderBy(col("na").desc, col("rsource")).limit(1)
     val a = wv.join(broadcast(ref), col("source") === col("rsource"))
@@ -913,7 +905,7 @@ FROM mapped GROUP BY 1, 2 ORDER BY 1, 2"""
     * to O(strata) rows; everything after is closed-form arithmetic
     * with 1-row broadcast totals and a rank window over O(strata). */
   def q280NeymanAllocation(spark: SparkSession, sfDir: String): DataFrame = {
-    val sd = graft.Checkpoints.deferFree(Tables.documents(spark, sfDir)
+    val sd = graft.Checkpoints.materialize(Tables.documents(spark, sfDir)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("nh"),
         sum(col("n_chars")).as("s1"),
@@ -921,8 +913,7 @@ FROM mapped GROUP BY 1, 2 ORDER BY 1, 2"""
       .select(col("lang"), col("nh"),
         sqrt(greatest(col("s2").cast("double") / col("nh")
           - (col("s1").cast("double") / col("nh"))
-            * (col("s1").cast("double") / col("nh")), lit(0.0))).as("sigma"))
-      .localCheckpoint())
+            * (col("s1").cast("double") / col("nh")), lit(0.0))).as("sigma")))
     val tot = sd.agg(sum(col("nh")).as("n"),
       sum(round(col("nh") * col("sigma"), 12).cast(DecimalType(38, 12)))
         .cast("double").as("wsum"))
@@ -934,7 +925,7 @@ FROM mapped GROUP BY 1, 2 ORDER BY 1, 2"""
           .as("prop_raw"))
       .withColumn("nfloor", floor(col("neyman_raw")).cast("long"))
       .withColumn("rem", col("neyman_raw") - floor(col("neyman_raw")))
-    val flo = graft.Checkpoints.deferFree(alloc.localCheckpoint())
+    val flo = graft.Checkpoints.materialize(alloc)
     val short = flo.agg((lit(NeymanBudget.toLong) - sum(col("nfloor"))).as("k"))
     val rw = Window.orderBy(col("rem").desc, col("lang"))
     val nAlloc = col("nfloor") +

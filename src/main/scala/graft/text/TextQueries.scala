@@ -939,10 +939,9 @@ WHERE rank <= $WsTopK ORDER BY lang, rank"""
     // also spreadScan above). This was the one reproducible in-suite
     // regression of r11 (verdict item 3): under a warm session the
     // triple recompute amplified every block-manager stall.
-    val docBg = graft.Checkpoints.deferFree(bg
+    val docBg = graft.Checkpoints.materialize(bg
       .groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("c")))
     val c2 = docBg.groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c2"))
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     val v = c1.agg(count(lit(1)).as("v"))
@@ -1495,10 +1494,9 @@ ORDER BY n.doc_id"""
     // pg feeds three consumers (boilerplate set, per-doc hits, per-doc
     // totals) — cache it or the gram kernel + explode subtree executes
     // once per consumer (measured: the whole row was ~3x its own work)
-    val pg = graft.Checkpoints.deferUnpersist(grams
+    val pg = graft.Checkpoints.cache(grams
       .groupBy(col("doc_id"), col("gh.hlo").as("hlo"), col("gh.hhi").as("hhi"))
-      .agg(count(lit(1)).as("occ"))
-      .cache())
+      .agg(count(lit(1)).as("occ")))
     val boiler = pg.groupBy(col("hlo"), col("hhi")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= BoilerMinDocs)
       .select(col("hlo"), col("hhi"))
@@ -1562,14 +1560,12 @@ ORDER BY n.doc_id"""
     val tmp = graft.TempDirs.ephemeral("graft_q106_")
     val dir = tmp.resolve("docs_jsonl").toString
     docs.write.mode("overwrite").json(dir)
-    val res = spark.read.schema(docs.schema).json(dir)
+    val res = graft.Checkpoints.materialize(spark.read.schema(docs.schema).json(dir)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
         sum(MF.hash32(col("text"))).as("text_checksum"))
-      .orderBy(col("source"))
-      .localCheckpoint()
-    graft.Checkpoints.deferFree(res)
+      .orderBy(col("source")))
     try {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
@@ -2216,13 +2212,12 @@ ORDER BY p.lang"""
     * a partial-agged pair count, a 1-row TakeOrdered merge pick, and
     * a map-only fold rewrite. */
   def q183BpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
-    var vocab = graft.Checkpoints.deferUnpersist(
+    var vocab = graft.Checkpoints.cache(
       Tables.documents(spark, sfDir)
         .select(explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
         .withColumn("syms",
-          expr("transform(sequence(1, length(word)), i -> substr(word, i, 1))"))
-        .cache())
+          expr("transform(sequence(1, length(word)), i -> substr(word, i, 1))")))
     val merges = Seq.newBuilder[(Int, String, String, String, Long, Long)]
     for (r <- 1 to BpeRounds) {
       val top = vocab.filter(size(col("syms")) >= 2)
@@ -2235,8 +2230,7 @@ ORDER BY p.lang"""
         .orderBy(col("pc").desc, col("a"), col("b")).limit(1)
         .collect().head
       val (a, b, pc) = (top.getString(0), top.getString(1), top.getLong(2))
-      val next = graft.Checkpoints.deferUnpersist(
-        vocab.withColumn("syms", bpeApplyMerge(a, b)).cache())
+      val next = graft.Checkpoints.cache(vocab.withColumn("syms", bpeApplyMerge(a, b)))
       val nSyms = next.select(explode(col("syms")).as("s"))
         .agg(countDistinct(col("s"))).first().getLong(0)
       merges += ((r, a, b, a + b, pc, nSyms))
@@ -2313,18 +2307,16 @@ FROM res ORDER BY round"""
     * global single-partition window over the doc axis; the OLS moments
     * are 12-dp-gridded DECIMAL sums (q185's convention). */
   def q247Heaps(spark: SparkSession, sfDir: String): DataFrame = {
-    val tok = graft.Checkpoints.deferFree(Tables.documents(spark, sfDir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .localCheckpoint())
+    val tok = graft.Checkpoints.materialize(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("term")))
     val doclen = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tok"))
     val newt = tok.groupBy(col("term")).agg(min(col("doc_id")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_new"))
-    val base = graft.Checkpoints.deferFree(doclen
+    val base = graft.Checkpoints.materialize(doclen
       .join(newt, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tok"),
         coalesce(col("n_new"), lit(0L)).as("n_new"),
-        expr(s"doc_id div $HeapsBlock").as("blk"))
-      .localCheckpoint())
+        expr(s"doc_id div $HeapsBlock").as("blk")))
     val wBlk = Window.orderBy(col("blk"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offs = base.groupBy(col("blk"))
@@ -2426,13 +2418,12 @@ FROM res ORDER BY round"""
     val docs = Tables.documents(spark, sfDir)
     val pairsArr = transform(sequence(lit(1), size(w) - 1),
       i => struct(element_at(w, i).as("a"), element_at(w, i + 1).as("b")))
-    val nodes = graft.Checkpoints.deferFree(docs
+    val nodes = graft.Checkpoints.materialize(docs
       .select(explode(w).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= TextRankMinCount)
-      .select(col("term").as("word"))
-      .localCheckpoint())
-    val und = graft.Checkpoints.deferFree(docs.filter(size(w) >= 2)
+      .select(col("term").as("word")))
+    val und = graft.Checkpoints.materialize(docs.filter(size(w) >= 2)
       .select(explode(pairsArr).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .filter(col("a") =!= col("b"))
@@ -2440,24 +2431,21 @@ FROM res ORDER BY round"""
       .join(nodes.select(col("word").as("b")), Seq("b"), "left_semi")
       .select(least(col("a"), col("b")).as("x"),
         greatest(col("a"), col("b")).as("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).cast("double").as("w"))
-      .localCheckpoint())
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).cast("double").as("w")))
     val edges = und.select(col("x").as("src"), col("y").as("dst"), col("w"))
       .unionAll(und.select(col("y").as("src"), col("x").as("dst"), col("w")))
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-    val eside = graft.Checkpoints.deferFree(edges.join(outw, Seq("src"))
-      .select(col("src"), col("dst"), (col("w") / col("outw")).as("frac"))
-      .localCheckpoint())
+    val eside = graft.Checkpoints.materialize(edges.join(outw, Seq("src"))
+      .select(col("src"), col("dst"), (col("w") / col("outw")).as("frac")))
     var prev = nodes.select(col("word"), lit(1.0).as("score"))
     for (_ <- 1 to TextRankRounds) {
-      prev = graft.Checkpoints.deferFree(eside
+      prev = graft.Checkpoints.materialize(eside
         .join(prev.select(col("word").as("src"), col("score")), Seq("src"))
         .groupBy(col("dst"))
         .agg(round(lit(TextRankRestart) + lit(TextRankDamping) *
           sum(round(col("frac") * col("score"), 12)
             .cast(DecimalType(38, 12))).cast("double"), 12).as("score"))
-        .select(col("dst").as("word"), col("score"))
-        .localCheckpoint())
+        .select(col("dst").as("word"), col("score")))
     }
     prev.orderBy(round(col("score"), 6).desc, col("word"))
       .limit(TextRankTopK)
@@ -2537,9 +2525,8 @@ FROM res ORDER BY round"""
       .select(explode(gramsArr).as("g"))
       .select(MF.hash32(col("g")).as("hlo"), MF.hash32b(col("g")).as("hhi"))
       .groupBy(col("hlo"), col("hhi")).agg(count(lit(1)).as("r"))
-    val fof = graft.Checkpoints.deferFree(cnt
-      .groupBy(col("r")).agg(count(lit(1)).as("s_r"))
-      .localCheckpoint())
+    val fof = graft.Checkpoints.materialize(cnt
+      .groupBy(col("r")).agg(count(lit(1)).as("s_r")))
     val tot = fof.agg(sum(col("r") * col("s_r")).as("n_grams"),
       sum(col("s_r")).as("vocab"))
     val s1 = fof.filter(col("r") === 1L)
@@ -2611,10 +2598,9 @@ FROM res ORDER BY round"""
     * is an exact small-rational grid both engines round identically. */
   def q260RrfFusion(spark: SparkSession, sfDir: String): DataFrame = {
     val w = split(col("text"), " ")
-    val dl = graft.Checkpoints.deferFree(Tables.documents(spark, sfDir)
+    val dl = graft.Checkpoints.materialize(Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("n_chars"), size(w).cast("long").as("dlen"),
-        col("text"))
-      .localCheckpoint())
+        col("text")))
     val stats = dl.agg(count(lit(1)).as("nd"),
       (sum(col("dlen")).cast("double") / count(lit(1))).as("avgdl"))
     val qArr = array(RrfQueryTerms.map(lit): _*)
@@ -2722,12 +2708,11 @@ FROM res ORDER BY round"""
     val w = split(col("text"), " ")
     val pairs = transform(sequence(lit(1), size(w) - 1),
       i => struct(element_at(w, i).as("w1"), element_at(w, i + 1).as("w2")))
-    val big = graft.Checkpoints.deferFree(Tables.documents(spark, sfDir, spreadScan = true)
+    val big = graft.Checkpoints.materialize(Tables.documents(spark, sfDir, spreadScan = true)
       .filter(size(w) >= 2)
       .select(explode(pairs).as("p"))
       .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .agg(count(lit(1)).as("n11"))
-      .localCheckpoint())
+      .agg(count(lit(1)).as("n11")))
     val leftM = big.groupBy(col("w1")).agg(sum(col("n11")).as("r1"))
     val rightM = big.groupBy(col("w2")).agg(sum(col("n11")).as("c1"))
     val tot = big.agg(sum(col("n11")).as("n"))
@@ -2802,19 +2787,17 @@ SELECT rank, w1, w2, n11, g2 FROM ranked WHERE rank <= $G2TopK ORDER BY rank"""
   def q286BurrowsDelta(spark: SparkSession, sfDir: String): DataFrame = {
     def dec12(c: Column): Column =
       sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
-    val cnts = graft.Checkpoints.deferFree(Tables.documents(spark, sfDir)
+    val cnts = graft.Checkpoints.materialize(Tables.documents(spark, sfDir)
       .select(col("source"), explode(split(col("text"), " ")).as("term"))
-      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
-      .localCheckpoint())
+      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c")))
     val tot = cnts.groupBy(col("source")).agg(sum(col("c")).as("t"))
     val vocab = cnts.select(col("term")).distinct()
-    val rf = graft.Checkpoints.deferFree(cnts.select(col("source")).distinct()
+    val rf = graft.Checkpoints.materialize(cnts.select(col("source")).distinct()
       .crossJoin(broadcast(vocab))
       .join(broadcast(tot), "source")
       .join(cnts, Seq("source", "term"), "left")
       .select(col("source"), col("term"),
-        (coalesce(col("c"), lit(0L)) / col("t").cast("double")).as("rf"))
-      .localCheckpoint())
+        (coalesce(col("c"), lit(0L)) / col("t").cast("double")).as("rf")))
     val mom = rf.groupBy(col("term")).agg(
       (dec12(col("rf")) / count(lit(1))).as("mu"),
       (dec12(col("rf") * col("rf")) / count(lit(1))).as("m2"))

@@ -48,6 +48,18 @@ class BlockHygieneSpec extends GraftSpec {
       s"label loop leaked: before=$before after=${persistentRdds}")
   }
 
+  test("Graft.logregFit leaves no per-round coefficient checkpoint after drain") {
+    val sp = spark
+    import sp.implicits._
+    val df = (0 until 40).map(i => (i.toDouble, if (i % 3 == 0 || i > 30) 1.0 else 0.0))
+      .toDF("x", "y")
+    val before = persistentRdds
+    assert(Graft.logregFit(df, col("x"), col("y"), iters = 4).collect().length == 1)
+    Checkpoints.drain(spark)
+    assert(persistentRdds <= before,
+      s"logregFit leaked: before=$before after=$persistentRdds")
+  }
+
   test("every VertexLoop engine frees its loop state at drain (no cacheKey)") {
     val edges = graph.WebGraph.edges(spark, sfDir).localCheckpoint()
     val wedges = edges.withColumn("w", lit(1L))

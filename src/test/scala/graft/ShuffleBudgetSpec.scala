@@ -98,6 +98,11 @@ class ShuffleBudgetSpec extends GraftSpec {
     // the full suite) — start from an empty block manager
     spark.sparkContext.getPersistentRDDs.values
       .foreach(r => try r.unpersist(blocking = true) catch { case _: Throwable => () })
+    // per-key leak gate: after its drain and a memo clear, every key
+    // must leave the persistent RDDs as the loop found them; a leak is
+    // named and then released, so the next key is judged on its own
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val leaks = Seq.newBuilder[String]
     val measured = names.map { n =>
       SessionCache.clear(spark)
       val recs = ShuffleMeter.measure(spark) {
@@ -105,9 +110,14 @@ class ShuffleBudgetSpec extends GraftSpec {
           .write.format("noop").mode("overwrite").save()
       }
       Checkpoints.drain(spark)
+      SessionCache.clear(spark)
+      val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !baseline(id) }
+      if (left.nonEmpty) {
+        leaks += s"$n: ${left.size} persistent RDDs left after drain"
+        left.values.foreach(_.unpersist(blocking = true))
+      }
       n -> recs
     }
-    SessionCache.clear(spark)
 
     if (recordMode) {
       val json = measured.map { case (n, r) => s"""  "$n": $r""" }
@@ -136,5 +146,8 @@ class ShuffleBudgetSpec extends GraftSpec {
       }
       assert(violations.isEmpty, "shuffle budget violations:\n" + violations.mkString("\n"))
     }
+    val leaked = leaks.result()
+    assert(leaked.isEmpty, s"${leaked.size} of ${names.size} keys leak blocks:\n" +
+      leaked.mkString("\n"))
   }
 }
