@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing FULL materialization through the noop
@@ -42,9 +41,11 @@ import org.apache.spark.sql.SparkSession
   *     budget remains, keys are re-run in descending warm-time order
   *     and the min published — the slowest keys are where a single
   *     noisy sample distorts the total most. Memo-touching keys are
-  *     excluded here (the cold pass cleared the session's memos; a
-  *     rebuild would pollute the sample and min() would just discard
-  *     it). `n_resampled` reports how many keys got the second sample.
+  *     excluded here after a cold pass (it cleared the session's memos;
+  *     a rebuild would pollute the sample and min() would just discard
+  *     it); with `SPARK_GRAFT_COLD=0` their memos are still live, so
+  *     they are resampled like every other key. `n_resampled` reports
+  *     how many samples phases 1.5 and 3 took.
   *
   * Phases 2–3 are time-boxed: SPARK_GRAFT_BUDGET_S (default 1200) is
   * the wall budget for the WHOLE run measured from main() entry. The
@@ -77,7 +78,7 @@ object Bench {
     val t0Wall = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0Wall) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
     val coldMode = sys.env.getOrElse("SPARK_GRAFT_COLD", "auto") // auto|all|0|1
     val warmMode = sys.env.getOrElse("SPARK_GRAFT_WARM", "auto") // auto|all
@@ -86,12 +87,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/last_bench.json")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, cpus)
 
     def esc(s: String): String =
       s.flatMap {
@@ -190,11 +186,12 @@ object Bench {
     val coldOk = cold.collect { case (n, Right(t)) => n -> t }.toMap
 
     // ---- Phase 3: resample (min-of-2 floor with leftover budget,
-    // slowest first, memo-free keys only — the cold pass dropped the
-    // session's memos, so a memo key's re-run would pay a rebuild).
+    // slowest first). After a cold pass only memo-free keys: it dropped
+    // the session's memos, so a memo key's re-run would pay a rebuild.
+    // Without one the memos are live and a re-run is a clean warm sample.
     var resampled = 0
     val resampleOrder = warm.collect {
-      case (n, Right(t)) if !touched(n) => n -> t
+      case (n, Right(t)) if coldMode == "0" || !touched(n) => n -> t
     }.toSeq.sortBy(-_._2)
     resampleOrder.foreach { case (n, t) =>
       if (elapsedS < 0.97 * budgetS) {

@@ -5,20 +5,23 @@ import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => VF}
 
 /** Public facade: the library surface in one import, operating on the
-  * CALLER's DataFrames (any schema — pass columns in). The fixture
-  * queries under graft.queries are the driver-verified instantiations
-  * of these operators over the test tables; this object is what an
-  * application (or a giranking migration) calls.
+  * CALLER's DataFrames (any schema — pass columns in). This object is
+  * what an application (or a giranking migration) calls. A method whose
+  * doc names "qNN's engine" IS that suite query's operator: the query
+  * calls it on the test tables and adds only its table read, constants,
+  * column renames and final sort, so the query's DuckDB oracle hash
+  * gates the facade body itself.
   *
   * Column functions require a session built by [[GraftSession]] (or
   * any session with `spark.sql.extensions=graft.plans.GraftExtensions`)
   * so the compiled graft_* kernels resolve.
   *
   * Lifecycle: the iterative operators (rank family, [[kmeans]],
-  * [[minhashPairs]]) cache/checkpoint intermediate frames whose blocks
-  * stay live until the CALLER's action finishes — call [[drain]] after
-  * consuming each result in a long-lived session, or the block manager
-  * accumulates one orphaned set per call.
+  * [[minhashPairs]], [[setSimilarityJoin]], [[randomWalks]])
+  * cache/checkpoint intermediate frames whose blocks stay live until the
+  * CALLER's action finishes — call [[drain]] after consuming each
+  * result in a long-lived session, or the block manager accumulates one
+  * orphaned set per call.
   */
 object Graft {
 
@@ -122,18 +125,19 @@ object Graft {
     VF.lshBands(v, dims, bits, nBands)
 
   // ------------------------------------------ operators (DataFrames)
-  /** Exact dedup of `df` on a fingerprint expression: adds
-    * `canonical_id` (min of `idCol` per fingerprint) and `is_dup`. */
+  /** Exact dedup of `df` on a fingerprint expression (q20's engine):
+    * adds `canonical_id` (min of `idCol` per fingerprint) and `is_dup`. */
   def dedupExact(df: DataFrame, idCol: Column, fp: Column): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(fp)
     df.withColumn("canonical_id", min(idCol).over(w))
       .withColumn("is_dup", idCol =!= col("canonical_id"))
   }
 
-  /** TF-IDF top-k terms per document over any (id, text) frame:
-    * (doc_id, term, rank, tfidf) with smoothed ln IDF. Aggregated-rows
-    * joins only; the per-doc top-k compiles to WindowGroupLimit. The
-    * score is round(6)-gridded before ranking (engine-stable order). */
+  /** TF-IDF top-k terms per document over any (id, text) frame (q48's
+    * engine): (doc_id, term, rank, tfidf) with smoothed ln IDF.
+    * Aggregated-rows joins only; the per-doc top-k compiles to
+    * WindowGroupLimit. The score is round(6)-gridded before ranking
+    * (engine-stable order). */
   def tfidfTopTerms(docs: DataFrame, id: Column, text: Column,
                     k: Int = 3): DataFrame = {
     val base = docs.select(id.as("doc_id"), text.as("text"))
@@ -159,9 +163,10 @@ object Graft {
     operators.Salting.saltedSumCount(df, key, value, salts)
 
   /** Okapi BM25 top-k documents per query term over any (id, text)
-    * frame: (term, doc_id, rank, score). One corpus tokenization (dl
-    * and df both derive from the tf frame); (N, Σdl) ride a broadcast
-    * 1-row aggregate; score round(6)-gridded before ranking. */
+    * frame (q73's engine): (term, doc_id, rank, score). One corpus
+    * tokenization (dl and df both derive from the tf frame); (N, Σdl)
+    * ride a broadcast 1-row aggregate; score round(6)-gridded before
+    * ranking. */
   def bm25(docs: DataFrame, id: Column, text: Column, terms: Seq[String],
            k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val base = docs.select(id.as("doc_id"), text.as("text"))
@@ -185,20 +190,21 @@ object Graft {
   }
 
   /** Deterministic weighted sampling without replacement (A-ES) over
-    * any (id, weight) frame: the top-`k` rows per `stratum` by key
-    * ln(u)/w with u a pure hash of the id — P(selected) follows the
-    * weight, reproducible across runs and engines. */
+    * any (id, weight) frame (q74's engine): the top-`k` rows per
+    * `stratum` by key ln(u)/w with u a pure hash of the id —
+    * P(selected) follows the weight, reproducible across runs and
+    * engines. */
   def weightedSample(df: DataFrame, id: Column, weight: Column,
                      stratum: Column, k: Int): DataFrame = {
     val u = (functions.MathFunctions.universalHash(id, 5) + lit(1))
       .cast("double") / lit(2147483647.0)
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__stratum")).orderBy(col("key").desc, col("__id"))
-    df.withColumn("__id", id).withColumn("__stratum", stratum)
-      .withColumn("key", round(log(u) / weight, 6) + lit(0.0))
+      .partitionBy(stratum).orderBy(col("key").desc, id)
+    // + 0.0 collapses IEEE −0.0 (a just-below-grid key rounding up) to
+    // +0.0 identically on both engines before the hash gate
+    df.withColumn("key", round(log(u) / weight, 6) + lit(0.0))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .drop("__id", "__stratum")
   }
 
   /** 64-bit perceptual hash (aHash) of a text-backed payload as
@@ -206,8 +212,9 @@ object Graft {
     * (see plans.PhashMath). */
   def phash(payload: Column): Column = call_function("graft_phash", payload)
 
-  /** Deterministic hash sampling: keep rows whose stable-id bucket
-    * (0-99) falls under `ratePct` — reproducible across runs/engines. */
+  /** Deterministic hash sampling (q47's engine): keep rows whose
+    * stable-id bucket (0-99) falls under `ratePct` — reproducible across
+    * runs/engines. */
   def hashSample(df: DataFrame, id: Column, ratePct: Column): DataFrame =
     df.filter(pmod(functions.MathFunctions.universalHash(id, 3), lit(100)) < ratePct)
 
@@ -436,7 +443,7 @@ object Graft {
     graph.MultiBfs.run(edges.select(src.as("src"), dst.as("dst")),
       seeds.select(seedId.as("id")), maxIters)
 
-  /** Sampled closeness centrality (q135's shape on a caller graph):
+  /** Sampled closeness centrality (q135's engine on a caller graph):
     * (id, n_reached, sum_dist, closeness = n_reached/sum_dist) from
     * the per-seed distance fields of [[multiBfs]] — integers until the
     * one division. Exact closeness is all-pairs; K sampled sources is
@@ -461,7 +468,7 @@ object Graft {
     * undirected-able edge frame: one row per community with
     * (community, n_vertices, e_in, deg_sum, q_contrib) where Σq_contrib
     * is Newman's Q — each contribution ONE exact integer rational
-    * (4m·e_c − d_c²)/4m² (q136's shape). `labels` maps every endpoint
+    * (4m·e_c − d_c²)/4m² (q136's engine). `labels` maps every endpoint
     * id to a community key. */
   def modularity(edges: DataFrame, src: Column, dst: Column,
                  labels: DataFrame, id: Column, community: Column): DataFrame = {
@@ -493,12 +500,13 @@ object Graft {
   }
 
   /** SCD type-2 history build over any keyed state stream (q124's
-    * shape on a caller schema): consecutive same-state runs per key
-    * become versioned intervals (key, version, state, n_events,
-    * valid_from, valid_to, is_current) — valid_to is the next
-    * version's start, NULL while current. ONE hash shuffle on the key;
-    * `ord` must be a total order within a key (pass a tiebreaker
-    * struct if the timestamp alone can tie). */
+    * shape on a caller schema; q124 keeps its own body because it
+    * orders by (ts, event_id) and reports min(ts) div 1000): consecutive
+    * same-state runs per key become versioned intervals (key, version,
+    * state, n_events, valid_from, valid_to, is_current) — valid_to is
+    * the next version's start, NULL while current. ONE hash shuffle on
+    * the key; `ord` must be a total order within a key (pass a
+    * tiebreaker struct if the timestamp alone can tie). */
   def scd2(events: DataFrame, key: Column, ord: Column, state: Column): DataFrame = {
     val byKey = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k")).orderBy(col("o"))
@@ -519,7 +527,7 @@ object Graft {
   }
 
   /** Spearman rank correlation per group over the JOINT CONTINGENCY
-    * TABLE (q127's shape): correct average tie-ranks from the value
+    * TABLE (q127's engine): correct average tie-ranks from the value
     * marginals, count-weighted decimal moments, one double
     * division+sqrt — ranks never touch a per-row window, so this is
     * safe for LOW-CARDINALITY x/y at any corpus size. Returns
@@ -532,6 +540,7 @@ object Graft {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("g")).orderBy(col(v))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+      // doubled average tie-rank: 2·rank(v) = 2·#less + #eq + 1
       m.withColumn("r2", lit(2) * coalesce(sum(col("cnt")).over(w), lit(0L))
           + col("cnt") + lit(1))
         .select(col("g"), col(v), col("r2").as(s"r2$v"))
@@ -553,11 +562,12 @@ object Graft {
   }
 
   /** Weight-mass quantiles per group from the VALUE HISTOGRAM (q138's
-    * shape): for each percent in `pcts`, the smallest value whose
-    * cumulative weight reaches that share of the group total — exact
-    * integer cross-multiplication, the corpus never crosses a per-row
-    * window. Use weight = the value itself for "p% of the bytes live
-    * below L" statistics. */
+    * shape; q138 keeps its own body for its extra n_docs column): for
+    * each percent in `pcts`, the smallest value whose cumulative
+    * weight reaches that share of the group total — exact integer
+    * cross-multiplication, the corpus never crosses a per-row window.
+    * Use weight = the value itself for "p% of the bytes live below L"
+    * statistics. */
   def weightedQuantiles(df: DataFrame, group: Column, value: Column,
                         weight: Column, pcts: Seq[Int]): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
@@ -573,7 +583,7 @@ object Graft {
           .as(s"wp$p")): _*)
   }
 
-  /** Bloom-semijoin prefilter (q126's shape): keeps the fact rows
+  /** Bloom-semijoin prefilter (q126's engine): keeps the fact rows
     * whose key MIGHT be in `dimKeys`, via a fixed-size sketch built in
     * one pass and probed map-only at the scan — no false negatives, so
     * `prefilter.join(dim, ..., "left_semi")` afterwards is exactly the
@@ -582,6 +592,8 @@ object Graft {
   def bloomSemijoin(fact: DataFrame, factKey: Column,
                     dimKeys: DataFrame, dimKey: Column,
                     numBits: Long = 1L << 20): DataFrame = {
+    // one O(1)-row driver scalar (the q28 pattern): might_contain
+    // requires a CONSTANT sketch, so it is embedded as a literal
     val bf: Array[Byte] = dimKeys.select(dimKey.as("k"))
       .agg(call_function("graft_bloom_agg", col("k"),
         lit(math.max(1L, numBits / 8)), lit(numBits)).as("bf"))
@@ -591,16 +603,21 @@ object Graft {
       call_function("graft_bloom_count_contains", lit(bf), array(factKey)) > 0)
   }
 
-  /** Exact threshold set-similarity join (q149's AllPairs prefix
-    * filtering on caller data): all pairs of rows whose sorted-set
-    * columns reach Jaccard ≥ num/den — COMPLETE by construction
+  /** Exact threshold set-similarity join (q149's engine: AllPairs
+    * prefix filtering on caller data): all pairs of rows whose
+    * sorted-set columns reach Jaccard ≥ num/den — COMPLETE by construction
     * (pigeonhole prefixes + integer-exact verification), unlike the
     * LSH paths. `set` must be a sorted array<long> (e.g.
-    * [[shingleSet]]). Returns (ida, idb, na, nb, inter, jaccard). */
+    * [[shingleSet]]). Returns (ida, idb, na, nb, inter, jaccard).
+    *
+    * The (doc_id, s, n) set frame feeds the prefix explode AND both
+    * verification sides, so it is [[Checkpoints.cache]]d once (the set
+    * column is computed once, not three times); the next `drain` frees
+    * it. */
   def setSimilarityJoin(df: DataFrame, id: Column, set: Column,
                         num: Int = 3, den: Int = 5): DataFrame = {
-    val sets = df.select(id.as("doc_id"), set.as("s"))
-      .withColumn("n", size(col("s")))
+    val sets = Checkpoints.cache(df.select(id.as("doc_id"), set.as("s"))
+      .withColumn("n", size(col("s"))))
     val prefLen =
       (col("n") - expr(s"($num * n + ${den - 1}) div $den") + 1).cast("int")
     val pref = sets.select(col("doc_id"), col("n"),
@@ -625,10 +642,11 @@ object Graft {
   }
 
   /** Deterministic random-walk corpus over any (src, dst) edge frame
-    * (q151's DeepWalk generator on a caller graph): one walk per
-    * distinct vertex, `len` steps, neighbor index = hash(walk∥step)
-    * mod out-degree over the dst-sorted adjacency — reruns reproduce
-    * the identical corpus. Returns (walk_id, host, step).
+    * (q151's engine: the DeepWalk generator on a caller graph): one
+    * walk per distinct vertex, `len` steps, neighbor index =
+    * hash(walk∥step) mod out-degree over the dst-sorted adjacency —
+    * reruns reproduce the identical corpus. Returns (walk_id, host,
+    * step).
     *
     * Post-drain contract (see [[logregFit]]): the adjacency and the
     * per-step frontiers are [[Checkpoints.materialize]]d, so the next
@@ -659,9 +677,9 @@ object Graft {
     frames.result().reduce(_ unionByName _)
   }
 
-  /** MERGE INTO semantics on caller frames (q143's latest-wins apply):
-    * `base` rows carry version 0; `feed` rows carry (key, version, op,
-    * payload) with op 'D' tombstoning the key. Returns the merged
+  /** MERGE INTO semantics on caller frames (q143's engine: the
+    * latest-wins apply): `base` rows carry version 0; `feed` rows carry
+    * (key, version, op, payload) with op 'D' tombstoning the key. Returns the merged
     * snapshot (key, version, op, payload from the winning row). */
   def mergeLatestWins(base: DataFrame, baseKey: Column, basePayload: Column,
                       feed: DataFrame, feedKey: Column, version: Column,

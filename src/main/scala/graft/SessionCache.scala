@@ -59,7 +59,7 @@ object SessionCache {
 
   private def maxEntries(spark: SparkSession): Int =
     try spark.conf.get("spark.graft.sessionCache.maxEntries", "32").toInt
-    catch { case _: Throwable => 32 }
+    catch { case NonFatal(_) => 32 }
 
   private def drop(k: (SparkSession, String)): Unit = {
     stamps.remove(k)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Graft, Tables}
 import graft.functions.{VectorFunctions => VF}
 import graft.oracle.Sql
 
@@ -760,27 +760,18 @@ ORDER BY n.qid, n.rank"""
   def q160Ndcg(spark: SparkSession, sfDir: String): DataFrame = {
     val labels = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"))
-    val run = q30KnnBrute(spark, sfDir)
-    val j = broadcast(run)
+    val labcnt = labels.groupBy(col("label")).agg(count(lit(1)).as("n_lab"))
+    val run = broadcast(q30KnnBrute(spark, sfDir))
       .join(labels.select(col("vec_id").as("qid"), col("label").as("qlab")), "qid")
       .join(labels.select(col("vec_id").as("neighbor"), col("label").as("nlab")),
         "neighbor")
-      .withColumn("rel", when(col("qlab") === col("nlab"), 1.0).otherwise(0.0))
-    val per = j.groupBy(col("qid"), col("qlab"))
-      .agg(sum(col("rel") / log2(col("rank") + 1)).as("dcg"),
-        sum(col("rel")).cast("long").as("hits"),
-        min(when(col("rel") === 1.0, col("rank"))).as("first_rel"))
-    val labcnt = labels.groupBy(col("label")).agg(count(lit(1)).as("n_lab"))
-    per.join(broadcast(labcnt), col("qlab") === col("label"))
-      .withColumn("ideal_k", least(col("n_lab") - 1, lit(K)).cast("int"))
-      .withColumn("idcg", expr(
-        "aggregate(sequence(1, greatest(ideal_k, 1)), cast(0.0 as double), " +
-          "(a, i) -> a + 1.0 / log2(i + 1))"))
-      .select(col("qid"), col("qlab").as("label"), col("hits").as("n_rel"),
-        round(col("hits").cast("double") / K, 6).as("p_at_k"),
-        round(coalesce(lit(1.0) / col("first_rel"), lit(0.0)), 6).as("rr"),
-        when(col("ideal_k") >= 1, round(col("dcg") / col("idcg"), 6))
-          .otherwise(0.0).as("ndcg"))
+      .join(broadcast(labcnt), col("qlab") === col("label"))
+    // the query key carries its label through the per-query aggregate;
+    // a query's relevant total is its class size minus itself
+    Graft.rankMetrics(run, struct(col("qid"), col("qlab")), col("rank"),
+        when(col("qlab") === col("nlab"), 1.0).otherwise(0.0), col("n_lab") - 1, K)
+      .select(col("qid.qid").as("qid"), col("qid.qlab").as("label"), col("n_rel"),
+        col("p_at_k"), col("rr"), col("ndcg"))
       .orderBy(col("qid"))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF, VectorFunctions => VF}
 import graft.oracle.Sql
 
@@ -89,15 +89,10 @@ object DedupQueries {
 
   // ---------------------------------------------------------------- q20
   /** Exact dedup: hash-group on md5(text), canonical = min(doc_id). */
-  def q20DedupExact(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("fp"))
-    corpus(spark, sfDir)
-      .withColumn("fp", md5(col("text")))
-      .withColumn("canonical_id", min(col("doc_id")).over(w))
-      .select(col("doc_id"), col("canonical_id"),
-        (col("doc_id") =!= col("canonical_id")).as("is_dup"))
+  def q20DedupExact(spark: SparkSession, sfDir: String): DataFrame =
+    Graft.dedupExact(corpus(spark, sfDir), col("doc_id"), md5(col("text")))
+      .select(col("doc_id"), col("canonical_id"), col("is_dup"))
       .orderBy(col("doc_id"))
-  }
 
   val q20Sql: String =
     s"""WITH $corpusCte
@@ -1114,34 +1109,12 @@ ORDER BY da, db"""
     * all-pairs), and verification is the compiled in-row merge walk on
     * the candidate pairs only — the published AllPairs plan, made
     * relational. */
-  def q149SetSimJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val sets = graft.Checkpoints.cache(
-      corpus(spark, sfDir)
-        .select(col("doc_id"), call_function("graft_shingle_set", col("text")).as("s"))
-        .select(col("doc_id"), col("s"), size(col("s")).as("n")))
-    // p = n − ⌈t·n⌉ + 1, with ⌈num·n/den⌉ = (num·n + den − 1) div den
-    val prefLen = (col("n") - expr(s"($SetSimNum * n + ${SetSimDen - 1}) div $SetSimDen")
-      + 1).cast("int")
-    val pref = sets.select(col("doc_id"), col("n"),
-      explode(slice(col("s"), lit(1), prefLen)).as("h"))
-    val cand = pref.select(col("doc_id").as("da"), col("n").as("pna"), col("h"))
-      .join(pref.select(col("doc_id").as("db"), col("n").as("pnb"), col("h")), "h")
-      .filter(col("da") < col("db") &&
-        lit(SetSimDen) * least(col("pna"), col("pnb"))
-          >= lit(SetSimNum) * greatest(col("pna"), col("pnb")))
-      .select(col("da"), col("db")).distinct()
-    val sa = sets.toDF("da", "sa", "na")
-    val sb = sets.toDF("db", "sb", "nb")
-    cand.join(sa, "da").join(sb, "db")
-      .withColumn("inter",
-        call_function("graft_intersect_count", col("sa"), col("sb")))
-      .filter(lit(SetSimDen) * col("inter")
-        >= lit(SetSimNum) * (col("na") + col("nb") - col("inter")))
-      .select(col("da"), col("db"), col("na"), col("nb"), col("inter"),
-        round(col("inter").cast("double")
-          / (col("na") + col("nb") - col("inter")).cast("double"), 6).as("jaccard"))
+  def q149SetSimJoin(spark: SparkSession, sfDir: String): DataFrame =
+    Graft.setSimilarityJoin(corpus(spark, sfDir), col("doc_id"),
+        Graft.shingleSet(col("text")), SetSimNum, SetSimDen)
+      .withColumnRenamed("ida", "da")
+      .withColumnRenamed("idb", "db")
       .orderBy(col("da"), col("db"))
-  }
 
   val q149Sql: String =
     s"""WITH $corpusCte,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Graft, Tables}
 import graft.graph.{LinkRank, WebGraph}
 import graft.functions.UrlFunctions
 import graft.oracle.{RankSql, Sql}
@@ -1150,19 +1150,9 @@ ORDER BY host"""
     * closure (q119's formulation-independent check). */
   def q135Closeness(spark: SparkSession, sfDir: String): DataFrame = {
     val hedges = WebGraph.cachedHostEdges(spark, sfDir)
-    val verts = WebGraph.vertices(hedges)
-    val seeds = verts.orderBy(col("id")).limit(ClosenessSeeds)
-    val pairs = graft.graph.MultiBfs.run(hedges, seeds, ClosenessMaxRounds)
-    val per = pairs.filter(col("dist") > 0) // self-distance carries no signal
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("sum_dist"))
-    verts.join(per, Seq("id"), "left")
-      .select(col("id").as("host"),
-        coalesce(col("n_reached"), lit(0L)).as("n_reached"),
-        coalesce(col("sum_dist"), lit(0L)).as("sum_dist"),
-        when(col("sum_dist").isNotNull,
-          round(col("n_reached").cast("double") / col("sum_dist"), 6))
-          .otherwise(lit(0.0)).as("closeness"))
+    val seeds = WebGraph.vertices(hedges).orderBy(col("id")).limit(ClosenessSeeds)
+    Graft.closeness(hedges, col("src"), col("dst"), seeds, col("id"), ClosenessMaxRounds)
+      .withColumnRenamed("id", "host")
       .orderBy(col("host"))
   }
 
@@ -1212,32 +1202,9 @@ ORDER BY host"""
       .select(col("id"),
         when(col("lbl") >= 0, concat(lit("c"), col("lbl")))
           .otherwise(concat(lit("v:"), col("id"))).as("community"))
-    val hedges = WebGraph.cachedHostEdges(spark, sfDir)
-    val und = hedges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val m = und.agg(count(lit(1)).as("m"))
-    val eIn = und
-      .join(labels.select(col("id").as("u"), col("community").as("cu")), "u")
-      .join(labels.select(col("id").as("v"), col("community").as("cv")), "v")
-      .filter(col("cu") === col("cv"))
-      .groupBy(col("cu").as("community"))
-      .agg(count(lit(1)).as("e_in"))
-    val deg = und.select(col("u").as("id"))
-      .unionAll(und.select(col("v").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
-      .join(labels, "id")
-      .groupBy(col("community"))
-      .agg(sum(col("d")).as("deg_sum"), count(lit(1)).as("n_hosts"))
-    val perC = deg.join(eIn, Seq("community"), "left")
-      .select(col("community"), col("n_hosts"), col("deg_sum"),
-        coalesce(col("e_in"), lit(0L)).as("e_in"))
-    perC.crossJoin(broadcast(m))
-      .select(col("community"), col("n_hosts"), col("e_in"), col("deg_sum"),
-        round((lit(4) * col("m") * col("e_in") - col("deg_sum") * col("deg_sum"))
-          .cast("double") / (lit(4.0) * col("m") * col("m")), 6)
-          .as("q_contrib"))
+    Graft.modularity(WebGraph.cachedHostEdges(spark, sfDir), col("src"), col("dst"),
+        labels, col("id"), col("community"))
+      .withColumnRenamed("n_vertices", "n_hosts")
       .orderBy(col("community"))
   }
 
@@ -1295,31 +1262,14 @@ ORDER BY deg.community"""
   /** The walk corpus (walk_id, host, step), memoized per session+dir:
     * q151 presents it sorted and q240 derives its skip-gram pairs from
     * the SAME corpus — the 8-step join chain runs once per session
-    * instead of once per consumer (the cachedEdges discipline). */
+    * instead of once per consumer (the cachedEdges discipline). The
+    * adjacency and step checkpoints [[Graft.randomWalks]] makes are
+    * released at the next drain; later consumers read the memo's own
+    * persisted copy. */
   private def walkCorpus(spark: SparkSession, sfDir: String): DataFrame =
     graft.SessionCache.cached(spark, s"walks:$sfDir") {
-      val hedges = WebGraph.cachedHostEdges(spark, sfDir)
-      val bysrc = Window.partitionBy(col("src"))
-      // checkpoint the ranked adjacency AND each step's frontier: the
-      // final union's plan would otherwise re-evaluate step k's whole
-      // join chain once per later step (steps 0..8 union = 36 join
-      // executions instead of 8 — measured 11.4s → ~3s at sf0.1)
-      val adj = graft.Checkpoints.materialize(hedges
-        .withColumn("rn", row_number().over(bysrc.orderBy(col("dst"))))
-        .withColumn("deg", count(lit(1)).over(bysrc)))
-      var cur = graft.Checkpoints.materialize(WebGraph.vertices(hedges)
-        .select(col("id").as("walk_id"), col("id").as("host"), lit(0).as("step")))
-      val frames = Seq.newBuilder[DataFrame]
-      frames += cur
-      for (step <- 1 to WalkLen) {
-        val pick = pmod(graft.functions.MathFunctions.hash32(
-          concat(col("walk_id"), lit("#"), lit(step.toString))), col("deg")) + 1
-        cur = graft.Checkpoints.materialize(
-          cur.join(adj, col("host") === col("src") && col("rn") === pick)
-          .select(col("walk_id"), col("dst").as("host"), lit(step).as("step")))
-        frames += cur
-      }
-      frames.result().reduce(_ unionByName _)
+      Graft.randomWalks(WebGraph.cachedHostEdges(spark, sfDir), col("src"), col("dst"),
+        WalkLen)
     }
 
   def q151RandomWalks(spark: SparkSession, sfDir: String): DataFrame =

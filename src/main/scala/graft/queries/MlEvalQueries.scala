@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
 
 /** ML training & evaluation loop (SURVEY §2.B ML-eval family, split
@@ -107,38 +107,11 @@ object MlEvalQueries {
     * partial-agged groupBy; ranks never touch a per-row window (the
     * q118 concern does not even arise — the marginal frames are
     * O(distinct values)). */
-  def q127Spearman(spark: SparkSession, sfDir: String): DataFrame = {
-    val joint = Tables.lineitem(spark, sfDir)
-      .groupBy(col("l_returnflag").as("flag"),
-        col("l_quantity").as("x"), col("l_discount").as("y"))
-      .agg(count(lit(1)).as("n"))
-    def ranks(v: String): DataFrame = {
-      val m = joint.groupBy(col("flag"), col(v)).agg(sum(col("n")).as("cnt"))
-      val w = Window.partitionBy(col("flag")).orderBy(col(v))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      // doubled average tie-rank: 2·rank(v) = 2·#less + #eq + 1
-      m.withColumn("r2", lit(2) * coalesce(sum(col("cnt")).over(w), lit(0L))
-          + col("cnt") + lit(1))
-        .select(col("flag"), col(v), col("r2").as(s"r2$v"))
-    }
-    val cells = joint
-      .join(ranks("x"), Seq("flag", "x"))
-      .join(ranks("y"), Seq("flag", "y"))
-    val dec = (c: Column) => c.cast(DecimalType(38, 0))
-    val mom = cells.groupBy(col("flag"))
-      .agg(sum(col("n")).as("nn"),
-        sum(dec(col("n") * col("r2x"))).as("sx"),
-        sum(dec(col("n") * col("r2y"))).as("sy"),
-        sum(dec(col("n")) * dec(col("r2x")) * dec(col("r2x"))).as("sxx"),
-        sum(dec(col("n")) * dec(col("r2y")) * dec(col("r2y"))).as("syy"),
-        sum(dec(col("n")) * dec(col("r2x")) * dec(col("r2y"))).as("sxy"))
-    mom.select(col("flag"), col("nn").as("n"),
-        round((dec(col("nn")) * col("sxy") - col("sx") * col("sy")).cast("double")
-          / sqrt((dec(col("nn")) * col("sxx") - col("sx") * col("sx")).cast("double")
-            * (dec(col("nn")) * col("syy") - col("sy") * col("sy")).cast("double")), 6)
-          .as("spearman_rho"))
+  def q127Spearman(spark: SparkSession, sfDir: String): DataFrame =
+    Graft.spearman(Tables.lineitem(spark, sfDir),
+        col("l_returnflag"), col("l_quantity"), col("l_discount"))
+      .withColumnRenamed("group", "flag")
       .orderBy(col("flag"))
-  }
 
   val q127Sql: String =
     """WITH joint AS (
@@ -509,17 +482,7 @@ object MlEvalQueries {
         max(when(col("event_type") === "purchase" &&
           expr("ts div 86400000000000") === AbLastDay, 1L).otherwise(0L))
           .as("converted"))
-    val hist = perUser.groupBy(col("n_ev"))
-      .agg(sum(col("converted")).as("pos"),
-        sum(lit(1L) - col("converted")).as("neg"))
-    val w = Window.orderBy(col("n_ev"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = hist.withColumn("cneg", coalesce(sum(col("neg")).over(w), lit(0L)))
-    cum.agg(sum(col("pos")).as("n_pos"), sum(col("neg")).as("n_neg"),
-        count(lit(1)).as("n_scores"),
-        sum(col("pos") * (col("cneg") + col("neg") / lit(2.0))).as("u"))
-      .select(col("n_pos"), col("n_neg"), col("n_scores"),
-        round(col("u") / (col("n_pos") * col("n_neg")), 6).as("auc"))
+    Graft.auc(perUser, col("n_ev"), col("converted"))
   }
 
   val q161Sql: String =

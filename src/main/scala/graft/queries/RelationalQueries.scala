@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
 
 /** Relational / analytics core (SURVEY §2.B).
@@ -807,16 +807,10 @@ ORDER BY c.cohort, c.offset_days"""
     val urgent = Tables.orders(spark, sfDir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
-    // one O(1)-row driver scalar (the q28 pattern): might_contain
-    // requires a CONSTANT sketch, so it is embedded as a literal
-    val bf: Array[Byte] = urgent
-      .agg(call_function("graft_bloom_agg", col("o_orderkey"),
-        lit(math.max(1L, SemijoinBloomBits / 8)), lit(SemijoinBloomBits)).as("bf"))
-      .first().getAs[Array[Byte]](0)
-    val pre = Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"))
-      .filter(call_function("graft_bloom_count_contains",
-        lit(bf), array(col("l_orderkey"))) > 0)
+    val pre = Graft.bloomSemijoin(
+      Tables.lineitem(spark, sfDir)
+        .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice")),
+      col("l_orderkey"), urgent, col("o_orderkey"), SemijoinBloomBits)
     pre.join(urgent, pre("l_orderkey") === urgent("o_orderkey"), "left_semi")
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_items"),
@@ -1053,8 +1047,6 @@ ORDER BY c.cohort, c.offset_days"""
   def q143MergeUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
-    val base = d.select(col("doc_id"), lit(0L).as("version"), lit("B").as("op"),
-      col("text"))
     val updates = d.filter(pmod(col("doc_id"), lit(9)) === 0)
       .select(col("doc_id"), lit(1L).as("version"), lit("U").as("op"),
         concat(col("text"), lit(" [rev2]")).as("text"))
@@ -1065,13 +1057,11 @@ ORDER BY c.cohort, c.offset_days"""
       .select((col("doc_id") + MergeInsertOffset).as("doc_id"),
         lit(1L).as("version"), lit("I").as("op"),
         concat(lit("new "), col("text")).as("text"))
-    val all = base.unionByName(updates).unionByName(deletes).unionByName(inserts)
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("version").desc, col("op"))
-    all.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "D")
-      .select(col("doc_id"), col("version"), col("op"),
-        length(col("text")).as("n_chars"))
+    val feed = updates.unionByName(deletes).unionByName(inserts)
+    Graft.mergeLatestWins(d, col("doc_id"), col("text"),
+        feed, col("doc_id"), col("version"), col("op"), col("text"))
+      .select(col("key").as("doc_id"), col("version"), col("op"),
+        length(col("payload")).as("n_chars"))
       .orderBy(col("doc_id"))
   }
 
@@ -1317,13 +1307,8 @@ ORDER BY c.cohort, c.offset_days"""
     * Shape for 100 TB: ONE partial-agged groupBy(key) histogram; the
     * plan math is per-row arithmetic on the O(keys) aggregate. */
   def q180SaltPlan(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.events(spark, sfDir)
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n_rows"))
-      .select(col("event_type"), col("n_rows"),
-        expr(s"(n_rows + $SaltCap - 1) div $SaltCap").as("salt_factor"))
-      .withColumn("rows_per_salt",
-        expr("(n_rows + salt_factor - 1) div salt_factor"))
-      .withColumn("needs_salt", col("salt_factor") > 1)
+    Graft.saltPlan(Tables.events(spark, sfDir), col("event_type"), SaltCap)
+      .withColumnRenamed("key", "event_type")
       .orderBy(col("event_type"))
 
   val q180Sql: String =

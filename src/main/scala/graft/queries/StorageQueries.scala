@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
 
 /** Storage-layout / IO-format operators (SURVEY §2.B scan family,
@@ -427,13 +427,10 @@ object StorageQueries {
     * scan — the same pass a writer makes when it collects footer
     * statistics. */
   def q181Zonemaps(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.orders(spark, sfDir)
-      .groupBy(expr(s"o_orderkey div $ZoneRows").as("block"))
-      .agg(count(lit(1)).as("n_rows"),
-        round(min(col("o_totalprice")), 6).as("min_price"),
-        round(max(col("o_totalprice")), 6).as("max_price"))
-      .withColumn("hit",
-        col("max_price") >= ZonePredLo && col("min_price") <= ZonePredHi)
+    Graft.zoneMaps(Tables.orders(spark, sfDir), expr(s"o_orderkey div $ZoneRows"),
+        col("o_totalprice"), ZonePredLo, ZonePredHi)
+      .withColumnRenamed("min_v", "min_price")
+      .withColumnRenamed("max_v", "max_price")
       .orderBy(col("block"))
 
   val q181Sql: String =

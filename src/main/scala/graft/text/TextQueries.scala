@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
 import graft.oracle.Sql
 
@@ -373,11 +373,9 @@ FROM base b LEFT JOIN top t USING (doc_id) ORDER BY b.doc_id"""
     * kept at 50%. */
   def q47StratifiedSample(spark: SparkSession, sfDir: String): DataFrame = {
     val rate = when(col("lang") === "en", lit(10)).otherwise(lit(50))
-    val bucket = pmod(MF.universalHash(col("doc_id"), 3), lit(100))
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), bucket.as("bucket"), rate.as("rate_pct"))
-      .filter(col("bucket") < col("rate_pct"))
-      .select(col("doc_id"), col("lang"), col("bucket"))
+    Graft.hashSample(Tables.documents(spark, sfDir), col("doc_id"), rate)
+      .select(col("doc_id"), col("lang"),
+        pmod(MF.universalHash(col("doc_id"), 3), lit(100)).as("bucket"))
       .orderBy(col("doc_id"))
   }
 
@@ -412,23 +410,10 @@ SELECT doc_id, lang, bucket FROM b WHERE bucket < rate_pct ORDER BY doc_id"""
     * ranking, so a sub-grid libm difference in ln() can't reorder the
     * top-k between Spark and the DuckDB oracle; ties break on the term.
     */
-  def q48Tfidf(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val tok = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-    val tf = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val nDocs = docs.agg(count(lit(1)).as("n"))
-    val scored = tf.join(df, "term")
-      .crossJoin(broadcast(nDocs))
-      .select(col("doc_id"), col("term"),
-        round(col("tf") * log((col("n") + 1.0) / (col("df") + 1.0)), 6).as("tfidf"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf").desc, col("term"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TfidfTopK)
-      .select(col("doc_id"), col("term"), col("rank"), col("tfidf"))
+  def q48Tfidf(spark: SparkSession, sfDir: String): DataFrame =
+    Graft.tfidfTopTerms(Tables.documents(spark, sfDir), col("doc_id"), col("text"),
+        TfidfTopK)
       .orderBy(col("doc_id"), col("rank"))
-  }
 
   val q48Sql: String =
     s"""WITH tok AS MATERIALIZED (
@@ -803,29 +788,10 @@ FROM s ORDER BY lang"""
     * rewrites to WindowGroupLimit. Scores are round(,6)-gridded before
     * ranking with a doc_id tie-break (the q48 determinism convention).
     */
-  def q73Bm25(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val tok = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-    val tf = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl"))
-    val idf = log(lit(1.0) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val dlNorm = col("dl").cast("double") * col("n").cast("double") / col("sumdl").cast("double")
-    val tfNorm = col("tf") * lit(Bm25K1 + 1.0) /
-      (col("tf") + lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * dlNorm))
-    val scored = tf.filter(col("term").isin(Bm25Terms: _*))
-      .join(df, "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("term"), col("doc_id"), round(idf * tfNorm, 6).as("score"))
-    val w = Window.partitionBy(col("term"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= Bm25TopK)
-      .select(col("term"), col("doc_id"), col("rank"), col("score"))
+  def q73Bm25(spark: SparkSession, sfDir: String): DataFrame =
+    Graft.bm25(Tables.documents(spark, sfDir), col("doc_id"), col("text"), Bm25Terms,
+        Bm25TopK, Bm25K1, Bm25B)
       .orderBy(col("term"), col("rank"))
-  }
 
   val q73Sql: String = {
     val terms = Bm25Terms.map(t => s"'$t'").mkString("(", ", ", ")")
@@ -872,21 +838,13 @@ WHERE rank <= $Bm25TopK ORDER BY term, rank"""
     * most k rows per partition per stratum — never the corpus. Keys are
     * round(,6)-gridded with a doc_id tie-break (q48 convention), making
     * the sample identical on both engines and across reruns. */
-  def q74WeightedSample(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = (MF.universalHash(col("doc_id"), 5) + lit(1)).cast("double") /
-      lit(2147483647.0)
-    // + 0.0 collapses IEEE −0.0 (a just-below-grid key rounding up) to
-    // +0.0 identically on both engines before the hash gate.
-    val key = round(log(u) / col("n_chars"), 6) + lit(0.0)
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("key").desc, col("doc_id"))
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("n_chars").as("weight"), key.as("key"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= WsTopK)
+  def q74WeightedSample(spark: SparkSession, sfDir: String): DataFrame =
+    Graft.weightedSample(
+        Tables.documents(spark, sfDir)
+          .select(col("doc_id"), col("lang"), col("n_chars").as("weight")),
+        col("doc_id"), col("weight"), col("lang"), WsTopK)
       .select(col("lang"), col("rank"), col("doc_id"), col("weight"), col("key"))
       .orderBy(col("lang"), col("rank"))
-  }
 
   val q74Sql: String =
     s"""WITH keyed AS (
@@ -2102,15 +2060,12 @@ ORDER BY p.lang"""
     * wordcount; the per-source totals re-aggregate O(sources) rows and
     * broadcast back. Nothing global, no window. */
   def q167HeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    val cnt = Tables.documents(spark, sfDir)
+    val toks = Tables.documents(spark, sfDir)
       .select(col("source"),
         explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("tok"))
-      .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("cnt"))
-    val tot = cnt.groupBy(col("source")).agg(sum(col("cnt")).as("total"))
-    cnt.join(broadcast(tot), "source")
-      .filter(col("cnt") * HhDen >= col("total") && col("cnt") >= HhMinCount)
-      .select(col("source"), col("tok"), col("cnt"), col("total"),
-        round(col("cnt").cast("double") / col("total"), 6).as("share"))
+    Graft.heavyHitters(toks, col("source"), col("tok"), HhDen, HhMinCount)
+      .select(col("grp").as("source"), col("item").as("tok"), col("cnt"),
+        col("total"), col("share"))
       .orderBy(col("source"), col("cnt").desc, col("tok"))
   }
 

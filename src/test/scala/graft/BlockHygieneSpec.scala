@@ -60,6 +60,27 @@ class BlockHygieneSpec extends GraftSpec {
       s"logregFit leaked: before=$before after=$persistentRdds")
   }
 
+  test("the walk-corpus memo stays readable after a drain (q151, drain, q240)") {
+    // q151 builds the memo from Graft.randomWalks' materialized adjacency
+    // and step frontiers; the drain releases those checkpoints, so q240
+    // must read the memo's own persisted copy, not their lineage
+    val q151 = SparkEntry.queries("q151_random_walks")
+    val q240 = SparkEntry.queries("q240_walk_pmi")
+    SessionCache.clear(spark)
+    try {
+      assert(q151(spark, sfDir).count() > 0)
+      Checkpoints.drain(spark)
+      val builds = SessionCache.builds.get()
+      val afterDrain = q240(spark, sfDir).collect().toSeq
+      assert(SessionCache.builds.get() === builds, "q240 rebuilt a memo q151 built")
+      Checkpoints.drain(spark)
+      SessionCache.clear(spark)
+      val fresh = q240(spark, sfDir).collect().toSeq
+      assert(afterDrain.nonEmpty)
+      assert(afterDrain === fresh)
+    } finally SessionCache.clear(spark)
+  }
+
   test("every VertexLoop engine frees its loop state at drain (no cacheKey)") {
     val edges = graph.WebGraph.edges(spark, sfDir).localCheckpoint()
     val wedges = edges.withColumn("w", lit(1L))

@@ -15,11 +15,13 @@ class GraphXLinkRankSpec extends GraftSpec {
 
   test("GraphX backend reproduces the reference gold numbers") {
     val s = gx(Seq("a" -> "b", "b" -> "c", "a" -> "c"))
-    assert(math.abs(s("a") - 1.3515060339386287) < 1e-3, s)
-    assert(math.abs(s("b") - 4.144902009567587) < 1e-3, s)
+    assert(math.abs(s("a") - 1.3515060339386287) < 1e-6, s)
+    assert(math.abs(s("b") - 4.144902009567587) < 1e-6, s)
+    // c's 7.8e-4 gap is a one-vertex semantic deviation of unknown
+    // cause, not erf error (SURVEY §1.1)
     assert(math.abs(s("c") - 9.06389778197704) < 1e-3, s)
     val t = gx(Seq("a" -> "b", "b" -> "a"))
-    assert(math.abs(t("a") - 5.0) < 1e-3 && math.abs(t("b") - 5.0) < 1e-3, t)
+    assert(math.abs(t("a") - 5.0) < 1e-6 && math.abs(t("b") - 5.0) < 1e-6, t)
   }
 
   test("GraphX and DataFrame backends agree on the derived graph (sf0.001)") {

@@ -5,7 +5,9 @@ import graft.graph.{LinkRank, WebGraph}
 
 /** Gold fixtures from the reference's own test suite
   * (LinkRankComputationTest.java:42-169): same graphs, same expected
-  * normalized scores, same 1e-3 tolerance the reference asserts with.
+  * normalized scores. a, b and the 2-cycle are asserted at 1e-6: graft's
+  * A&S 7.1.26 erf (|err| <= 1.5e-7) puts at most ~7.5e-7 between them
+  * and the gold. c stays at 1e-3 (see SURVEY §1.1).
   */
 class LinkRankSpec extends GraftSpec {
   private lazy val sp = spark
@@ -24,8 +26,11 @@ class LinkRankSpec extends GraftSpec {
 
   test("LinkRank gold: {a→b, b→c, a→c} matches LinkRankComputationTest.testToyData1") {
     val s = scores(Seq("a" -> "b", "b" -> "c", "a" -> "c"))
-    assert(math.abs(s("a") - 1.3515060339386287) < 1e-3, s)
-    assert(math.abs(s("b") - 4.144902009567587) < 1e-3, s)
+    assert(math.abs(s("a") - 1.3515060339386287) < 1e-6, s)
+    assert(math.abs(s("b") - 4.144902009567587) < 1e-6, s)
+    // c is 7.8e-4 off the gold even with an exact erf: a one-vertex
+    // semantic deviation (c is the only dangling sink) of unknown
+    // cause, not erf error — hence the looser bound
     assert(math.abs(s("c") - 9.06389778197704) < 1e-3, s)
   }
 
@@ -38,8 +43,8 @@ class LinkRankSpec extends GraftSpec {
 
   test("LinkRank gold: 2-cycle {a→b, b→a} → 5.0, 5.0 (testToyData2, sigma=0 path)") {
     val s = scores(Seq("a" -> "b", "b" -> "a"))
-    assert(math.abs(s("a") - 5.0) < 1e-3, s)
-    assert(math.abs(s("b") - 5.0) < 1e-3, s)
+    assert(math.abs(s("a") - 5.0) < 1e-6, s)
+    assert(math.abs(s("b") - 5.0) < 1e-6, s)
   }
 
   test("TrustRank: dangling mass flows only to trusted seeds") {
