@@ -8,8 +8,9 @@ import org.apache.spark.storage.StorageLevel
 import scala.util.control.NonFatal
 
 /** Session-scoped memo for expensive derived inputs shared by several
-  * queries (cleaned edge set, minhash signatures, ...). One eager
-  * materialization per (session, key).
+  * queries (cleaned edge set, minhash signatures, ...). One
+  * materialization per (session, key): eager for a frame, by the first
+  * job that reads it for an RDD.
   *
   * The memo is LRU-BOUNDED per session (`spark.graft.sessionCache.maxEntries`,
   * default 32): inserting past the cap evicts the least-recently-used
@@ -75,11 +76,12 @@ object SessionCache {
       Entry(df, () => { df.unpersist(blocking = false); Checkpoints.free(df) })
     }.asInstanceOf[DataFrame]
 
-  /** [[cached]] for an RDD: persisted and materialized once per (session, key). */
+  /** [[cached]] for an RDD: persisted once per (session, key). No job
+    * runs here: the first job that reads the RDD fills its blocks, so a
+    * memo can be built inside the job of the query that needs it. */
   def cachedRdd[T](spark: SparkSession, key: String)(build: => RDD[T]): RDD[T] =
     memoize(spark, key) {
       val rdd = build.persist(StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
       Entry(rdd, () => { rdd.unpersist(blocking = false); () })
     }.asInstanceOf[RDD[T]]
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
+import scala.util.control.NonFatal
+
 /** Loaders for the driver-generated TPC-H-ish parquet tables
   * (see TESTDATA.md). All readers are plain parquet scans so column
   * pruning + predicate pushdown reach the file level.
@@ -19,9 +21,10 @@ object Tables {
     * partitions of which only ONE emits rows, so `rdd.getNumPartitions`
     * overstates parallelism exactly where it matters — r11 ADVICE).
     * Footer reads are driver-side metadata, done once per path per JVM.
-    * A failed read answers `Int.MaxValue` (unknown ⇒ assume splittable)
-    * WITHOUT memoizing it, so a transient IO error cannot pin "no
-    * spread" for the life of the JVM. */
+    * A failed read logs one WARN naming the path and answers
+    * `Int.MaxValue` (unknown ⇒ assume splittable) WITHOUT memoizing it,
+    * so a transient IO error cannot pin "no spread" for the life of the
+    * JVM. */
   private val rowGroupCounts =
     scala.collection.concurrent.TrieMap.empty[String, Int]
   private[graft] def rowGroups(spark: SparkSession, path: String): Int =
@@ -41,7 +44,12 @@ object Tables {
       }.sum
       rowGroupCounts(path) = n
       n
-    } catch { case _: Throwable => Int.MaxValue })
+    } catch {
+      case NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"row-group count of $path unread, assuming a splittable scan: $e")
+        Int.MaxValue
+    })
 
   /** Spread a freshly-scanned frame to the session's parallelism when
     * the scan itself cannot (guide §2.5 "input skew: one huge

@@ -16,9 +16,9 @@ import graft.functions.MathFunctions
   *
   * When to prefer which: both run one Spark job per round with the
   * edge side co-partitioned and built once. The DataFrame engine is the
-  * driver-verified default: its prologue and epilogue are Catalyst
-  * plans that share the session's id map and CSR edge side with the
-  * rest of a query, and its kernel ([[DampedRank]]) also carries the
+  * driver-verified default: its load and dump run in its kernel's
+  * dataflow ([[DampedRank]]), share the session's id map and CSR edge
+  * side with the rest of a query, and its kernel also carries the
   * trusted (TrustRank), personalized (Ppr) and weighted variants and
   * the tolerance halt. This backend demonstrates the same loop as
   * GraphX's Pregel-style message passing (aggregateMessages + a
@@ -39,7 +39,7 @@ object GraphXLinkRank {
           cacheKey: Option[String] = None): DataFrame = {
 
     // string ids -> dense longs on the DataFrame side: two Catalyst
-    // equi-joins against the checkpointed mapping (hash exchanges on
+    // equi-joins against the id map's (id, vid) view (hash exchanges on
     // 8-byte-suffixed keys, broadcastable when small) replace the r3
     // string-keyed RDD joins, which shuffled the full string edge list
     // twice with no shared partitioner.
@@ -134,11 +134,8 @@ object GraphXLinkRank {
           (MathFunctions.normalCdf(col("l"), lit(mu), lit(sigma)) * lit(scale)).as("score"))
       // logs is materialized (mu/sigma folds); the final graph can go now.
       g.unpersist(blocking = false)
-      // `out` still reads logs AND vmap lazily — the checkpointed mapping
-      // in particular must stay live until the caller's action completes:
-      // a recomputed monotonically_increasing_id could reassign ids and
-      // silently mis-join scores to urls. Both are released at the harness
-      // drain (a session-cached vmap is the memo's).
+      // `out` still reads logs AND vmap lazily; both are released at the
+      // harness drain (a session-cached id map is the memo's).
       out
     }
   }

@@ -1,6 +1,5 @@
 package graft.graph
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.MathFunctions
@@ -20,20 +19,22 @@ import graft.functions.MathFunctions
   * l = ln(v), mu = mean(l), sigma = population stdev (1e-10 when 0),
   * final = Phi_{mu,sigma}(l) * scale.
   *
-  * Scale posture (100 TB / 1000 executors): the rounds run on
-  * [[DampedRank]], one Spark job each —
-  *  - edges are mapped once per graph into CSR partitions
-  *    hash-partitioned on the source vid (out-degrees counted inside
-  *    each partition) and co-partitioned with the vertex scores (no
-  *    re-shuffle of the big edge table);
-  *  - a round's contributions are summed per destination inside each
-  *    edge partition, so its one shuffle carries one block per
-  *    (edge partition, vertex partition) pair;
-  *  - the dangling mass (and the tolerance / trace scalars) come back
-  *    with the action that materializes the round — never a per-row
-  *    join or a second job;
+  * Scale posture (100 TB / 1000 executors): load, rounds and dump run
+  * on [[DampedRank]] as one RDD dataflow —
+  *  - one job builds the id map (string ids numbered inside their hash
+  *    partition), the CSR edge side (out-degrees counted inside each
+  *    partition) and the run's vertex side, all co-partitioned (no
+  *    re-shuffle of the big edge table, no DataFrame join);
+  *  - each round is one job: contributions are summed per destination
+  *    inside each edge partition, so its one shuffle carries one block
+  *    per (edge partition, vertex partition) pair;
+  *  - the dangling mass, the tolerance / trace scalars and Σ ln s come
+  *    back with the action that materializes the round — never a
+  *    per-row join or a second job;
   *  - each round is local-checkpointed and the previous one released
-  *    (on a real cluster swap in checkpoint-to-DFS).
+  *    (on a real cluster swap in checkpoint-to-DFS);
+  *  - the normalization costs one σ job; the output zips the id map's
+  *    partitions with the last iterate.
   */
 object LinkRank {
 
@@ -85,104 +86,80 @@ object LinkRank {
       tol.fold((_: DampedRank.Stats, _: DampedRank.Stats) => false) { eps =>
         (_, st) => st.n == 0 || st.maxDelta < eps // n = 0: the empty graph
       }
-    val (run, vmap) = dampedLoop(spark, edges, init, iters, damping, trustedMode,
-      cacheKey)(halt)
-
+    val run = dampedLoop(spark, edges, init, iters, damping, trustedMode, cacheKey)(halt)
+    val raw = release(spark, run)
     if (!normalize) // raw damped scores (warm-start food)
-      return (release(spark, run, vmap, cacheKey), run.rounds)
+      return (raw, run.rounds)
 
-    // Log-normal CDF normalization — two explicit passes (sum, then
-    // squared deviations) so the oracle's CTE arithmetic is identical.
-    // The string id comes back via one final join against the mapping.
+    // Log-normal CDF normalization in the oracle's two passes: μ from
+    // Σ ln s, which came back with the last round's job, then σ from
+    // Σ(ln s − μ)² in one job over the final scores.
     val n = run.first.n.toDouble
-    val logs = graft.Checkpoints.materialize(run.frame.join(vmap, "vid")
-      .select(col("id"), log(col("score")).as("l")))
-    run.free() // logs is materialized; the loop's blocks can go
-    val mu = logs.agg(sum(col("l"))).first().getDouble(0) / n
-    val sig0 = math.sqrt(
-      logs.agg(sum((col("l") - lit(mu)) * (col("l") - lit(mu)))).first().getDouble(0) / n)
+    val mu = run.last.logSum / n
+    val sig0 = math.sqrt(run.logDeviation(mu) / n)
     val sigma = if (sig0 == 0.0) 1e-10 else sig0
-
-    val out = logs.select(col("id"),
-      (MathFunctions.normalCdf(col("l"), lit(mu), lit(sigma)) * lit(scale)).as("score"))
-    if (cacheKey.isEmpty) graft.Checkpoints.free(vmap) // session-cached vmaps are shared
+    val out = raw.select(col("id"),
+      (MathFunctions.normalCdf(log(col("score")), lit(mu), lit(sigma)) * lit(scale)).as("score"))
     (out, run.rounds)
   }
 
   /** [[runCounted]]'s and [[runTrace]]'s damped loop on [[DampedRank]]:
-    * the id map, the CSR edge side (freed after the loop unless it is
-    * the session's), and up to `iters` updates from `init` — uniform
+    * the id map and the CSR edge side (memoized per graph under
+    * `cacheKey`), and up to `iters` updates from `init` — uniform
     * restart, or TrustRank's dangling mass split over the trusted
     * vertices (initial score within 1e-3 of 1.0). `stop` sees each
-    * round's scalars; they ride the round's one job.
-    * @return (the run, vmap) */
+    * round's scalars; they ride the round's one job. */
   private def dampedLoop(spark: SparkSession, edges: DataFrame, init: DataFrame,
                          iters: Int, damping: Double, trustedMode: Boolean,
                          cacheKey: Option[String])
                         (stop: (DampedRank.Stats, DampedRank.Stats) => Boolean)
-      : (DampedRank.Result, DataFrame) = {
+      : DampedRank.Result = {
     // Dense long vertex ids: web URLs are long strings, and every round
     // shuffles on the vertex key — mapping to an 8-byte surrogate once
-    // (and back once at the end) shrinks every round's shuffle. With
-    // cacheKey set, the id map and the edge side are loop-invariant per
-    // GRAPH, not per run — q01/q02/q10 all rank the same page graph, so
-    // both build once per session.
-    val vmap = vmapFor(spark, init.select(col("id")), cacheKey)
-    val csr = csrFor(spark, edges, vmap, cacheKey)
+    // (and back by position at the end) shrinks every round's shuffle.
+    // With cacheKey set, the id map and the edge side are loop-invariant
+    // per GRAPH, not per run — q01/q02/q10 all rank the same page graph,
+    // so both build once per session.
     val trusted = when(abs(col("score") - 1.0) < 1e-3, 1.0).otherwise(0.0).as("p")
-    val state = init.join(vmap, "id")
-      .select(Seq(col("vid"), col("score").cast("double")) ++
-        (if (trustedMode) Seq(trusted) else Nil): _*)
-    val run = DampedRank.run(csr, state, damping, iters) { first =>
-      val n = first.n.toDouble
-      // TrustRank: p = 1 on trusted vertices, Σp = |trusted|
-      if (trustedMode)
-        DampedRank.Restart((1.0 - damping) / n, 0.0, 0.0,
-          if (first.pSum > 0) 1.0 / first.pSum else 0.0)
-      else DampedRank.Restart((1.0 - damping) / n, 0.0, 1.0 / n, 0.0)
+    val state = init.select(Seq(col("id"), col("score").cast("double")) ++
+      (if (trustedMode) Seq(trusted) else Nil): _*)
+    DampedRank.run(spark, edges.select(col("src"), col("dst")), state, damping, iters,
+      idKey = cacheKey.map(k => s"rank-vmap:$k"), edgeKey = cacheKey.map(k => s"rank-eod:$k")) {
+      first =>
+        val n = first.n.toDouble
+        // TrustRank: p = 1 on trusted vertices, Σp = |trusted|
+        if (trustedMode)
+          DampedRank.Restart((1.0 - damping) / n, 0.0, 0.0,
+            if (first.pSum > 0) 1.0 / first.pSum else 0.0)
+        else DampedRank.Restart((1.0 - damping) / n, 0.0, 1.0 / n, 0.0)
     }(stop)
-    if (cacheKey.isEmpty) csr.unpersist(blocking = false)
-    (run, vmap)
   }
 
   /** The raw (id, score) result of a damped run. The run's blocks are
-    * freed at the caller's drain, after its action (a run-local id map
-    * is released there too, as a [[graft.Checkpoints.materialize]]d
-    * frame). */
-  private[graph] def release(spark: SparkSession, run: DampedRank.Result, vmap: DataFrame,
-                             cacheKey: Option[String]): DataFrame = {
-    val out = run.frame.join(vmap, "vid").select(col("id"), col("score"))
+    * freed at the caller's drain, after its action. */
+  private[graph] def release(spark: SparkSession, run: DampedRank.Result): DataFrame = {
     graft.Checkpoints.deferCleanup(spark)(() => run.free())
-    out
+    run.frame
   }
 
-  /** The loop-invariant edge side as [[DampedRank]] CSR partitions:
-    * every edge with both endpoints mapped to 8-byte surrogate ids
-    * (svid, dvid), out-degrees counted per source inside the partition
-    * (an edge whose dst is not in `vmap` keeps a null dvid, so it still
-    * counts). Shared across every rank-family loop on the same graph
-    * (LinkRank / TrustRank / PPR) via SessionCache when `cacheKey` is
-    * set; otherwise the caller unpersists it. */
-  private[graph] def csrFor(spark: SparkSession, edges: DataFrame, vmap: DataFrame,
-                            cacheKey: Option[String]): RDD[DampedRank.EdgePart] =
-    DampedRank.edgesFor(spark, cacheKey.map(k => s"rank-eod:$k")) {
-      VertexLoop.vidEdges(edges, vmap, dstJoin = "left").select(col("svid"), col("dvid"))
-    }
-
-  /** Dense long surrogate ids for a vertex set `ids(id)` → (id, vid).
-    * Checkpointed so monotonically_increasing_id is assigned exactly
-    * once (a recompute could reassign); shared by both rank backends,
-    * and across queries of the same graph via SessionCache when
-    * `cacheKey` is set (otherwise released at the next drain). */
+  /** The `(id, vid)` view of the rank family's id map for a vertex set
+    * `ids(id)`: vids are dense per partition and stable across reads.
+    * Shared across queries of the same graph via SessionCache when
+    * `cacheKey` is set (the `rank-vmap:` memo the rank loops use),
+    * otherwise released at the next drain.
+    *
+    * The view carries no size statistics, so joins against it would be
+    * planned blind and re-planned by AQE as stages finish, in an order
+    * that varies run to run. It is hinted for broadcast exactly when
+    * the planner's estimate of `ids` is under the broadcast threshold. */
   private[graph] def vmapFor(spark: SparkSession, ids: DataFrame,
                              cacheKey: Option[String]): DataFrame = {
-    def mapped: DataFrame = ids
-      .repartition(col("id"))
-      .withColumn("vid", monotonically_increasing_id())
-    cacheKey match {
-      case Some(k) => graft.SessionCache.cached(spark, s"rank-vmap:$k")(mapped.localCheckpoint())
-      case None => graft.Checkpoints.materialize(mapped)
-    }
+    val view = DampedRank.idFrame(spark,
+      DampedRank.idMap(spark, cacheKey.map(k => s"rank-vmap:$k"), ids),
+      ids.schema.head.dataType)
+    val small = ids.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (small) broadcast(view) else view
   }
 
   /** Uniform-1.0 init over the vertex set of `edges`
@@ -204,14 +181,13 @@ object LinkRank {
                iters: Int = 9, damping: Double = 0.85,
                cacheKey: Option[String] = None): DataFrame = {
     val trace = Seq.newBuilder[(Double, Double, Double)]
-    val (run, vmap) = dampedLoop(spark, edges, init, iters, damping,
+    val run = dampedLoop(spark, edges, init, iters, damping,
       trustedMode = false, cacheKey) { (prev, st) =>
       trace += ((prev.dangling, st.l1Delta, st.mass))
       false
     }
     // the trace is driver-side rows: nothing reads the loop state again
     run.free()
-    if (cacheKey.isEmpty) graft.Checkpoints.free(vmap)
     import spark.implicits._
     trace.result().zipWithIndex
       .map { case ((ds, l1, mass), k) => (k + 1, ds, l1, mass) }

@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * probabilities (visit rates of the restarting walk), not the
   * [0,scale] CDF grid of LinkRank.
   *
-  * Scale posture: identical to LinkRank (shared code) — the CSR edge
-  * side ([[LinkRank.csrFor]]) is built once per graph and
-  * SessionCache-shared with LinkRank/TrustRank loops on the same
-  * graph; each round is one [[DampedRank]] job with r as the personal
-  * weight.
+  * Scale posture: identical to LinkRank (shared code) — the id map and
+  * the CSR edge side are built once per graph and SessionCache-shared
+  * with LinkRank/TrustRank loops on the same graph; the seeds are the
+  * vertex side's only rows (every other vertex starts at 0), and each
+  * round is one [[DampedRank]] job with r as the personal weight.
   *
   * Float-grid caveat (the LinkRank convention, accepted here too): the
   * per-round contribution sum runs in IEEE double with
@@ -40,24 +40,19 @@ object Ppr {
   def run(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
           iters: Int = 6, damping: Double = 0.85,
           cacheKey: Option[String] = None): DataFrame = {
-    val vmap = LinkRank.vmapFor(spark, WebGraph.vertices(edges), cacheKey)
-    val csr = LinkRank.csrFor(spark, edges, vmap, cacheKey)
-
-    // |S| as a driver scalar; seeds outside the graph's vertex set are
-    // ignored by the join.
-    val seedVids = seeds.select(col("id")).distinct().join(vmap, "id")
-      .select(col("vid").as("svid_seed"))
-    val ns = seedVids.count()
-    require(ns > 0, s"Ppr.run: empty seed set (no seed id is a graph vertex)")
-
-    // the restart vector r is both the initial score and the personal
-    // weight: teleport (1-d)·r_v, dangling share r_v
-    val r = when(col("svid_seed").isNotNull, lit(1.0 / ns)).otherwise(lit(0.0))
-    val state = vmap.join(seedVids, col("vid") === col("svid_seed"), "left")
-      .select(col("vid"), r.as("score"), r.as("p"))
-    val run = DampedRank.run(csr, state, damping, iters)(_ =>
-      DampedRank.Restart(0.0, 1.0 - damping, 0.0, 1.0))()
-    if (cacheKey.isEmpty) csr.unpersist(blocking = false)
-    LinkRank.release(spark, run, vmap, cacheKey)
+    // the restart vector r = p/|S| (p = 1 on the seeds that are graph
+    // vertices, |S| = the vertex side's Σp; seeds outside the graph drop)
+    // is both the initial score and the personal weight: teleport
+    // (1-d)·r_v, dangling share r_v
+    val seedRows = seeds.select(col("id"), lit(1.0).as("score"), lit(1.0).as("p"))
+    val run = DampedRank.run(spark, edges.select(col("src"), col("dst")), seedRows, damping, iters,
+      ids = Some(WebGraph.vertices(edges)), cover = true,
+      idKey = cacheKey.map(k => s"rank-vmap:$k"), edgeKey = cacheKey.map(k => s"rank-eod:$k")) {
+      first =>
+        val ns = first.pSum
+        require(ns > 0, s"Ppr.run: empty seed set (no seed id is a graph vertex)")
+        DampedRank.Restart(0.0, (1.0 - damping) / ns, 0.0, 1.0 / ns, s0 = 1.0 / ns)
+    }()
+    LinkRank.release(spark, run)
   }
 }

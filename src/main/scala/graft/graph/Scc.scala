@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * SCCs, cycles trap it inside).
   *
   * The component label GraphX emits is the lowest surrogate vertex id
-  * in the component; surrogate assignment (monotonically_increasing_id)
+  * in the component; surrogate assignment (the rank family's id map)
   * is partitioning-dependent, so the caller-visible label is re-derived
   * as the MINIMUM STRING id per component — deterministic however the
   * longs were dealt. Component membership itself is
@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale: vertex ids travel as 8-byte longs through the iterations
   * (GraphXLinkRank's argument); the string ids appear only in the two
-  * boundary equi-joins against the checkpointed mapping and the final
+  * boundary equi-joins against the id map's (id, vid) view and the final
   * min-agg, all broadcastable when the vertex set is host-scale.
   */
 object Scc {

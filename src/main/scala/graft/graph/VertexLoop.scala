@@ -99,9 +99,8 @@ private[graft] object VertexLoop {
 
   /** Map a string-id edge frame `edges(src, dst, …)` to 8-byte surrogate
     * ids through `vmap(id, vid)`: two equi-joins adding `svid`/`dvid`
-    * (the other edge columns ride along); `dstJoin = "left"` keeps edges
-    * whose dst is not in `vmap`, with a null `dvid`. */
-  def vidEdges(edges: DataFrame, vmap: DataFrame, dstJoin: String = "inner"): DataFrame = edges
+    * (the other edge columns ride along). */
+  def vidEdges(edges: DataFrame, vmap: DataFrame): DataFrame = edges
     .join(vmap.withColumnRenamed("id", "src").withColumnRenamed("vid", "svid"), "src")
-    .join(vmap.withColumnRenamed("id", "dst").withColumnRenamed("vid", "dvid"), Seq("dst"), dstJoin)
+    .join(vmap.withColumnRenamed("id", "dst").withColumnRenamed("vid", "dvid"), "dst")
 }

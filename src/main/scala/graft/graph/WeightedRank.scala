@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * semantics while letting the caller supply any weight column.
   *
   * Scale shape (the LinkRank audit carries over verbatim): 8-byte
-  * surrogate ids via [[LinkRank.vmapFor]]; the loop-invariant edge
+  * surrogate ids from [[DampedRank]]'s id map; the loop-invariant edge
   * side carries w per edge and Σw_out per source in [[DampedRank]]'s
   * CSR partitions, built once, and each round is one [[DampedRank]] job.
   * Raw damped scores are returned (no CDF normalization) — weighted
@@ -28,19 +28,14 @@ object WeightedRank {
   def run(spark: SparkSession, wedges: DataFrame, init: DataFrame,
           iters: Int = 9, damping: Double = 0.85,
           cacheKey: Option[String] = None): DataFrame = {
-    val vmap = LinkRank.vmapFor(spark, init.select(col("id")),
-      cacheKey.map(k => s"w:$k"))
-    // (svid, dvid, w): the kernel divides by Σw_out per source
-    val csr = DampedRank.edgesFor(spark, cacheKey.map(k => s"wrank-eod:$k")) {
-      VertexLoop.vidEdges(wedges, vmap, dstJoin = "left")
-        .select(col("svid"), col("dvid"), col("w").cast("double"))
-    }
-    val state = init.join(vmap, "id").select(col("vid"), col("score").cast("double"))
-    val run = DampedRank.run(csr, state, damping, iters) { first =>
-      val n = first.n.toDouble
-      DampedRank.Restart((1.0 - damping) / n, 0.0, 1.0 / n, 0.0)
+    // (src, dst, w): the kernel divides by Σw_out per source
+    val run = DampedRank.run(spark, wedges.select(col("src"), col("dst"), col("w").cast("double")),
+      init.select(col("id"), col("score").cast("double")), damping, iters,
+      idKey = cacheKey.map(k => s"rank-vmap:w:$k"), edgeKey = cacheKey.map(k => s"wrank-eod:$k")) {
+      first =>
+        val n = first.n.toDouble
+        DampedRank.Restart((1.0 - damping) / n, 0.0, 1.0 / n, 0.0)
     }()
-    if (cacheKey.isEmpty) csr.unpersist(blocking = false)
-    LinkRank.release(spark, run, vmap, cacheKey)
+    LinkRank.release(spark, run)
   }
 }

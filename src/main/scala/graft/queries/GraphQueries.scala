@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.graph.{LinkRank, WebGraph}
-import graft.functions.UrlFunctions
 import graft.oracle.{RankSql, Sql}
 
 /** Graph surface of the reference (SURVEY §2.A q01–q03, q07–q10):

@@ -712,7 +712,6 @@ FROM res ORDER BY channel"""
 
   /** Formula text shared with the oracle; lives in operators.Glm. */
   private def OlsExprs = graft.operators.Glm.OlsExprs
-  private def OlsDet = graft.operators.Glm.OlsDet
 
   val q185Sql: String =
     s"""WITH m AS (

@@ -1,9 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-import graft.Tables
 import graft.graph.WebGraph
 import graft.oracle.Sql
 
@@ -14,8 +12,6 @@ import graft.oracle.Sql
   * crawl shards.
   */
 object SpectralQueries {
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
 
   /** Power-iteration rounds on the deflated shifted Laplacian. */
   val FiedlerRounds = 4

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.{MathFunctions => MF}
 
 /** Structured-Streaming-backed driver rows (SURVEY §2.B streaming
   * family, split out of RelationalQueries in r9): each runs a REAL

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.{MathFunctions => MF}
 
 /** Windowed / session analytics (SURVEY §2.B window family, split out
   * of RelationalQueries in r9): ranking windows (q14), sessionization

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
@@ -20,8 +20,6 @@ import graft.oracle.Sql
   * formula shared verbatim with the DuckDB oracle.
   */
 object FeatureQueries {
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
 
   /** Features reported per class. */
   val Chi2TopK = 10

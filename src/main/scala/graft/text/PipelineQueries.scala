@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
@@ -14,8 +14,6 @@ import graft.oracle.Sql
   * a filtered corpus and a training run.
   */
 object PipelineQueries {
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
 
   /** Tokens per training sequence (context window). */
   val PackLen = 2048

@@ -22,10 +22,34 @@ class BlockHygieneSpec extends GraftSpec {
     Checkpoints.drain(spark)
     val after = persistentRdds
     // 9 iterations would have left >= 9 checkpoint RDDs before the fix.
-    // Live set while the result is readable: logs checkpoint (+ nothing
-    // from the loop); after drain the run contributes nothing.
+    // Live set while the result is readable: the run-local id map, the
+    // vertex side and the last iterate; after drain the run contributes
+    // nothing.
     assert(during - before <= 3, s"rank run leaked: before=$before during=$during")
     assert(after - before <= 0, s"drain left blocks: before=$before after=$after")
+  }
+
+  test("runCounted's output answers two actions before drain and leaks nothing after it") {
+    // the output zips the id map's blocks with the last iterate's (no
+    // checkpointed logs frame): both must stay readable until drain
+    val edges = graph.WebGraph.edges(spark, sfDir).localCheckpoint()
+    val init = graph.LinkRank.uniformInit(edges)
+    val vertices = init.count()
+    for (key <- Seq(None, Some("hygiene-out"))) {
+      SessionCache.clear(spark)
+      val before = persistentRdds
+      val (out, rounds) = graph.LinkRank.runCounted(spark, edges, init, cacheKey = key)
+      assert(rounds == 9)
+      assert(out.count() == vertices, s"cacheKey=$key: first action")
+      val scores = out.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(scores.size == vertices, s"cacheKey=$key: second action")
+      assert(scores.values.forall(s => s >= 0.0 && s <= 10.0), s"cacheKey=$key")
+      Checkpoints.drain(spark)
+      SessionCache.clear(spark)
+      assert(persistentRdds <= before,
+        s"cacheKey=$key leaked: before=$before after=$persistentRdds")
+    }
+    Checkpoints.free(edges)
   }
 
   test("q25 label propagation converges early and frees per-round checkpoints") {

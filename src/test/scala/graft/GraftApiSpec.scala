@@ -13,7 +13,13 @@ class GraftApiSpec extends GraftSpec {
     val edges = Seq("a" -> "b", "b" -> "c", "a" -> "c").toDF("src", "dst")
     val r = Graft.linkRank(spark, edges).collect()
       .map(x => x.getString(0) -> x.getDouble(1)).toMap
-    assert(math.abs(r("c") - 9.06389778197704) < 1e-3) // reference gold
+    // reference gold (LinkRankComputationTest.testToyData1), as LinkRankSpec
+    assert(math.abs(r("a") - 1.3515060339386287) < 1e-6, r)
+    assert(math.abs(r("b") - 4.144902009567587) < 1e-6, r)
+    // c is 7.8e-4 off the gold even with an exact erf: a one-vertex
+    // semantic deviation (c is the only dangling sink) of unknown
+    // cause, not erf error — hence the looser bound (SURVEY §1.1)
+    assert(math.abs(r("c") - 9.06389778197704) < 1e-3, r)
     val g = Graft.linkRankGraphX(spark, edges).collect()
       .map(x => x.getString(0) -> x.getDouble(1)).toMap
     r.foreach { case (k, v) => assert(math.abs(v - g(k)) < 1e-9) }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, when}
 
 /** Counts Spark jobs launched by a block of driver code, with a settle
   * loop after the action so async listener delivery can't undercount. */
@@ -114,6 +115,50 @@ class JobCountSpec extends GraftSpec {
       iters = iters, tol = Some(0.0))._1)
     marginal("runTrace")(iters => graph.LinkRank.runTrace(spark, edges, init, iters = iters))
     marginal("Ppr")(iters => graph.Ppr.run(spark, edges, seeds, iters = iters))
+  }
+
+  // Absolute ceilings for one rank call, load and dump included: the
+  // kernel builds the id map, the CSR and the vertex side in one job
+  // and the log-normal epilogue adds one σ job to the output's, so a
+  // run costs its rounds plus a handful (13 jobs at 9 rounds when
+  // pinned: the init frame's distinct, the load, 9 rounds, σ, output).
+  test("LinkRank.runCounted without cacheKey: at most iters + 6 jobs in total") {
+    SessionCache.clear(spark)
+    val edges = graph.WebGraph.cachedEdges(spark, sfDir)
+    val init = graph.LinkRank.uniformInit(edges)
+    edges.count()
+    val n = JobMeter.measure(spark) {
+      graph.LinkRank.runCounted(spark, edges, init)._1
+        .write.format("noop").mode("overwrite").save()
+    }
+    Checkpoints.drain(spark)
+    SessionCache.clear(spark)
+    info(s"runCounted jobs at 9 rounds: $n")
+    assert(n <= 9 + 6, s"runCounted ran $n jobs for 9 rounds")
+  }
+
+  test("TrustRank on a warm cacheKey memo: 13 jobs in total (pinned)") {
+    SessionCache.clear(spark)
+    val edges = graph.WebGraph.cachedEdges(spark, sfDir)
+    val verts = graph.WebGraph.vertices(edges)
+    val first = verts.orderBy(col("id")).first().getString(0)
+    val trusted = verts.withColumn("score", when(col("id") === first, 1.0).otherwise(0.0))
+    val key = Some("jobcount")
+    // the LinkRank run builds the id map and CSR memos; TrustRank reads them
+    graph.LinkRank.run(spark, edges, graph.LinkRank.uniformInit(edges), cacheKey = key)
+      .write.format("noop").mode("overwrite").save()
+    Checkpoints.drain(spark)
+    assert(SessionCache.contains(spark, "rank-vmap:jobcount"))
+    assert(SessionCache.contains(spark, "rank-eod:jobcount"))
+    // the init frame's distinct, the vertex side, 9 rounds, σ, output
+    val n = JobMeter.measure(spark) {
+      graph.LinkRank.run(spark, edges, trusted, trustedMode = true, cacheKey = key)
+        .write.format("noop").mode("overwrite").save()
+    }
+    Checkpoints.drain(spark)
+    SessionCache.clear(spark)
+    info(s"warm TrustRank jobs: $n")
+    assert(n == 13L, s"warm TrustRank ran $n jobs, pinned at 13")
   }
 
   // Absolute ceilings for the multi-round driver rows: measured-at-pin

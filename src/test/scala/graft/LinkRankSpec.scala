@@ -228,6 +228,43 @@ class LinkRankSpec extends GraftSpec {
     }
   }
 
+  test("normalized output equals the two-pass log-normal CDF of the raw iterate (1e-12)") {
+    import graft.functions.MathFunctions
+    // μ = Σ ln s / n, σ = √(Σ(ln s − μ)² / n) (1e-10 when 0), score =
+    // Φ_{μ,σ}(ln s)·10 — replayed on the driver over runCounted's raw
+    // iterate, through the same normalCdf expression
+    def check(what: String, edges: Seq[(String, String)], init: Seq[(String, Double)]): Unit = {
+      val e = edges.toDF("src", "dst")
+      val ini = init.toDF("id", "score")
+      val raw = LinkRank.runCounted(spark, e, ini, normalize = false)._1
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toSeq
+      val got = LinkRank.run(spark, e, ini)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      Checkpoints.drain(spark)
+      val n = raw.size.toDouble
+      val l = raw.map { case (_, s) => math.log(s) }
+      val mu = l.sum / n
+      val sig0 = math.sqrt(l.map(x => (x - mu) * (x - mu)).sum / n)
+      val sigma = if (sig0 == 0.0) 1e-10 else sig0
+      val want = raw.toDF("id", "s")
+        .select(col("id"), (MathFunctions.normalCdf(log(col("s")), lit(mu), lit(sigma)) *
+          lit(10.0)).as("score"))
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(got.keySet == want.keySet, what)
+      want.foreach { case (v, x) =>
+        assert(math.abs(got(v) - x) < 1e-12, s"$what, $v: ${got(v)} vs $x")
+      }
+    }
+    // σ = 0: the 1e-10 fallback
+    check("2-cycle", Seq("a" -> "b", "b" -> "a"), Seq("a" -> 1.0, "b" -> 1.0))
+    // z is in init only: a vertex of the run with no edge
+    check("init-only vertex", Seq("a" -> "b", "b" -> "c", "a" -> "c"),
+      Seq("a" -> 1.0, "b" -> 1.0, "c" -> 1.0, "z" -> 1.0))
+    // x is no vertex: c keeps an out-link (not dangling) that carries nothing
+    check("dst outside the id map", Seq("a" -> "b", "b" -> "c", "a" -> "c", "c" -> "x"),
+      Seq("a" -> 1.0, "b" -> 1.0, "c" -> 1.0))
+  }
+
   test("edge dedup matches removeDuplicateLinks semantics") {
     val raw = Seq(
       ("http://a.com/x", " http://b.com/y#frag"),
