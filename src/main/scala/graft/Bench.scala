@@ -59,20 +59,19 @@ package graft
   * SPARK_GRAFT_COLD=auto|all|0 picks the cold mode (default auto);
   * SPARK_GRAFT_WARM=all gives every key min-of-RUNS in the warm pass
   * (local tuning runs where the budget is yours);
-  * SPARK_GRAFT_BUDGET_S sets the wall budget;
-  * SPARK_GRAFT_METRICS=1 adds per-query shuffle write volume
-  * (`shuffle_mb`, first warm run) — the number that decides whether an
-  * operator survives a 100× scale-up.
+  * SPARK_GRAFT_BUDGET_S sets the wall budget.
+  *
+  * Layers (always on): `layers` maps every key to what its FIRST warm
+  * run cost, read by [[QueryMeter]] (the run is the key's Spark job
+  * group): `wall_s`, `jobs`, `stages`, `task_s`, `gc_s` (task GC),
+  * `shuffle_write_mb`, `shuffle_read_mb`, `spill_mb` (disk), the
+  * [[SessionCache]] memos it built (`memo_builds`) or hit
+  * (`memo_hits`), the persistent RDDs the session holds after the
+  * key's drain (`rdds_held`, session memos included) and the parquet
+  * footers [[Tables]] failed to read (`footer_failures`). Later runs
+  * are not metered: they read memos the first one built.
   */
 object Bench {
-
-  /** Sums shuffle-write bytes across completed stages. */
-  private final class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
 
   def main(args: Array[String]): Unit = {
     val t0Wall = System.nanoTime()
@@ -83,7 +82,6 @@ object Bench {
     val coldMode = sys.env.getOrElse("SPARK_GRAFT_COLD", "auto") // auto|all|0|1
     val warmMode = sys.env.getOrElse("SPARK_GRAFT_WARM", "auto") // auto|all
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BUDGET_S", "1200").toDouble
-    val doMetrics = sys.env.getOrElse("SPARK_GRAFT_METRICS", "0") == "1"
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/last_bench.json")
@@ -112,28 +110,27 @@ object Bench {
       } finally Checkpoints.drain(spark) // session stays block-clean per run
     }
 
+    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+    def mb(bytes: Long): Double = math.round(bytes / 10485.76) / 100.0
+    def layer(m: QueryMeter.Reading, rddsHeld: Int): String =
+      s"""{"wall_s":${r3(m.wallS)},"jobs":${m.jobs},"stages":${m.stages.size},""" +
+        s""""task_s":${r3(m.taskS)},"gc_s":${r3(m.gcS)},""" +
+        s""""shuffle_write_mb":${mb(m.shuffleWriteBytes)},"shuffle_read_mb":${mb(m.shuffleReadBytes)},""" +
+        s""""spill_mb":${mb(m.spillBytes)},"memo_builds":${m.memoBuilds},"memo_hits":${m.memoHits},""" +
+        s""""rdds_held":$rddsHeld,"footer_failures":${m.footerFailures}}"""
+
     // ---- Phase 1: warm (always complete; memo builders get one
     // build-free resample so no published warm number is build-polluted).
-    val meter = new ShuffleMeter
-    if (doMetrics) spark.sparkContext.addSparkListener(meter)
-    val shuffleMb = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val layers = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val touched = scala.collection.mutable.LinkedHashSet.empty[String]
     val warm = scala.collection.mutable.LinkedHashMap.empty[String, Either[String, Double]]
     names.foreach { name =>
-      val before = if (doMetrics) { Thread.sleep(200); meter.bytes.get() } else 0L
-      val touchBefore = SessionCache.touches.get()
-      val buildBefore = SessionCache.builds.get()
-      val first = once(name)
-      if (SessionCache.touches.get() > touchBefore) touched += name
-      // builds-only (not touches): a run that merely HIT an
-      // already-built memo is a clean warm sample and needs no re-run
-      val builtThis = SessionCache.builds.get() > buildBefore
-      if (doMetrics) { // listener events drain async; settle briefly
-        // FIRST warm run only: later runs read session memos and would
-        // average the build volume away
-        Thread.sleep(200)
-        shuffleMb(name) = (meter.bytes.get() - before) / 1048576.0
-      }
+      val (first, m) = QueryMeter.measure(spark, name)(once(name))
+      if (m.memoBuilds + m.memoHits > 0) touched += name
+      layers(name) = layer(m, spark.sparkContext.getPersistentRDDs.size)
+      // builds-only (not hits): a run that merely HIT an already-built
+      // memo is a clean warm sample and needs no re-run
+      val builtThis = m.memoBuilds > 0
       val extra =
         if (warmMode == "all" && elapsedS < 0.7 * budgetS) (2 to runs)
         else if (builtThis && first.isRight) Seq(2) // one build-free sample
@@ -204,7 +201,6 @@ object Bench {
       }
     }
 
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
     def obj(xs: Seq[(String, Either[String, Double])]): (String, Double, Int) = {
       val ok = xs.collect { case (n, Right(t)) => n -> t }
       (ok.map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}"),
@@ -229,11 +225,8 @@ object Bench {
     val coldPart = if (cold.nonEmpty || coldMode != "0")
       s""""cold_queries":$cqs,"total_cold":${r3(coldTotal)},"cold_mode":"$coldMode","n_cold":${cold.size},"n_cold_skipped":$coldSkipped,"""
     else ""
-    val metricsPart = if (doMetrics)
-      shuffleMb.map { case (k, v) => s""""$k":${math.round(v * 100) / 100.0}""" }
-        .mkString(""""shuffle_mb":{""", ",", "},")
-    else ""
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,$coldPart$metricsPart"n_resampled":${resampled + memoResampled},"errors":$es,"n_ok":$nOk,"n_err":${errs.size},"wall_s":${math.round(elapsedS)},"sf":"$sfDir"}"""
+    val layersPart = layers.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,$coldPart"layers":$layersPart,"n_resampled":${resampled + memoResampled},"errors":$es,"n_ok":$nOk,"n_err":${errs.size},"wall_s":${math.round(elapsedS)},"sf":"$sfDir"}"""
     // The COMPLETE line is both the stdout contract and the file
     // artifact, byte-identical — no compact/truncated variant exists
     // any more (r01–r11 all parsed as null because the printed line was

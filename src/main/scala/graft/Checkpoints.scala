@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.util.control.NonFatal
@@ -59,10 +60,14 @@ object Checkpoints {
   /** Release the blocks behind an eagerly checkpointed frame now (no-op
     * for plans that are not a materialized LogicalRDD, and for blocks
     * already released). */
-  def free(df: DataFrame): Unit =
-    checkpointRdd(df).filter(_.getStorageLevel.isValid).foreach(_.unpersist(blocking = false))
+  def free(df: DataFrame): Unit = checkpointRdd(df).foreach(release)
 
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+  /** Release a locally checkpointed RDD's blocks now; a no-op once
+    * released. `RDD.unpersist` would log a WARN that a checkpoint's
+    * lineage cannot be recomputed, once per release. */
+  def release(rdd: RDD[_]): Unit = org.apache.spark.GraftInternals.release(rdd)
+
+  private def checkpointRdd(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd)
       case _ => None

@@ -21,12 +21,17 @@ object Tables {
     * partitions of which only ONE emits rows, so `rdd.getNumPartitions`
     * overstates parallelism exactly where it matters — r11 ADVICE).
     * Footer reads are driver-side metadata, done once per path per JVM.
-    * A failed read logs one WARN naming the path and answers
-    * `Int.MaxValue` (unknown ⇒ assume splittable) WITHOUT memoizing it,
-    * so a transient IO error cannot pin "no spread" for the life of the
-    * JVM. */
+    * A failed read logs one WARN naming the path, bumps
+    * [[footerFailures]] and answers `Int.MaxValue` (unknown ⇒ assume
+    * splittable) WITHOUT memoizing it, so a transient IO error cannot
+    * pin "no spread" for the life of the JVM. */
   private val rowGroupCounts =
     scala.collection.concurrent.TrieMap.empty[String, Int]
+
+  /** Monotone count of failed footer reads in [[rowGroups]]; each one
+    * is a scan planned without its spread decision. */
+  private[graft] val footerFailures = new java.util.concurrent.atomic.AtomicLong(0L)
+
   private[graft] def rowGroups(spark: SparkSession, path: String): Int =
     rowGroupCounts.getOrElse(path, try {
       val conf = spark.sessionState.newHadoopConf()
@@ -46,6 +51,7 @@ object Tables {
       n
     } catch {
       case NonFatal(e) =>
+        footerFailures.incrementAndGet()
         org.slf4j.LoggerFactory.getLogger(getClass)
           .warn(s"row-group count of $path unread, assuming a splittable scan: $e")
         Int.MaxValue

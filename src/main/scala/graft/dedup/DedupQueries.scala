@@ -3,10 +3,10 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF, VectorFunctions => VF}
 import graft.oracle.Sql
+import graft.functions.MathFunctions.dec12
 
 /** Deduplication suite (SURVEY §2.C q20–q24) over the documents table.
   *
@@ -1383,8 +1383,6 @@ ORDER BY f.vec_id"""
     * TakeOrdered, never a global sort. Cross-block recall is q21's
     * LSH job, by design. */
   def q285TfidfCosine(spark: SparkSession, sfDir: String): DataFrame = {
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     val docs = Tables.documents(spark, sfDir, spreadScan = true)
       .select(col("doc_id"), col("source"), col("text"))
     val tf = graft.Checkpoints.materialize(docs
@@ -1503,8 +1501,6 @@ FROM ranked WHERE rank <= $TfidfPairTopK ORDER BY rank"""
     * those 8 rows with 12dp-gridded DECIMAL sums — corpus size only
     * ever touches the first collapse. */
   def q298LinkageEm(spark: SparkSession, sfDir: String): DataFrame = {
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("source"),
         length(col("text")).as("len"),

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Shared numeric kernels. Every formula here has a value-identical twin
   * in the DuckDB oracle (graft.oracle.Sql) — same constants, same Horner
@@ -47,6 +48,17 @@ object MathFunctions {
     * 2^63. Identical constants in Sql.universalHash. */
   def universalHash(h: Column, k: Int): Column =
     pmod(lit(hashA(k)) * h + lit(hashB(k)), lit(HashP))
+
+  /** Sum on the 12-dp DECIMAL grid, as a double: each addend rounds to
+    * 12 dp first, so the sum is exact and independent of row order and
+    * partitioning (a double sum is not; the q261 association-free
+    * discipline). */
+  def dec12(c: Column): Column =
+    sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
+
+  /** Exact DECIMAL(38, 6) sum: order-independent like [[dec12]], on a
+    * 6-dp grid, left as a decimal for the caller to round. */
+  def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
 
   val HashP = 2147483647L
   def hashA(k: Int): Long = 1103515245L + 12345L * k

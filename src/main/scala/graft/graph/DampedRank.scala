@@ -369,8 +369,8 @@ private[graft] object DampedRank {
     }.collect().foldLeft(0.0)(_ + _)
 
     def free(): Unit = {
-      scores.unpersist(blocking = false)
-      verts.unpersist(blocking = false)
+      graft.Checkpoints.release(scores)
+      graft.Checkpoints.release(verts)
     }
   }
 
@@ -430,7 +430,7 @@ private[graft] object DampedRank {
         Iterator(update(vs.next(), ss.next(), in, damping, restart, inflow)))
         .localCheckpoint()
       val st = next.map(_.stats).collect().foldLeft(NoStats)(_ + _)
-      cur.unpersist(blocking = false)
+      graft.Checkpoints.release(cur)
       cur = next
       rounds += 1
       done = stop(prev, st)

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.functions.MathFunctions.dsum
 
 /** Fiedler-vector spectral bipartition over an arbitrary edge frame
   * (q209's engine; direction and duplicates are canonicalized away,
@@ -16,8 +16,6 @@ import org.apache.spark.sql.types.DecimalType
   * audit.
   */
 object Fiedler {
-
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
 
   /** (round, lambda2, n_pos, n_neg, cut_edges, n_edges) per power
     * round. `edges` must expose the columns named by `src`/`dst`. */

@@ -1,8 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.functions.MathFunctions.dec12
 
 /** Katz centrality (Katz 1953) — the attenuated-path-count member of
   * the eigenvector family: x(v) counts ALL walks ending at v, a walk
@@ -40,13 +40,10 @@ object Katz {
     }
     val verts = vmap.select(col("vid"))
 
-    def decSum(c: Column) =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
-
     val (x, _) = VertexLoop.iterate(verts.select(col("vid"), lit(1.0).as("x")), iters) { x =>
       verts
         .join(e.join(x, col("svid") === col("vid")).drop("vid")
-            .groupBy(col("dvid")).agg(decSum(col("x") * alpha).as("s")),
+            .groupBy(col("dvid")).agg(dec12(col("x") * alpha).as("s")),
           col("vid") === col("dvid"), "left")
         .select(col("vid"), (lit(1.0) + coalesce(col("s"), lit(0.0))).as("x"))
     }

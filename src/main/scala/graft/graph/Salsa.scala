@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.functions.MathFunctions.dec12
 
 /** SALSA — the Stochastic Approach for Link-Structure Analysis (Lempel
   * & Moran, WWW'00): HITS's mutual-reinforcement loop with the raw
@@ -49,22 +49,19 @@ object Salsa {
     val eD = cache(mapped.join(din, "dvid").repartition(col("dvid")), "ed")
     val verts = vmap.select(col("vid"))
 
-    def decSum(c: org.apache.spark.sql.Column) =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
-
     var hub = graft.Checkpoints.materialize(verts.select(col("vid"), lit(1.0).as("h")))
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
       val ra = verts
         .join(eS.join(hub, col("svid") === col("vid")).drop("vid")
-            .groupBy(col("dvid")).agg(decSum(col("h") / col("od")).as("a")),
+            .groupBy(col("dvid")).agg(dec12(col("h") / col("od")).as("a")),
           col("vid") === col("dvid"), "left")
         .select(col("vid"), coalesce(col("a"), lit(0.0)).as("a"))
       auth = if (auth == null) graft.Checkpoints.materialize(ra)
              else graft.Checkpoints.rotate(ra, auth)
       val rh = verts
         .join(eD.join(auth, col("dvid") === col("vid")).drop("vid")
-            .groupBy(col("svid")).agg(decSum(col("a") / col("idg")).as("h")),
+            .groupBy(col("svid")).agg(dec12(col("a") / col("idg")).as("h")),
           col("vid") === col("svid"), "left")
         .select(col("vid"), coalesce(col("h"), lit(0.0)).as("h"))
       hub = graft.Checkpoints.rotate(rh, hub)

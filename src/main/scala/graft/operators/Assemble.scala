@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
+import graft.functions.MathFunctions.dsum
 
 /** Caller-frame training-assembly engines — the machinery behind
   * q203/q206/q208/q210, generalized to any frame (the Glm.scala
@@ -59,7 +59,6 @@ object Assemble {
     * plan audit. */
   def targetEncoding(df: DataFrame, category: Column, fold: Column,
                      target: Column, smooth: Double): DataFrame = {
-    def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
     val rows = df.select(category.as("category"), fold.as("fold"),
       target.as("y"))
     val byCatFold = rows.groupBy(col("category"), col("fold"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
+import graft.functions.MathFunctions.{dec12, dsum}
 
 /** ML training & evaluation loop (SURVEY §2.B ML-eval family, split
   * out of RelationalQueries in r9): correlation/inequality metrics
@@ -16,8 +17,6 @@ import graft.functions.{MathFunctions => MF}
   * rules are RelationalQueries' (see its doc). */
 object MlEvalQueries {
 
-  /** Exact, order-independent sum of a 2-dp money double. */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
   private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // --------------------------------------------------------------- q226
@@ -2567,8 +2566,6 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
             struct(lit(i).as("j"), (col(s"wg$i") / tot).as("u"))): _*)).as("jw"))
         .select(col("cents"), col("cnt"), col("jw.j").as("j"), col("jw.u").as("u"))
     }
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     for (_ <- 1 to FcmRounds) {
       val nc = members(centers).groupBy(col("j"))
         .agg(round(dec12(col("cnt") * col("u") * col("u") * (col("cents") / 100.0)) /
@@ -2666,8 +2663,6 @@ GROUP BY u.j, c.c ORDER BY u.j"""
         (col("na") + col("nb"))).as("ornum"),
       (col("xb") * (col("na") - col("xa")).cast("double") /
         (col("na") + col("nb"))).as("orden"))
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     terms.agg(count(lit(1)).as("n_strata"), sum(col("xa")).as("sum_a"),
         dec12(col("e")).as("sum_e"), dec12(col("v")).as("sum_v"),
         dec12(col("ornum")).as("sor_n"), dec12(col("orden")).as("sor_d"))
@@ -2835,8 +2830,6 @@ FROM r"""
       count(lit(1)).as("n"), sum(col("y")).cast("double").as("sy"),
       sum(col("x") * col("x")).as("sxx"),
       sum(col("x") * col("y")).cast("double").as("sxy"))
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     val xt = col("x") - col("xu") - col("xd") + col("xg")
     val yt = col("y").cast("double") - col("yu") - col("yd") + col("yg")
     val tw = panel.join(um, "user_id").join(dm, "day")
@@ -3094,8 +3087,6 @@ FROM agg"""
     val hods = cells.groupBy(col("hod")).agg(sum(col("n_c")).as("n_h"))
     val tot = cells.agg(sum(col("n_c")).as("n"),
       countDistinct(col("event_type")).as("n_types"))
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     val w = (lit(1.0) / col("n_types")) /
       ((col("n_c") + lit(1.0)) / (col("n_h") + col("n_types")))
     val agg = cells.join(broadcast(hods), "hod").crossJoin(broadcast(tot))
@@ -3157,8 +3148,6 @@ FROM agg a CROSS JOIN tot t"""
     * cell frame; every round is two tiny margin aggregates joined
     * back (12dp-gridded DECIMAL masses), rounds a fixed constant. */
   def q297Raking(spark: SparkSession, sfDir: String): DataFrame = {
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     val cells = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .groupBy(col("event_type"),
         expr("(ts div 3600000000000) % 24").as("hod"))

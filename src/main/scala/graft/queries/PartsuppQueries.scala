@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.functions.MathFunctions.dsum
 
 /** The partsupp-dependent TPC-H join shapes — Q2, Q9, Q11, Q16, Q20 —
   * over the DERIVED partsupp fixture ([[graft.Tables.partsupp]];
@@ -23,7 +24,6 @@ import graft.Tables
   */
 object PartsuppQueries {
 
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
   private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   /** The partsupp derivation as a DuckDB CTE prefix — the oracle twin

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
+import graft.functions.MathFunctions.dsum
 
 /** Relational / analytics core (SURVEY §2.B).
   *
@@ -21,8 +22,6 @@ import graft.functions.{MathFunctions => MF}
   */
 object RelationalQueries {
 
-  /** Exact, order-independent sum of a 2-dp money double. */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
   private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q11

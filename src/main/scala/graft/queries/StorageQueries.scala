@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
+import graft.functions.MathFunctions.dsum
 
 /** Storage-layout / IO-format operators (SURVEY §2.B scan family,
   * split out of RelationalQueries in r9): JSON schema-on-read (q52),
@@ -17,8 +17,6 @@ import graft.functions.{MathFunctions => MF}
   * RelationalQueries' (see its doc). */
 object StorageQueries {
 
-  /** Exact, order-independent sum of a 2-dp money double. */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
   private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q52

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.MathFunctions.dsum
 
 /** Structured-Streaming-backed driver rows (SURVEY §2.B streaming
   * family, split out of RelationalQueries in r9): each runs a REAL
@@ -16,8 +16,6 @@ import graft.Tables
   * (see its doc). */
 object StreamBatchQueries {
 
-  /** Exact, order-independent sum of a 2-dp money double. */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
   private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q98

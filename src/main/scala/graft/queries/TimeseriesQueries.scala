@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.{MathFunctions => MF}
+import graft.functions.MathFunctions.{dec12, dsum}
 
 /** Time-series analytics (SURVEY §2.B timeseries family, split out
   * of RelationalQueries in r9): anomaly scoring (q63), change points
@@ -16,8 +17,6 @@ import graft.functions.{MathFunctions => MF}
   * RelationalQueries' (see its doc). */
 object TimeseriesQueries {
 
-  /** Exact, order-independent sum of a 2-dp money double. */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
   private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q63
@@ -1538,8 +1537,6 @@ object TimeseriesQueries {
     val cosArr = array(DftCos.map(s => lit(s.toDouble)): _*)
     val sinArr = array(DftSin.map(s => lit(s.toDouble)): _*)
     val idx = ((col("k") * (col("h") % 24)) % 24).cast("int") + 1
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     val ctr = col("cnt").cast("double") - col("m")
     val sums = x.join(broadcast(mu), "event_type")
       .select(col("event_type"), col("h"), col("cnt"), col("m"),
@@ -1635,8 +1632,6 @@ FROM pw ORDER BY event_type, k"""
       (col("hr") - 1).as("hr"), col("cnt").as("snaive_fc"))
     val evalRows = fc.filter(col("hr") < 23)
       .join(pd, Seq("event_type", "day", "hr"))
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     val err = evalRows.filter(col("actual").isNotNull)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_eval"),
@@ -1756,8 +1751,6 @@ FROM err ORDER BY event_type"""
           ((col("n1") + col("n0")) - (col("d1") + col("d0"))) /
           ((col("n1") + col("n0")).cast("double") * (col("n1") + col("n0")) *
             (col("n1") + col("n0") - 1))).as("v"))
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     terms.agg(count(lit(1)).as("n_times"), sum(col("d1")).as("o1"),
         dec12(col("e1")).as("e1s"), dec12(col("v")).as("vs"))
       .select(col("n_times"), col("o1"), round(col("e1s"), 6).as("e1"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.MathFunctions.dsum
 
 /** Windowed / session analytics (SURVEY §2.B window family, split out
   * of RelationalQueries in r9): ranking windows (q14), sessionization
@@ -15,8 +16,6 @@ import graft.Tables
   * rules are RelationalQueries' (see its doc). */
 object WindowQueries {
 
-  /** Exact, order-independent sum of a 2-dp money double. */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
   private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q14

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
 import graft.oracle.Sql
+import graft.functions.MathFunctions.dec12
 
 /** Text analysis (SURVEY §2.E q40–q43) over the documents table: all
   * single-pass scans of built-in expressions (array/regexp/window) —
@@ -2740,8 +2741,6 @@ SELECT rank, w1, w2, n11, g2 FROM ranked WHERE rank <= $G2TopK ORDER BY rank"""
     * vocab is already bounded), never the open vocabulary; per-term
     * sums are 12dp-gridded DECIMAL. */
   def q286BurrowsDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    def dec12(c: Column): Column =
-      sum(round(c, 12).cast(DecimalType(38, 12))).cast("double")
     val cnts = graft.Checkpoints.materialize(Tables.documents(spark, sfDir)
       .select(col("source"), explode(split(col("text"), " ")).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c")))

@@ -1,40 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, when}
-
-/** Counts Spark jobs launched by a block of driver code, with a settle
-  * loop after the action so async listener delivery can't undercount. */
-object JobMeter {
-  private val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
-  @volatile private var installed = false
-
-  private def install(spark: SparkSession): Unit = synchronized {
-    if (!installed) {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      })
-      installed = true
-    }
-  }
-
-  private def settled(): Long = {
-    var prev = -1L; var cur = jobs.get(); var spins = 0
-    while (cur != prev && spins < 40) {
-      prev = cur; Thread.sleep(150); cur = jobs.get(); spins += 1
-    }
-    cur
-  }
-
-  def measure(spark: SparkSession)(body: => Unit): Long = {
-    install(spark)
-    val before = settled()
-    body
-    settled() - before
-  }
-}
 
 /** Job-count audit for the iterative loops: the marginal jobs PER
   * ROUND are pinned exactly (measured as a delta between two round
@@ -46,9 +12,13 @@ object JobMeter {
   */
 class JobCountSpec extends GraftSpec {
 
+  /** Spark jobs `body` launches. */
+  private def jobs(key: String)(body: => Unit): Long =
+    QueryMeter.measure(spark, key)(body)._2.jobs
+
   private def jobsOf(body: => org.apache.spark.sql.DataFrame): Long = {
     SessionCache.clear(spark)
-    val n = JobMeter.measure(spark) {
+    val n = jobs("jobsOf") {
       body.write.format("noop").mode("overwrite").save()
     }
     Checkpoints.drain(spark)
@@ -59,7 +29,7 @@ class JobCountSpec extends GraftSpec {
     val edges = graph.WebGraph.cachedEdges(spark, sfDir)
     edges.count() // edge memo built outside both measurements
     def jobsAt(iters: Int): Long = {
-      val n = JobMeter.measure(spark) {
+      val n = jobs(s"graphx-$iters") {
         graph.GraphXLinkRank.run(spark, edges, iters = iters)
           .write.format("noop").mode("overwrite").save()
       }
@@ -84,7 +54,7 @@ class JobCountSpec extends GraftSpec {
   // trips at 2/round.
   private def marginal(name: String)(run: Int => org.apache.spark.sql.DataFrame): Unit = {
     def jobsAt(iters: Int): Long = {
-      val n = JobMeter.measure(spark) {
+      val n = jobs(s"$name-$iters") {
         run(iters).write.format("noop").mode("overwrite").save()
       }
       Checkpoints.drain(spark)
@@ -127,7 +97,7 @@ class JobCountSpec extends GraftSpec {
     val edges = graph.WebGraph.cachedEdges(spark, sfDir)
     val init = graph.LinkRank.uniformInit(edges)
     edges.count()
-    val n = JobMeter.measure(spark) {
+    val n = jobs("runCounted") {
       graph.LinkRank.runCounted(spark, edges, init)._1
         .write.format("noop").mode("overwrite").save()
     }
@@ -151,7 +121,7 @@ class JobCountSpec extends GraftSpec {
     assert(SessionCache.contains(spark, "rank-vmap:jobcount"))
     assert(SessionCache.contains(spark, "rank-eod:jobcount"))
     // the init frame's distinct, the vertex side, 9 rounds, σ, output
-    val n = JobMeter.measure(spark) {
+    val n = jobs("trustrank-warm") {
       graph.LinkRank.run(spark, edges, trusted, trustedMode = true, cacheKey = key)
         .write.format("noop").mode("overwrite").save()
     }

@@ -1,47 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
-/** Counts shuffle-WRITE records across completed stages. Records (not
-  * bytes) because they are a pure function of the plan + data —
-  * compression and serialization noise can't move them — so budgets can
-  * be asserted tightly. */
-object ShuffleMeter {
-  private val records = new java.util.concurrent.atomic.AtomicLong(0L)
-  @volatile private var installed = false
-
-  private def install(spark: SparkSession): Unit = synchronized {
-    if (!installed) {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-          records.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      })
-      installed = true
-    }
-  }
-
-  /** Listener events drain asynchronously; poll until the counter is
-    * quiet for two consecutive reads. */
-  private def settled(): Long = {
-    var prev = -1L
-    var cur = records.get()
-    var spins = 0
-    while (cur != prev && spins < 40) {
-      prev = cur; Thread.sleep(150); cur = records.get(); spins += 1
-    }
-    cur
-  }
-
-  /** Shuffle-write records attributable to `body`'s jobs. */
-  def measure(spark: SparkSession)(body: => Unit): Long = {
-    install(spark)
-    val before = settled()
-    body
-    settled() - before
-  }
-}
-
 /** The 100 TB scale posture as a FAILING BUILD instead of an argument:
   * every driver query's shuffle-write record count at sf0.001, run
   * cold (session memos cleared), must stay within 3× its committed
@@ -105,10 +63,12 @@ class ShuffleBudgetSpec extends GraftSpec {
     val leaks = Seq.newBuilder[String]
     val measured = names.map { n =>
       SessionCache.clear(spark)
-      val recs = ShuffleMeter.measure(spark) {
+      // shuffle-WRITE records, not bytes: a pure function of the plan
+      // and data that compression and serialization noise cannot move
+      val recs = QueryMeter.measure(spark, n) {
         SparkEntry.queries(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-      }
+      }._2.shuffleWriteRecords
       Checkpoints.drain(spark)
       SessionCache.clear(spark)
       val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !baseline(id) }
