@@ -60,6 +60,9 @@ object MathFunctions {
     * 6-dp grid, left as a decimal for the caller to round. */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
 
+  /** A value as a double on the 6-dp grid both engines compare on. */
+  def asD(c: Column): Column = round(c.cast("double"), 6)
+
   val HashP = 2147483647L
   def hashA(k: Int): Long = 1103515245L + 12345L * k
   def hashB(k: Int): Long = (1013904223L + 2654435761L * k) % HashP

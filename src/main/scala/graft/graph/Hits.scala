@@ -30,7 +30,7 @@ object Hits {
   def run(spark: SparkSession, edges: DataFrame, iters: Int = 5,
           cacheKey: Option[String] = None): DataFrame = {
     val ids = WebGraph.vertices(edges)
-    val vmap = LinkRank.vmapFor(spark, ids, cacheKey)
+    val (vmap, verts) = LinkRank.vmapAndVerts(spark, ids, cacheKey)
     def mapped: DataFrame = VertexLoop.vidEdges(edges, vmap).select(col("svid"), col("dvid"))
     def cache(df: DataFrame, key: String): DataFrame = cacheKey match {
       case Some(k) => graft.SessionCache.cached(spark, s"hits-$key:$k")(df)
@@ -38,7 +38,6 @@ object Hits {
     }
     val eS = cache(mapped.repartition(col("svid")), "es")
     val eD = cache(mapped.repartition(col("dvid")), "ed")
-    val verts = vmap.select(col("vid"))
 
     // state: raw (pre-normalization) per-vertex sums; the normalizer is
     // folded in where the frame is consumed, same association as the

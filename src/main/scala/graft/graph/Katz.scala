@@ -31,14 +31,13 @@ object Katz {
     *         rounds (β = 1). */
   def run(spark: SparkSession, edges: DataFrame, alpha: Double = 0.125,
           iters: Int = 5, cacheKey: Option[String] = None): DataFrame = {
-    val vmap = LinkRank.vmapFor(spark, WebGraph.vertices(edges), cacheKey)
+    val (vmap, verts) = LinkRank.vmapAndVerts(spark, WebGraph.vertices(edges), cacheKey)
     def mapped: DataFrame = VertexLoop.vidEdges(edges, vmap).select(col("svid"), col("dvid"))
     val e = cacheKey match {
       case Some(k) =>
         graft.SessionCache.cached(spark, s"katz-e:$k")(mapped.repartition(col("dvid")))
       case None => graft.Checkpoints.cache(mapped.repartition(col("dvid")))
     }
-    val verts = vmap.select(col("vid"))
 
     val (x, _) = VertexLoop.iterate(verts.select(col("vid"), lit(1.0).as("x")), iters) { x =>
       verts

@@ -153,13 +153,21 @@ object LinkRank {
     * that varies run to run. It is hinted for broadcast exactly when
     * the planner's estimate of `ids` is under the broadcast threshold. */
   private[graph] def vmapFor(spark: SparkSession, ids: DataFrame,
-                             cacheKey: Option[String]): DataFrame = {
+                             cacheKey: Option[String]): DataFrame =
+    vmapAndVerts(spark, ids, cacheKey)._1
+
+  /** [[vmapFor]] plus the unhinted `vid` column of the same view, for
+    * engines that keep every vertex: there the map is the preserved
+    * side of a left outer join, which Spark cannot build from, so a
+    * broadcast hint on it is dropped with a WARN per join. */
+  private[graph] def vmapAndVerts(spark: SparkSession, ids: DataFrame,
+                                  cacheKey: Option[String]): (DataFrame, DataFrame) = {
     val view = DampedRank.idFrame(spark,
       DampedRank.idMap(spark, cacheKey.map(k => s"rank-vmap:$k"), ids),
       ids.schema.head.dataType)
     val small = ids.queryExecution.optimizedPlan.stats.sizeInBytes <=
       spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (small) broadcast(view) else view
+    (if (small) broadcast(view) else view, view.select(col("vid")))
   }
 
   /** Uniform-1.0 init over the vertex set of `edges`

@@ -37,7 +37,7 @@ object Salsa {
   def run(spark: SparkSession, edges: DataFrame, iters: Int = 5,
           cacheKey: Option[String] = None): DataFrame = {
     val ids = WebGraph.vertices(edges)
-    val vmap = LinkRank.vmapFor(spark, ids, cacheKey)
+    val (vmap, verts) = LinkRank.vmapAndVerts(spark, ids, cacheKey)
     def mapped: DataFrame = VertexLoop.vidEdges(edges, vmap).select(col("svid"), col("dvid"))
     def cache(df: DataFrame, key: String): DataFrame = cacheKey match {
       case Some(k) => graft.SessionCache.cached(spark, s"salsa-$key:$k")(df)
@@ -47,7 +47,6 @@ object Salsa {
     val din = mapped.groupBy(col("dvid")).agg(count(lit(1)).as("idg"))
     val eS = cache(mapped.join(dout, "svid").repartition(col("svid")), "es")
     val eD = cache(mapped.join(din, "dvid").repartition(col("dvid")), "ed")
-    val verts = vmap.select(col("vid"))
 
     var hub = graft.Checkpoints.materialize(verts.select(col("vid"), lit(1.0).as("h")))
     var auth: DataFrame = null

@@ -12,28 +12,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * to reunite rows that never left their document; this kernel computes
   * max-frequency and total count in one compiled pass over the row —
   * the operator becomes map-only (zero shuffle). Counts are over exact
-  * bigram strings (no hashing), so results equal the relational
-  * formulation integer-for-integer (BigramSpec pins it; the DuckDB
-  * oracle keeps the unnest + GROUP BY form).
+  * bigrams ([[WordGrams]] slices, n = 2; no hashing), so results equal
+  * the relational formulation integer-for-integer (BigramSpec pins it;
+  * the DuckDB oracle keeps the unnest + GROUP BY form).
   */
 object BigramMath {
   def topBigram(text: UTF8String): InternalRow = {
-    val w = text.toString.split(" ", -1)
-    if (w.length < 2) return new GenericInternalRow(Array[Any](0L, 0L))
-    val m = new java.util.HashMap[String, Long]()
+    val g = WordGrams(text)
+    if (g.words < 2) return new GenericInternalRow(Array[Any](0L, 0L))
+    val m = new java.util.HashMap[UTF8String, Long]()
     var mx = 0L
-    val sb = new java.lang.StringBuilder
     var i = 0
-    while (i < w.length - 1) {
-      sb.setLength(0)
-      sb.append(w(i)).append(' ').append(w(i + 1))
-      val k = sb.toString
+    while (i < g.words - 1) {
+      val k = UTF8String.fromBytes(g.bytes, g.start(i, 2), g.length(i, 2))
       val c = m.getOrDefault(k, 0L) + 1L
       m.put(k, c)
       if (c > mx) mx = c
       i += 1
     }
-    new GenericInternalRow(Array[Any](mx, (w.length - 1).toLong))
+    new GenericInternalRow(Array[Any](mx, (g.words - 1).toLong))
   }
 }
 

@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - cut after position i (i < L) iff  h_i mod 2^maskBits == 0
   *  - chunks are the substrings between consecutive cuts (final chunk
   *    always ends at L); each chunk is identified by the portable
-  *    32-bit md5 hash of its text ([[WinnowMath.hash32]]).
+  *    32-bit md5 hash of its text ([[WordGrams.hash32]]).
   *
   * Why this exact form:
   *
@@ -85,7 +85,7 @@ object CdcMath {
       h = ((h << 1) + gear(cps(i))) & 0xffffffffL
       // cut AFTER position i; the final position always closes a chunk
       if ((h & mask) == 0L || i == L - 1) {
-        out += WinnowMath.hash32(new String(cps, start, i - start + 1))
+        out += WordGrams.hash32(new String(cps, start, i - start + 1))
         start = i + 1
       }
       i += 1

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -11,56 +10,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * n-gram-decontamination operators (q100/q108). The composed
   * formulation materialized every n-gram as a ~50-byte STRING
   * (transform + slice + array_join), exploded it, and ran a 3-node
-  * md5→substring→conv chain twice per gram row; this kernel walks the
-  * document once, builds each gram in a reused StringBuilder, and
-  * emits only the two md5-derived 32-bit hash halves — the only thing
-  * the downstream aggregation ever needed. Gram strings never exist as
-  * column values, so the explode carries 16-byte pairs.
+  * md5→substring→conv chain twice per gram row; this kernel hashes each
+  * gram's byte slice once and emits only the two 32-bit hash halves —
+  * the only thing the downstream aggregation ever needed. Gram strings
+  * never exist as column values, so the explode carries 16-byte pairs.
   *
-  * Arithmetic is bit-for-bit the composed chain's (GramHashSpec pins
-  * it): gram = ' '-joined words [i, i+n), hlo = first 4 md5 bytes
-  * (= conv(substring(md5, 1, 8), 16, 10)), hhi = md5 bytes 4-7
-  * (= hex chars 9-16); under n words, one entry for the whole text
-  * (the shingle convention — callers wanting empty-for-short filter
-  * first).
+  * Grams and hashes are [[WordGrams]]' (the shingle convention: under
+  * n words, one entry for the whole text — callers wanting
+  * empty-for-short filter first); GramHashSpec pins them bit-for-bit to
+  * the composed chain.
   */
 object GramHashMath {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private def pair(s: String): InternalRow = {
-    val md = digest.get()
-    md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val hlo = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    val hhi = ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-    new GenericInternalRow(Array[Any](hlo, hhi))
-  }
-
   def gramHashes(text: UTF8String, n: Int): ArrayData = {
-    val w = text.toString.split(" ", -1)
-    val m = w.length
-    if (m >= n) {
-      val out = new Array[Any](m - n + 1)
-      val sb = new java.lang.StringBuilder
-      var i = 0
-      while (i <= m - n) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(w(i + j))
-          j += 1
-        }
-        out(i) = pair(sb.toString)
-        i += 1
-      }
-      new GenericArrayData(out)
-    } else new GenericArrayData(Array[Any](pair(text.toString)))
+    val g = WordGrams(text)
+    val out = new Array[Any](g.grams(n))
+    var i = 0
+    while (i < out.length) {
+      val d = g.md5(i, n)
+      out(i) = new GenericInternalRow(Array[Any](WordGrams.hlo(d), WordGrams.hhi(d)))
+      i += 1
+    }
+    new GenericArrayData(out)
   }
 }
 

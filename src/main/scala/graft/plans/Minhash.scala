@@ -16,10 +16,10 @@ import graft.functions.MathFunctions
   * in one compiled pass per row and the operators become map-only.
   *
   * Arithmetic is bit-for-bit the composed chain's (MinhashSpec pins
-  * it): trigram shingles exactly as WinnowMath (split(" ", -1),
-  * <3 words → the whole text), hash32 = first 4 md5 bytes, universal
-  * hashes with MathFunctions' constants. min over duplicate shingles
-  * equals min over the distinct set, so signatures need no dedup.
+  * it): word-trigram shingles and their hlo hashes as [[WordGrams]]
+  * defines them, universal hashes with MathFunctions' constants. min
+  * over duplicate shingles equals min over the distinct set, so
+  * signatures need no dedup.
   */
 object MinhashMath {
   val K: Int = 12
@@ -27,22 +27,14 @@ object MinhashMath {
   private val B = Array.tabulate(K)(MathFunctions.hashB)
   private val P = MathFunctions.HashP
 
-  /** Shingle hashes of a document, duplicates kept (order = position). */
+  /** Hashes (hlo) of a document's word trigrams ([[WordGrams]]),
+    * duplicates kept (order = position). */
   def shingleHashes(text: UTF8String): Array[Long] = {
-    val w = text.toString.split(" ", -1)
-    val n = w.length
-    if (n >= 3) {
-      val arr = new Array[Long](n - 2)
-      val sb = new java.lang.StringBuilder
-      var i = 0
-      while (i < n - 2) {
-        sb.setLength(0)
-        sb.append(w(i)).append(' ').append(w(i + 1)).append(' ').append(w(i + 2))
-        arr(i) = WinnowMath.hash32(sb.toString)
-        i += 1
-      }
-      arr
-    } else Array(WinnowMath.hash32(text.toString))
+    val g = WordGrams(text)
+    val arr = new Array[Long](g.grams(3))
+    var i = 0
+    while (i < arr.length) { arr(i) = WordGrams.hlo(g.md5(i, 3)); i += 1 }
+    arr
   }
 
   /** K minhash values: min_j over shingles of (a_j*h + b_j) mod p. */

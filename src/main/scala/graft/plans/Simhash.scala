@@ -9,31 +9,22 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Compiled 64-bit SimHash (q22). The composed form exploded every
   * word token and ran 64 conditional SUM aggregations per document
   * through an exchange; the per-bit vote counters are per-document
-  * scalars, computed here in one compiled pass. Carried as two
-  * non-negative 32-bit halves (lo = md5 bytes 0-3 = hex 1-8, hi =
-  * bytes 4-7 = hex 9-16 — exactly MathFunctions.hash32 / hash32b), the
-  * same representation the banding and the DuckDB oracle use. Vote
-  * sums are integers and order-independent, so equality with the
-  * explode+groupBy formulation is exact (SimhashKernelSpec).
+  * scalars, computed here in one compiled pass. Each word votes with
+  * its two 32-bit hash halves ([[WordGrams]], n = 1); the signature is
+  * carried as the same two halves, the representation the banding and
+  * the DuckDB oracle use. Vote sums are integers and order-independent,
+  * so equality with the explode+groupBy formulation is exact
+  * (SimhashKernelSpec).
   */
 object SimhashMath {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   def simhash(text: UTF8String): InternalRow = {
-    val w = text.toString.split(" ", -1)
+    val g = WordGrams(text)
     val cnt = new Array[Int](64)
-    val md = digest.get()
     var t = 0
-    while (t < w.length) {
-      md.reset()
-      val d = md.digest(w(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val hlo = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-      val hhi = ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-        ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
+    while (t < g.words) {
+      val d = g.md5(t, 1)
+      val hlo = WordGrams.hlo(d)
+      val hhi = WordGrams.hhi(d)
       var i = 0
       while (i < 32) {
         if (((hlo >> i) & 1L) == 1L) cnt(i) += 1 else cnt(i) -= 1

@@ -12,50 +12,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * trigram shingles, md5-derived 32-bit hash per shingle, min over the
   * trailing 4-window, distinct/min/max — through interpreted HOF
   * lambdas, re-running a 3-node md5 chain per shingle per row. This
-  * kernel is the identical arithmetic in one JIT-compiled pass:
-  *
-  *  - words: `split(" ", -1)` — same regex-split semantics as Spark's
-  *    `split(text, " ")` (limit -1) and value-identical to the
-  *    oracle's `string_split` on the space-separated corpus;
-  *  - shingle hash: first 4 md5 bytes big-endian == first 8 hex chars
-  *    parsed base-16 (MathFunctions.hash32, Sql.hash32);
-  *  - winnow: min of the trailing ≤4 hashes, then distinct count /
-  *    min / max — integers throughout, so equality with the composed
-  *    form is exact (WinnowSpec pins it; the driver hash gate re-ran
-  *    green on the swap).
+  * kernel is the identical arithmetic in one JIT-compiled pass: the
+  * shingle hashes of [[MinhashMath.shingleHashes]] ([[WordGrams]]),
+  * then the min of the trailing ≤4 hashes and their distinct count /
+  * min / max — integers throughout, so equality with the composed form
+  * is exact (WinnowSpec pins it).
   */
 object WinnowMath {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** First 4 md5 bytes as an unsigned 32-bit value — exactly
-    * conv(substring(md5(s), 1, 8), 16, 10). */
-  def hash32(s: String): Long = {
-    val md = digest.get()
-    md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-  }
-
   def winnow(text: UTF8String): InternalRow = {
-    val w = text.toString.split(" ", -1)
-    val n = w.length
-    val hs =
-      if (n >= 3) {
-        val arr = new Array[Long](n - 2)
-        val sb = new java.lang.StringBuilder
-        var i = 0
-        while (i < n - 2) {
-          sb.setLength(0)
-          sb.append(w(i)).append(' ').append(w(i + 1)).append(' ').append(w(i + 2))
-          arr(i) = hash32(sb.toString)
-          i += 1
-        }
-        arr
-      } else Array(hash32(text.toString))
+    val hs = MinhashMath.shingleHashes(text)
     var minFp = Long.MaxValue
     var maxFp = Long.MinValue
     val seen = new java.util.HashSet[java.lang.Long]()

@@ -1998,8 +1998,9 @@ ORDER BY c.d""".stripMargin
         .unionByName(und.join(sel.select(col("id").as("a")), Seq("a"))
           .select(col("b").as("id")))
         .distinct()
-      alive = graft.Checkpoints.materialize(alive
-        .join(removed, Seq("id"), "left_anti"))
+      alive = graft.Checkpoints.rotate(alive
+        .join(removed, Seq("id"), "left_anti"), alive)
+      graft.Checkpoints.free(pri)
     }
     val mis = sels.reduce(_ unionByName _)
     val unresolved = alive.agg(count(lit(1)).as("n_unresolved"))

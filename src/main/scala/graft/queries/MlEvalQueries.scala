@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
-import graft.functions.MathFunctions.{dec12, dsum}
+import graft.functions.MathFunctions.{asD, dec12, dsum}
 
 /** ML training & evaluation loop (SURVEY §2.B ML-eval family, split
   * out of RelationalQueries in r9): correlation/inequality metrics
@@ -17,7 +17,6 @@ import graft.functions.MathFunctions.{dec12, dsum}
   * rules are RelationalQueries' (see its doc). */
 object MlEvalQueries {
 
-  private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // --------------------------------------------------------------- q226
   /** Decile lift / cumulative-gain table — the campaign-targeting view
@@ -1742,10 +1741,10 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
       val mins = adj
         .join(labels.select(col("cid").as("nid"), col("lbl")), Seq("nid"))
         .groupBy(col("cid")).agg(min(col("lbl")).as("ml"))
-      labels = graft.Checkpoints.materialize(labels
+      labels = graft.Checkpoints.rotate(labels
         .join(mins, Seq("cid"), "left")
         .select(col("cid"),
-          least(col("lbl"), coalesce(col("ml"), col("lbl"))).as("lbl")))
+          least(col("lbl"), coalesce(col("ml"), col("lbl"))).as("lbl")), labels)
     }
     labels.join(dense, Seq("cid"))
       .groupBy(col("lbl").as("cluster"))

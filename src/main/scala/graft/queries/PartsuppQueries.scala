@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
-import graft.functions.MathFunctions.dsum
+import graft.functions.MathFunctions.{asD, dsum}
 
 /** The partsupp-dependent TPC-H join shapes — Q2, Q9, Q11, Q16, Q20 —
   * over the DERIVED partsupp fixture ([[graft.Tables.partsupp]];
@@ -24,7 +24,6 @@ import graft.functions.MathFunctions.dsum
   */
 object PartsuppQueries {
 
-  private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   /** The partsupp derivation as a DuckDB CTE prefix — the oracle twin
     * of [[graft.Tables.partsupp]] (same integer formulas). */

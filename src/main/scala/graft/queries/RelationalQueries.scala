@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
-import graft.functions.MathFunctions.dsum
+import graft.functions.MathFunctions.{asD, dsum}
 
 /** Relational / analytics core (SURVEY §2.B).
   *
@@ -22,7 +22,6 @@ import graft.functions.MathFunctions.dsum
   */
 object RelationalQueries {
 
-  private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q11
   /** TPC-H Q1-style pricing summary. Filter reaches the parquet scan

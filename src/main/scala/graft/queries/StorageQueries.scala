@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
-import graft.functions.MathFunctions.dsum
+import graft.functions.MathFunctions.{asD, dsum}
 
 /** Storage-layout / IO-format operators (SURVEY §2.B scan family,
   * split out of RelationalQueries in r9): JSON schema-on-read (q52),
@@ -17,7 +17,6 @@ import graft.functions.MathFunctions.dsum
   * RelationalQueries' (see its doc). */
 object StorageQueries {
 
-  private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q52
   /** Semi-structured extraction — schema-on-read over the events'

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.MathFunctions.dsum
+import graft.functions.MathFunctions.{asD, dsum}
 
 /** Structured-Streaming-backed driver rows (SURVEY §2.B streaming
   * family, split out of RelationalQueries in r9): each runs a REAL
@@ -16,7 +16,6 @@ import graft.functions.MathFunctions.dsum
   * (see its doc). */
 object StreamBatchQueries {
 
-  private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q98
   /** Watermark delay of the streaming twin (and the oracle's emission

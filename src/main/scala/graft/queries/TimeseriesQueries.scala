@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.{MathFunctions => MF}
-import graft.functions.MathFunctions.{dec12, dsum}
+import graft.functions.MathFunctions.{asD, dec12, dsum}
 
 /** Time-series analytics (SURVEY §2.B timeseries family, split out
   * of RelationalQueries in r9): anomaly scoring (q63), change points
@@ -17,7 +17,6 @@ import graft.functions.MathFunctions.{dec12, dsum}
   * RelationalQueries' (see its doc). */
 object TimeseriesQueries {
 
-  private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q63
   /** Z-score threshold for flagging an hour as anomalous. */

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.MathFunctions.dsum
+import graft.functions.MathFunctions.{asD, dsum}
 
 /** The remaining canonical TPC-H join shapes (SURVEY §2.B): Q5 local
   * supplier volume, Q10 returned-item report, Q14 promotion effect,
@@ -22,7 +22,6 @@ import graft.functions.MathFunctions.dsum
   */
 object TpchQueries {
 
-  private def asD(c: Column): Column = round(c.cast("double"), 6)
   private def rev: Column = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 
   /** Q5 window + region (both sides of every predicate are lit here so

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.MathFunctions.dsum
+import graft.functions.MathFunctions.{asD, dsum}
 
 /** Windowed / session analytics (SURVEY §2.B window family, split out
   * of RelationalQueries in r9): ranking windows (q14), sessionization
@@ -16,7 +16,6 @@ import graft.functions.MathFunctions.dsum
   * rules are RelationalQueries' (see its doc). */
 object WindowQueries {
 
-  private def asD(c: Column): Column = round(c.cast("double"), 6)
 
   // ---------------------------------------------------------------- q14
   /** Window functions: top-5 customers per nation by account balance
@@ -780,11 +779,11 @@ FROM scored ORDER BY user_id""".stripMargin
     var pi = trans.select(col("from_type").as("st")).distinct()
       .select(col("st"), lit(0.2).as("pi"))
     for (_ <- 1 to EntropyRatePiRounds) {
-      pi = graft.Checkpoints.materialize(trans
+      pi = graft.Checkpoints.rotate(trans
         .join(pi.select(col("st").as("from_type"), col("pi")), Seq("from_type"))
         .groupBy(col("to_type").as("st"))
         .agg(round(sum(round(col("pi") * col("pr"), 12)
-          .cast(DecimalType(38, 12))).cast("double"), 12).as("pi")))
+          .cast(DecimalType(38, 12))).cast("double"), 12).as("pi")), pi)
     }
     val hrow = trans.groupBy(col("from_type").as("st"))
       .agg(round(-sum(round(col("pr") * log(col("pr")), 12)

@@ -2395,13 +2395,13 @@ FROM res ORDER BY round"""
       .select(col("src"), col("dst"), (col("w") / col("outw")).as("frac")))
     var prev = nodes.select(col("word"), lit(1.0).as("score"))
     for (_ <- 1 to TextRankRounds) {
-      prev = graft.Checkpoints.materialize(eside
+      prev = graft.Checkpoints.rotate(eside
         .join(prev.select(col("word").as("src"), col("score")), Seq("src"))
         .groupBy(col("dst"))
         .agg(round(lit(TextRankRestart) + lit(TextRankDamping) *
           sum(round(col("frac") * col("score"), 12)
             .cast(DecimalType(38, 12))).cast("double"), 12).as("score"))
-        .select(col("dst").as("word"), col("score")))
+        .select(col("dst").as("word"), col("score")), prev)
     }
     prev.orderBy(round(col("score"), 6).desc, col("word"))
       .limit(TextRankTopK)

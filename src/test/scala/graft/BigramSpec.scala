@@ -25,5 +25,10 @@ class BigramSpec extends GraftSpec {
     assert(tb("a b") === (1L, 1L))
     assert(tb("a b a b a") === (2L, 4L)) // "a b" x2, "b a" x2 -> mx 2 of 4
     assert(tb("x x x x") === (3L, 3L)) // "x x" x3
+    assert(tb("") === (0L, 0L))
+    assert(tb("ünïcode tëst ünïcode tëst") === (2L, 3L))
+    assert(tb("ünïcode tëst façade") === (1L, 2L))
+    // " a  a " splits to "", a, "", a, "": " a" x2, "a " x2
+    assert(tb(" a  a ") === (2L, 4L))
   }
 }

@@ -56,7 +56,7 @@ class CdcSpec extends GraftSpec {
       CdcMath.chunkHashes(org.apache.spark.unsafe.types.UTF8String.fromString(s), M)
         .toLongArray().toSet
     def fixedSet(s: String): Set[Long] =
-      s.grouped(MultimodalQueries.ChunkLen).map(plans.WinnowMath.hash32).toSet
+      s.grouped(MultimodalQueries.ChunkLen).map(plans.WordGrams.hash32).toSet
 
     var cdcShared, fixedShared = 0.0
     docs.foreach { t =>

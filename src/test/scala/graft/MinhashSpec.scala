@@ -49,7 +49,7 @@ class MinhashSpec extends GraftSpec {
   test("short docs: whole text is the single shingle") {
     val s = MinhashMath.shingleSet(UTF8String.fromString("ab cd"))
     assert(s.numElements() === 1)
-    assert(s.getLong(0) === graft.plans.WinnowMath.hash32("ab cd"))
+    assert(s.getLong(0) === graft.plans.WordGrams.hash32("ab cd"))
   }
 
   test("q26 decontamination: benchmark slice excluded, fractions bounded") {
