@@ -1,6 +1,9 @@
 package graft
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
 /** Ephemeral working directories for queries that must round-trip
   * through a filesystem (streaming checkpoints + file sinks, IO-format
   * rows). Prefers node-local tmpfs (/dev/shm) when present: these dirs
@@ -28,4 +31,19 @@ object TempDirs {
 
   /** A fresh scratch directory under the fastest available base. */
   def ephemeral(prefix: String): Path = Files.createTempDirectory(base, prefix)
+
+  /** Runs `body` in a fresh [[ephemeral]] directory and deletes the
+    * directory afterwards, also when `body` throws. Deletion is
+    * best-effort: a non-fatal error while deleting is dropped, since
+    * `body`'s result (materialized by the caller) no longer reads the
+    * directory. */
+  def withEphemeral[T](prefix: String)(body: Path => T): T = {
+    val dir = ephemeral(prefix)
+    try body(dir)
+    finally try {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
+      finally walk.close()
+    } catch { case NonFatal(_) => () }
+  }
 }

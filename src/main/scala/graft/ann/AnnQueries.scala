@@ -283,7 +283,7 @@ WHERE rank <= $K ORDER BY qid, rank"""
     * over a FIXED 64-element vector with O(1) arithmetic per element —
     * ~256 interpreted steps per row, no quadratic blowup, no sketch
     * deserialization per step (the cases that forced kernels elsewhere:
-    * Winnow, LshCode, BloomCountContains). Measured: q33 is among the
+    * graft_winnow, graft_lsh_code, graft_bloom_count_contains). Measured: q33 is among the
     * cheapest bench rows (~0.2s warm at sf0.1), so a kernel would buy
     * nothing observable. */
   def q33Quantize(spark: SparkSession, sfDir: String): DataFrame = {

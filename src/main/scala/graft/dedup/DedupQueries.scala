@@ -1637,7 +1637,7 @@ FROM g$LkEmRounds ORDER BY g1 DESC, g2 DESC, g3 DESC"""
     * substituted with letter (doc_id·7) mod 26 — the q288/q44
     * deterministic-twin convention, since the synthetic corpus has no
     * real typos), and the repair scores it against the frequent-token
-    * vocabulary with the compiled [[graft.plans.JaroWinklerExpr]]
+    * vocabulary with the compiled `graft_jaro_winkler` ([[graft.plans.JwMath]])
     * kernel, keeping the best match at jw ≥ [[JwThreshold]]. The
     * oracle's scorer is DuckDB's NATIVE `jaro_winkler_similarity` —
     * two independent implementations of the textbook algorithm must
@@ -1736,7 +1736,7 @@ FROM ranked WHERE rk = 1 ORDER BY doc_id"""
     * Corruption alternates deterministically by doc parity (even →
     * adjacent swap at position doc_id mod (len−1); odd → q308's
     * substitution), the q288/q44 twin convention. Scoring is the
-    * compiled [[graft.plans.DamerauExpr]] kernel (Lowrance–Wagner,
+    * compiled `graft_damerau` ([[graft.plans.DamerauMath]]) kernel (Lowrance–Wagner,
     * unrestricted — "CA"→"ABC" = 2, not OSA's 3) against DuckDB's
     * NATIVE `damerau_levenshtein`; distances are integers, so the gate
     * has no float grid at all.

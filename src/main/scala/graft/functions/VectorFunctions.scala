@@ -18,8 +18,8 @@ object VectorFunctions {
   def toDouble(v: Column): Column = v.cast("array<double>")
 
   /** Left-to-right fold of elementwise products (init 0.0), compiled:
-    * resolves to the native [[graft.plans.ArrayDot]] expression
-    * (registered by GraftExtensions) — whole-stage codegen emits one
+    * resolves to the `graft_dot` kernel ([[graft.plans.ArrayKernelMath]],
+    * registered by GraftExtensions) — whole-stage codegen emits one
     * JIT'd loop per row instead of interpreting the HOF lambda per
     * element. Bitwise equal to [[hofDot]] (VectorKernelSpec). */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
@@ -66,7 +66,7 @@ object VectorFunctions {
     * planes `planeOffset until planeOffset+bits` — multi-band callers
     * (q24) pass distinct offsets so each band draws independent
     * hyperplanes. Compiled: all sign bits in one pass
-    * (graft.plans.LshCodeExpr), bitwise equal to [[hofLshCode]]. */
+    * (`graft_lsh_code`, graft.plans.LshCodeMath), bitwise equal to [[hofLshCode]]. */
   def lshCode(v: Column, dims: Int, bits: Int, planeOffset: Int = 0): Column =
     call_function("graft_lsh_code", v, lit(dims), lit(bits), lit(planeOffset))
 

@@ -43,13 +43,16 @@ object GraphXLinkRank {
     // 8-byte-suffixed keys, broadcastable when small) replace the r3
     // string-keyed RDD joins, which shuffled the full string edge list
     // twice with no shared partitioner.
-    val vmap = LinkRank.vmapFor(spark, WebGraph.vertices(edges), cacheKey)
+    // `verts` (the map's unhinted vid column) is what gets counted: a
+    // count over the hinted view has no join for the hint to reach,
+    // so Spark drops it with a WARN.
+    val (vmap, verts) = LinkRank.vmapAndVerts(spark, WebGraph.vertices(edges), cacheKey)
 
     val edgeRdd: RDD[Edge[Unit]] = VertexLoop.vidEdges(edges, vmap)
       .select(col("svid"), col("dvid")).rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), ()))
 
-    val n = vmap.count().toDouble
+    val n = verts.count().toDouble
     releasedAtDrain(spark) {
       // fromEdges only creates vertices that touch an edge; our vertex
       // set equals src ∪ dst, so that is exactly the id set.

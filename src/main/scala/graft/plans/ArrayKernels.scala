@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Compiled vector kernels. Spark's higher-order functions (zip_with /
   * aggregate) evaluate their lambda INTERPRETED, once per element per
@@ -38,38 +35,4 @@ object ArrayKernelMath {
     }
     acc
   }
-}
-
-/** Native dot product over two array<double> columns. The function
-  * builder (GraftExtensions) casts arguments to array<double>, so an
-  * array<float> input is converted at analysis time instead of being
-  * misread, and a non-castable argument fails analysis. */
-case class ArrayDot(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ArrayKernelMath.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.ArrayKernelMath.dot($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayDot =
-    copy(left = l, right = r)
-}
-
-/** Native squared L2 distance over two array<double> columns (input
-  * typing as [[ArrayDot]]). */
-case class ArrayDist2(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dist2"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ArrayKernelMath.dist2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.ArrayKernelMath.dist2($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayDist2 =
-    copy(left = l, right = r)
 }

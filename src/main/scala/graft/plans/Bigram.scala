@@ -1,9 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled per-document bigram frequency summary (q46's repetition
@@ -32,21 +30,4 @@ object BigramMath {
     }
     new GenericInternalRow(Array[Any](mx, (g.words - 1).toLong))
   }
-}
-
-/** text → struct(mx, tot): highest bigram frequency and bigram count. */
-case class TopBigram(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("mx", LongType, nullable = false),
-    StructField("tot", LongType, nullable = false)))
-  override def prettyName: String = "graft_top_bigram"
-
-  override protected def nullSafeEval(input: Any): Any =
-    BigramMath.topBigram(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.BigramMath.topBigram($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TopBigram =
-    copy(child = newChild)
 }

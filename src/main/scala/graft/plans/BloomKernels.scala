@@ -97,71 +97,21 @@ object BloomKernelMath {
   }
 }
 
-/** (sketch: binary, elems: array<long>) → count of elements the Bloom
-  * sketch might contain. The sketch must be a constant (foldable)
-  * expression — the broadcastable-literal contract `might_contain`
-  * itself has — because it is deserialized once at plan time. */
-case class BloomCountContains(left: Expression, right: Expression)
-    extends BinaryExpression {
+/** (sketch: binary, elems: array<long>) → long count, shared by the
+  * two sketch probes. The sketch must be a constant (foldable)
+  * expression, the broadcastable-literal contract `might_contain`
+  * itself has: it is decoded once per plan (a static kernel call
+  * cannot do that) and handed to generated code by reference. */
+sealed trait SketchProbe extends BinaryExpression {
+  /** The decoded sketch (null when the sketch literal is null) and
+    * its Java type in generated code. */
+  protected def sketch: AnyRef
+  protected def sketchType: String
+  /** `graft.plans.BloomKernelMath` method called on (sketch, elems). */
+  protected def probe: String
+  protected def count(arr: ArrayData): Long
+
   override def dataType: DataType = LongType
-  override def prettyName: String = "graft_bloom_count_contains"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!left.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a constant (foldable) Bloom sketch argument")
-    else if (left.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName sketch argument must be binary, got ${left.dataType}")
-    else right.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName elements argument must be array<long>, got $t")
-    }
-
-  @transient private lazy val filter: BloomFilter = {
-    val bytes = left.eval(InternalRow.empty).asInstanceOf[Array[Byte]]
-    if (bytes == null) null
-    else BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-  }
-
-  override def eval(input: InternalRow): Any =
-    if (filter == null) null
-    else {
-      val arr = right.eval(input)
-      if (arr == null) null
-      else BloomKernelMath.countContains(filter, arr.asInstanceOf[ArrayData])
-    }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (filter == null) {
-      ev.copy(isNull = TrueLiteral, value = JavaCode.defaultLiteral(dataType))
-    } else {
-      val bf = ctx.addReferenceObj("graftBloom", filter, classOf[BloomFilter].getName)
-      val arrEval = right.genCode(ctx)
-      ev.copy(code =
-        code"""
-          ${arrEval.code}
-          boolean ${ev.isNull} = ${arrEval.isNull};
-          long ${ev.value} = -1L;
-          if (!${ev.isNull}) {
-            ${ev.value} = graft.plans.BloomKernelMath.countContains($bf, ${arrEval.value});
-          }""")
-    }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomCountContains =
-    copy(left = l, right = r)
-}
-
-/** (sketch: binary, elems: array<long>) → count of elements whose k
-  * portable-hash positions are all set in the sketch
-  * (BloomKernelMath.pbloomBuild's blob). Constant-sketch contract as
-  * [[BloomCountContains]]; decisions replay exactly in the oracle. */
-case class PBloomHits(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_pbloom_hits"
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -177,22 +127,18 @@ case class PBloomHits(left: Expression, right: Expression)
         s"$prettyName elements argument must be array<long>, got $t")
     }
 
-  @transient private lazy val blob: Array[Byte] =
-    left.eval(InternalRow.empty).asInstanceOf[Array[Byte]]
-
   override def eval(input: InternalRow): Any =
-    if (blob == null) null
+    if (sketch == null) null
     else {
       val arr = right.eval(input)
-      if (arr == null) null
-      else BloomKernelMath.pbloomHits(blob, arr.asInstanceOf[ArrayData])
+      if (arr == null) null else count(arr.asInstanceOf[ArrayData])
     }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (blob == null) {
+    if (sketch == null) {
       ev.copy(isNull = TrueLiteral, value = JavaCode.defaultLiteral(dataType))
     } else {
-      val bf = ctx.addReferenceObj("graftPBloom", blob, "byte[]")
+      val ref = ctx.addReferenceObj("graftSketch", sketch, sketchType)
       val arrEval = right.genCode(ctx)
       ev.copy(code =
         code"""
@@ -200,9 +146,42 @@ case class PBloomHits(left: Expression, right: Expression)
           boolean ${ev.isNull} = ${arrEval.isNull};
           long ${ev.value} = -1L;
           if (!${ev.isNull}) {
-            ${ev.value} = graft.plans.BloomKernelMath.pbloomHits($bf, ${arrEval.value});
+            ${ev.value} = graft.plans.BloomKernelMath.$probe($ref, ${arrEval.value});
           }""")
     }
+}
+
+/** (Spark BloomFilter sketch, elems) → count of elements the sketch
+  * might contain. */
+case class BloomCountContains(left: Expression, right: Expression) extends SketchProbe {
+  override def prettyName: String = "graft_bloom_count_contains"
+  override protected def probe: String = "countContains"
+  override protected def sketchType: String = classOf[BloomFilter].getName
+
+  @transient protected lazy val sketch: BloomFilter = {
+    val bytes = left.eval(InternalRow.empty).asInstanceOf[Array[Byte]]
+    if (bytes == null) null
+    else BloomFilter.readFrom(new ByteArrayInputStream(bytes))
+  }
+
+  override protected def count(arr: ArrayData): Long = BloomKernelMath.countContains(sketch, arr)
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomCountContains =
+    copy(left = l, right = r)
+}
+
+/** (portable sketch, elems) → count of elements whose k portable-hash
+  * positions are all set in the sketch (BloomKernelMath.pbloomBuild's
+  * blob); decisions replay exactly in the oracle. */
+case class PBloomHits(left: Expression, right: Expression) extends SketchProbe {
+  override def prettyName: String = "graft_pbloom_hits"
+  override protected def probe: String = "pbloomHits"
+  override protected def sketchType: String = "byte[]"
+
+  @transient protected lazy val sketch: Array[Byte] =
+    left.eval(InternalRow.empty).asInstanceOf[Array[Byte]]
+
+  override protected def count(arr: ArrayData): Long = BloomKernelMath.pbloomHits(sketch, arr)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): PBloomHits =
     copy(left = l, right = r)

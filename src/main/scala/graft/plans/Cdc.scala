@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-defined chunking (CDC) via a shift-based Gear rolling hash —
@@ -92,36 +89,4 @@ object CdcMath {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** (text, maskBits) → array<long> of per-chunk portable hashes. */
-case class CdcChunks(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_cdc_chunks"
-
-  override protected def nullSafeEval(t: Any, m: Any): Any =
-    CdcMath.chunkHashes(t.asInstanceOf[UTF8String], m.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, m) => s"graft.plans.CdcMath.chunkHashes($t, $m)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CdcChunks =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (text, maskBits) → array<long> of 1-based chunk end positions. */
-case class CdcCuts(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_cdc_cuts"
-
-  override protected def nullSafeEval(t: Any, m: Any): Any =
-    CdcMath.chunkEnds(t.asInstanceOf[UTF8String], m.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, m) => s"graft.plans.CdcMath.chunkEnds($t, $m)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CdcCuts =
-    copy(left = newLeft, right = newRight)
 }

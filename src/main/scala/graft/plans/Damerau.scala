@@ -1,8 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** FULL (unrestricted) Damerau–Levenshtein distance as a compiled
@@ -61,16 +58,4 @@ object DamerauMath {
     }
     d(la + 1)(lb + 1).toLong
   }
-}
-
-/** (string, string) → full Damerau–Levenshtein distance, compiled. */
-case class DamerauExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_damerau"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DamerauMath.distance(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.DamerauMath.distance($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DamerauExpr =
-    copy(left = l, right = r)
 }

@@ -3,9 +3,7 @@ package graft.plans
 import java.math.RoundingMode
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled per-document character-entropy summary (q95's quality
@@ -13,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * histogram, which the composed formulation can only express as
   * explode(split(text,'')) → exchange → re-group — a |text|× row
   * inflation of the corpus just to reunite characters that never left
-  * their document (the TopBigram argument, one level finer). This
+  * their document (the [[BigramMath]] argument, one level finer). This
   * kernel folds the histogram and the entropy sum in ONE compiled pass
   * over the row: the operator is map-only, zero shuffle.
   *
@@ -51,23 +49,4 @@ object EntropyMath {
     }
     new GenericInternalRow(Array[Any](n, m.size.toLong, entE12))
   }
-}
-
-/** text → struct(n, k, ent_e12): code-point count, distinct
-  * code-points, and Shannon entropy in nats scaled by 10¹². */
-case class CharEntropy(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("k", LongType, nullable = false),
-    StructField("ent_e12", LongType, nullable = false)))
-  override def prettyName: String = "graft_entropy"
-
-  override protected def nullSafeEval(input: Any): Any =
-    EntropyMath.charEntropy(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.EntropyMath.charEntropy($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropy =
-    copy(child = newChild)
 }

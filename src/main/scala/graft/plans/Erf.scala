@@ -1,9 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
-
 /** erf as compiled scalar math, called from generated code — no
   * per-row Column-tree interpretation, no UDF serialization. Same
   * A&S 7.1.26 polynomial as MathFunctions.erf (the composed built-in
@@ -22,24 +18,4 @@ object ErfMath {
     val e = 1.0 - poly * java.lang.StrictMath.exp(-(a * a))
     if (z < 0) -e else e
   }
-}
-
-/** Native Catalyst Expression for erf: whole-stage codegen emits a
-  * direct static call (doGenCode), interpreted eval falls back to the
-  * same scalar. The preferred extension shape when built-ins can't
-  * express a scalar — a UDF would break codegen and box every row.
-  */
-case class Erf(child: Expression) extends UnaryExpression {
-  // callers (GraftExtensions) cast the argument to double
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_erf"
-
-  override protected def nullSafeEval(input: Any): Any =
-    ErfMath.erf(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.ErfMath.erf($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Erf =
-    copy(child = newChild)
 }

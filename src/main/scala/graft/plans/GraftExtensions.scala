@@ -1,172 +1,185 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType}
+import java.lang.reflect.{InvocationTargetException, Method}
 
-/** Session extension point: registers graft's native expressions so
-  * SQL users get them by name. Activate with
+import org.apache.spark.SPARK_DOC_ROOT
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.types._
+
+/** Session extension point: registers graft's native functions so SQL
+  * users get them by name. Activate with
   * `spark.sql.extensions=graft.plans.GraftExtensions` (GraftSession
   * sets this by default).
   *
-  * This is the (b)-tier extension path from the design rules: a native
-  * Expression with doGenCode, injected via SparkSessionExtensions —
-  * used only where built-ins can't express the scalar. Everything else
-  * in graft composes `org.apache.spark.sql.functions`.
+  * This is the (b)-tier extension path from the design rules: a
+  * compiled scalar injected via SparkSessionExtensions, used only
+  * where built-ins can't express it. Everything else in graft composes
+  * `org.apache.spark.sql.functions`.
   *
-  * Every builder wraps its arguments in Cast to the kernel's expected
-  * input type (the Erf pattern): an `array<float>` embedding column
-  * into graft_dot is cast to `array<double>` at analysis time instead
-  * of being read with 8-byte strides over 4-byte elements (silent
-  * garbage), and an uncastable argument fails analysis instead of
-  * crashing an executor. Casts on already-correct types are removed by
-  * SimplifyCasts, so the fixture plans are unchanged.
+  * A kernel is one `*Math` method plus one row of [[GraftExtensions.Kernels]];
+  * [[KernelCall]] binds every row. Each argument is cast to the row's
+  * input type (an `array<float>` embedding into graft_dot is converted
+  * at analysis time instead of being read with 8-byte strides over
+  * 4-byte elements, and an uncastable argument fails analysis instead
+  * of crashing an executor); casts on already-correct types are removed
+  * by SimplifyCasts. A call with the wrong number of arguments fails
+  * analysis with the function name and the expected count.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    val dblArr = ArrayType(DoubleType)
-    val longArr = ArrayType(LongType)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_erf"),
-      new ExpressionInfo(classOf[Erf].getName, "graft_erf"),
-      (args: Seq[Expression]) => Erf(Cast(args.head, DoubleType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[ArrayDot].getName, "graft_dot"),
-      (args: Seq[Expression]) => ArrayDot(Cast(args(0), dblArr), Cast(args(1), dblArr))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dist2"),
-      new ExpressionInfo(classOf[ArrayDist2].getName, "graft_dist2"),
-      (args: Seq[Expression]) => ArrayDist2(Cast(args(0), dblArr), Cast(args(1), dblArr))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowSummary].getName, "graft_winnow"),
-      (args: Seq[Expression]) => WinnowSummary(Cast(args.head, StringType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_top_bigram"),
-      new ExpressionInfo(classOf[TopBigram].getName, "graft_top_bigram"),
-      (args: Seq[Expression]) => TopBigram(Cast(args.head, StringType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinhashSig].getName, "graft_minhash"),
-      (args: Seq[Expression]) => MinhashSig(Cast(args.head, StringType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingle_set"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "graft_shingle_set"),
-      (args: Seq[Expression]) => ShingleSet(Cast(args.head, StringType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_intersect_count"),
-      new ExpressionInfo(classOf[IntersectCount].getName, "graft_intersect_count"),
-      (args: Seq[Expression]) => IntersectCount(Cast(args(0), longArr), Cast(args(1), longArr))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_gram_hashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, "graft_gram_hashes"),
-      (args: Seq[Expression]) => GramHashes(Cast(args(0), StringType),
-        Cast(args(1), IntegerType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "graft_cdc_chunks"),
-      (args: Seq[Expression]) => CdcChunks(Cast(args.head, StringType),
-        Cast(args(1), IntegerType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cdc_cuts"),
-      new ExpressionInfo(classOf[CdcCuts].getName, "graft_cdc_cuts"),
-      (args: Seq[Expression]) => CdcCuts(Cast(args.head, StringType),
-        Cast(args(1), IntegerType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_entropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "graft_entropy"),
-      (args: Seq[Expression]) => CharEntropy(Cast(args.head, StringType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (args: Seq[Expression]) => NfcNormalize(Cast(args.head, StringType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_phash"),
-      new ExpressionInfo(classOf[PhashExpr].getName, "graft_phash"),
-      (args: Seq[Expression]) => PhashExpr(Cast(args.head, StringType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimhashSig].getName, "graft_simhash"),
-      (args: Seq[Expression]) => SimhashSig(Cast(args.head, StringType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_lsh_code"),
-      new ExpressionInfo(classOf[LshCodeExpr].getName, "graft_lsh_code"),
-      (args: Seq[Expression]) => LshCodeExpr(Cast(args(0), dblArr),
-        args(1), args(2), args(3))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_lsh_bands"),
-      new ExpressionInfo(classOf[LshBandsExpr].getName, "graft_lsh_bands"),
-      (args: Seq[Expression]) => LshBandsExpr(Cast(args(0), dblArr),
-        args(1), args(2), args(3))))
-    // Spark's own Bloom sketch pair (used internally for runtime join
-    // pruning) exposed by name: they are not in the public registry,
-    // but a fixed-size broadcastable membership sketch is exactly what
-    // scale-path decontamination wants (DedupQueries
-    // .decontaminateBloomSets). graft_bloom_agg(longCol, estItems,
-    // numBits) → binary sketch; graft_might_contain(sketch, longCol).
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (args: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          Cast(args(0), LongType), args(1), args(2)).toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom_count_contains"),
-      new ExpressionInfo(classOf[BloomCountContains].getName, "graft_bloom_count_contains"),
-      (args: Seq[Expression]) => BloomCountContains(args(0), Cast(args(1), longArr))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pbloom_hits"),
-      new ExpressionInfo(classOf[PBloomHits].getName, "graft_pbloom_hits"),
-      (args: Seq[Expression]) => PBloomHits(args(0), Cast(args(1), longArr))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerExpr].getName, "graft_jaro_winkler"),
-      (args: Seq[Expression]) => JaroWinklerExpr(Cast(args(0), StringType),
-        Cast(args(1), StringType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_damerau"),
-      new ExpressionInfo(classOf[DamerauExpr].getName, "graft_damerau"),
-      (args: Seq[Expression]) => DamerauExpr(Cast(args(0), StringType),
-        Cast(args(1), StringType))))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.Functions.foreach { f =>
+      ext.injectFunction((
+        new FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name),
+        (args: Seq[Expression]) => {
+          if (args.length != f.arity)
+            throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+              "functionName" -> s"`${f.name}`", "expectedNum" -> f.arity.toString,
+              "actualNum" -> args.length.toString, "docroot" -> SPARK_DOC_ROOT))
+          f.build(args)
+        }))
+    }
+}
+
+object GraftExtensions {
+  private val dblArr = ArrayType(DoubleType)
+  private val longArr = ArrayType(LongType)
+  private val longs = ArrayType(LongType, containsNull = false)
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  /** Every compiled kernel: SQL name, `graft.plans` method, result
+    * type, argument types. */
+  val Kernels: Seq[Kernel] = Seq(
+    Kernel("graft_erf", "ErfMath.erf", DoubleType, DoubleType),
+    Kernel("graft_dot", "ArrayKernelMath.dot", DoubleType, dblArr, dblArr),
+    Kernel("graft_dist2", "ArrayKernelMath.dist2", DoubleType, dblArr, dblArr),
+    // (v, dims, bits, planeOffset | nBands); the ints parameterize the loop
+    Kernel("graft_lsh_code", "LshCodeMath.code", LongType,
+      dblArr, IntegerType, IntegerType, IntegerType),
+    Kernel("graft_lsh_bands", "LshCodeMath.codes", longs,
+      dblArr, IntegerType, IntegerType, IntegerType),
+    Kernel("graft_winnow", "WinnowMath.winnow",
+      struct("n_fingerprints" -> LongType, "min_fp" -> LongType, "max_fp" -> LongType), StringType),
+    Kernel("graft_top_bigram", "BigramMath.topBigram",
+      struct("mx" -> LongType, "tot" -> LongType), StringType),
+    Kernel("graft_minhash", "MinhashMath.minhash", longs, StringType),
+    Kernel("graft_shingle_set", "MinhashMath.shingleSet", longs, StringType),
+    Kernel("graft_intersect_count", "MinhashMath.intersectCount", LongType, longArr, longArr),
+    Kernel("graft_simhash", "SimhashMath.simhash",
+      struct("simlo" -> LongType, "simhi" -> LongType), StringType),
+    Kernel("graft_gram_hashes", "GramHashMath.gramHashes",
+      ArrayType(struct("hlo" -> LongType, "hhi" -> LongType), containsNull = false),
+      StringType, IntegerType),
+    Kernel("graft_cdc_chunks", "CdcMath.chunkHashes", longs, StringType, IntegerType),
+    Kernel("graft_cdc_cuts", "CdcMath.chunkEnds", longs, StringType, IntegerType),
+    Kernel("graft_entropy", "EntropyMath.charEntropy",
+      struct("n" -> LongType, "k" -> LongType, "ent_e12" -> LongType), StringType),
+    Kernel("graft_nfc", "UnicodeNormMath.nfc", StringType, StringType),
+    Kernel("graft_phash", "PhashMath.phash", longs, StringType),
+    Kernel("graft_jaro_winkler", "JwMath.jaroWinkler", DoubleType, StringType, StringType),
+    Kernel("graft_damerau", "DamerauMath.distance", LongType, StringType, StringType),
     // SymSpell deletion neighborhood (q309's equi-join blocking key):
     // deletes(a,k) ∩ deletes(b,k) ≠ ∅ whenever DL(a,b) ≤ k.
-    ext.injectFunction((
-      new FunctionIdentifier("graft_deletes"),
-      new ExpressionInfo(classOf[DeleteNeighborsExpr].getName, "graft_deletes"),
-      (args: Seq[Expression]) => DeleteNeighborsExpr(Cast(args(0), StringType),
-        Cast(args(1), IntegerType))))
+    Kernel("graft_deletes", "SymSpellMath.deletes",
+      ArrayType(StringType, containsNull = false), StringType, IntegerType),
     // Real JDK media codecs (q306/q307): encode builds the asset from
-    // closed-form integer formulas, decode recovers them — both ends
-    // per-row compiled expressions (see plans/MediaCodec.scala).
-    ext.injectFunction((
-      new FunctionIdentifier("graft_png_encode"),
-      new ExpressionInfo(classOf[PngEncodeExpr].getName, "graft_png_encode"),
-      (args: Seq[Expression]) => PngEncodeExpr(Cast(args(0), LongType),
-        Cast(args(1), IntegerType), Cast(args(2), IntegerType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_png_stats"),
-      new ExpressionInfo(classOf[PngStatsExpr].getName, "graft_png_stats"),
-      (args: Seq[Expression]) => PngStatsExpr(args.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_wav_encode"),
-      new ExpressionInfo(classOf[WavEncodeExpr].getName, "graft_wav_encode"),
-      (args: Seq[Expression]) => WavEncodeExpr(Cast(args(0), LongType),
-        Cast(args(1), IntegerType))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_wav_stats"),
-      new ExpressionInfo(classOf[WavStatsExpr].getName, "graft_wav_stats"),
-      (args: Seq[Expression]) => WavStatsExpr(args.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          args(0), Cast(args(1), LongType))))
+    // closed-form integer formulas, decode recovers them.
+    Kernel("graft_png_encode", "MediaMath.pngEncode", BinaryType,
+      LongType, IntegerType, IntegerType),
+    Kernel("graft_png_stats", "MediaMath.pngStats", struct("width" -> IntegerType,
+      "height" -> IntegerType, "sum_r" -> LongType, "sum_g" -> LongType, "sum_b" -> LongType),
+      BinaryType),
+    Kernel("graft_wav_encode", "MediaMath.wavEncode", BinaryType, LongType, IntegerType),
+    Kernel("graft_wav_stats", "MediaMath.wavStats",
+      struct("n_samples" -> LongType, "sum_s" -> LongType, "sum_abs" -> LongType), BinaryType))
+
+  /** One registered SQL function. */
+  case class SqlFunction(name: String, cls: Class[_], arity: Int, build: Seq[Expression] => Expression)
+
+  /** Every registered `graft_*` function: the kernel table, plus the
+    * functions that are not a static call. Spark's own Bloom sketch
+    * pair (used internally for runtime join pruning) is exposed by
+    * name: it is not in the public registry, but a fixed-size
+    * broadcastable membership sketch is what scale-path
+    * decontamination wants (DedupQueries.decontaminateBloomSets).
+    * graft_bloom_agg(longCol, estItems, numBits) → binary sketch;
+    * graft_might_contain(sketch, longCol). The two sketch probes decode
+    * their constant sketch once per plan. */
+  val Functions: Seq[SqlFunction] = Kernels.map { k =>
+    SqlFunction(k.name, classOf[KernelCall], k.inputs.length,
+      args => KernelCall(k, args.zip(k.inputs).map { case (a, t) => Cast(a, t) }))
+  } ++ Seq(
+    SqlFunction("graft_bloom_agg", classOf[BloomFilterAggregate], 3,
+      a => new BloomFilterAggregate(Cast(a(0), LongType), a(1), a(2)).toAggregateExpression()),
+    SqlFunction("graft_might_contain", classOf[BloomFilterMightContain], 2,
+      a => BloomFilterMightContain(a(0), Cast(a(1), LongType))),
+    SqlFunction("graft_bloom_count_contains", classOf[BloomCountContains], 2,
+      a => BloomCountContains(a(0), Cast(a(1), longArr))),
+    SqlFunction("graft_pbloom_hits", classOf[PBloomHits], 2,
+      a => PBloomHits(a(0), Cast(a(1), longArr))))
+}
+
+/** One kernel: SQL `name` calls the static `graft.plans.<call>` (a
+  * `*Math` object's method) on arguments of the `inputs` types and
+  * returns `dataType`. */
+case class Kernel(name: String, call: String, dataType: DataType, inputs: DataType*)
+
+/** A `graft_*` kernel call. Generated code calls the kernel's static
+  * method directly on the children's values (no reflection, no boxing,
+  * inside whole-stage codegen); interpreted eval goes through one
+  * cached `Method`. Any null argument gives a null result. */
+case class KernelCall(kernel: Kernel, children: Seq[Expression])
+    extends Expression with ExpectsInputTypes {
+  override def prettyName: String = kernel.name
+  override def dataType: DataType = kernel.dataType
+  // inferred: the declared element type, AbstractDataType, is private to Spark
+  override def inputTypes = kernel.inputs
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+  // plans print graft_x(children), not the table row
+  override protected def stringArgs: Iterator[Any] = children.iterator
+
+  @transient private lazy val method: Method = {
+    val dot = kernel.call.lastIndexOf('.')
+    Class.forName(s"graft.plans.${kernel.call.take(dot)}")
+      .getMethod(kernel.call.drop(dot + 1), kernel.inputs.map(CodeGenerator.javaClass): _*)
   }
+
+  override def eval(input: InternalRow): Any = {
+    val args = children.map(_.eval(input).asInstanceOf[AnyRef])
+    if (args.contains(null)) null
+    else try method.invoke(null, args: _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val evals = children.map(_.genCode(ctx))
+    val javaType = CodeGenerator.javaType(dataType)
+    val call = s"${ev.value} = graft.plans.${kernel.call}(${evals.map(_.value).mkString(", ")});"
+    if (nullable) {
+      // each argument is computed only once the earlier ones are non-null
+      val body = children.zip(evals).foldRight(s"${ev.isNull} = false;\n$call") {
+        case ((c, e), inner) => s"${e.code}\n${ctx.nullSafeExec(c.nullable, e.isNull)(inner)}"
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $body""")
+    } else {
+      ev.copy(code = code"""
+        ${evals.map(_.code).mkString("\n")}
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $call""", isNull = FalseLiteral)
+    }
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KernelCall =
+    copy(children = c)
 }

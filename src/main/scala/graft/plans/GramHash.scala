@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled word-n-gram hash kernel for the boilerplate /
@@ -32,19 +30,4 @@ object GramHashMath {
     }
     new GenericArrayData(out)
   }
-}
-
-/** (text, n) → array<struct<hlo: long, hhi: long>> of word-n-gram md5
-  * hash pairs, compiled. */
-case class GramHashes(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("hlo", LongType, nullable = false),
-      StructField("hhi", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_gram_hashes"
-  override protected def nullSafeEval(t: Any, n: Any): Any =
-    GramHashMath.gramHashes(t.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, n) => s"graft.plans.GramHashMath.gramHashes($t, $n)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): GramHashes =
-    copy(left = l, right = r)
 }

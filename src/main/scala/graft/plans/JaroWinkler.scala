@@ -1,8 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro–Winkler string similarity as a compiled kernel (q308's fuzzy
@@ -71,17 +68,4 @@ object JwMath {
       j + l * 0.1 * (1.0 - j)
     } else j
   }
-}
-
-/** (string, string) → Jaro–Winkler similarity in [0, 1], compiled. */
-case class JaroWinklerExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_jaro_winkler"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    JwMath.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.JwMath.jaroWinkler($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaroWinklerExpr =
-    copy(left = l, right = r)
 }

@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import graft.functions.MathFunctions
 
 /** Compiled random-hyperplane LSH code. The composed form evaluates
@@ -68,46 +65,4 @@ object LshCodeMath {
     }
     new GenericArrayData(out)
   }
-}
-
-/** (v, dims, bits, planeOffset) → long code; the three int arguments
-  * must be foldable (they parameterize the generated loop). */
-case class LshCodeExpr(first: Expression, second: Expression,
-                       third: Expression, fourth: Expression)
-    extends QuaternaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_lsh_code"
-
-  override protected def nullSafeEval(v: Any, d: Any, b: Any, o: Any): Any =
-    LshCodeMath.code(v.asInstanceOf[ArrayData], d.asInstanceOf[Int],
-      b.asInstanceOf[Int], o.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, d, b, o) =>
-      s"graft.plans.LshCodeMath.code($v, $d, $b, $o)")
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): LshCodeExpr =
-    LshCodeExpr(a, b, c, d)
-}
-
-/** (v, dims, bits, nBands) → array<long> of all band codes, one pass
-  * (see [[LshCodeMath.codes]]); the int arguments must be foldable. */
-case class LshBandsExpr(first: Expression, second: Expression,
-                        third: Expression, fourth: Expression)
-    extends QuaternaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_lsh_bands"
-
-  override protected def nullSafeEval(v: Any, d: Any, b: Any, nb: Any): Any =
-    LshCodeMath.codes(v.asInstanceOf[ArrayData], d.asInstanceOf[Int],
-      b.asInstanceOf[Int], nb.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, d, b, nb) =>
-      s"graft.plans.LshCodeMath.codes($v, $d, $b, $nb)")
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): LshBandsExpr =
-    LshBandsExpr(a, b, c, d)
 }

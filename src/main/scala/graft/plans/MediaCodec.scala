@@ -1,10 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types._
 
 /** REAL JVM media codecs for the multimodal suite (q306/q307) — the
   * decode stage q60's `stubDecode` honestly leaves out, closed with
@@ -132,71 +129,4 @@ object MediaMath {
     }
     new GenericInternalRow(Array[Any](n.toLong, sum, sumAbs))
   }
-}
-
-/** (doc_id bigint, w int, h int) → REAL PNG bytes, compiled. */
-case class PngEncodeExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_png_encode"
-  override protected def nullSafeEval(d: Any, w: Any, h: Any): Any =
-    MediaMath.pngEncode(d.asInstanceOf[Long], w.asInstanceOf[Int], h.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (d, w, h) => s"graft.plans.MediaMath.pngEncode($d, $w, $h)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): PngEncodeExpr =
-    copy(first = f, second = s, third = t)
-}
-
-/** PNG bytes → struct(width, height, sum_r, sum_g, sum_b) via a REAL
-  * javax.imageio decode, compiled. */
-case class PngStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = PngStatsExpr.Schema
-  override def prettyName: String = "graft_png_stats"
-  override protected def nullSafeEval(input: Any): Any =
-    MediaMath.pngStats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.MediaMath.pngStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): PngStatsExpr =
-    copy(child = newChild)
-}
-object PngStatsExpr {
-  val Schema: StructType = StructType(Seq(
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("sum_r", LongType, nullable = false),
-    StructField("sum_g", LongType, nullable = false),
-    StructField("sum_b", LongType, nullable = false)))
-}
-
-/** (doc_id bigint, n int) → REAL mono PCM16 WAV bytes, compiled. */
-case class WavEncodeExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_wav_encode"
-  override protected def nullSafeEval(d: Any, n: Any): Any =
-    MediaMath.wavEncode(d.asInstanceOf[Long], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (d, n) => s"graft.plans.MediaMath.wavEncode($d, $n)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): WavEncodeExpr =
-    copy(left = l, right = r)
-}
-
-/** WAV bytes → struct(n_samples, sum_s, sum_abs) via a REAL
-  * javax.sound.sampled decode, compiled. */
-case class WavStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WavStatsExpr.Schema
-  override def prettyName: String = "graft_wav_stats"
-  override protected def nullSafeEval(input: Any): Any =
-    MediaMath.wavStats(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.MediaMath.wavStats($c)")
-  override protected def withNewChildInternal(newChild: Expression): WavStatsExpr =
-    copy(child = newChild)
-}
-object WavStatsExpr {
-  val Schema: StructType = StructType(Seq(
-    StructField("n_samples", LongType, nullable = false),
-    StructField("sum_s", LongType, nullable = false),
-    StructField("sum_abs", LongType, nullable = false)))
 }

@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.MathFunctions
 
@@ -84,40 +81,4 @@ object MinhashMath {
     }
     c
   }
-}
-
-/** text → array<long>(12) minhash signature, compiled. */
-case class MinhashSig(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-  override protected def nullSafeEval(input: Any): Any =
-    MinhashMath.minhash(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.MinhashMath.minhash($c)")
-  override protected def withNewChildInternal(newChild: Expression): MinhashSig =
-    copy(child = newChild)
-}
-
-/** text → sorted distinct array<long> of shingle hashes, compiled. */
-case class ShingleSet(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_shingle_set"
-  override protected def nullSafeEval(input: Any): Any =
-    MinhashMath.shingleSet(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.MinhashMath.shingleSet($c)")
-  override protected def withNewChildInternal(newChild: Expression): ShingleSet =
-    copy(child = newChild)
-}
-
-/** (sorted array<long>, sorted array<long>) → |a ∩ b|, compiled. */
-case class IntersectCount(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_intersect_count"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    MinhashMath.intersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.MinhashMath.intersectCount($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): IntersectCount =
-    copy(left = l, right = r)
 }

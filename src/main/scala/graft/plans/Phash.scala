@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Perceptual hash (aHash / average hash) over the stub-decoded
@@ -75,19 +72,4 @@ object PhashMath {
     }
     new GenericArrayData(Array[Any](lo, hi))
   }
-}
-
-/** text → array<long> [ph_lo, ph_hi] (empty when length < 64). */
-case class PhashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_phash"
-
-  override protected def nullSafeEval(t: Any): Any =
-    PhashMath.phash(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.plans.PhashMath.phash($t)")
-
-  override protected def withNewChildInternal(newChild: Expression): PhashExpr =
-    copy(child = newChild)
 }

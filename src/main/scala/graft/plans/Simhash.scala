@@ -1,9 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled 64-bit SimHash (q22). The composed form exploded every
@@ -43,18 +41,4 @@ object SimhashMath {
     }
     new GenericInternalRow(Array[Any](lo, hi))
   }
-}
-
-/** text → struct(simlo, simhi), compiled. */
-case class SimhashSig(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("simlo", LongType, nullable = false),
-    StructField("simhi", LongType, nullable = false)))
-  override def prettyName: String = "graft_simhash"
-  override protected def nullSafeEval(input: Any): Any =
-    SimhashMath.simhash(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.SimhashMath.simhash($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimhashSig =
-    copy(child = newChild)
 }

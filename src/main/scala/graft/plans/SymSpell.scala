@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Deletion-neighborhood generator for SymSpell-style edit-distance
@@ -62,18 +59,4 @@ object SymSpellMath {
     while (it.hasNext) { arr(i) = UTF8String.fromString(it.next()); i += 1 }
     new GenericArrayData(arr)
   }
-}
-
-/** (string, k int) → array of ≤k-deletion variants, compiled. */
-case class DeleteNeighborsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_deletes"
-  override protected def nullSafeEval(s: Any, k: Any): Any =
-    SymSpellMath.deletes(s.asInstanceOf[UTF8String], k.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, k) => s"graft.plans.SymSpellMath.deletes($s, $k)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): DeleteNeighborsExpr =
-    copy(left = l, right = r)
 }

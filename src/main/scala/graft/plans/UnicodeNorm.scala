@@ -1,14 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled Unicode NFC normalization (q216's kernel). Spark has no
   * built-in normalizer expression; the alternative would be a Scala
-  * UDF (no codegen, ser/de per row) — this is a native UnaryExpression
-  * with `doGenCode`, so it rides inside whole-stage codegen like any
+  * UDF (no codegen, ser/de per row) — `graft_nfc` calls this from
+  * generated code, so it rides inside whole-stage codegen like any
   * built-in. Java's `java.text.Normalizer` implements the same Unicode
   * NFC as DuckDB's `nfc_normalize`, so the oracle replays it exactly.
   */
@@ -17,19 +14,4 @@ object UnicodeNormMath {
     UTF8String.fromString(
       java.text.Normalizer.normalize(text.toString,
         java.text.Normalizer.Form.NFC))
-}
-
-/** text → its Unicode NFC form. */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nfc"
-
-  override protected def nullSafeEval(input: Any): Any =
-    UnicodeNormMath.nfc(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.UnicodeNormMath.nfc($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
 }

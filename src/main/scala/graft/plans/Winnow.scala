@@ -1,10 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled winnowing fingerprint summary (reference: the q43
@@ -36,22 +33,4 @@ object WinnowMath {
     }
     new GenericInternalRow(Array[Any](seen.size.toLong, minFp, maxFp))
   }
-}
-
-/** text → struct(n_fingerprints, min_fp, max_fp), compiled. */
-case class WinnowSummary(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_fingerprints", LongType, nullable = false),
-    StructField("min_fp", LongType, nullable = false),
-    StructField("max_fp", LongType, nullable = false)))
-  override def prettyName: String = "graft_winnow"
-
-  override protected def nullSafeEval(input: Any): Any =
-    WinnowMath.winnow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.WinnowMath.winnow($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowSummary =
-    copy(child = newChild)
 }

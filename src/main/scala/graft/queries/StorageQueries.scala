@@ -311,29 +311,24 @@ object StorageQueries {
     * split; the aggregate is one partial-agged groupBy. */
   def q122CsvIo(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
-    val tmp = graft.TempDirs.ephemeral("graft_q122_")
-    val dir = tmp.resolve("events_csv").toString
-    // \N null sentinel: CSV can't otherwise distinguish null from ""
-    ev.write.mode("overwrite")
-      .option("header", "true").option("nullValue", "\\N")
-      .csv(dir)
-    val res = graft.Checkpoints.materialize(spark.read.schema(ev.schema)
-      .option("header", "true").option("nullValue", "\\N")
-      .csv(dir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        // Σ(ts mod p): int64-safe per-row timestamp fingerprint (a raw
-        // Σts over ~1e18 ns values would overflow the bigint)
-        sum(expr("ts % 1000000007")).as("ts_mod_sum"),
-        asD(dsum(col("value"))).as("total_value"),
-        sum(MF.hash32(col("props"))).as("props_checksum"))
-      .orderBy(col("event_type")))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q122_") { tmp =>
+      val dir = tmp.resolve("events_csv").toString
+      // \N null sentinel: CSV can't otherwise distinguish null from ""
+      ev.write.mode("overwrite")
+        .option("header", "true").option("nullValue", "\\N")
+        .csv(dir)
+      graft.Checkpoints.materialize(spark.read.schema(ev.schema)
+        .option("header", "true").option("nullValue", "\\N")
+        .csv(dir)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          // Σ(ts mod p): int64-safe per-row timestamp fingerprint (a raw
+          // Σts over ~1e18 ns values would overflow the bigint)
+          sum(expr("ts % 1000000007")).as("ts_mod_sum"),
+          asD(dsum(col("value"))).as("total_value"),
+          sum(MF.hash32(col("props"))).as("props_checksum"))
+        .orderBy(col("event_type")))
+    }
   }
 
   val q122Sql: String =
@@ -363,29 +358,24 @@ object StorageQueries {
     * aggregate. */
   def q179SchemaMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val ord = Tables.orders(spark, sfDir)
-    val tmp = graft.TempDirs.ephemeral("graft_q179_").toString
-    ord.filter(pmod(col("o_orderkey"), lit(2)) === 0)
-      .select(col("o_orderkey"), col("o_totalprice"))
-      .write.mode("overwrite").parquet(s"$tmp/batch=1")
-    ord.filter(pmod(col("o_orderkey"), lit(2)) === 1)
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      .write.mode("overwrite").parquet(s"$tmp/batch=2")
-    val merged = spark.read.option("mergeSchema", "true")
-      .option("basePath", tmp).parquet(s"$tmp/batch=1", s"$tmp/batch=2")
-    val res = graft.Checkpoints.materialize(merged.groupBy(col("batch"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when(col("o_orderpriority").isNull, 1L).otherwise(0L))
-          .as("null_priority"),
-        countDistinct(col("o_orderpriority")).as("n_priorities"),
-        asD(dsum(col("o_totalprice"))).as("total_value"))
-      .orderBy(col("batch")))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator()
-        .asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q179_") { dir =>
+      val tmp = dir.toString
+      ord.filter(pmod(col("o_orderkey"), lit(2)) === 0)
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .write.mode("overwrite").parquet(s"$tmp/batch=1")
+      ord.filter(pmod(col("o_orderkey"), lit(2)) === 1)
+        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
+        .write.mode("overwrite").parquet(s"$tmp/batch=2")
+      val merged = spark.read.option("mergeSchema", "true")
+        .option("basePath", tmp).parquet(s"$tmp/batch=1", s"$tmp/batch=2")
+      graft.Checkpoints.materialize(merged.groupBy(col("batch"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(when(col("o_orderpriority").isNull, 1L).otherwise(0L))
+            .as("null_priority"),
+          countDistinct(col("o_orderpriority")).as("n_priorities"),
+          asD(dsum(col("o_totalprice"))).as("total_value"))
+        .orderBy(col("batch")))
+    }
   }
 
   val q179Sql: String =
@@ -452,22 +442,17 @@ object StorageQueries {
     * read-back exactly as parquet's do. */
   def q184OrcIo(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
-    val tmp = graft.TempDirs.ephemeral("graft_q184_")
-    val dir = tmp.resolve("events_orc").toString
-    ev.write.mode("overwrite").orc(dir)
-    val res = graft.Checkpoints.materialize(spark.read.orc(dir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(expr("ts % 1000000007")).as("ts_mod_sum"),
-        asD(dsum(col("value"))).as("total_value"),
-        sum(MF.hash32(col("props"))).as("props_checksum"))
-      .orderBy(col("event_type")))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q184_") { tmp =>
+      val dir = tmp.resolve("events_orc").toString
+      ev.write.mode("overwrite").orc(dir)
+      graft.Checkpoints.materialize(spark.read.orc(dir)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(expr("ts % 1000000007")).as("ts_mod_sum"),
+          asD(dsum(col("value"))).as("total_value"),
+          sum(MF.hash32(col("props"))).as("props_checksum"))
+        .orderBy(col("event_type")))
+    }
   }
 
   val q184Sql: String =
@@ -497,44 +482,39 @@ object StorageQueries {
   def q194MalformedCsv(spark: SparkSession, sfDir: String): DataFrame = {
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice"))
-    val tmp = graft.TempDirs.ephemeral("graft_q194_")
-    val dir = tmp.resolve("orders_csv").toString
-    // the corruption must be STRUCTURAL (wrong token count): a mere
-    // type-cast failure nulls the field without flagging the record
-    ord.select(
-        when(pmod(col("o_orderkey"), lit(CsvCorruptMod)) === 0,
-          concat_ws(",", col("o_orderkey"), col("o_totalprice"),
-            lit("UNEXPECTED_TRAILING_FIELD")))
-          .otherwise(concat_ws(",", col("o_orderkey"), col("o_totalprice")))
-          .as("value"))
-      .write.mode("overwrite").text(dir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("o_orderkey",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("o_totalprice",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("_corrupt_record",
-        org.apache.spark.sql.types.StringType)))
-    // reference EVERY schema column: CSV column pruning skips token
-    // parsing for unused columns, and unparsed tokens can't flag the
-    // record — a pruned read would report everything as clean
-    val res = graft.Checkpoints.materialize(spark.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .csv(dir)
-      .select(when(col("_corrupt_record").isNull, "parsed").otherwise("rescued")
-        .as("status"), col("o_orderkey"), col("o_totalprice"))
-      .groupBy(col("status"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(pmod(col("o_orderkey"), lit(97L))).as("key_checksum"),
-        asD(dsum(coalesce(col("o_totalprice"), lit(0.0)))).as("value_mass"))
-      .orderBy(col("status")))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q194_") { tmp =>
+      val dir = tmp.resolve("orders_csv").toString
+      // the corruption must be STRUCTURAL (wrong token count): a mere
+      // type-cast failure nulls the field without flagging the record
+      ord.select(
+          when(pmod(col("o_orderkey"), lit(CsvCorruptMod)) === 0,
+            concat_ws(",", col("o_orderkey"), col("o_totalprice"),
+              lit("UNEXPECTED_TRAILING_FIELD")))
+            .otherwise(concat_ws(",", col("o_orderkey"), col("o_totalprice")))
+            .as("value"))
+        .write.mode("overwrite").text(dir)
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("o_orderkey",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("o_totalprice",
+          org.apache.spark.sql.types.DoubleType),
+        org.apache.spark.sql.types.StructField("_corrupt_record",
+          org.apache.spark.sql.types.StringType)))
+      // reference EVERY schema column: CSV column pruning skips token
+      // parsing for unused columns, and unparsed tokens can't flag the
+      // record — a pruned read would report everything as clean
+      graft.Checkpoints.materialize(spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .csv(dir)
+        .select(when(col("_corrupt_record").isNull, "parsed").otherwise("rescued")
+          .as("status"), col("o_orderkey"), col("o_totalprice"))
+        .groupBy(col("status"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(pmod(col("o_orderkey"), lit(97L))).as("key_checksum"),
+          asD(dsum(coalesce(col("o_totalprice"), lit(0.0)))).as("value_mass"))
+        .orderBy(col("status")))
+    }
   }
 
   val q194Sql: String =

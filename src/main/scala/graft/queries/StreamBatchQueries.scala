@@ -57,34 +57,29 @@ object StreamBatchQueries {
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         timestamp_micros(expr("ts div 1000"))
       else col("ts").cast("timestamp")
-    val tmp = graft.TempDirs.ephemeral("graft_q98_")
-    val outDir = tmp.resolve("out").toString
-    val cpDir = tmp.resolve("cp").toString
-    // events.parquet is a single FILE; the file stream source requires a
-    // directory base path, so glob one character — the base becomes the
-    // sf directory while the pattern still matches only this file.
-    val agg = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
-      .select(tsEventTime.as("ts"),
-        col("event_type"), col("value"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("tv"))
-      .select(unix_micros(col("window.start")).as("window_start_us"),
-        col("event_type"), col("n_events"), asD(col("tv")).as("total_value"))
-    agg.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    // Materialize eagerly so the temp sink files can be deleted before
-    // the caller consumes the frame.
-    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
-      .orderBy(col("window_start_us"), col("event_type")))
-    try { // best-effort temp cleanup; the result no longer reads it
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q98_") { tmp =>
+      val outDir = tmp.resolve("out").toString
+      val cpDir = tmp.resolve("cp").toString
+      // events.parquet is a single FILE; the file stream source requires a
+      // directory base path, so glob one character — the base becomes the
+      // sf directory while the pattern still matches only this file.
+      val agg = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
+        .select(tsEventTime.as("ts"),
+          col("event_type"), col("value"))
+        .withWatermark("ts", "2 hours")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("tv"))
+        .select(unix_micros(col("window.start")).as("window_start_us"),
+          col("event_type"), col("n_events"), asD(col("tv")).as("total_value"))
+      agg.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", cpDir)
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      // Materialize eagerly so the temp sink files can be deleted before
+      // the caller consumes the frame.
+      graft.Checkpoints.materialize(spark.read.parquet(outDir)
+        .orderBy(col("window_start_us"), col("event_type")))
+    }
   }
 
   val q98Sql: String =
@@ -132,31 +127,26 @@ object StreamBatchQueries {
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         timestamp_micros(expr("ts div 1000"))
       else col("ts").cast("timestamp")
-    val tmp = graft.TempDirs.ephemeral("graft_q111_")
-    val outDir = tmp.resolve("out").toString
-    val cpDir = tmp.resolve("cp").toString
-    val agg = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
-      .select(tsEventTime.as("ts"), col("user_id"), col("value"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(col("user_id"), session_window(col("ts"), SessGap))
-      .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("tv"),
-        max(col("ts")).as("last_ts"))
-      .select(col("user_id"),
-        unix_micros(col("session_window.start")).as("session_start_us"),
-        unix_micros(col("last_ts")).as("session_end_us"),
-        col("n_events"), asD(col("tv")).as("session_value"))
-    agg.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
-      .orderBy(col("user_id"), col("session_start_us")))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q111_") { tmp =>
+      val outDir = tmp.resolve("out").toString
+      val cpDir = tmp.resolve("cp").toString
+      val agg = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
+        .select(tsEventTime.as("ts"), col("user_id"), col("value"))
+        .withWatermark("ts", "2 hours")
+        .groupBy(col("user_id"), session_window(col("ts"), SessGap))
+        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("tv"),
+          max(col("ts")).as("last_ts"))
+        .select(col("user_id"),
+          unix_micros(col("session_window.start")).as("session_start_us"),
+          unix_micros(col("last_ts")).as("session_end_us"),
+          col("n_events"), asD(col("tv")).as("session_value"))
+      agg.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", cpDir)
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      graft.Checkpoints.materialize(spark.read.parquet(outDir)
+        .orderBy(col("user_id"), col("session_start_us")))
+    }
   }
 
   val q111Sql: String =
@@ -203,30 +193,25 @@ object StreamBatchQueries {
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         timestamp_micros(expr("ts div 1000"))
       else col("ts").cast("timestamp")
-    val tmp = graft.TempDirs.ephemeral("graft_q132_")
-    val outDir = tmp.resolve("out").toString
-    val cpDir = tmp.resolve("cp").toString
-    val deduped = spark.readStream.schema(raw.schema)
-      .parquet(s"$sfDir/[e]vents.parquet")
-      .select(date_trunc("hour", tsEventTime).as("hour"),
-        col("user_id"), col("event_type"))
-      .withWatermark("hour", "2 hours")
-      .dropDuplicates("user_id", "event_type", "hour")
-    deduped.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_unique"),
-        countDistinct(col("user_id")).as("n_users"))
-      .orderBy(col("event_type")))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q132_") { tmp =>
+      val outDir = tmp.resolve("out").toString
+      val cpDir = tmp.resolve("cp").toString
+      val deduped = spark.readStream.schema(raw.schema)
+        .parquet(s"$sfDir/[e]vents.parquet")
+        .select(date_trunc("hour", tsEventTime).as("hour"),
+          col("user_id"), col("event_type"))
+        .withWatermark("hour", "2 hours")
+        .dropDuplicates("user_id", "event_type", "hour")
+      deduped.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", cpDir)
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      graft.Checkpoints.materialize(spark.read.parquet(outDir)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_unique"),
+          countDistinct(col("user_id")).as("n_users"))
+        .orderBy(col("event_type")))
+    }
   }
 
   val q132Sql: String =
@@ -256,33 +241,28 @@ object StreamBatchQueries {
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         timestamp_micros(expr("ts div 1000"))
       else c.cast("timestamp")
-    val tmp = graft.TempDirs.ephemeral("graft_q142_")
-    val outDir = tmp.resolve("out").toString
-    val cpDir = tmp.resolve("cp").toString
-    def src(): DataFrame =
-      spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
-    val errors = src().filter(col("event_type") === "error")
-      .select(col("user_id"), ts(col("ts")).as("ets"), col("event_id").as("eid"))
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user_id"), ts(col("ts")).as("cts"),
-        col("event_id").as("cid"))
-    graft.streaming.StreamingWindows.recentClickJoin(errors, clicks)
-      .select(col("user_id"), col("eid"), col("cid"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_pairs"),
-        countDistinct(col("eid")).as("n_errors_with_click"))
-      .orderBy(col("user_id")))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q142_") { tmp =>
+      val outDir = tmp.resolve("out").toString
+      val cpDir = tmp.resolve("cp").toString
+      def src(): DataFrame =
+        spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
+      val errors = src().filter(col("event_type") === "error")
+        .select(col("user_id"), ts(col("ts")).as("ets"), col("event_id").as("eid"))
+      val clicks = src().filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user_id"), ts(col("ts")).as("cts"),
+          col("event_id").as("cid"))
+      graft.streaming.StreamingWindows.recentClickJoin(errors, clicks)
+        .select(col("user_id"), col("eid"), col("cid"))
+        .writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", cpDir)
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      graft.Checkpoints.materialize(spark.read.parquet(outDir)
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_pairs"),
+          countDistinct(col("eid")).as("n_errors_with_click"))
+        .orderBy(col("user_id")))
+    }
   }
 
   val q142Sql: String =
@@ -333,26 +313,22 @@ object StreamBatchQueries {
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         timestamp_micros(expr("ts div 1000"))
       else col("ts").cast("timestamp")
-    val tmp = graft.TempDirs.ephemeral("graft_q172_")
-    val outDir = tmp.resolve("out").toString
-    val cpDir = tmp.resolve("cp").toString
-    val agg = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
-      .select(tsEventTime.as("ts"), col("event_type"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "30 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(unix_micros(col("window.start")).as("ws"),
-        col("event_type"), col("n_events"))
-    agg.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    val sink = graft.Checkpoints.materialize(spark.read.parquet(outDir))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
+    val sink = graft.TempDirs.withEphemeral("graft_q172_") { tmp =>
+      val outDir = tmp.resolve("out").toString
+      val cpDir = tmp.resolve("cp").toString
+      val agg = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
+        .select(tsEventTime.as("ts"), col("event_type"))
+        .withWatermark("ts", "2 hours")
+        .groupBy(window(col("ts"), "30 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(unix_micros(col("window.start")).as("ws"),
+          col("event_type"), col("n_events"))
+      agg.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", cpDir)
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      graft.Checkpoints.materialize(spark.read.parquet(outDir))
+    }
     val prev = sink.select((col("ws") + TrendWindowUs).as("ws"),
       col("event_type"), col("n_events").as("prev_n"))
     val w = Window.partitionBy(col("ws"))
@@ -430,35 +406,30 @@ object StreamBatchQueries {
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         timestamp_micros(expr("ts div 1000"))
       else col("ts").cast("timestamp")
-    val tmp = graft.TempDirs.ephemeral("graft_q302_")
-    val outDir = tmp.resolve("out").toString
-    val cpDir = tmp.resolve("cp").toString
-    val src = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
-      .select(col("user_id").as("userId"),
-        unix_micros(tsEventTime).as("tsUs"),
-        floor(col("value") * lit(1e6) + lit(0.5)).cast("double").as("value"))
-    val sp = spark
-    import sp.implicits._
-    val sess = graft.streaming.StreamingWindows.sessionize(
-      src.as[graft.streaming.StreamingWindows.Event],
-      gapMin = 30, watermarkDelay = "2 hours")
-    val out = sess.toDF().select(col("userId").as("user_id"),
-      col("startUs").as("session_start_us"),
-      col("endUs").as("session_end_us"),
-      col("nEvents").as("n_events"),
-      col("total").cast("long").as("value_micros"))
-    out.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", cpDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    val res = graft.Checkpoints.materialize(spark.read.parquet(outDir)
-      .orderBy(col("user_id"), col("session_start_us")))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q302_") { tmp =>
+      val outDir = tmp.resolve("out").toString
+      val cpDir = tmp.resolve("cp").toString
+      val src = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
+        .select(col("user_id").as("userId"),
+          unix_micros(tsEventTime).as("tsUs"),
+          floor(col("value") * lit(1e6) + lit(0.5)).cast("double").as("value"))
+      val sp = spark
+      import sp.implicits._
+      val sess = graft.streaming.StreamingWindows.sessionize(
+        src.as[graft.streaming.StreamingWindows.Event],
+        gapMin = 30, watermarkDelay = "2 hours")
+      val out = sess.toDF().select(col("userId").as("user_id"),
+        col("startUs").as("session_start_us"),
+        col("endUs").as("session_end_us"),
+        col("nEvents").as("n_events"),
+        col("total").cast("long").as("value_micros"))
+      out.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", cpDir)
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      graft.Checkpoints.materialize(spark.read.parquet(outDir)
+        .orderBy(col("user_id"), col("session_start_us")))
+    }
   }
 
   val q302Sql: String =

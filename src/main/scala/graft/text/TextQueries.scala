@@ -1516,21 +1516,16 @@ ORDER BY n.doc_id"""
     * aggregate is one partial-agged groupBy(source). */
   def q106JsonlIo(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val tmp = graft.TempDirs.ephemeral("graft_q106_")
-    val dir = tmp.resolve("docs_jsonl").toString
-    docs.write.mode("overwrite").json(dir)
-    val res = graft.Checkpoints.materialize(spark.read.schema(docs.schema).json(dir)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("total_chars"),
-        sum(MF.hash32(col("text"))).as("text_checksum"))
-      .orderBy(col("source")))
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    res
+    graft.TempDirs.withEphemeral("graft_q106_") { tmp =>
+      val dir = tmp.resolve("docs_jsonl").toString
+      docs.write.mode("overwrite").json(dir)
+      graft.Checkpoints.materialize(spark.read.schema(docs.schema).json(dir)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("total_chars"),
+          sum(MF.hash32(col("text"))).as("text_checksum"))
+        .orderBy(col("source")))
+    }
   }
 
   val q106Sql: String =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.MathFunctions
 import graft.plans.ErfMath
 
-/** The native Erf expression must agree bitwise with the composed
+/** The native graft_erf kernel must agree bitwise with the composed
   * Column formula (MathFunctions.erf) the oracle-verified queries use,
   * and must be reachable from SQL via the session extension.
   */

@@ -63,6 +63,22 @@ class R11OptSpec extends GraftSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
   }
 
+  test("TempDirs.withEphemeral deletes its dir when the body throws") {
+    var seen: java.nio.file.Path = null
+    val e = intercept[IllegalStateException] {
+      TempDirs.withEphemeral("graft_spec_throw_") { d =>
+        seen = d
+        java.nio.file.Files.createDirectories(d.resolve("sub"))
+        java.nio.file.Files.write(d.resolve("sub").resolve("f"), Array[Byte](1))
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(seen != null && !java.nio.file.Files.exists(seen), s"$seen was left behind")
+    val kept = TempDirs.withEphemeral("graft_spec_ok_") { d => seen = d; 7 }
+    assert(kept == 7 && !java.nio.file.Files.exists(seen))
+  }
+
   test("TempDirs.ephemeral is writable and prefers tmpfs when present") {
     val d = TempDirs.ephemeral("graft_spec_")
     try {

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => VF}
 
-/** Pins the native codegen vector kernels (graft.plans.ArrayDot /
-  * ArrayDist2) bitwise to the composed higher-order-function
+/** Pins the native codegen vector kernels (graft_dot / graft_dist2,
+  * graft.plans.ArrayKernelMath) bitwise to the composed higher-order-function
   * formulation they replace — the HOF form is what the DuckDB oracle
   * mirrors, so bitwise equality here is what keeps the 41-query hash
   * gate valid after the kernel swap.
