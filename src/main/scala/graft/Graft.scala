@@ -243,25 +243,15 @@ object Graft {
   /** Benchmark decontamination over caller frames: score every training
     * document's 3-gram-shingle overlap against the union shingle set of
     * a held-out benchmark frame. Returns (doc_id, n_shingles, n_overlap,
-    * overlap_frac, contaminated). Map-only over the training side — the
-    * benchmark set is broadcast, guarded by `maxBenchShingles` (an
-    * oversized slice fails loudly instead of OOMing; see
-    * DedupQueries.benchUnionSet). */
+    * overlap_frac, contaminated). Map-only over the training side while
+    * the benchmark set's size bound fits
+    * `spark.sql.autoBroadcastJoinThreshold` (the set is broadcast);
+    * past it the same rows come from an equi-join of the exploded
+    * training shingles against the benchmark's distinct hashes, which
+    * shuffles the training side (see DedupQueries.decontaminateSets). */
   def decontaminate(train: DataFrame, id: Column, text: Column,
-                    bench: DataFrame, benchText: Column,
-                    maxBenchShingles: Long = dedup.DedupQueries.MaxBenchShingles): DataFrame =
+                    bench: DataFrame, benchText: Column): DataFrame =
     dedup.DedupQueries.decontaminateSets(
-      train.select(id.as("doc_id"), shingleSet(text).as("s")),
-      bench.select(shingleSet(benchText).as("s")),
-      maxBenchShingles)
-
-  /** [[decontaminate]] for a benchmark too large to broadcast: the
-    * exploded training shingles equi-join the benchmark's distinct hash
-    * set — identical output, no size cap, at the price of shuffling the
-    * training corpus's shingles. */
-  def decontaminateJoin(train: DataFrame, id: Column, text: Column,
-                        bench: DataFrame, benchText: Column): DataFrame =
-    dedup.DedupQueries.decontaminateJoinSets(
       train.select(id.as("doc_id"), shingleSet(text).as("s")),
       bench.select(shingleSet(benchText).as("s")))
 
@@ -278,12 +268,12 @@ object Graft {
       bench.select(shingleSet(benchText).as("s")), numBits)
 
   /** Per-vertex triangle count + local clustering coefficient over any
-    * (src, dst) edge frame — oriented a<b<c enumeration. Defaults to
-    * the any-size shuffle-join plan; pass `broadcastEdges = true` only
-    * for a known-bounded edge set (see graph.Triangles). */
-  def triangles(edges: DataFrame, src: Column, dst: Column,
-                broadcastEdges: Boolean = false): DataFrame =
-    graph.Triangles.run(edges.select(src.as("src"), dst.as("dst")), broadcastEdges)
+    * (src, dst) edge frame — oriented a<b<c enumeration. The wedge
+    * joins broadcast the canonical edge set while its measured size
+    * fits `spark.sql.autoBroadcastJoinThreshold` and shuffle past it
+    * (see graph.Triangles). */
+  def triangles(edges: DataFrame, src: Column, dst: Column): DataFrame =
+    graph.Triangles.run(edges.select(src.as("src"), dst.as("dst")))
 
   /** Connected components over any (src, dst) edge frame: (id,
     * component) with component = the minimum id reachable over
@@ -709,13 +699,13 @@ object Graft {
     * frames (q163's engine): child rows/keys, null FKs, orphan
     * keys/rows and orphan rate, as one labeled row. Orphans are
     * NON-NULL child keys missing from the parent (SQL FK semantics).
-    * Set `broadcastParent` only for known-bounded parents. */
+    * Spark picks the parent join's strategy from the parent's size
+    * statistics under `spark.sql.autoBroadcastJoinThreshold`. */
   def fkAudit(relationship: String, child: DataFrame, fk: Column,
-              parent: DataFrame, pk: Column,
-              broadcastParent: Boolean = false): DataFrame =
+              parent: DataFrame, pk: Column): DataFrame =
     queries.RelationalQueries.fkAudit(relationship,
       child.select(fk.as("fk0")), "fk0",
-      parent.select(pk.as("pk0")), "pk0", broadcastParent)
+      parent.select(pk.as("pk0")), "pk0")
 
   /** Tie-aware ROC AUC of `score` against a binary `outcome` (q161's
     * engine on caller frames): the Mann-Whitney identity computed on

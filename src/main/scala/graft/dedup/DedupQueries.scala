@@ -468,51 +468,40 @@ FROM final ORDER BY doc_id"""
   val BenchMod = 50 // every 50th doc plays the held-out benchmark
   val ContaminationMax = 0.5
 
-  /** Hard cap on the broadcast benchmark union set: 4M shingle hashes
-    * ≈ 32 MB of longs resident on every executor — comfortably inside
-    * a broadcast. The map-only decontamination shape is only correct
-    * while the held-out slice is SMALL; this makes that contract loud
-    * instead of letting an oversized "benchmark" OOM the driver. */
-  val MaxBenchShingles: Long = 4L << 20
+  /** True while the held-out slice's union shingle-hash set fits
+    * Spark's broadcast threshold, judged by an upper bound (Σ per-doc
+    * set sizes ≥ |union|, 8 bytes a hash): one O(1)-row map-only scalar
+    * job over the benchmark slice that never materializes the union,
+    * so it cannot itself OOM. The bound is conservative and can say no
+    * to a heavily overlapping slice. */
+  private def benchSetFits(benchSets: DataFrame): Boolean =
+    graft.Broadcasts.fits(benchSets.sparkSession, 8L * benchSets
+      .agg(coalesce(sum(size(col("s")).cast("long")), lit(0L))).first().getLong(0))
 
-  /** The held-out slice's union shingle-hash set as ONE sorted
-    * broadcastable row — GUARDED: before the `collect_list` that
-    * funnels every shingle into a single row, a cheap map-only scalar
-    * aggregate bounds the set size (Σ per-doc set sizes ≥ |union|) and
-    * fails loudly over the cap. The pre-check costs one O(1)-row job
-    * over the benchmark slice only and, crucially, cannot itself OOM —
-    * it never materializes the union. A conservative bound can
-    * false-trip on heavily overlapping slices; the error says so and
-    * names the fallback (the shd⋈bset join shape of q26Sql, which
-    * scales to any benchmark size at the price of shuffling the
-    * training shingles). */
-  private[graft] def benchUnionSet(benchSets: DataFrame,
-                                   cap: Long = MaxBenchShingles): DataFrame = {
-    val bound = benchSets
-      .agg(coalesce(sum(size(col("s")).cast("long")), lit(0L))).first().getLong(0)
-    if (bound > cap) throw new IllegalArgumentException(
-      s"graft decontamination: the held-out slice carries $bound shingle hashes " +
-        s"(upper bound on the union set) > cap $cap. Broadcasting it risks a " +
-        "driver/executor OOM — shrink the benchmark slice, raise the cap if the " +
-        "cluster affords the memory, or decontaminate via an exploded " +
-        "shingle-hash equi-join against the benchmark set instead of the " +
-        "broadcast merge-walk.")
+  /** The held-out slice's union shingle-hash set as ONE sorted row. */
+  private def benchUnionSet(benchSets: DataFrame): DataFrame =
     benchSets.agg(sort_array(array_distinct(flatten(collect_list(col("s"))))).as("bs"))
+
+  /** (doc_id, n_shingles, n_overlap) plus the overlap fraction and the
+    * contaminated flag — every decontamination shape's output. */
+  private def scored(counts: DataFrame): DataFrame = {
+    val frac = round(col("n_overlap").cast("double") / col("n_shingles"), 6)
+    counts.select(col("doc_id"), col("n_shingles"), col("n_overlap"),
+      frac.as("overlap_frac"), (frac > ContaminationMax).as("contaminated"))
   }
 
   /** Per-train-doc overlap scoring of `trainSets(doc_id, s)` against the
-    * guarded benchmark union set — the map-only core shared by q26 and
-    * the Graft facade. */
-  private[graft] def decontaminateSets(trainSets: DataFrame, benchSets: DataFrame,
-                                       cap: Long = MaxBenchShingles): DataFrame = {
-    val frac = round(col("n_overlap").cast("double") / col("n_shingles"), 6)
-    trainSets
-      .crossJoin(broadcast(benchUnionSet(benchSets, cap)))
+    * benchmark's union set — shared by q26 and the Graft facade. While
+    * [[benchSetFits]] the set is broadcast and each doc scores itself
+    * map-only; past it the same rows come from the join shape
+    * ([[decontaminateJoinSets]]). */
+  private[graft] def decontaminateSets(trainSets: DataFrame,
+                                       benchSets: DataFrame): DataFrame =
+    if (benchSetFits(benchSets)) scored(trainSets
+      .crossJoin(broadcast(benchUnionSet(benchSets)))
       .select(col("doc_id"), size(col("s")).as("n_shingles"),
-        call_function("graft_intersect_count", col("s"), col("bs")).as("n_overlap"))
-      .select(col("doc_id"), col("n_shingles"), col("n_overlap"),
-        frac.as("overlap_frac"), (frac > ContaminationMax).as("contaminated"))
-  }
+        call_function("graft_intersect_count", col("s"), col("bs")).as("n_overlap")))
+    else decontaminateJoinSets(trainSets, benchSets)
 
   /** Benchmark decontamination — the train/eval hygiene check a
     * pretraining pipeline runs before training: for every training
@@ -522,9 +511,9 @@ FROM final ORDER BY doc_id"""
     * sorted array built by a tree aggregation over the (small)
     * benchmark slice and broadcast; each training doc then scores
     * itself with a compiled merge-walk against its own in-row set —
-    * map-only over the training corpus, no join on the big side. The
-    * slice size is contract-checked against [[MaxBenchShingles]]
-    * (see [[benchUnionSet]]). */
+    * map-only over the training corpus, no join on the big side. A
+    * slice whose size bound does not fit Spark's broadcast threshold
+    * takes q27's join shape instead (see [[decontaminateSets]]). */
   def q26Decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     val sets = Tables.documents(spark, sfDir)
       .select(col("doc_id"), call_function("graft_shingle_set", col("text")).as("s"))
@@ -534,28 +523,24 @@ FROM final ORDER BY doc_id"""
   }
 
   // ---------------------------------------------------------------- q27
-  /** Join-shape decontamination — the fallback [[benchUnionSet]]'s
-    * guard points at, as a first-class verified operator: the exploded
-    * training shingle hashes equi-join the benchmark's distinct hash
-    * set, then re-group per doc. Identical output to q26 (same schema,
-    * same values — the driver hashes both against the same oracle), but
-    * the scale contract inverts: works for ANY benchmark size (nothing
-    * is broadcast or collected) at the price of shuffling the training
-    * corpus's shingles — choose q26's broadcast merge-walk while the
-    * held-out slice is small, this once it isn't. */
+  /** Join-shape decontamination — [[decontaminateSets]]'s shape past
+    * the broadcast threshold, as a first-class verified operator: the
+    * exploded training shingle hashes equi-join the benchmark's
+    * distinct hash set, then re-group per doc. Identical output to q26
+    * (same schema, same values — both are hashed against the same
+    * oracle), but the scale contract inverts: works for ANY
+    * benchmark size (nothing is broadcast or collected) at the price
+    * of shuffling the training corpus's shingles. */
   private[graft] def decontaminateJoinSets(trainSets: DataFrame,
                                            benchSets: DataFrame): DataFrame = {
     val bset = benchSets.select(explode(col("s")).as("h")).distinct()
     val overlaps = trainSets.select(col("doc_id"), explode(col("s")).as("h"))
       .join(bset, "h")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("o"))
-    val frac = round(col("n_overlap").cast("double") / col("n_shingles"), 6)
-    trainSets.select(col("doc_id"), size(col("s")).as("n_shingles"))
+    scored(trainSets.select(col("doc_id"), size(col("s")).as("n_shingles"))
       .join(overlaps, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_shingles"),
-        coalesce(col("o"), lit(0L)).as("n_overlap"))
-      .select(col("doc_id"), col("n_shingles"), col("n_overlap"),
-        frac.as("overlap_frac"), (frac > ContaminationMax).as("contaminated"))
+        coalesce(col("o"), lit(0L)).as("n_overlap")))
   }
 
   def q27DecontaminateJoin(spark: SparkSession, sfDir: String): DataFrame = {
@@ -567,7 +552,7 @@ FROM final ORDER BY doc_id"""
   }
 
   /** Bloom-filter decontamination — the middle path between q26's
-    * exact broadcast set (bounded by [[MaxBenchShingles]]) and q27's
+    * exact broadcast set (bounded by the broadcast threshold) and q27's
     * full shuffle join: the benchmark shingle hashes fold into a
     * fixed-size Bloom sketch (`bloom_filter_agg`, `numBits` bounds the
     * broadcast NO MATTER how many shingles the benchmark holds), and
@@ -592,13 +577,8 @@ FROM final ORDER BY doc_id"""
       .agg(call_function("graft_bloom_agg", col("h"),
         lit(math.max(1L, numBits / 8)), lit(numBits)).as("bf"))
       .first().getAs[Array[Byte]](0)
-    val frac = round(col("n_overlap").cast("double") / col("n_shingles"), 6)
-    trainSets
-      .select(col("doc_id"), size(col("s")).as("n_shingles"),
-        call_function("graft_bloom_count_contains", lit(bf), col("s"))
-          .as("n_overlap"))
-      .select(col("doc_id"), col("n_shingles"), col("n_overlap"),
-        frac.as("overlap_frac"), (frac > ContaminationMax).as("contaminated"))
+    scored(trainSets.select(col("doc_id"), size(col("s")).as("n_shingles"),
+      call_function("graft_bloom_count_contains", lit(bf), col("s")).as("n_overlap")))
   }
 
   val q26Sql: String =
@@ -669,9 +649,10 @@ ORDER BY da, db"""
     * (plans.BloomKernelMath.pbloomBuild — bit positions are the repo's
     * universal-hash family, public integer arithmetic): the benchmark's
     * distinct shingle hashes fold into a fixed-size bitset built once
-    * driver-side (the element set rides the same [[MaxBenchShingles]]
-    * cap as q26's union set), embedded as a literal, and every training
-    * doc probes it map-only with the compiled O(k)-bit-test kernel.
+    * driver-side (the element set must fit the broadcast threshold, see
+    * [[benchSetFits]]; past it this fails loudly), embedded as a
+    * literal, and every training doc probes it map-only with the
+    * compiled O(k)-bit-test kernel.
     * One-sided error: NO false negatives; false positives inflate
     * `n_overlap` by ~fpp, so the contaminated flag is a SUPERSET of the
     * exact one — the conservative direction train/eval hygiene wants.
@@ -682,14 +663,14 @@ ORDER BY da, db"""
   private[graft] def decontaminatePortableBloomSets(
       trainSets: DataFrame, benchSets: DataFrame,
       numBits: Long = PBloomBits, k: Int = PBloomK): DataFrame = {
+    require(benchSetFits(benchSets), "graft decontamination: the held-out " +
+      "slice's shingle-hash set may be past spark.sql.autoBroadcastJoinThreshold; " +
+      "collecting it to the driver risks an OOM. Shrink the slice, raise the " +
+      "setting if the cluster affords the memory, or use the exact join shape (q27).")
     val elems = benchUnionSet(benchSets).first().getSeq[Long](0).toArray
     val blob = graft.plans.BloomKernelMath.pbloomBuild(elems, numBits, k)
-    val frac = round(col("n_overlap").cast("double") / col("n_shingles"), 6)
-    trainSets
-      .select(col("doc_id"), size(col("s")).as("n_shingles"),
-        call_function("graft_pbloom_hits", lit(blob), col("s")).as("n_overlap"))
-      .select(col("doc_id"), col("n_shingles"), col("n_overlap"),
-        frac.as("overlap_frac"), (frac > ContaminationMax).as("contaminated"))
+    scored(trainSets.select(col("doc_id"), size(col("s")).as("n_shingles"),
+      call_function("graft_pbloom_hits", lit(blob), col("s")).as("n_overlap")))
   }
 
   /** The Bloom path as a DRIVER-GATED row (r10): q26's schema and
@@ -1613,22 +1594,6 @@ FROM g$LkEmRounds ORDER BY g1 DESC, g2 DESC, g3 DESC"""
   val JwThreshold = 0.8
   val JwLenBand = 1
 
-  /** Rows above which the (exploded) vocabulary index stops
-    * BROADCASTING and falls back to the planner's shuffle join —
-    * CoCitation.BroadcastMaxEdges' discipline for the linkage keys. A
-    * dictionary is Heaps-law bounded so the gate should never trip on
-    * text, but "should" is not a plan property: ~4M short-string rows
-    * ≈ 150 MB is the outer edge of a sane executor broadcast. */
-  val VocabBroadcastMax: Long = 4L << 20
-
-  /** Eagerly materialize `df` (cheap count, single substantiation for
-    * both the gate and the join) and broadcast it only while it is
-    * broadcast-sized. Blocks are deferred to the per-query drain. */
-  private def sizeGatedBroadcast(df: DataFrame): DataFrame = {
-    val cp = graft.Checkpoints.materialize(df)
-    if (cp.count() <= VocabBroadcastMax) broadcast(cp) else cp
-  }
-
   // --------------------------------------------------------------- q308
   /** Fuzzy dictionary lookup via Jaro–Winkler — the OOV-repair shape a
     * text pipeline runs after tokenization (map noisy/typo'd tokens
@@ -1655,11 +1620,11 @@ FROM g$LkEmRounds ORDER BY g1 DESC, g2 DESC, g3 DESC"""
     * touches only its three length slices — identical candidate SET,
     * since a vocab token's length matches exactly one key, so no
     * dedup pass is needed), and the JW kernel runs on candidates only.
-    * The vocabulary frame is broadcast while it is broadcast-sized
-    * ([[VocabBroadcastMax]]; Heaps' law says it stays so, the gate
-    * makes that a measured fact, not an assumption) and degrades to
-    * the planner's shuffle join beyond. Best-match is a per-doc window
-    * over the candidate slice. No corpus-sized exchange anywhere: the
+    * The vocabulary frame is broadcast while its measured size fits
+    * the broadcast threshold (graft.Broadcasts.bounded; Heaps' law says
+    * it stays so, the gate makes that a measured fact, not an
+    * assumption) and degrades to the planner's shuffle join beyond.
+    * Best-match is a per-doc window over the candidate slice. No corpus-sized exchange anywhere: the
     * only shuffles are the census and the final sort. */
   def q308JwLinkage(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
@@ -1682,7 +1647,7 @@ FROM g$LkEmRounds ORDER BY g1 DESC, g2 DESC, g3 DESC"""
       .select(col("doc_id"), col("noisy"),
         explode(sequence(length(col("noisy")) - JwLenBand,
           length(col("noisy")) + JwLenBand)).as("blk"))
-      .join(sizeGatedBroadcast(vocab.withColumn("blk", length(col("vtok")))),
+      .join(graft.Broadcasts.bounded(vocab.withColumn("blk", length(col("vtok")))),
         Seq("blk"))
       .withColumn("jw", round(expr("graft_jaro_winkler(noisy, vtok)"), 6))
       .filter(col("jw") >= JwThreshold)
@@ -1756,9 +1721,10 @@ FROM ranked WHERE rk = 1 ORDER BY doc_id"""
     * kernel invocations drop from |probes|·|band slice| to |collided
     * pairs|. The exploded vocabulary index (the SymSpell dictionary a
     * single-node implementation precomputes; ~L²/2 variants per token,
-    * Heaps-bounded overall) is broadcast while broadcast-sized
-    * ([[VocabBroadcastMax]]), shuffle-joined beyond. Only the census,
-    * the pair dedup, and the final sort shuffle. */
+    * Heaps-bounded overall) is broadcast while its measured size fits
+    * the broadcast threshold (graft.Broadcasts.bounded), shuffle-joined
+    * beyond. Only the census, the pair dedup, and the final sort
+    * shuffle. */
   def q309DlLinkage(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
@@ -1788,7 +1754,7 @@ FROM ranked WHERE rk = 1 ORDER BY doc_id"""
     val cand = noisy
       .select(col("doc_id"), col("noisy"),
         explode(expr(s"graft_deletes(noisy, $DlMax)")).as("blk"))
-      .join(sizeGatedBroadcast(vocabIdx), Seq("blk"))
+      .join(graft.Broadcasts.bounded(vocabIdx), Seq("blk"))
       .filter(abs(length(col("noisy")) - length(col("vtok"))) <= 1)
       .select(col("doc_id"), col("noisy"), col("vtok"))
       .distinct() // pairs collide on every shared variant; score once

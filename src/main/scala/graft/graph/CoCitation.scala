@@ -15,24 +15,19 @@ import org.apache.spark.sql.functions._
   *
   * Shape for 100 TB: vertex ids map once to 8-byte surrogate vids
   * (LinkRank.vmapFor — the session-shared rank-family map), both wedge
-  * streams are generated by a BROADCAST self-join of the bounded edge
-  * frame and collapse map-side (hash partial agg) into distinct-pair
-  * counts, so a wedge row never rides an exchange (q55/q79's
-  * discipline); pair canonicalization runs on vids (each unordered
-  * pair generated once) and the final a < b ordering is re-established
-  * on the original ids after the map-back, which touches only the
-  * ≤|pairs| aggregated frame. `degreeCap > 0` drops super-hub wedge
-  * centers BEFORE the quadratic fan-out (a degree-d center emits d²
-  * wedges and near-zero pair signal at web scale); ≤0 disables the cap
-  * on bounded projections like the 200-host fixture graph. */
+  * streams are generated by a self-join of the edge frame (broadcast
+  * while it fits the threshold, graft.Broadcasts) and collapse
+  * map-side (hash partial agg) into distinct-pair counts, so a wedge
+  * row never rides an exchange (q55/q79's discipline); pair
+  * canonicalization runs on vids (each unordered pair generated once)
+  * and the final a < b ordering is re-established on the original ids
+  * after the map-back (against the id map, broadcast only while
+  * LinkRank.vmapFor finds it small), which touches only the ≤|pairs|
+  * aggregated frame. `degreeCap > 0` drops super-hub wedge centers
+  * BEFORE the quadratic fan-out (a degree-d center emits d² wedges and
+  * near-zero pair signal at web scale); ≤0 disables the cap on bounded
+  * projections like the 200-host fixture graph. */
 object CoCitation {
-
-  /** Rows above which the wedge self-join stops BROADCASTING the edge
-    * frame and falls back to the planner's shuffle join (r10 ADVICE:
-    * the broadcast was unconditional, correct only while the
-    * projection stays bounded). ~10M (vs, vd) long pairs ≈ 160 MB —
-    * the outer edge of a sane executor broadcast. */
-  val BroadcastMaxEdges: Long = 10L << 20
 
   /** (a, b, cocitation, coupling) for every a < b pair sharing ≥1
     * citer OR ≥1 citation — a FULL OUTER merge of the two wedge
@@ -46,10 +41,8 @@ object CoCitation {
     val e = graft.Checkpoints.materialize(VertexLoop.vidEdges(edges, vmap)
       .select(col("svid").as("vs"), col("dvid").as("vd")))
     // eager checkpoint ⇒ the count is a cheap block scan; the wedge
-    // self-join broadcasts only while the frame is broadcast-sized
-    val small = e.count() <= BroadcastMaxEdges
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
+    // self-join broadcasts only while the frame fits the threshold
+    val maybeBroadcast = graft.Broadcasts.hint(e)
     def capped(center: String): DataFrame = if (degreeCap > 0) {
       val keep = e.groupBy(col(center)).agg(count(lit(1)).as("deg"))
         .filter(col("deg") <= degreeCap).select(col(center))
@@ -64,8 +57,8 @@ object CoCitation {
     val cocite = wedgePairs(capped("vs"), "vs", "vd", "cocitation")
     val couple = wedgePairs(capped("vd"), "vd", "vs", "coupling")
     cocite.join(couple, Seq("pa", "pb"), "full_outer")
-      .join(broadcast(vmap.select(col("vid").as("pa"), col("id").as("ia"))), "pa")
-      .join(broadcast(vmap.select(col("vid").as("pb"), col("id").as("ib"))), "pb")
+      .join(vmap.select(col("vid").as("pa"), col("id").as("ia")), "pa")
+      .join(vmap.select(col("vid").as("pb"), col("id").as("ib")), "pb")
       .select(least(col("ia"), col("ib")).as("a"),
         greatest(col("ia"), col("ib")).as("b"),
         coalesce(col("cocitation"), lit(0L)).as("cocitation"),

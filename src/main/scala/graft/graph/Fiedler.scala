@@ -11,9 +11,9 @@ import graft.functions.MathFunctions.dsum
   * Rayleigh λ₂ estimate and the sign-cut census.
   *
   * Intended for BOUNDED graphs (host graphs, sampled subgraphs): the
-  * vertex-score frames are broadcast into the edge joins (the
-  * Triangles broadcastEdges argument). See q209 for the full plan
-  * audit.
+  * vertex-score frames are broadcast into the edge joins while they
+  * fit Spark's broadcast threshold (graft.Broadcasts, decided once per
+  * run), and shuffle-joined past it. See q209 for the full plan audit.
   */
 object Fiedler {
 
@@ -40,12 +40,15 @@ object Fiedler {
       (pmod(graft.functions.MathFunctions.hash32(col("id")), lit(1000L))
         .cast("double") / lit(1000.0) - lit(0.5)).as("raw"))
     v = graft.Checkpoints.materialize(normalized(centered(v)))
+    // every score frame of the run has v's rows and width: one count
+    // decides the O(V) broadcasts of all rounds
+    val hint = graft.Broadcasts.hint(v)
     var out: Seq[DataFrame] = Nil
     for (r <- 1 to rounds) {
-      // the score frame is O(vertices of a bounded graph) — broadcast
-      // both attach joins so the edge side never shuffles
-      val av = und.join(broadcast(v.select(col("id").as("u"), col("x").as("xu"))), "u")
-        .join(broadcast(v.select(col("id").as("v"), col("x").as("xv"))), "v")
+      // a broadcast score frame attaches to both edge ends without
+      // shuffling the edge side
+      val av = und.join(hint(v.select(col("id").as("u"), col("x").as("xu"))), "u")
+        .join(hint(v.select(col("id").as("v"), col("x").as("xv"))), "v")
         .select(explode(array(
           struct(col("u").as("id"), col("xv").as("nx")),
           struct(col("v").as("id"), col("xu").as("nx")))).as("e"))
@@ -62,14 +65,14 @@ object Fiedler {
         .select(col("id"), col("d"),
           round((col("c") - col("d")) * col("x") + coalesce(col("av"), lit(0.0)), 6)
             .as("raw")))
-      val lam = v.join(broadcast(y.select(col("id"), col("raw").as("y"))), "id")
+      val lam = v.join(hint(y.select(col("id"), col("raw").as("y"))), "id")
         .agg(dsum(round(col("x") * col("y"), 6)).cast("double").as("lam_m"))
         .crossJoin(broadcast(cRow))
         .select((col("c") - col("lam_m")).as("lambda2"))
       val vNext = graft.Checkpoints.materialize(normalized(centered(y)))
       val cut = und
-        .join(broadcast(vNext.select(col("id").as("u"), col("x").as("xu"))), "u")
-        .join(broadcast(vNext.select(col("id").as("v"), col("x").as("xv"))), "v")
+        .join(hint(vNext.select(col("id").as("u"), col("x").as("xu"))), "u")
+        .join(hint(vNext.select(col("id").as("v"), col("x").as("xv"))), "v")
         .agg(count(lit(1)).as("n_edges"),
           sum(when((col("xu") >= 0) =!= (col("xv") >= 0), 1L).otherwise(0L))
             .as("cut_edges"))

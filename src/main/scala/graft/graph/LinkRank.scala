@@ -165,8 +165,8 @@ object LinkRank {
     val view = DampedRank.idFrame(spark,
       DampedRank.idMap(spark, cacheKey.map(k => s"rank-vmap:$k"), ids),
       ids.schema.head.dataType)
-    val small = ids.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      spark.sessionState.conf.autoBroadcastJoinThreshold
+    val small = graft.Broadcasts.fits(spark,
+      ids.queryExecution.optimizedPlan.stats.sizeInBytes)
     (if (small) broadcast(view) else view, view.select(col("vid")))
   }
 

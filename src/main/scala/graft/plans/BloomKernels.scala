@@ -50,8 +50,9 @@ object BloomKernelMath {
   }
 
   /** Serialize a portable Bloom sketch of `elems`. Driver-side build:
-    * the element set is already capped by the caller (the q26
-    * MaxBenchShingles posture), so the O(n·k) loop is bounded. */
+    * the caller has already bounded the element set by the broadcast
+    * threshold (DedupQueries.benchSetFits), so the O(n·k) loop is
+    * bounded. */
   def pbloomBuild(elems: Array[Long], numBits: Long, k: Int): Array[Byte] = {
     require(numBits > 0 && (numBits & 63) == 0, "numBits must be a positive multiple of 64")
     val words = new Array[Long]((numBits / 64).toInt)

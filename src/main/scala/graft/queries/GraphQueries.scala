@@ -267,13 +267,10 @@ ORDER BY score DESC, id LIMIT 20"""
     * pipeline reads next to rank (a high-rank host inside a dense
     * cluster is a different animal from one bridging sparse regions).
     * Engine: [[graft.graph.Triangles]] (oriented a<b<c enumeration;
-    * `broadcastEdges = true` is explicit here because the HOST graph is
-    * bounded — 200 hosts at every SF — so the wedge closure runs
-    * map-side; the default is the any-size shuffle plan). */
+    * the HOST graph is bounded — 200 hosts at every SF — so it fits the
+    * broadcast threshold and the wedge closure runs map-side). */
   def q55Triangles(spark: SparkSession, sfDir: String): DataFrame =
-    graft.graph.Triangles
-      .run(WebGraph.cachedHostEdges(spark, sfDir),
-        broadcastEdges = true)
+    graft.graph.Triangles.run(WebGraph.cachedHostEdges(spark, sfDir))
       .orderBy(col("id"))
 
   val q55Sql: String =
@@ -2067,9 +2064,9 @@ ORDER BY v.id"""
     * Adamic–Adar (which weights wedges; this counts them, split by
     * direction). Top [[CoCiteTopK]] by (cocitation desc, a, b).
     *
-    * Shape for 100 TB: see CoCitation.run — broadcast wedge self-joins
-    * on 8-byte vids, map-side collapse before any exchange, optional
-    * hub cap ahead of the quadratic fan-out; the top-k is a
+    * Shape for 100 TB: see CoCitation.run — size-gated broadcast wedge
+    * self-joins on 8-byte vids, map-side collapse before any exchange,
+    * optional hub cap ahead of the quadratic fan-out; the top-k is a
     * TakeOrdered on the aggregated pair frame, never a global sort. */
   def q274Cocitation(spark: SparkSession, sfDir: String): DataFrame = {
     val hedges = WebGraph.cachedHostEdges(spark, sfDir)
@@ -2238,20 +2235,13 @@ SELECT id, round(x, 6) AS katz FROM x$KatzRounds ORDER BY id"""
     * census scalars cross-join as 1-row broadcasts. */
   def q291Triads(spark: SparkSession, sfDir: String): DataFrame = {
     val e = WebGraph.cachedHostEdges(spark, sfDir).select(col("src"), col("dst"))
-    // Host graph = bounded (Triangles' broadcastEdges discipline): the
-    // memoized edge frame is a LogicalRDD with no size statistics, so
-    // the planner can't auto-broadcast it and both wedge-closing joins
-    // shuffle the O(edges·deg) wedge stream (measured 170 MB shuffle,
-    // 4 SortMergeJoins at sf0.1). Broadcasting the edge side closes
-    // wedges map-side; the wedge stream never rides an exchange.
-    // SIZE-GATED (r12, the q308 sizeGatedBroadcast discipline): a real
-    // web corpus' host graph is unbounded, so past
-    // CoCitation.BroadcastMaxEdges the joins fall back to the planner's
-    // shuffle strategy instead of an executor-OOM broadcast. The memoized
-    // frame is persisted, so the gate count is a cheap block scan.
-    val hint: DataFrame => DataFrame =
-      if (e.count() <= graft.graph.CoCitation.BroadcastMaxEdges) broadcast
-      else identity
+    // Broadcasting the edge side closes wedges map-side, so the wedge
+    // stream never rides an exchange (shuffle-joined it measured 170 MB
+    // of shuffle and 4 SortMergeJoins at sf0.1). A real web corpus'
+    // host graph is unbounded, so the hint follows Spark's broadcast
+    // threshold applied to the measured frame (graft.Broadcasts); the
+    // memo is persisted, so the count is a cheap block scan.
+    val hint = graft.Broadcasts.hint(e)
     val cyc = e.select(col("src").as("a"), col("dst").as("b"))
       .join(hint(e.select(col("src").as("b"), col("dst").as("c"))), "b")
       .join(hint(e.select(col("src").as("c"), col("dst").as("a"))), Seq("c", "a"))

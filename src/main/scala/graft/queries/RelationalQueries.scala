@@ -1151,13 +1151,11 @@ ORDER BY c.cohort, c.offset_days"""
     * NON-NULL child keys with no parent (SQL FK semantics: a null FK is
     * absent, not broken — reported separately as null_rows). */
   def fkAudit(rel: String, child: DataFrame, fk: String,
-              parent: DataFrame, pk: String,
-              broadcastParent: Boolean): DataFrame = {
+              parent: DataFrame, pk: String): DataFrame = {
     val ck = child.groupBy(col(fk).as("k")).agg(count(lit(1)).as("nrows"))
     val pk0 = parent.select(col(pk).as("k")).distinct()
       .withColumn("hit", lit(1))
-    val pside = if (broadcastParent) broadcast(pk0) else pk0
-    ck.join(pside, Seq("k"), "left")
+    ck.join(pk0, Seq("k"), "left")
       .agg(sum(col("nrows")).as("child_rows"),
         count(lit(1)).as("child_keys"),
         coalesce(sum(when(col("k").isNull, col("nrows"))), lit(0L)).as("null_rows"),
@@ -1179,10 +1177,11 @@ ORDER BY c.cohort, c.offset_days"""
     *
     * Shape for 100 TB: each relationship aggregates the child side to
     * DISTINCT keys first (partial-agged map-side combine — the join
-    * never sees child rows), then left-joins the parent key set:
-    * broadcast for the O(1) dims (nation, region), shuffle-on-key for
-    * the SF-scaled parents where AQE picks the strategy. The union is
-    * of 1-row aggregates. */
+    * never sees child rows), then left-joins the parent key set. The
+    * parents are parquet scans with size statistics, so Spark's
+    * threshold picks each strategy: broadcast for the O(1) dims
+    * (nation, region), shuffle-on-key for the SF-scaled parents once
+    * they outgrow it. The union is of 1-row aggregates. */
   def q163FkIntegrity(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
     val ord = Tables.orders(spark, sfDir)
@@ -1190,20 +1189,15 @@ ORDER BY c.cohort, c.offset_days"""
     val supp = Tables.supplier(spark, sfDir)
     val nat = Tables.nation(spark, sfDir)
     Seq(
-      fkAudit("customer.c_nationkey->nation", cust, "c_nationkey",
-        nat, "n_nationkey", broadcastParent = true),
-      fkAudit("lineitem.l_orderkey->orders", li, "l_orderkey",
-        ord, "o_orderkey", broadcastParent = false),
+      fkAudit("customer.c_nationkey->nation", cust, "c_nationkey", nat, "n_nationkey"),
+      fkAudit("lineitem.l_orderkey->orders", li, "l_orderkey", ord, "o_orderkey"),
       fkAudit("lineitem.l_partkey->part", li, "l_partkey",
-        Tables.part(spark, sfDir), "p_partkey", broadcastParent = false),
-      fkAudit("lineitem.l_suppkey->supplier", li, "l_suppkey",
-        supp, "s_suppkey", broadcastParent = false),
+        Tables.part(spark, sfDir), "p_partkey"),
+      fkAudit("lineitem.l_suppkey->supplier", li, "l_suppkey", supp, "s_suppkey"),
       fkAudit("nation.n_regionkey->region", nat, "n_regionkey",
-        Tables.region(spark, sfDir), "r_regionkey", broadcastParent = true),
-      fkAudit("orders.o_custkey->customer", ord, "o_custkey",
-        cust, "c_custkey", broadcastParent = false),
-      fkAudit("supplier.s_nationkey->nation", supp, "s_nationkey",
-        nat, "n_nationkey", broadcastParent = true)
+        Tables.region(spark, sfDir), "r_regionkey"),
+      fkAudit("orders.o_custkey->customer", ord, "o_custkey", cust, "c_custkey"),
+      fkAudit("supplier.s_nationkey->nation", supp, "s_nationkey", nat, "n_nationkey")
     ).reduce(_ unionByName _).orderBy(col("relationship"))
   }
 

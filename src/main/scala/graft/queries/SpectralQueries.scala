@@ -27,8 +27,9 @@ object SpectralQueries {
     * edges) — the balanced-cut quality trace.
     *
     * Shape for 100 TB: the matvec A·v is ONE partial-agged aggregation
-    * over the (undirected) edge frame joined to the broadcast
-    * O(vertices) score frame — the LinkRank loop shape with a
+    * over the (undirected) edge frame joined to the O(vertices) score
+    * frame, broadcast while it fits Spark's threshold (graft.Broadcasts,
+    * one decision per run) — the LinkRank loop shape with a
     * symmetric edge side; D∘v and the shift are in-row; mean/norm are
     * 1-row broadcast aggregates; cross-round state is a vertex-score
     * frame, localCheckpoint'ed so the loop plan stays shallow. Every

@@ -108,28 +108,27 @@ class DedupAnnSpec extends GraftSpec {
       s"candidate pairs $nCand do not prune the ${n * (n - 1) / 2}-pair space")
   }
 
-  test("decontamination guard trips loudly on an oversized benchmark slice") {
+  test("past the broadcast threshold decontaminate takes the join shape: rows equal q26") {
     import graft.dedup.DedupQueries
     val docs = Tables.documents(spark, sfDir)
-    // cap of 10 hashes: any real slice exceeds it -> the guard must
-    // throw BEFORE the union set is collected, with an actionable message
-    val e = intercept[IllegalArgumentException] {
-      Graft.decontaminate(
-        docs.filter(pmod(col("doc_id"), lit(DedupQueries.BenchMod)) =!= 0),
-        col("doc_id"), col("text"),
-        docs.filter(pmod(col("doc_id"), lit(DedupQueries.BenchMod)) === 0),
-        col("text"), maxBenchShingles = 10L).collect()
-    }
-    assert(e.getMessage.contains("decontamination") && e.getMessage.contains("cap 10"))
-    // default cap: same inputs pass, facade matches the q26 fixture
-    val viaFacade = Graft.decontaminate(
-      docs.filter(pmod(col("doc_id"), lit(DedupQueries.BenchMod)) =!= 0),
-      col("doc_id"), col("text"),
-      docs.filter(pmod(col("doc_id"), lit(DedupQueries.BenchMod)) === 0),
-      col("text")).orderBy(col("doc_id")).collect()
+    val isBench = pmod(col("doc_id"), lit(DedupQueries.BenchMod)) === 0
     val viaQuery = DedupQueries.q26Decontaminate(spark, sfDir).collect()
+    val (viaFacade, plan) = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = Graft.decontaminate(docs.filter(!isBench), col("doc_id"), col("text"),
+        docs.filter(isBench), col("text")).orderBy(col("doc_id"))
+      (df.collect(), df.queryExecution.executedPlan.toString)
+    }
+    assert(!plan.contains("Broadcast"), s"past the threshold nothing is broadcast:\n$plan")
     assert(viaFacade.length === viaQuery.length && viaFacade.nonEmpty)
     viaFacade.zip(viaQuery).foreach { case (a, b) => assert(a === b) }
+    // q28's portable Bloom collects the set to the driver: no fallback,
+    // it fails before the collect and names the setting
+    val e = intercept[IllegalArgumentException] {
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        DedupQueries.q28DecontaminateBloom(spark, sfDir)
+      }
+    }
+    assert(e.getMessage.contains("spark.sql.autoBroadcastJoinThreshold"))
   }
 
   test("join-shape decontamination equals the broadcast merge-walk exactly") {

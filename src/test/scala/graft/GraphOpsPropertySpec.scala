@@ -21,13 +21,14 @@ class GraphOpsPropertySpec extends GraftSpec {
       val n = 12 + trial * 4
       val edges = Seq.fill(n * 4)((s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
       val df = edges.toDF("src", "dst")
-      // default = the any-size shuffle-join path
+      // default threshold = the broadcast wedge-closure plan
       val got = Triangles.run(df).collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      // the broadcast wedge-closure plan computes the identical result
-      val viaBroadcast = Triangles.run(df, broadcastEdges = true).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(viaBroadcast === got, s"trial $trial broadcast ≡ shuffle")
+      // threshold off = the shuffle-join plan, identical result
+      val viaShuffle = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        Triangles.run(df).collect()
+      }.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(viaShuffle === got, s"trial $trial broadcast ≡ shuffle")
 
       val und = edges.map { case (a, b) => if (a < b) (a, b) else (b, a) }
         .filter(p => p._1 != p._2).toSet

@@ -74,11 +74,6 @@ class KernelTableSpec extends GraftSpec {
     call_function(k.name, args: _*).as(k.name)
   }
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally kv.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
   test("every kernel: compiled and interpreted rows are equal; a null in gives null out") {
     val compiled = fixture.select(col("id") +: col("nul") +: calls: _*)
     assert(compiled.queryExecution.executedPlan.toString.linesIterator.exists(l =>

@@ -32,7 +32,8 @@ class QuickstartSpec extends GraftSpec {
       Graft.simhash($"body").as("simhash"),
       Graft.winnowFingerprint($"body").as("fingerprint"))
 
-    // screen YOUR training set against a held-out benchmark (broadcast-guarded)
+    // screen YOUR training set against a held-out benchmark (broadcast while the
+    // set fits spark.sql.autoBroadcastJoinThreshold, an exact shuffle join past it)
     val hits = Graft.decontaminate(docs, $"doc_id", $"body",
       docs.filter($"doc_id" === 3), $"body")
 

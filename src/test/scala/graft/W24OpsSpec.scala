@@ -131,7 +131,7 @@ class W24OpsSpec extends GraftSpec {
       Option.empty[Long]).toDF("fk")
     val parent = Seq(1L, 2L).toDF("pk")
     val out = RelationalQueries
-      .fkAudit("t", child, "fk", parent, "pk", broadcastParent = true)
+      .fkAudit("t", child, "fk", parent, "pk")
       .collect().head
     assert(out.getLong(1) === 6L, "child_rows")
     assert(out.getLong(2) === 3L, "child_keys: 1, 99, null")
