@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import scala.util.control.NonFatal
 
@@ -16,11 +17,11 @@ import scala.util.control.NonFatal
   * 56s inside the r2 bench).
   *
   * One rule: a block made here ([[materialize]], [[cache]], every
-  * snapshot [[rotate]] makes) is released at the session's next
+  * round snapshot of [[iterate]]) is released at the session's next
   * [[drain]] from the moment it is made, because a returned lazy
   * DataFrame may still read it until the caller's action completes.
-  * [[free]] and [[rotate]] only release a block EARLIER, when the code
-  * knows nothing reads it any more (an iterative loop holds exactly one
+  * [[free]] and [[iterate]] only release a block EARLIER, when the code
+  * knows nothing reads it any more (a round loop holds exactly one
   * live snapshot that way), and [[drain]] skips blocks already
   * released. The harness (Bench/Verify) calls [[drain]] between
   * queries. Frames built inside `SessionCache.cached` are owned by the
@@ -49,13 +50,53 @@ object Checkpoints {
     df
   }
 
-  /** [[materialize]] `next`, then free the predecessor iteration's
-    * checkpoint blocks. Returns the new checkpoint. */
-  def rotate(next: DataFrame, prev: DataFrame): DataFrame = {
-    val cp = materialize(next)
-    free(prev)
-    cp
+  /** The one round loop (Pregelix's superstep: the caller supplies the
+    * per-round plan, this owns the barrier and the state's storage).
+    * [[materialize]] `init`, then run `step` on the latest snapshot at
+    * most `maxRounds` times. Each round's output is materialized and
+    * the snapshot before it freed, so exactly one snapshot is live at a
+    * time; `stop` runs on each fresh snapshot and returning true ends
+    * the loop. `stop` is also the hook for per-round side rows (a trace
+    * or census row) and for freeing frames the round made that only the
+    * step's plan read.
+    *
+    * Pass `init` as a lazy plan: it is materialized here, and a caller
+    * may persist it to share it with a pre-loop job — it is unpersisted
+    * as soon as its checkpoint exists, so it must not be a cached frame
+    * another reader still needs.
+    *
+    * Loops that keep their own rounds, because `iterate` frees every
+    * snapshot but the last: KCore (reads its first state after the
+    * loop); Betweenness, Fiedler, `Spectral.pcaTopComponent` and
+    * `Graft.randomWalks` (their output reads every round);
+    * `VertexLoop.frontier` (its state is the union of every round's
+    * segment). The rank kernels in `DampedRank` and `GraphXLinkRank`
+    * loop over RDDs, not DataFrames.
+    *
+    * @return (last snapshot, rounds run) — the snapshot is released at
+    *         the next [[drain]]; a caller done with it may free it
+    *         earlier. */
+  def iterate(init: DataFrame, maxRounds: Int,
+              stop: DataFrame => Boolean = _ => false)
+             (step: DataFrame => DataFrame): (DataFrame, Int) = {
+    var cur = materialize(init)
+    init.unpersist()
+    var rounds = 0
+    var done = false
+    while (rounds < maxRounds && !done) {
+      val next = materialize(step(cur))
+      free(cur)
+      cur = next
+      rounds += 1
+      done = stop(cur)
+    }
+    (cur, rounds)
   }
+
+  /** [[iterate]]'s `stop` for snapshots that flag changed rows in
+    * `chg`: true at the fixed point. One limit-1 job on the
+    * materialized snapshot. */
+  def unchanged(snapshot: DataFrame): Boolean = snapshot.filter(col("chg")).isEmpty
 
   /** Release the blocks behind an eagerly checkpointed frame now (no-op
     * for plans that are not a materialized LogicalRDD, and for blocks

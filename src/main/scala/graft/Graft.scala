@@ -302,11 +302,8 @@ object Graft {
     * See [[graph.KCore]]. */
   def kCore(edges: DataFrame, src: Column, dst: Column, k: Int,
             maxIters: Int = 20): DataFrame = {
-    val e = edges.select(src.as("src"), dst.as("dst"))
-    val und = e.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(e.select(col("dst").as("a"), col("src").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-    graph.KCore.run(und, k, maxIters)
+    graph.KCore.run(graph.WebGraph.undirected(edges.select(src.as("src"), dst.as("dst"))),
+      k, maxIters)
   }
 
   /** Multi-source weighted shortest paths (Bellman–Ford relaxation)
@@ -641,7 +638,9 @@ object Graft {
     * Post-drain contract (see [[logregFit]]): the adjacency and the
     * per-step frontiers are [[Checkpoints.materialize]]d, so the next
     * `Checkpoints.drain` releases them — consume the result before a
-    * drain; it is not re-executable afterwards. */
+    * drain; it is not re-executable afterwards. The steps stay off
+    * `Checkpoints.iterate`: the output is the union of every step's
+    * frontier. */
   def randomWalks(edges: DataFrame, src: Column, dst: Column,
                   len: Int = 8): DataFrame = {
     val e = edges.select(src.as("src"), dst.as("dst"))

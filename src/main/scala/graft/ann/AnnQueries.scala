@@ -359,18 +359,16 @@ FROM errs ORDER BY vec_id"""
                                dims: Int, seed: Int): DataFrame = {
     val e = graft.Checkpoints.cache(e0)
     // k rows; checkpointed to keep the iteration plan shallow
-    var cents = graft.Checkpoints.materialize(e
-      .orderBy(graft.functions.MathFunctions.universalHash(col("vec_id"), seed), col("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("cid"), col("v").as("cv")))
-    for (_ <- 1 to iters) {
-      val next = kmAssign(e, cents)
+    val (cents, _) = graft.Checkpoints.iterate(e
+        .orderBy(graft.functions.MathFunctions.universalHash(col("vec_id"), seed), col("vec_id"))
+        .limit(k)
+        .select(col("vec_id").as("cid"), col("v").as("cv")), iters) { cents =>
+      kmAssign(e, cents)
         .groupBy(col("cid"))
         .agg(count(lit(1)).as("cnt"),
           (1 to dims).map(i => sum(element_at(col("v"), i)).as(s"s$i")): _*)
         .select(col("cid"),
           array((1 to dims).map(i => round(col(s"s$i") / col("cnt"), 6)): _*).as("cv"))
-      cents = graft.Checkpoints.rotate(next, cents)
     }
     kmAssign(e, cents)
   }
@@ -868,18 +866,16 @@ ORDER BY qid"""
         .select(col("m"), col("vec_id"), col("mm.cid").as("cid"),
           col("mm.sv").as("sv"), col("dm.d2").as("d2"))
     // nSubs·k rows; checkpointed to keep the loop plan shallow
-    var cents = graft.Checkpoints.materialize(
-      subs.join(broadcast(seedIds), col("vec_id") === col("seed_id"))
-        .select(col("m"), col("vec_id").as("cid"), col("sv").as("cv")))
-    for (_ <- 1 to iters) {
-      val next = assign(cents)
+    val (cents, _) = graft.Checkpoints.iterate(
+        subs.join(broadcast(seedIds), col("vec_id") === col("seed_id"))
+          .select(col("m"), col("vec_id").as("cid"), col("sv").as("cv")), iters) { cents =>
+      assign(cents)
         .groupBy(col("m"), col("cid"))
         .agg(count(lit(1)).as("cnt"),
           (1 to subDim).map(i => sum(element_at(col("sv"), i)).as(s"s$i")): _*)
         .select(col("m"), col("cid"),
           array((1 to subDim).map(i => round(col(s"s$i") / col("cnt"), 6)): _*)
             .as("cv"))
-      cents = graft.Checkpoints.rotate(next, cents)
     }
     // d2 is 6dp-gridded per row, so the census mean must be an exact
     // DECIMAL sum + one division — a double avg() is association-order
@@ -1106,11 +1102,13 @@ GROUP BY l.label ORDER BY l.label""".stripMargin
         round(VF.cosineByNorm(col("qv"), col("v"), col("qn"), col("nrm")), 6)
           .as("rel"))
       .orderBy(col("rel").desc, col("vec_id")).limit(MmrCandidates))
-    var sel = graft.Checkpoints.materialize(cand
-      .orderBy(col("rel").desc, col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v"), col("nrm"), col("rel"),
-        lit(1).as("pick"), col("rel").as("mmr"), lit(0.0).as("max_sim")))
-    for (r <- 2 to MmrPicks) {
+    var r = 1
+    val (sel, _) = graft.Checkpoints.iterate(cand
+        .orderBy(col("rel").desc, col("vec_id")).limit(1)
+        .select(col("vec_id"), col("v"), col("nrm"), col("rel"),
+          lit(1).as("pick"), col("rel").as("mmr"), lit(0.0).as("max_sim")),
+        MmrPicks - 1) { sel =>
+      r += 1
       val s = sel.select(col("vec_id").as("sid"), col("v").as("sv"),
         col("nrm").as("sn"))
       val mmrScore = round(lit(MmrLambda) * col("rel")
@@ -1124,7 +1122,7 @@ GROUP BY l.label ORDER BY l.label""".stripMargin
         .select(col("vec_id"), col("v"), col("nrm"), col("rel"),
           lit(r).as("pick"), mmrScore.as("mmr"), col("max_sim"))
         .orderBy(mmrScore.desc, col("vec_id")).limit(1)
-      sel = graft.Checkpoints.materialize(sel.unionByName(pick))
+      sel.unionByName(pick)
     }
     sel.select(col("pick"), col("vec_id"), col("rel"),
       round(col("max_sim"), 6).as("max_sim"), col("mmr"))

@@ -1490,17 +1490,20 @@ FROM ranked WHERE rank <= $TfidfPairTopK ORDER BY rank"""
       col("len").as("la"), col("pre").as("pa"))
     val b = d.select(col("lang"), col("doc_id").as("db"), col("source").as("sb"),
       col("len").as("lb"), col("pre").as("pb"))
-    val pat = graft.Checkpoints.materialize(a.join(b, "lang")
+    // state: the ≤ 8 pattern rows (g1, g2, g3, cnt) with the current EM
+    // parameters as columns, and from round 1 on the posterior `g` the
+    // round's E-step scored under the parameters before its M-step
+    val pat = a.join(b, "lang")
       .filter(col("da") < col("db"))
       .select(
         when(col("sa") === col("sb"), 1L).otherwise(0L).as("g1"),
         when(lit(10) * least(col("la"), col("lb")) >=
           lit(9) * greatest(col("la"), col("lb")), 1L).otherwise(0L).as("g2"),
         when(col("pa") === col("pb"), 1L).otherwise(0L).as("g3"))
-      .groupBy(col("g1"), col("g2"), col("g3")).agg(count(lit(1)).as("cnt")))
-    var em = graft.Checkpoints.materialize(spark.range(1).select(lit(0.05).as("p"),
-      lit(0.9).as("m1"), lit(0.9).as("m2"), lit(0.9).as("m3"),
-      lit(0.3).as("u1"), lit(0.3).as("u2"), lit(0.3).as("u3")))
+      .groupBy(col("g1"), col("g2"), col("g3")).agg(count(lit(1)).as("cnt"))
+      .select(col("g1"), col("g2"), col("g3"), col("cnt"), lit(0.05).as("p"),
+        lit(0.9).as("m1"), lit(0.9).as("m2"), lit(0.9).as("m3"),
+        lit(0.3).as("u1"), lit(0.3).as("u2"), lit(0.3).as("u3"))
     def fac(prob: Column, g: Column): Column =
       when(g === 1L, prob).otherwise(lit(1.0) - prob)
     def post: Column = {
@@ -1510,13 +1513,9 @@ FROM ranked WHERE rank <= $TfidfPairTopK ORDER BY rank"""
         fac(col("u2"), col("g2")) * fac(col("u3"), col("g3"))
       num / (num + den)
     }
-    var scored: DataFrame = null
-    for (_ <- 1 to LkEmRounds) {
-      val g = pat.crossJoin(broadcast(em))
-        .select(col("g1"), col("g2"), col("g3"), col("cnt"), post.as("g"))
-      scored = if (scored == null) graft.Checkpoints.materialize(g)
-               else graft.Checkpoints.rotate(g, scored)
-      val ne = scored.agg(
+    val (scored, _) = graft.Checkpoints.iterate(pat, LkEmRounds) { st =>
+      val g = st.select(col("g1"), col("g2"), col("g3"), col("cnt"), post.as("g"))
+      val ne = g.agg(
         round(dec12(col("cnt") * col("g")) / dec12(col("cnt")), 12).as("p"),
         round(dec12(col("cnt") * col("g") * col("g1")) /
           dec12(col("cnt") * col("g")), 12).as("m1"),
@@ -1530,11 +1529,11 @@ FROM ranked WHERE rank <= $TfidfPairTopK ORDER BY rank"""
           dec12(col("cnt") * (lit(1.0) - col("g"))), 12).as("u2"),
         round(dec12(col("cnt") * (lit(1.0) - col("g")) * col("g3")) /
           dec12(col("cnt") * (lit(1.0) - col("g"))), 12).as("u3"))
-      em = graft.Checkpoints.rotate(ne, em)
+      g.crossJoin(broadcast(ne))
     }
     def wfac(m: Column, u: Column, g: Column): Column =
       fac(m, g) / fac(u, g)
-    val out = scored.crossJoin(broadcast(em))
+    val out = scored
       .select(col("g1"), col("g2"), col("g3"), col("cnt"),
         round(col("g"), 6).as("posterior"),
         round(log(wfac(col("m1"), col("u1"), col("g1")) *

@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.DecimalType
   * `rounds` joins in reverse on the level-sliced frame. σ is exact
   * int64; each δ term is round(,12)-gridded into a DECIMAL sum, so
   * both engines add identical rationals. Per-round localCheckpoint
-  * keeps the plans flat.
+  * keeps the plans flat. Neither pass runs on
+  * [[graft.Checkpoints.iterate]]: the backward pass reads every
+  * forward level, and the output sums every backward level.
   */
 object Betweenness {
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is one groupBy(min) over the edge frame
   * joined to the current labels — hash-partitioned equi-joins, partial
-  * aggregation, run by [[VertexLoop.iterate]]. Convergence is detected
+  * aggregation, run by [[graft.Checkpoints.iterate]]. Convergence is detected
   * (a round that changes no label ends the loop) rather than guessed,
   * because component diameter isn't known a priori at 100× data; early
   * exit is
@@ -33,8 +33,8 @@ object ConnectedComponents {
     *         it is released at the next drain */
   private[graft] def propagate(und: DataFrame, init: DataFrame,
                                maxIters: Int): (DataFrame, Int) =
-    VertexLoop.iterate(init.select(col("id"), col("lbl")), maxIters,
-        VertexLoop.unchanged) { labels =>
+    graft.Checkpoints.iterate(init.select(col("id"), col("lbl")), maxIters,
+        graft.Checkpoints.unchanged) { labels =>
       val pulled = und.join(labels.select(col("id"), col("lbl")), col("b") === col("id"))
         .groupBy(col("a")).agg(min(col("lbl")).as("ml"))
         .withColumnRenamed("a", "mid")
@@ -54,10 +54,7 @@ object ConnectedComponents {
     // partition once on the per-round join key (b — the label pull
     // side): the distinct leaves und partitioned on (a,b), which every
     // propagation round would otherwise re-shuffle to align on b.
-    val und = graft.Checkpoints.cache(edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-      .repartition(col("b")))
+    val und = graft.Checkpoints.cache(WebGraph.undirected(edges).repartition(col("b")))
     val init = und.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
     val (labels, _) = propagate(und, init, maxIters)

@@ -14,6 +14,8 @@ import graft.functions.MathFunctions.dsum
   * vertex-score frames are broadcast into the edge joins while they
   * fit Spark's broadcast threshold (graft.Broadcasts, decided once per
   * run), and shuffle-joined past it. See q209 for the full plan audit.
+  * The rounds stay off [[graft.Checkpoints.iterate]]: the output's
+  * per-round census rows read every round's checkpoints.
   */
 object Fiedler {
 

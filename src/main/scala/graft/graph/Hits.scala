@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions._
   *    the auth step joins hubs on src, the hub step joins auths on dst
   *    — each iteration shuffles only the per-vertex score frames,
   *    never the edge table;
-  *  - each half-step's raw sums are checkpoint-rotated (one live
-  *    snapshot) and the L1 normalizer rides a broadcast 1-row
-  *    aggregate of that materialized snapshot — no driver round-trip
-  *    inside the loop.
+  *  - each half-step is one round of [[graft.Checkpoints.iterate]] over
+  *    the raw sums (one live snapshot; the state carries one score, so
+  *    the preserved side of a half-step's left join shuffles ids only),
+  *    and the L1 normalizer rides a broadcast 1-row aggregate of that
+  *    snapshot — no driver round-trip inside the loop.
   */
 object Hits {
 
@@ -39,39 +40,33 @@ object Hits {
     val eS = cache(mapped.repartition(col("svid")), "es")
     val eD = cache(mapped.repartition(col("dvid")), "ed")
 
-    // state: raw (pre-normalization) per-vertex sums; the normalizer is
-    // folded in where the frame is consumed, same association as the
+    // state: raw (pre-normalization) per-vertex sums, one half-step per
+    // loop round (auths from hubs, then hubs from auths); the normalizer
+    // is folded in where a sum is consumed, same association as the
     // oracle's `a / (SELECT sum(a) FROM af_k)`
-    var hubRaw = graft.Checkpoints.materialize(verts.select(col("vid"), lit(1.0).as("h")))
-    var authNorm: DataFrame = null
-    var authRaw: DataFrame = null
     def normalized(raw: DataFrame, c: String): DataFrame = {
       val s = raw.agg(sum(col(c)).as("s"))
       raw.crossJoin(broadcast(s)).select(col("vid"), (col(c) / col("s")).as(c))
     }
-    for (_ <- 1 to iters) {
-      val hn = normalized(hubRaw, "h")
-      val ra = verts
-        .join(eS.join(hn, col("svid") === col("vid")).drop("vid")
-            .groupBy(col("dvid")).agg(sum(col("h")).as("a")),
-          col("vid") === col("dvid"), "left")
-        .select(col("vid"), coalesce(col("a"), lit(0.0)).as("a"))
-      authRaw =
-        if (authRaw == null) graft.Checkpoints.materialize(ra)
-        else graft.Checkpoints.rotate(ra, authRaw)
-      val an = normalized(authRaw, "a")
-      val rh = verts
-        .join(eD.join(an, col("dvid") === col("vid")).drop("vid")
-            .groupBy(col("svid")).agg(sum(col("a")).as("h")),
-          col("vid") === col("svid"), "left")
-        .select(col("vid"), coalesce(col("h"), lit(0.0)).as("h"))
-      hubRaw = graft.Checkpoints.rotate(rh, hubRaw)
-      authNorm = an
+    def half(st: DataFrame, e: DataFrame, from: String, to: String,
+             in: String, out: String): DataFrame =
+      verts
+        .join(e.join(normalized(st, in), col(from) === col("vid")).drop("vid")
+            .groupBy(col(to)).agg(sum(col(in)).as(out)),
+          col("vid") === col(to), "left")
+        .select(col("vid"), coalesce(col(out), lit(0.0)).as(out))
+    require(iters > 0, s"iters must be positive, got $iters")
+    // the state holds hub sums `h` or auth sums `a`; the loop ends on
+    // the last auth half-step, so its snapshot stays live beside the
+    // last hubs, checkpointed after it
+    val (authRaw, _) = graft.Checkpoints.iterate(
+        verts.select(col("vid"), lit(1.0).as("h")), 2 * iters - 1) { st =>
+      if (st.columns.contains("h")) half(st, eS, "svid", "dvid", "h", "a")
+      else half(st, eD, "dvid", "svid", "a", "h")
     }
-    val out = authNorm.withColumnRenamed("a", "auth")
-      .join(hubRaw.crossJoin(broadcast(hubRaw.agg(sum(col("h")).as("s"))))
-          .select(col("vid"), (col("h") / col("s")).as("hub")),
-        "vid")
+    val hubRaw = graft.Checkpoints.materialize(half(authRaw, eD, "dvid", "svid", "a", "h"))
+    val out = normalized(authRaw, "a").withColumnRenamed("a", "auth")
+      .join(normalized(hubRaw, "h").withColumnRenamed("h", "hub"), "vid")
       .join(vmap, "vid")
       .select(col("id"), col("auth"), col("hub"))
     if (cacheKey.isEmpty) { eS.unpersist(); eD.unpersist() }

@@ -34,6 +34,10 @@ import org.apache.spark.sql.functions._
   * argument the q89 oracle leans on). Convergence needs at most
   * "peeling depth" rounds — small on real graphs (degrees collapse
   * geometrically), bounded by the budget for adversarial chains.
+  *
+  * The loop is hand-written, not [[graft.Checkpoints.iterate]]: its
+  * first state `deg0` is read again after the loop by the final
+  * all-vertices join, and `iterate` frees every snapshot but the last.
   */
 object KCore {
 
@@ -70,7 +74,7 @@ object KCore {
           (col("deg") - coalesce(col("d"), lit(0L))).as("deg"))
       val cp = graft.Checkpoints.materialize(next)
       // deg0's blocks outlive the loop (the final all-vertices join
-      // reads them until drain) — rotate only loop snapshots
+      // reads them until drain) — free only loop snapshots
       if (!(cur eq deg0)) graft.Checkpoints.free(cur)
       cur = cp
       rounds += 1

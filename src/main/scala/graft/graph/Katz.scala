@@ -24,7 +24,7 @@ import graft.functions.MathFunctions.dec12
   *    frame, never edges;
   *  - each neighbor sum grids its terms round(,12) and accumulates as
   *    DECIMAL(38,12) (the q261 association-free discipline);
-  *  - rounds run through [[VertexLoop.iterate]]. */
+  *  - rounds run through [[graft.Checkpoints.iterate]]. */
 object Katz {
 
   /** @return (id, katz) — raw truncated-Katz scores after `iters`
@@ -39,7 +39,7 @@ object Katz {
       case None => graft.Checkpoints.cache(mapped.repartition(col("dvid")))
     }
 
-    val (x, _) = VertexLoop.iterate(verts.select(col("vid"), lit(1.0).as("x")), iters) { x =>
+    val (x, _) = graft.Checkpoints.iterate(verts.select(col("vid"), lit(1.0).as("x")), iters) { x =>
       verts
         .join(e.join(x, col("svid") === col("vid")).drop("vid")
             .groupBy(col("dvid")).agg(dec12(col("x") * alpha).as("s")),

@@ -21,7 +21,7 @@ import org.apache.spark.sql.expressions.Window
   * Scale shape (the ConnectedComponents loop contract): each round is
   * one equi-join of the edge frame to the current label frame, a
   * partial-agged (vertex, label) count, and a per-vertex top-1 window —
-  * all hash-partitioned on vertex id, run by [[VertexLoop.iterate]].
+  * all hash-partitioned on vertex id, run by [[graft.Checkpoints.iterate]].
   * Early exit fires only at the fixed point, where further rounds are
   * identity — so budget-K with early exit ≡ exactly-K rounds, the
   * q66/q69 oracle-equality argument.
@@ -39,10 +39,7 @@ object LabelPropagation {
     // partition once on the per-round join key (b — the neighbor-label
     // pull side), the ConnectedComponents discipline: rounds reuse the
     // persisted partitioning instead of re-shuffling the edge frame.
-    val und = graft.Checkpoints.cache(edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-      .repartition(col("b")))
+    val und = graft.Checkpoints.cache(WebGraph.undirected(edges).repartition(col("b")))
     val verts = und.select(col("a").as("id")).distinct()
     // Conflicting duplicate seed rows are resolved to min(lbl) BEFORE the
     // join: a duplicated (id, lbl) pair would otherwise duplicate the
@@ -53,7 +50,8 @@ object LabelPropagation {
       .select(col("id"), coalesce(col("seed_lbl"), lit(-1L)).as("lbl"),
         col("seed_lbl").isNotNull.as("is_seed"))
 
-    val (labels, _) = VertexLoop.iterate(init, maxIters, VertexLoop.unchanged) { labels =>
+    val (labels, _) = graft.Checkpoints.iterate(init, maxIters,
+        graft.Checkpoints.unchanged) { labels =>
       // neighbor label histogram, labeled (>=0) neighbors only
       val pulled = und
         .join(labels.select(col("id"), col("lbl")), col("b") === col("id"))

@@ -14,8 +14,11 @@ import org.apache.spark.sql.functions._
   *
   * Edge priorities are portable md5 hashes, so reruns AND the DuckDB
   * oracle replay the identical matching. Intended for bounded graphs
-  * (host level): per-round vertex frames broadcast into the edge
-  * anti-joins.
+  * (host level): the per-round vertex frames are broadcast into the
+  * edge joins while they fit Spark's broadcast threshold
+  * (graft.Broadcasts, decided once per run), and shuffle-joined past
+  * it. The rounds run on [[graft.Checkpoints.iterate]] over the matched
+  * vertex set; the census rows are literals, so no old round is read.
   */
 object Matching {
 
@@ -28,36 +31,49 @@ object Matching {
         graft.functions.MathFunctions.hash32(
           concat(col("u"), lit("|"), col("v"))).as("eh")))
     val spark = edges.sparkSession
+    // every vertex frame of the run (matched ids, per-vertex minimum
+    // edges) has at most 2·|e0| rows, each narrower than an e0 row: one
+    // count decides the broadcasts of all rounds
+    val hint: DataFrame => DataFrame =
+      if (graft.Broadcasts.fitsRows(e0, 2 * e0.count())) broadcast else identity
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    var matchedVerts = spark.createDataFrame(
+    val none = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("id", StringType))))
     var nMatched = 0L
-    var out: Seq[DataFrame] = Nil
-    for (r <- 1 to rounds) {
-      // free edges: neither endpoint matched (vertex frames are
-      // O(vertices of a bounded graph) — broadcast anti-joins)
+    val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // the round's (free edges, selected edges) checkpoints: read by the
+    // step's plan and the census, then freed
+    var round = (none, none)
+    def census(matched: DataFrame): Boolean = {
+      val (free, sel) = round
+      val nSel = sel.count()
+      nMatched += nSel
+      out += spark.range(1).select(lit(out.size + 1).as("round"),
+        lit(nSel).as("n_selected"), lit(nMatched).as("n_matched"),
+        lit(free.count()).as("candidate_edges"))
+      graft.Checkpoints.free(free)
+      graft.Checkpoints.free(sel)
+      false
+    }
+    graft.Checkpoints.iterate(none, rounds, census) { matchedVerts =>
+      // free edges: neither endpoint matched
       val free = graft.Checkpoints.materialize(
-        e0.join(broadcast(matchedVerts), col("u") === col("id"), "left_anti")
-          .join(broadcast(matchedVerts), col("v") === col("id"), "left_anti"))
+        e0.join(hint(matchedVerts), col("u") === col("id"), "left_anti")
+          .join(hint(matchedVerts), col("v") === col("id"), "left_anti"))
       val vm = free.select(col("u").as("id"), col("eh"))
         .unionAll(free.select(col("v").as("id"), col("eh")))
         .groupBy(col("id")).agg(min(col("eh")).as("me"))
       val sel = graft.Checkpoints.materialize(
         free
-          .join(broadcast(vm.select(col("id").as("u"), col("me").as("mu"))), "u")
-          .join(broadcast(vm.select(col("id").as("v"), col("me").as("mv"))), "v")
+          .join(hint(vm.select(col("id").as("u"), col("me").as("mu"))), "u")
+          .join(hint(vm.select(col("id").as("v"), col("me").as("mv"))), "v")
           .filter(col("eh") === col("mu") && col("eh") === col("mv"))
           .select(col("u"), col("v")))
-      val nSel = sel.count()
-      val nFree = free.count()
-      nMatched += nSel
-      out = out :+ spark.range(1).select(lit(r).as("round"),
-        lit(nSel).as("n_selected"), lit(nMatched).as("n_matched"),
-        lit(nFree).as("candidate_edges"))
-      matchedVerts = graft.Checkpoints.materialize(sel.select(col("u").as("id"))
+      round = (free, sel)
+      sel.select(col("u").as("id"))
         .unionAll(sel.select(col("v").as("id")))
-        .unionAll(matchedVerts))
+        .unionAll(matchedVerts)
     }
     out.reduce(_ unionAll _).orderBy(col("round"))
   }

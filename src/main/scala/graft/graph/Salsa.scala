@@ -28,8 +28,9 @@ import graft.functions.MathFunctions.dec12
   *  - each neighbor sum grids its terms round(,12) and accumulates as
   *    DECIMAL(38,12) (the q261 association-free discipline), so the
   *    shuffle order of a 100 TB exchange cannot move a bit;
-  *  - state is checkpoint-rotated (one live snapshot), the final
-  *    normalizers are 1-row broadcasts.
+  *  - each half-step is one round of [[graft.Checkpoints.iterate]] (one
+  *    live snapshot of one score column), the final normalizers are
+  *    1-row broadcasts.
   */
 object Salsa {
 
@@ -48,23 +49,24 @@ object Salsa {
     val eS = cache(mapped.join(dout, "svid").repartition(col("svid")), "es")
     val eD = cache(mapped.join(din, "dvid").repartition(col("dvid")), "ed")
 
-    var hub = graft.Checkpoints.materialize(verts.select(col("vid"), lit(1.0).as("h")))
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      val ra = verts
-        .join(eS.join(hub, col("svid") === col("vid")).drop("vid")
-            .groupBy(col("dvid")).agg(dec12(col("h") / col("od")).as("a")),
-          col("vid") === col("dvid"), "left")
-        .select(col("vid"), coalesce(col("a"), lit(0.0)).as("a"))
-      auth = if (auth == null) graft.Checkpoints.materialize(ra)
-             else graft.Checkpoints.rotate(ra, auth)
-      val rh = verts
-        .join(eD.join(auth, col("dvid") === col("vid")).drop("vid")
-            .groupBy(col("svid")).agg(dec12(col("a") / col("idg")).as("h")),
-          col("vid") === col("svid"), "left")
-        .select(col("vid"), coalesce(col("h"), lit(0.0)).as("h"))
-      hub = graft.Checkpoints.rotate(rh, hub)
+    // one half-step per loop round (auths from hubs, then hubs from
+    // auths): the state holds hub sums `h` or auth sums `a`; the loop
+    // ends on the last auth half-step, so its snapshot stays live beside
+    // the last hubs, checkpointed after it
+    def half(st: DataFrame, e: DataFrame, from: String, to: String, deg: String,
+             in: String, out: String): DataFrame =
+      verts
+        .join(e.join(st, col(from) === col("vid")).drop("vid")
+            .groupBy(col(to)).agg(dec12(col(in) / col(deg)).as(out)),
+          col("vid") === col(to), "left")
+        .select(col("vid"), coalesce(col(out), lit(0.0)).as(out))
+    require(iters > 0, s"iters must be positive, got $iters")
+    val (auth, _) = graft.Checkpoints.iterate(
+        verts.select(col("vid"), lit(1.0).as("h")), 2 * iters - 1) { st =>
+      if (st.columns.contains("h")) half(st, eS, "svid", "dvid", "od", "h", "a")
+      else half(st, eD, "dvid", "svid", "idg", "a", "h")
     }
+    val hub = graft.Checkpoints.materialize(half(auth, eD, "dvid", "svid", "idg", "a", "h"))
     val an = auth.crossJoin(broadcast(auth.agg(sum(col("a")).as("s"))))
       .select(col("vid"), (col("a") / col("s")).as("auth"))
     val hn = hub.crossJoin(broadcast(hub.agg(sum(col("h")).as("s"))))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * each round is one groupBy(dst).min(dist + w) over the edge frame
   * joined to the current frontier — hash-partitioned equi-joins with
   * partial aggregation, nothing vertex-level ever broadcast or
-  * collected, run by [[VertexLoop.iterate]]. Early exit fires only at
+  * collected, run by [[graft.Checkpoints.iterate]]. Early exit fires only at
   * the fixed point, where further relaxation rounds are the identity —
   * so a budget-K run is result-identical to exactly-K unrolled rounds
   * (the q66 fixed-point equality argument; the q87 oracle leans on
@@ -42,7 +42,8 @@ object Sssp {
     val init = vertices.select(col("id"))
       .join(seeds.select(col("id")).distinct().withColumn("cost", lit(0L)),
         Seq("id"), "left")
-    val (dist, _) = VertexLoop.iterate(init, maxIters, VertexLoop.unchanged) { dist =>
+    val (dist, _) = graft.Checkpoints.iterate(init, maxIters,
+        graft.Checkpoints.unchanged) { dist =>
       val pulled = e.join(dist.filter(col("cost").isNotNull), col("src") === col("id"))
         .groupBy(col("dst")).agg(min(col("cost") + col("w")).as("mc"))
       dist.join(pulled, col("id") === col("dst"), "left")

@@ -4,44 +4,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import graft.Checkpoints
 
-/** The superstep shared by the iterative graph engines (Pregelix's
-  * "one dataflow join plus a group-by per superstep"): each engine
-  * supplies the per-round plan, this object owns the round count, the
-  * materialization barrier between rounds and the block lifecycle of
-  * the loop state. The damped rank family (LinkRank, TrustRank, Ppr,
+/** Graph-loop helpers beside the one round loop,
+  * [[graft.Checkpoints.iterate]] (which runs Katz, Sssp,
+  * ConnectedComponents, LabelPropagation, Hits, Salsa and Matching):
+  * the append-only [[frontier]] loop of the level-synchronous
+  * traversals, whose state is the union of every round's segment and
+  * so is not an `iterate` snapshot, and the surrogate-id edge join
+  * [[vidEdges]]. The damped rank family (LinkRank, TrustRank, Ppr,
   * WeightedRank) runs on the fixed-dataflow [[DampedRank]] kernel
   * instead.
   */
 private[graft] object VertexLoop {
-
-  /** Checkpoint `init`, then run `step` on the latest snapshot at most
-    * `maxRounds` times. Every round's output is materialized through
-    * [[Checkpoints.rotate]], so exactly one snapshot is live at a time,
-    * and `stop` runs on each fresh snapshot: returning true ends the
-    * loop (a tolerance or fixed-point test, or a per-round trace row).
-    * A caller may persist `init` to share it with a pre-loop scalar
-    * job; it is unpersisted as soon as its checkpoint exists.
-    *
-    * @return (last snapshot, rounds run) — the snapshot is released at
-    *         the next drain; a caller done with it may free it earlier. */
-  def iterate(init: DataFrame, maxRounds: Int,
-              stop: DataFrame => Boolean = _ => false)
-             (step: DataFrame => DataFrame): (DataFrame, Int) = {
-    var cur = Checkpoints.materialize(init)
-    init.unpersist()
-    var rounds = 0
-    var done = false
-    while (rounds < maxRounds && !done) {
-      cur = Checkpoints.rotate(step(cur), cur)
-      rounds += 1
-      done = stop(cur)
-    }
-    (cur, rounds)
-  }
-
-  /** `stop` for snapshots that flag changed rows in `chg`: true at the
-    * fixed point. One limit-1 job on the materialized snapshot. */
-  def unchanged(snapshot: DataFrame): Boolean = snapshot.filter(col("chg")).isEmpty
 
   /** Append-only frontier loop for level-synchronous traversals, where
     * the first round that reaches a key reaches it at its final value

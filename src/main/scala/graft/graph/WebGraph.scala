@@ -112,6 +112,13 @@ object WebGraph {
       .filter(lower(col("dst")) =!= lower(col("src")))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
 
+  /** Undirected edge list `(a, b)` of `edges(src, dst)`: both
+    * orientations of every edge, self-loops dropped, distinct. */
+  def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("a"), col("dst").as("b"))
+      .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
+      .filter(col("a") =!= col("b")).distinct()
+
   /** Vertex set of an edge list: distinct src ∪ dst. */
   def vertices(edges: DataFrame): DataFrame =
     edges.select(col("src").as("id"))

@@ -79,22 +79,21 @@ object Glm {
     // is materialized once, disk-backed, and freed at drain.
     val base = graft.Checkpoints.materialize(
       df.select(x.cast("double").as("x"), y.cast("double").as("y")))
-    var coef = spark.range(1).select(lit(0.0).as("b0"), lit(0.0).as("b1"))
-    for (_ <- 1 to iters) {
+    // 1-row coefficient state, checkpointed to keep the loop plan shallow
+    val (coef, _) = graft.Checkpoints.iterate(
+        spark.range(1).select(lit(0.0).as("b0"), lit(0.0).as("b1")), iters) { coef =>
       val p = lit(1.0) / (lit(1.0) + exp(-(col("b0") + col("b1") * col("x"))))
       val w = p * (lit(1.0) - p)
       val z = (col("b0") + col("b1") * col("x")) + (col("y") - p) / w
-      val m = base.crossJoin(broadcast(coef))
+      base.crossJoin(broadcast(coef))
         .agg(sum(g(w)).cast("double").as("sw"),
           sum(g(w * col("x"))).cast("double").as("swx"),
           sum(g(w * col("x") * col("x"))).cast("double").as("swxx"),
           sum(g(w * z)).cast("double").as("swz"),
           sum(g(w * col("x") * z)).cast("double").as("swxz"))
-      // 1 row; checkpointed to keep the loop plan shallow
-      coef = graft.Checkpoints.rotate(m.select(
-        expr(LogregB1).as("b1"),
-        expr(s"(swz - ($LogregB1) * swx) / sw").as("b0"))
-        .select(col("b0"), col("b1")), coef)
+        .select(expr(LogregB1).as("b1"),
+          expr(s"(swz - ($LogregB1) * swx) / sw").as("b0"))
+        .select(col("b0"), col("b1"))
     }
     val p = lit(1.0) / (lit(1.0) + exp(-(col("b0") + col("b1") * col("x"))))
     base.crossJoin(broadcast(coef))

@@ -27,7 +27,9 @@ object Spectral {
     * `rounds` power iterations; returns one row per round with the
     * Rayleigh eigenvalue estimate and explained-variance share. `dim`
     * is the (fixed) vector dimensionality. See q205 for the plan
-    * audit — the matvec never materializes d×d. */
+    * audit — the matvec never materializes d×d. The rounds stay off
+    * `Checkpoints.iterate`: the output's per-round rows read every
+    * round's checkpoints. */
   def pcaTopComponent(vecs: DataFrame, id: Column, vec: Column,
                       dim: Int, rounds: Int): DataFrame = {
     val spark = vecs.sparkSession

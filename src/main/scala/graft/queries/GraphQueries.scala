@@ -726,11 +726,8 @@ FROM fin ORDER BY id"""
     * crawl-frontier pipeline runs after ranking. Integer degrees
     * end-to-end ⇒ exact hash. */
   def q89Kcore(spark: SparkSession, sfDir: String): DataFrame = {
-    val pe = WebGraph.cachedEdges(spark, sfDir)
-    val und = pe.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(pe.select(col("dst").as("a"), col("src").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-    graft.graph.KCore.run(und, KcoreK, KcoreRounds)
+    graft.graph.KCore.run(WebGraph.undirected(WebGraph.cachedEdges(spark, sfDir)),
+        KcoreK, KcoreRounds)
       .orderBy(col("id"))
   }
 
@@ -1970,17 +1967,18 @@ ORDER BY c.d""".stripMargin
     * the identical set over `MisRounds` unrolled MATERIALIZED rounds. */
   def q263Mis(spark: SparkSession, sfDir: String): DataFrame = {
     val hedges = WebGraph.cachedHostEdges(spark, sfDir)
-    val und = graft.Checkpoints.materialize(hedges
-      .select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(hedges.select(col("dst").as("a"), col("src").as("b")))
-      .filter(col("a") =!= col("b")).distinct())
+    val und = graft.Checkpoints.materialize(WebGraph.undirected(hedges))
     val verts = WebGraph.vertices(hedges)
-    var alive = graft.Checkpoints.materialize(verts)
     val sels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (r <- 1 to MisRounds) {
+    // each round's priorities: only its own step reads them
+    val pris = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val (alive, _) = graft.Checkpoints.iterate(verts, MisRounds,
+        _ => { graft.Checkpoints.free(pris.last); false }) { alive =>
+      val r = sels.size + 1
       val pri = graft.Checkpoints.materialize(alive
         .withColumn("p", graft.functions.MathFunctions.hash32(
           concat(lit(s"mis:$r:"), col("id")))))
+      pris += pri
       val nbr = pri.select(col("id").as("nid"), col("p").as("np"))
       val losers = pri.join(und, col("id") === col("a"))
         .join(nbr, col("b") === col("nid"))
@@ -1995,9 +1993,7 @@ ORDER BY c.d""".stripMargin
         .unionByName(und.join(sel.select(col("id").as("a")), Seq("a"))
           .select(col("b").as("id")))
         .distinct()
-      alive = graft.Checkpoints.rotate(alive
-        .join(removed, Seq("id"), "left_anti"), alive)
-      graft.Checkpoints.free(pri)
+      alive.join(removed, Seq("id"), "left_anti")
     }
     val mis = sels.reduce(_ unionByName _)
     val unresolved = alive.agg(count(lit(1)).as("n_unresolved"))

@@ -1712,9 +1712,9 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
     * partial-agged pass (the only corpus-sized exchange); the
     * threshold is a 1-row broadcast percentile; adjacency is an
     * 8-offset explode + equi-join of the O(cells) dense frame (never
-    * a distance self-join); the label loop runs `DbscanRounds`
-    * synchronized rounds on O(cells) rows with per-round
-    * localCheckpoint. */
+    * a distance self-join); the label loop is
+    * [[graft.graph.ConnectedComponents.propagate]] on O(cells) rows, at
+    * most `DbscanRounds` synchronized rounds. */
   def q251GridDbscan(spark: SparkSession, sfDir: String): DataFrame = {
     val cells = Tables.orders(spark, sfDir)
       .groupBy(
@@ -1736,17 +1736,12 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
       .join(dense.select(col("x").as("nx"), col("y").as("ny"),
         col("cid").as("nid")), Seq("nx", "ny"))
       .select(col("cid"), col("nid")))
-    var labels = dense.select(col("cid"), col("cid").as("lbl"))
-    for (_ <- 1 to DbscanRounds) {
-      val mins = adj
-        .join(labels.select(col("cid").as("nid"), col("lbl")), Seq("nid"))
-        .groupBy(col("cid")).agg(min(col("lbl")).as("ml"))
-      labels = graft.Checkpoints.rotate(labels
-        .join(mins, Seq("cid"), "left")
-        .select(col("cid"),
-          least(col("lbl"), coalesce(col("ml"), col("lbl"))).as("lbl")), labels)
-    }
-    labels.join(dense, Seq("cid"))
+    // min-label propagation; it stops early only at the fixed point,
+    // where the oracle's remaining unrolled rounds are the identity
+    val (labels, _) = graft.graph.ConnectedComponents.propagate(
+      adj.select(col("cid").as("a"), col("nid").as("b")),
+      dense.select(col("cid").as("id"), col("cid").as("lbl")), DbscanRounds)
+    labels.select(col("id").as("cid"), col("lbl")).join(dense, Seq("cid"))
       .groupBy(col("lbl").as("cluster"))
       .agg(count(lit(1)).as("n_cells"), sum(col("cnt")).as("n_points"),
         min(col("x")).as("min_x"), max(col("x")).as("max_x"),
@@ -2522,12 +2517,11 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
       .repartition(spark.sparkContext.defaultParallelism, col("cents")))
     val mm = vals.agg((min(col("cents")) / 100.0).as("lo"),
       (max(col("cents")) / 100.0).as("hi"))
-    var centers = graft.Checkpoints.materialize(
-      mm.select(explode(array((1 to FcmClusters).map { j =>
-          struct(lit(j).as("j"),
-            (col("lo") + (col("hi") - col("lo")) * lit(j * 0.25)).as("c"))
-        }: _*)).as("jc"))
-        .select(col("jc.j").as("j"), col("jc.c").as("c")))
+    val centers0 = mm.select(explode(array((1 to FcmClusters).map { j =>
+        struct(lit(j).as("j"),
+          (col("lo") + (col("hi") - col("lo")) * lit(j * 0.25)).as("c"))
+      }: _*)).as("jc"))
+      .select(col("jc.j").as("j"), col("jc.c").as("c"))
     // memberships are RATIOS of the inverse-square weights, so a
     // constant rescale is identity math — but it moves the weights
     // from ~1e-10 (where the 12dp grid keeps 2 significant digits)
@@ -2565,11 +2559,10 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
             struct(lit(i).as("j"), (col(s"wg$i") / tot).as("u"))): _*)).as("jw"))
         .select(col("cents"), col("cnt"), col("jw.j").as("j"), col("jw.u").as("u"))
     }
-    for (_ <- 1 to FcmRounds) {
-      val nc = members(centers).groupBy(col("j"))
+    val (centers, _) = graft.Checkpoints.iterate(centers0, FcmRounds) { centers =>
+      members(centers).groupBy(col("j"))
         .agg(round(dec12(col("cnt") * col("u") * col("u") * (col("cents") / 100.0)) /
           dec12(col("cnt") * col("u") * col("u")), 12).as("c"))
-      centers = graft.Checkpoints.rotate(nc, centers)
     }
     val out = members(centers).groupBy(col("j"))
       .agg(round(dec12(col("cnt") * col("u")), 6).as("mass"))
@@ -2904,8 +2897,8 @@ FROM tw t CROSS JOIN gm g"""
         sum(col("y")).cast("long").as("p")))
     val f0 = hist.agg((sum(col("p")).cast("double") / sum(col("n"))).as("f0"),
       sum(col("n")).as("nt"))
-    var h = graft.Checkpoints.materialize(hist.crossJoin(broadcast(f0.select(col("f0"))))
-      .select(col("x"), col("n"), col("p"), col("f0").as("f")))
+    val h0 = hist.crossJoin(broadcast(f0.select(col("f0"))))
+      .select(col("x"), col("n"), col("p"), col("f0").as("f"))
     val ntF = broadcast(f0.select(col("nt")))
     def mseOf(frame: DataFrame): DataFrame = frame
       .agg(sum(dec12w(col("p") * (lit(1.0) - col("f")) * (lit(1.0) - col("f"))
@@ -2915,13 +2908,21 @@ FROM tw t CROSS JOIN gm g"""
     val w = Window.orderBy(col("x"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // each stage row materializes EAGERLY: its plan reads the stage's
-    // h snapshot, which the next rotate() frees — a lazy plan would
-    // chase freed checkpoint blocks at action time
+    // h snapshot, which the next round frees — a lazy plan would chase
+    // freed checkpoint blocks at action time
     val stages = scala.collection.mutable.ArrayBuffer(
       graft.Checkpoints.materialize(
-        mseOf(h).select(lit(0).as("stage"), lit(-1.0).as("split_x"),
+        mseOf(h0).select(lit(0).as("stage"), lit(-1.0).as("split_x"),
           lit(0.0).as("gamma_left"), lit(0.0).as("gamma_right"), col("mse"))))
-    for (k <- 1 to GbmStages) {
+    val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def stageRow(h: DataFrame): Boolean = {
+      stages += graft.Checkpoints.materialize(picks.last.crossJoin(mseOf(h))
+        .select(lit(picks.size).as("stage"), col("sx").as("split_x"),
+          round(col("gl"), 6).as("gamma_left"), round(col("gr"), 6).as("gamma_right"),
+          col("mse")))
+      false
+    }
+    graft.Checkpoints.iterate(h0, GbmStages, stageRow) { h =>
       val cum = h
         .withColumn("nl", sum(col("n")).over(w))
         .withColumn("rl", sum(dec12w(col("p") - col("n") * col("f"))).over(w)
@@ -2936,15 +2937,11 @@ FROM tw t CROSS JOIN gm g"""
         .orderBy(col("gain").desc, col("x")).limit(1)
         .select(col("x").as("sx"), (col("rl") / col("nl")).as("gl"),
           ((col("rt") - col("rl")) / (col("nt2") - col("nl"))).as("gr")))
-      val nh = h.crossJoin(broadcast(pick))
+      picks += pick
+      h.crossJoin(broadcast(pick))
         .select(col("x"), col("n"), col("p"),
           (col("f") + lit(GbmNu) * when(col("x") <= col("sx"), col("gl"))
             .otherwise(col("gr"))).as("f"))
-      h = graft.Checkpoints.rotate(nh, h)
-      stages += graft.Checkpoints.materialize(pick.crossJoin(mseOf(h))
-        .select(lit(k).as("stage"), col("sx").as("split_x"),
-          round(col("gl"), 6).as("gamma_left"), round(col("gr"), 6).as("gamma_right"),
-          col("mse")))
     }
     stages.reduce(_ unionAll _).orderBy(col("stage"))
   }
@@ -3154,9 +3151,8 @@ FROM agg a CROSS JOIN tot t"""
     val tot = broadcast(cells.agg(sum(col("n")).as("n_all"),
       countDistinct(col("event_type")).as("n_t"),
       countDistinct(col("hod")).as("n_h")))
-    var cur = graft.Checkpoints.materialize(cells.select(col("event_type"), col("hod"), col("n"),
-      lit(1.0).as("w")))
-    for (_ <- 1 to RakeRounds) {
+    val (cur, _) = graft.Checkpoints.iterate(cells.select(col("event_type"), col("hod"),
+        col("n"), lit(1.0).as("w")), RakeRounds) { cur =>
       val rowm = cur.groupBy(col("event_type"))
         .agg(dec12(col("w") * col("n")).as("mass"))
       val wrStep = cur.join(broadcast(rowm), "event_type").crossJoin(tot)
@@ -3165,11 +3161,10 @@ FROM agg a CROSS JOIN tot t"""
             .as("w"))
       val colm = wrStep.groupBy(col("hod"))
         .agg(dec12(col("w") * col("n")).as("mass"))
-      val next = wrStep.join(broadcast(colm), "hod").crossJoin(tot)
+      wrStep.join(broadcast(colm), "hod").crossJoin(tot)
         .select(col("event_type"), col("hod"), col("n"),
           round(col("w") * ((col("n_all").cast("double") / col("n_h")) / col("mass")),
             12).as("w"))
-      cur = graft.Checkpoints.rotate(next, cur)
     }
     val err = cur.crossJoin(tot)
       .groupBy(col("event_type"), col("n_all"), col("n_t"))

@@ -776,14 +776,13 @@ FROM scored ORDER BY user_id""".stripMargin
     val trans = graft.Checkpoints.materialize(cnt
       .select(col("from_type"), col("to_type"),
         round(col("n").cast("double") / sum(col("n")).over(rowtot), 12).as("pr")))
-    var pi = trans.select(col("from_type").as("st")).distinct()
-      .select(col("st"), lit(0.2).as("pi"))
-    for (_ <- 1 to EntropyRatePiRounds) {
-      pi = graft.Checkpoints.rotate(trans
+    val (pi, _) = graft.Checkpoints.iterate(trans.select(col("from_type").as("st")).distinct()
+        .select(col("st"), lit(0.2).as("pi")), EntropyRatePiRounds) { pi =>
+      trans
         .join(pi.select(col("st").as("from_type"), col("pi")), Seq("from_type"))
         .groupBy(col("to_type").as("st"))
         .agg(round(sum(round(col("pi") * col("pr"), 12)
-          .cast(DecimalType(38, 12))).cast("double"), 12).as("pi")), pi)
+          .cast(DecimalType(38, 12))).cast("double"), 12).as("pi"))
     }
     val hrow = trans.groupBy(col("from_type").as("st"))
       .agg(round(-sum(round(col("pr") * log(col("pr")), 12)
@@ -953,10 +952,10 @@ ORDER BY p.st"""
       .select(col("from_type"), col("to_type"), col("n"),
         (col("n").cast("double") / sum(col("n")).over(wf)).as("p")))
     val states = graft.Checkpoints.materialize(cnts.select(col("from_type").as("s")).distinct())
-    var ph = graft.Checkpoints.materialize(states.select(col("s"),
-      when(col("s") === "purchase", lit(1.0)).otherwise(lit(0.0)).as("ph")))
-    for (_ <- 1 to AbsorbSteps) {
-      val nxt = states
+    val (ph, _) = graft.Checkpoints.iterate(states.select(col("s"),
+        when(col("s") === "purchase", lit(1.0)).otherwise(lit(0.0)).as("ph")),
+        AbsorbSteps) { ph =>
+      states
         .join(probs.filter(col("from_type") =!= "purchase")
             .join(ph.select(col("s").as("to_type"), col("ph").as("pv")),
               "to_type")
@@ -967,7 +966,6 @@ ORDER BY p.st"""
         .select(col("s"),
           when(col("s") === "purchase", lit(1.0))
             .otherwise(coalesce(col("np"), lit(0.0))).as("ph"))
-      ph = graft.Checkpoints.rotate(nxt, ph)
     }
     val direct = cnts.filter(col("to_type") === "purchase")
       .select(col("from_type").as("s"), col("n").as("n_direct"))

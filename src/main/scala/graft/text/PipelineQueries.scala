@@ -665,8 +665,14 @@ object PipelineQueries {
       .select(col("term"),
         round(lit(1.0) / sqrt(col("nt").cast("double")), 12).as("v"))
     def powerLoop(deflateAgainst: Option[DataFrame]): DataFrame = {
-      var v = v0
-      for (_ <- 1 to LsaRounds) {
+      // the round's u and w checkpoints: only its own step reads them
+      val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val freeScratch: DataFrame => Boolean = _ => {
+        scratch.foreach(graft.Checkpoints.free)
+        scratch.clear()
+        false
+      }
+      val (v, _) = graft.Checkpoints.iterate(v0, LsaRounds, freeScratch) { v =>
         val u = graft.Checkpoints.materialize(tfidf.join(v, Seq("term"))
           .groupBy(col("doc_id"))
           .agg(sum(round(col("a") * col("v"), 12).cast(dec12))
@@ -675,6 +681,7 @@ object PipelineQueries {
           .groupBy(col("term"))
           .agg(sum(round(col("a") * col("u"), 12).cast(dec12))
             .cast("double").as("w")))
+        scratch += u += w
         deflateAgainst.foreach { v1f =>
           val v1 = v1f.select(col("term"), col("v").as("v1"))
           val pr = w.join(v1, Seq("term"))
@@ -685,11 +692,12 @@ object PipelineQueries {
             .select(col("term"),
               round(col("w") - col("pr") * coalesce(col("v1"), lit(0.0)), 12)
                 .as("w")))
+          scratch += w
         }
         val nrm = w.agg(sqrt(sum(round(col("w") * col("w"), 12).cast(dec12))
           .cast("double")).as("n"))
-        v = graft.Checkpoints.materialize(w.crossJoin(broadcast(nrm))
-          .select(col("term"), round(col("w") / col("n"), 12).as("v")))
+        w.crossJoin(broadcast(nrm))
+          .select(col("term"), round(col("w") / col("n"), 12).as("v"))
       }
       v
     }

@@ -2163,14 +2163,25 @@ ORDER BY p.lang"""
     * a partial-agged pair count, a 1-row TakeOrdered merge pick, and
     * a map-only fold rewrite. */
   def q183BpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
-    var vocab = graft.Checkpoints.cache(
-      Tables.documents(spark, sfDir)
-        .select(explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("word"))
-        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-        .withColumn("syms",
-          expr("transform(sequence(1, length(word)), i -> substr(word, i, 1))")))
-    val merges = Seq.newBuilder[(Int, String, String, String, Long, Long)]
-    for (r <- 1 to BpeRounds) {
+    val merges = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, String, String, Long, Long)]
+    var merge = ("", "", 0L)
+    // the merge picked from one round's vocabulary is recorded with the
+    // symbol census of the next, once that is materialized
+    def census(vocab: DataFrame): Boolean = {
+      val (a, b, pc) = merge
+      val nSyms = vocab.select(explode(col("syms")).as("s"))
+        .agg(countDistinct(col("s"))).first().getLong(0)
+      merges += ((merges.size + 1, a, b, a + b, pc, nSyms))
+      false
+    }
+    graft.Checkpoints.iterate(
+        Tables.documents(spark, sfDir)
+          .select(explode(expr("regexp_extract_all(text, '[a-z0-9]+', 0)")).as("word"))
+          .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+          .withColumn("syms",
+            expr("transform(sequence(1, length(word)), i -> substr(word, i, 1))")),
+        BpeRounds, census) { vocab =>
       val top = vocab.filter(size(col("syms")) >= 2)
         .select(col("cnt"), explode(expr(
           "transform(sequence(1, size(syms) - 1), i -> " +
@@ -2180,15 +2191,11 @@ ORDER BY p.lang"""
         .agg(sum(col("cnt")).as("pc"))
         .orderBy(col("pc").desc, col("a"), col("b")).limit(1)
         .collect().head
-      val (a, b, pc) = (top.getString(0), top.getString(1), top.getLong(2))
-      val next = graft.Checkpoints.cache(vocab.withColumn("syms", bpeApplyMerge(a, b)))
-      val nSyms = next.select(explode(col("syms")).as("s"))
-        .agg(countDistinct(col("s"))).first().getLong(0)
-      merges += ((r, a, b, a + b, pc, nSyms))
-      vocab = next
+      merge = (top.getString(0), top.getString(1), top.getLong(2))
+      vocab.withColumn("syms", bpeApplyMerge(merge._1, merge._2))
     }
     import spark.implicits._
-    merges.result()
+    merges.toSeq
       .toDF("round", "lhs", "rhs", "merged", "pair_count", "n_symbols_after")
       .orderBy(col("round"))
   }
@@ -2388,17 +2395,17 @@ FROM res ORDER BY round"""
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("outw"))
     val eside = graft.Checkpoints.materialize(edges.join(outw, Seq("src"))
       .select(col("src"), col("dst"), (col("w") / col("outw")).as("frac")))
-    var prev = nodes.select(col("word"), lit(1.0).as("score"))
-    for (_ <- 1 to TextRankRounds) {
-      prev = graft.Checkpoints.rotate(eside
+    val (ranks, _) = graft.Checkpoints.iterate(
+        nodes.select(col("word"), lit(1.0).as("score")), TextRankRounds) { prev =>
+      eside
         .join(prev.select(col("word").as("src"), col("score")), Seq("src"))
         .groupBy(col("dst"))
         .agg(round(lit(TextRankRestart) + lit(TextRankDamping) *
           sum(round(col("frac") * col("score"), 12)
             .cast(DecimalType(38, 12))).cast("double"), 12).as("score"))
-        .select(col("dst").as("word"), col("score")), prev)
+        .select(col("dst").as("word"), col("score"))
     }
-    prev.orderBy(round(col("score"), 6).desc, col("word"))
+    ranks.orderBy(round(col("score"), 6).desc, col("word"))
       .limit(TextRankTopK)
       .select(col("word"), round(col("score"), 6).as("score"))
   }

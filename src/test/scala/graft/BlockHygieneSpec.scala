@@ -105,11 +105,36 @@ class BlockHygieneSpec extends GraftSpec {
     } finally SessionCache.clear(spark)
   }
 
+  test("Checkpoints.iterate: one live snapshot, stop ends the loop, drain frees the last") {
+    val before = persistentRdds
+    val init = spark.range(100).toDF("x").persist()
+    assert(init.count() == 100)
+    var initCachedAtFirstStep: Option[Boolean] = None
+    val live = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val (last, rounds) = Checkpoints.iterate(init, maxRounds = 10, stop = { s =>
+      live += persistentRdds
+      s.agg(max(col("x"))).first().getLong(0) >= 103
+    }) { s =>
+      if (initCachedAtFirstStep.isEmpty) initCachedAtFirstStep = Some(init.storageLevel.isValid)
+      s.select((col("x") + 1).as("x"))
+    }
+    assert(initCachedAtFirstStep.contains(false), "init still cached once its checkpoint exists")
+    assert(rounds == 4, s"stop fires after the 4th round, ran $rounds")
+    assert(live == Seq.fill(4)(before + 1), s"live persistent RDDs per round: $live")
+    assert(last.agg(min(col("x")), max(col("x"))).first() ==
+      org.apache.spark.sql.Row(4L, 103L))
+    Checkpoints.drain(spark)
+    assert(persistentRdds <= before, s"last snapshot survived drain: $before -> $persistentRdds")
+  }
+
   test("every VertexLoop engine frees its loop state at drain (no cacheKey)") {
     val edges = graph.WebGraph.edges(spark, sfDir).localCheckpoint()
     val wedges = edges.withColumn("w", lit(1L))
     val verts = graph.WebGraph.vertices(edges)
     val seeds = verts.orderBy(col("id")).limit(3)
+    val vecs = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val dims = vecs.select(size(col("v"))).first().getInt(0)
     val engines: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "WeightedRank" -> (() => graph.WeightedRank.run(spark, wedges,
         graph.LinkRank.uniformInit(edges), iters = 3)),
@@ -123,7 +148,12 @@ class BlockHygieneSpec extends GraftSpec {
       "LinkRank.runTrace" -> (() => graph.LinkRank.runTrace(spark, edges,
         graph.LinkRank.uniformInit(edges), iters = 3)),
       "LinkRank.runCounted(tol)" -> (() => graph.LinkRank.runCounted(spark, edges,
-        graph.LinkRank.uniformInit(edges), iters = 3, tol = Some(1e-12))._1))
+        graph.LinkRank.uniformInit(edges), iters = 3, tol = Some(1e-12))._1),
+      "Hits" -> (() => graph.Hits.run(spark, edges, iters = 3)),
+      "Salsa" -> (() => graph.Salsa.run(spark, edges, iters = 3)),
+      "Graft.kmeans" -> (() => Graft.kmeans(vecs, col("vec_id"), col("v"), k = 4, dims = dims)),
+      "Graft.pqCodebook" -> (() => Graft.pqCodebook(vecs, col("vec_id"), col("v"),
+        dims = dims, nSubs = 2, k = 4)))
     for ((name, run) <- engines) {
       val before = persistentRdds
       assert(run().count() > 0, s"$name returned no rows")
@@ -133,6 +163,27 @@ class BlockHygieneSpec extends GraftSpec {
     }
     Checkpoints.free(edges)
   }
+
+  // Persistent RDDs after the action, before drain, at sf0.001 (session
+  // memos included): one loop snapshot plus the run's loop-invariant
+  // frames. A loop that kept every round's blocks would hold one more
+  // per round.
+  private val heldBeforeDrain = Seq(
+    "q183_bpe_merges" -> 1, "q214_matching" -> 4, "q266_mmr" -> 2, "q268_lsa_topics" -> 4)
+
+  for ((key, held) <- heldBeforeDrain)
+    test(s"$key holds $held persistent RDDs before drain and none after it") {
+      SessionCache.clear(spark)
+      Checkpoints.drain(spark)
+      val before = persistentRdds
+      val out = SparkEntry.queries(key)(spark, sfDir)
+      assert(out.collect().nonEmpty, s"$key returned no rows")
+      val during = persistentRdds - before
+      Checkpoints.drain(spark)
+      SessionCache.clear(spark)
+      assert(during == held, s"$key held $during persistent RDDs before drain, pinned at $held")
+      assert(persistentRdds <= before, s"$key leaked: before=$before after=$persistentRdds")
+    }
 
   test("the damped-rank kernel frees its CSR, vertex and score RDDs (cacheKey)") {
     val edges = graph.WebGraph.edges(spark, sfDir).localCheckpoint()

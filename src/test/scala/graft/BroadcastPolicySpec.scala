@@ -70,6 +70,36 @@ class BroadcastPolicySpec extends GraftSpec {
   policy("q308 JW linkage")(DedupQueries.q308JwLinkage(spark, sfDir))
   policy("q309 DL linkage")(DedupQueries.q309DlLinkage(spark, sfDir))
   policy("q209 Fiedler")(SpectralQueries.q209Fiedler(spark, sfDir))
+  // q214's joins run inside its round checkpoints and its output is
+  // literal census rows, so the plans checked are those of every query
+  // execution the run makes
+  test("q214 matching: broadcast under the default threshold, none at -1, same rows") {
+    def traced(): (Seq[Row], Seq[String]) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      ns: Long): Unit = plans.add(qe.executedPlan.toString)
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val (rows, planned, ran) = run(GraphQueries.q214Matching(spark, sfDir))
+        org.apache.spark.GraftInternals.settle(spark.sparkContext)
+        (rows, Seq(planned, ran) ++ plans.toArray(Array.empty[String]))
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val (under, underPlans) = traced()
+    val (off, offPlans) = withConf(Threshold -> "-1")(traced())
+    Checkpoints.drain(spark)
+    assert(underPlans.exists(_.contains("BroadcastHashJoin")),
+      s"q214 must broadcast its vertex frames:\n${underPlans.mkString("\n")}")
+    offPlans.foreach { plan =>
+      assert(!plan.contains("BroadcastHashJoin"), s"q214 must not broadcast at $Threshold=-1:\n$plan")
+    }
+    assert(under.nonEmpty && under == off, "q214 rows changed with the strategy")
+  }
+
   // the broadcast merge-walk is a cross join against the one-row union
   // set; past the threshold the join shape broadcasts nothing
   policy("Graft.decontaminate", op = "BroadcastNestedLoopJoin") {
