@@ -87,14 +87,6 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/last_bench.json")
     val spark = GraftSession.local(cpus, cpus)
 
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      }
-
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
 
@@ -106,7 +98,7 @@ object Bench {
         Right((System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
-          Left(s"${e.getClass.getSimpleName}: ${esc(String.valueOf(e.getMessage)).take(200)}")
+          Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
       } finally Checkpoints.drain(spark) // session stays block-clean per run
     }
 
@@ -221,7 +213,8 @@ object Bench {
     // object.
     val errs = results.collect { case (n, Left(m)) => n -> m } ++
       cold.collect { case (n, Left(m)) => s"$n (cold)" -> m }
-    val es = errs.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
+    val es = errs.map { case (k, v) => s"${Verify.jsonString(k)}:${Verify.jsonString(v)}" }
+      .mkString("{", ",", "}")
     val coldPart = if (cold.nonEmpty || coldMode != "0")
       s""""cold_queries":$cqs,"total_cold":${r3(coldTotal)},"cold_mode":"$coldMode","n_cold":${cold.size},"n_cold_skipped":$coldSkipped,"""
     else ""

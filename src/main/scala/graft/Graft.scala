@@ -222,22 +222,13 @@ object Graft {
     * (da, db, est_jaccard) for band-colliding pairs — compiled
     * signatures, band-bucket equi-join, never O(n²). */
   def minhashPairs(docs: DataFrame, id: Column, text: Column): DataFrame = {
-    import graft.dedup.DedupQueries.{K, bands, candidates}
+    import graft.dedup.DedupQueries.{K, signaturePairs}
     // the signature scan feeds the band join AND both pair sides —
     // cache it once (freed at the caller's next drain)
-    val sigs = Checkpoints.cache(docs
+    signaturePairs(Checkpoints.cache(docs
       .select(id.as("doc_id"), minhashSignature(text).as("mhs"))
       .select(col("doc_id") +:
-        (0 until K).map(j => element_at(col("mhs"), j + 1).as(s"mh$j")): _*))
-    val cand = candidates(bands(sigs))
-    val sa = sigs.toDF("da" +: (0 until K).map(j => s"a$j"): _*)
-    val sb = sigs.toDF("db" +: (0 until K).map(j => s"b$j"): _*)
-    val matches = (0 until K)
-      .map(j => when(col(s"a$j") === col(s"b$j"), 1).otherwise(0))
-      .reduce(_ + _)
-    cand.join(sa, "da").join(sb, "db")
-      .select(col("da"), col("db"),
-        (matches.cast("double") / K).as("est_jaccard"))
+        (0 until K).map(j => element_at(col("mhs"), j + 1).as(s"mh$j")): _*)))
   }
 
   /** Benchmark decontamination over caller frames: score every training

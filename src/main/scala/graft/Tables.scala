@@ -122,7 +122,7 @@ object Tables {
   }
 
   /** Raw, un-normalized events frame — the schema a file-stream source
-    * over events.parquet must declare (q98/q111 readStream). */
+    * over events.parquet must declare (StreamBatchQueries.boundedStream). */
   def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "events")
   def documents(spark: SparkSession, sfDir: String,
                 spreadScan: Boolean = false): DataFrame =

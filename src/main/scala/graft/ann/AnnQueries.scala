@@ -70,6 +70,25 @@ object AnnQueries {
     "ed0 AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),\n" +
       s"ed AS MATERIALIZED (SELECT vec_id, v, ${Sql.listNorm("v")} AS nrm FROM ed0)"
 
+  /** CTEs `qs` (q30's query panel) and `scored(qid, vec_id, cosine)`:
+    * every panel query against every other vector. */
+  private val bruteScoredCtes =
+    s"""qs AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM ed WHERE vec_id % $QueryMod = 0 AND vec_id < $QueryCap),
+scored AS (
+  SELECT q.qid, e.vec_id, round(${Sql.listCosineByNorm("q.qv", "e.v", "q.qn", "e.nrm")}, 6) AS cosine
+  FROM qs q JOIN ed e ON q.qid <> e.vec_id)"""
+
+  /** CTE `ranked`: each query's `scored` neighbours numbered by cosine,
+    * then vec_id. */
+  private val rankedCte = """ranked AS (
+  SELECT qid, vec_id, cosine,
+    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rank
+  FROM scored)"""
+
+  /** The kNN result: the top [[K]] of `ranked` per query. */
+  private val topKSelect = s"""SELECT qid, vec_id AS neighbor, rank, cosine FROM ranked
+WHERE rank <= $K ORDER BY qid, rank"""
+
   // ---------------------------------------------------------------- q30
   /** Brute-force cosine top-k: broadcast query set x full table. */
   def q30KnnBrute(spark: SparkSession, sfDir: String): DataFrame = {
@@ -89,16 +108,9 @@ object AnnQueries {
 
   val q30Sql: String =
     s"""WITH $vecsCte,
-qs AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM ed WHERE vec_id % $QueryMod = 0 AND vec_id < $QueryCap),
-scored AS (
-  SELECT q.qid, e.vec_id, round(${Sql.listCosineByNorm("q.qv", "e.v", "q.qn", "e.nrm")}, 6) AS cosine
-  FROM qs q JOIN ed e ON q.qid <> e.vec_id),
-ranked AS (
-  SELECT qid, vec_id, cosine,
-    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rank
-  FROM scored)
-SELECT qid, vec_id AS neighbor, rank, cosine FROM ranked
-WHERE rank <= $K ORDER BY qid, rank"""
+$bruteScoredCtes,
+$rankedCte
+$topKSelect"""
 
   // ---------------------------------------------------------------- q31
   /** LSH ANN: 32 hyperplane-sign bits split into 8 bands of 4; a
@@ -172,12 +184,8 @@ cand AS (
   WHERE q.vec_id % $QueryMod = 0 AND q.vec_id <> e.vec_id),
 scored AS (
   SELECT qid, vec_id, round(${Sql.listCosineByNorm("qv", "v", "qn", "nrm")}, 6) AS cosine FROM cand),
-ranked AS (
-  SELECT qid, vec_id, cosine,
-    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rank
-  FROM scored)
-SELECT qid, vec_id AS neighbor, rank, cosine FROM ranked
-WHERE rank <= $K ORDER BY qid, rank"""
+$rankedCte
+$topKSelect"""
   }
 
   // ---------------------------------------------------------------- q32
@@ -267,12 +275,8 @@ probes AS (
 scored AS (
   SELECT p.qid, a.vec_id, round(${Sql.listCosineByNorm("p.qv", "a.v", "p.qn", "a.nrm")}, 6) AS cosine
   FROM probes p JOIN assigned a ON a.cid = p.cid AND p.qid <> a.vec_id),
-ranked AS (
-  SELECT qid, vec_id, cosine,
-    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rank
-  FROM scored)
-SELECT qid, vec_id AS neighbor, rank, cosine FROM ranked
-WHERE rank <= $K ORDER BY qid, rank"""
+$rankedCte
+$topKSelect"""
 
   // ---------------------------------------------------------------- q33
   /** Int8 embedding quantization (the storage path at 100 TB: 4x
@@ -775,10 +779,7 @@ ORDER BY n.qid, n.rank"""
 
   val q160Sql: String =
     s"""WITH $vecsCte,
-qs AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM ed WHERE vec_id % $QueryMod = 0 AND vec_id < $QueryCap),
-scored AS (
-  SELECT q.qid, e.vec_id, round(${Sql.listCosineByNorm("q.qv", "e.v", "q.qn", "e.nrm")}, 6) AS cosine
-  FROM qs q JOIN ed e ON q.qid <> e.vec_id),
+$bruteScoredCtes,
 run AS (
   SELECT qid, vec_id AS neighbor, rank FROM (
     SELECT qid, vec_id,
@@ -980,7 +981,6 @@ FROM a${PqIters + 1} GROUP BY m, cid ORDER BY m, cid"""
   val q190Sql: String = {
     val meanList = (1 to Dims).map(i => s"round(sum(v[$i]) / count(*), 6)")
       .mkString("[", ", ", "]")
-    def gs(e: String) = s"CAST(round($e, 6) AS DECIMAL(38,6))"
     s"""WITH $vecsCte,
 el AS (SELECT e.vec_id, e.v, e.nrm, m.label FROM ed e JOIN embeddings m USING (vec_id)),
 cents AS MATERIALIZED (
@@ -989,10 +989,10 @@ cents AS MATERIALIZED (
 cn AS MATERIALIZED (SELECT label, n_vecs, cv, ${Sql.listNorm("cv")} AS cnn FROM cents),
 intra AS (
   SELECT e.label, max(c.n_vecs) AS n_vecs,
-    CAST(sum(${gs(Sql.listCosineByNorm("e.v", "c.cv", "e.nrm", "c.cnn"))}) AS DOUBLE) AS cs
+    CAST(sum(${Sql.grid6(Sql.listCosineByNorm("e.v", "c.cv", "e.nrm", "c.cnn"))}) AS DOUBLE) AS cs
   FROM el e JOIN cn c ON e.label = c.label GROUP BY e.label),
 inter AS (
-  SELECT CAST(sum(${gs(Sql.listCosineByNorm("a.cv", "b.cv", "a.cnn", "b.cnn"))}) AS DOUBLE) AS ss,
+  SELECT CAST(sum(${Sql.grid6(Sql.listCosineByNorm("a.cv", "b.cv", "a.cnn", "b.cnn"))}) AS DOUBLE) AS ss,
     count(*) AS np
   FROM cn a JOIN cn b ON a.label < b.label)
 SELECT i.label, i.n_vecs, round(i.cs / i.n_vecs, 6) AS intra_cos,
@@ -1041,14 +1041,8 @@ FROM intra i CROSS JOIN inter x ORDER BY i.label"""
 
   val q227Sql: String =
     s"""WITH $vecsCte,
-qs AS (SELECT vec_id AS qid, v AS qv, nrm AS qn FROM ed WHERE vec_id % $QueryMod = 0 AND vec_id < $QueryCap),
-scored AS (
-  SELECT q.qid, e.vec_id, round(${Sql.listCosineByNorm("q.qv", "e.v", "q.qn", "e.nrm")}, 6) AS cosine
-  FROM qs q JOIN ed e ON q.qid <> e.vec_id),
-ranked AS (
-  SELECT qid, vec_id, cosine,
-    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rank
-  FROM scored),
+$bruteScoredCtes,
+$rankedCte,
 knn AS MATERIALIZED (
   SELECT qid, vec_id AS neighbor, cosine FROM ranked WHERE rank <= $K),
 votes AS (

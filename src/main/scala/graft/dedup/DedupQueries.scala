@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF, VectorFunctions => VF}
-import graft.oracle.Sql
+import graft.oracle.{RankSql, Sql}
 import graft.functions.MathFunctions.dec12
 
 /** Deduplication suite (SURVEY §2.C q20–q24) over the documents table.
@@ -38,7 +38,9 @@ object DedupQueries {
   private[graft] val NormDupOffset: Long = 3000000000L
 
   // -------------------------------------------------- shared: corpus
-  private def corpus(spark: SparkSession, sfDir: String): DataFrame = {
+  /** Documents ∪ synthetic near/exact dups: the dedup corpus that the
+    * dedup queries here and q62/q64/q80 read. */
+  private[graft] def corpus(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     d.unionAll(
         d.filter(pmod(col("doc_id"), lit(10)) === 0)
@@ -162,10 +164,11 @@ FROM corpus ORDER BY doc_id"""
       .select(col("da"), col("db")).distinct()
   }
 
-  /** MinHash-LSH near-dup pairs with estimated Jaccard = matching
-    * signature fraction. Band-bucket join — no cross join anywhere. */
-  def q21MinHashLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    val sigs = cachedSignatures(spark, sfDir)
+  /** (da, db, est_jaccard) for the band-colliding pairs of a
+    * (doc_id, mh0..mh11) signature frame; est_jaccard is the matching
+    * signature fraction. `sigs` feeds the band join and both pair
+    * sides, so memoizing or caching it is the caller's choice. */
+  private[graft] def signaturePairs(sigs: DataFrame): DataFrame = {
     val cand = candidates(bands(sigs))
     val sa = sigs.toDF("da" +: (0 until K).map(j => s"a$j"): _*)
     val sb = sigs.toDF("db" +: (0 until K).map(j => s"b$j"): _*)
@@ -174,9 +177,15 @@ FROM corpus ORDER BY doc_id"""
       .reduce(_ + _)
     cand.join(sa, "da").join(sb, "db")
       .select(col("da"), col("db"),
-        round(matches.cast("double") / K, 6).as("est_jaccard"))
-      .orderBy(col("da"), col("db"))
+        (matches.cast("double") / K).as("est_jaccard"))
   }
+
+  /** MinHash-LSH near-dup pairs with estimated Jaccard = matching
+    * signature fraction. Band-bucket join — no cross join anywhere. */
+  def q21MinHashLsh(spark: SparkSession, sfDir: String): DataFrame =
+    signaturePairs(cachedSignatures(spark, sfDir))
+      .select(col("da"), col("db"), round(col("est_jaccard"), 6).as("est_jaccard"))
+      .orderBy(col("da"), col("db"))
 
   val q21Sql: String = {
     val matches = (0 until K)
@@ -296,7 +305,18 @@ SELECT da, db, hamming FROM pairs WHERE hamming <= $MaxHamming ORDER BY da, db""
     * trigram strings (~4× less shuffle IO; the oracle hashes
     * identically, and a within-doc collision needs ~2^16 distinct
     * shingles per doc — orders of magnitude above real documents). */
-  def q23NgramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
+  def q23NgramJaccard(spark: SparkSession, sfDir: String): DataFrame =
+    candidateOverlaps(spark, sfDir)
+      .select(col("da"), col("db"),
+        round(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")).cast("double"), 6)
+          .as("jaccard"))
+      .orderBy(col("da"), col("db"))
+
+  /** The LSH candidate pairs with each side's distinct shingle-hash
+    * count and the pair's intersection size: (db, da, sa, na, sb, nb,
+    * inter). */
+  private def candidateOverlaps(spark: SparkSession, sfDir: String): DataFrame = {
     // per-doc sorted distinct shingle-hash SET as one in-row array
     // (compiled kernel): the set never leaves its row, so the exact
     // intersection is a merge-walk on the two candidate arrays —
@@ -312,14 +332,11 @@ SELECT da, db, hamming FROM pairs WHERE hamming <= $MaxHamming ORDER BY da, db""
     val inter = call_function("graft_intersect_count", col("sa"), col("sb"))
     cand.join(sa, "da").join(sb, "db")
       .withColumn("inter", inter)
-      .select(col("da"), col("db"),
-        round(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double"), 6)
-          .as("jaccard"))
-      .orderBy(col("da"), col("db"))
   }
 
-  val q23Sql: String =
+  /** Twin of [[candidateOverlaps]]: CTEs `cand(da, db)`,
+    * `cnt(doc_id, n)` and `inter(da, db, inter)`. */
+  private val overlapCtes: String =
     s"""WITH $corpusCte,
 shd AS MATERIALIZED (
   SELECT DISTINCT doc_id, ${Sql.hash32OfHex("md5(s.sh)")} AS sh
@@ -332,7 +349,10 @@ cnt AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
 inter AS (
   SELECT c.da, c.db, count(*) AS inter
   FROM cand c JOIN shd a ON a.doc_id = c.da JOIN shd b ON b.doc_id = c.db AND b.sh = a.sh
-  GROUP BY c.da, c.db)
+  GROUP BY c.da, c.db)"""
+
+  val q23Sql: String =
+    s"""$overlapCtes
 SELECT c.da, c.db,
   round(CAST(coalesce(i.inter, 0) AS DOUBLE) /
         CAST(na.n + nb.n - coalesce(i.inter, 0) AS DOUBLE), 6) AS jaccard
@@ -376,6 +396,19 @@ ORDER BY c.da, c.db"""
         posexplode(VF.lshBands(col("v"), EmbDims, CodeBits, EmbBands)))
       .select(col("vec_id"), col("pos").as("band"), col("col").as("key"))
 
+  /** Twin of [[embCorpus]]: CTEs `ed`, `vc0` and `vc(vec_id, v, nrm)`. */
+  private val embCorpusCtes: String = {
+    val pert = s"list_transform(range(1, len(embedding) + 1), i -> CAST(embedding[i] AS DOUBLE) * 1.01 + CAST(((i - 1) % 5) - 2 AS DOUBLE) * 0.001)"
+    s"""ed AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+vc0 AS (
+  SELECT vec_id, v FROM ed
+  UNION ALL
+  SELECT vec_id + $NearDupOffset AS vec_id, $pert AS v
+  FROM embeddings WHERE vec_id % 10 = 0),
+vc AS MATERIALIZED (SELECT vec_id, v, ${Sql.listNorm("v")} AS nrm FROM vc0)"""
+  }
+
   def q24EmbeddingDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val vc = graft.Checkpoints.cache(embCorpus(spark, sfDir))
     val banded = embBands(vc)
@@ -392,18 +425,10 @@ ORDER BY c.da, c.db"""
   }
 
   val q24Sql: String = {
-    val pert = s"list_transform(range(1, len(embedding) + 1), i -> CAST(embedding[i] AS DOUBLE) * 1.01 + CAST(((i - 1) % 5) - 2 AS DOUBLE) * 0.001)"
     val bandRows = (0 until EmbBands).map { b =>
       s"SELECT vec_id, $b AS band, ${Sql.lshCode("v", EmbDims, CodeBits, CodeBits * b)} AS key FROM vc"
     }.mkString("\n  UNION ALL\n  ")
-    s"""WITH ed AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-vc0 AS (
-  SELECT vec_id, v FROM ed
-  UNION ALL
-  SELECT vec_id + $NearDupOffset AS vec_id, $pert AS v
-  FROM embeddings WHERE vec_id % 10 = 0),
-vc AS MATERIALIZED (SELECT vec_id, v, ${Sql.listNorm("v")} AS nrm FROM vc0),
+    s"""WITH $embCorpusCtes,
 banded AS MATERIALIZED (
   $bandRows),
 cand AS MATERIALIZED (
@@ -424,7 +449,15 @@ SELECT va, vb, cosine FROM pairs WHERE cosine >= $CosThreshold ORDER BY va, vb""
     * convergence; both engines reach the identical fixed point). The
     * canonical doc of each cluster is its minimum id — the "keep one
     * per near-dup group" primitive of a training-data pipeline. */
-  def q25DupClusters(spark: SparkSession, sfDir: String): DataFrame = {
+  def q25DupClusters(spark: SparkSession, sfDir: String): DataFrame =
+    clusterLabels(spark, sfDir)
+      .select(col("id").as("doc_id"), col("lbl").as("cluster"),
+        (col("id") === col("lbl")).as("is_canonical"))
+      .orderBy(col("doc_id"))
+
+  /** `(id, lbl)`: each doc's near-dup cluster, the least doc id it
+    * reaches over the LSH candidate pairs in [[CcIters]] rounds. */
+  private def clusterLabels(spark: SparkSession, sfDir: String): DataFrame = {
     val cand = candidates(bands(cachedSignatures(spark, sfDir)))
     val und = graft.Checkpoints.cache(cand.select(col("da").as("a"), col("db").as("b"))
       .unionAll(cand.select(col("db").as("a"), col("da").as("b"))))
@@ -434,35 +467,24 @@ SELECT va, vb, cosine FROM pairs WHERE cosine >= $CosThreshold ORDER BY va, vb""
       .select(col("doc_id").as("id"), col("doc_id").as("lbl"))
     val (labels, _) = graft.graph.ConnectedComponents.propagate(und, init, CcIters)
     und.unpersist()
-    labels.select(col("id").as("doc_id"), col("lbl").as("cluster"),
-        (col("id") === col("lbl")).as("is_canonical"))
-      .orderBy(col("doc_id"))
+    labels
   }
 
-  val q25Sql: String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH $corpusCte,
+  /** Twin of [[clusterLabels]]: the CTEs up to `final(id, lbl)`. */
+  private val clusterCtes: String =
+    s"""WITH $corpusCte,
 $shingleHashCte,
 $signaturesCte,
 $bandsCte,
 $candCte,
 e2 AS MATERIALIZED (SELECT da AS a, db AS b FROM cand UNION ALL SELECT db AS a, da AS b FROM cand),
 l0 AS MATERIALIZED (SELECT doc_id AS id, doc_id AS lbl FROM corpus),
-"""
-    for (k <- 1 to CcIters) {
-      val p = s"l${k - 1}"
-      sb ++= s"""l$k AS MATERIALIZED (
-  SELECT v.id, least(v.lbl, coalesce(m.ml, v.lbl)) AS lbl
-  FROM $p v LEFT JOIN (
-    SELECT e2.a AS mid, min(p.lbl) AS ml FROM e2 JOIN $p p ON e2.b = p.id GROUP BY e2.a) m
-  ON v.id = m.mid),
-"""
-    }
-    sb ++= s"""final AS (SELECT id, lbl FROM l$CcIters)
+${RankSql.minLabelRounds(CcIters)}final AS (SELECT id, lbl FROM l$CcIters)"""
+
+  val q25Sql: String =
+    s"""$clusterCtes
 SELECT id AS doc_id, lbl AS cluster, (id = lbl) AS is_canonical
 FROM final ORDER BY doc_id"""
-    sb.toString
-  }
 
   // ---------------------------------------------------------------- q26
   val BenchMod = 50 // every 50th doc plays the held-out benchmark
@@ -723,17 +745,8 @@ ORDER BY c.doc_id"""
     * max — the trigger for quote/subset handling in a training-data
     * pipeline. Same blocked shape as q23: compiled in-row shingle
     * sets, merge-walk intersection, candidates only (never all-pairs). */
-  def q104Containment(spark: SparkSession, sfDir: String): DataFrame = {
-    val sets = graft.Checkpoints.cache(
-      corpus(spark, sfDir)
-        .select(col("doc_id"), call_function("graft_shingle_set", col("text")).as("s"))
-        .select(col("doc_id"), col("s"), size(col("s")).as("n")))
-    val cand = candidates(bands(cachedSignatures(spark, sfDir)))
-    val sa = sets.toDF("da", "sa", "na")
-    val sb = sets.toDF("db", "sb", "nb")
-    val inter = call_function("graft_intersect_count", col("sa"), col("sb"))
-    cand.join(sa, "da").join(sb, "db")
-      .withColumn("inter", inter)
+  def q104Containment(spark: SparkSession, sfDir: String): DataFrame =
+    candidateOverlaps(spark, sfDir)
       .select(col("da"), col("db"),
         round(col("inter").cast("double") / col("na").cast("double"), 6).as("cont_a"),
         round(col("inter").cast("double") / col("nb").cast("double"), 6).as("cont_b"),
@@ -741,22 +754,9 @@ ORDER BY c.doc_id"""
           col("inter").cast("double") / col("na").cast("double"),
           col("inter").cast("double") / col("nb").cast("double")), 6).as("containment"))
       .orderBy(col("da"), col("db"))
-  }
 
   val q104Sql: String =
-    s"""WITH $corpusCte,
-shd AS MATERIALIZED (
-  SELECT DISTINCT doc_id, ${Sql.hash32OfHex("md5(s.sh)")} AS sh
-  FROM (SELECT doc_id, unnest(${shingleSql("text")}) AS sh FROM corpus) s),
-sh AS MATERIALIZED (SELECT doc_id, sh AS h FROM shd),
-$signaturesCte,
-$bandsCte,
-$candCte,
-cnt AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-inter AS (
-  SELECT c.da, c.db, count(*) AS inter
-  FROM cand c JOIN shd a ON a.doc_id = c.da JOIN shd b ON b.doc_id = c.db AND b.sh = a.sh
-  GROUP BY c.da, c.db)
+    s"""$overlapCtes
 SELECT c.da, c.db,
   round(CAST(coalesce(i.inter, 0) AS DOUBLE) / CAST(na.n AS DOUBLE), 6) AS cont_a,
   round(CAST(coalesce(i.inter, 0) AS DOUBLE) / CAST(nb.n AS DOUBLE), 6) AS cont_b,
@@ -869,13 +869,7 @@ ORDER BY t.doc_id"""
     * partition key is the cluster label, frame height is the cluster
     * size (bounded by duplication multiplicity, not corpus size). */
   def q117Survivor(spark: SparkSession, sfDir: String): DataFrame = {
-    val cand = candidates(bands(cachedSignatures(spark, sfDir)))
-    val und = graft.Checkpoints.cache(cand.select(col("da").as("a"), col("db").as("b"))
-      .unionAll(cand.select(col("db").as("a"), col("da").as("b"))))
-    val init = corpus(spark, sfDir)
-      .select(col("doc_id").as("id"), col("doc_id").as("lbl"))
-    val (labels, _) = graft.graph.ConnectedComponents.propagate(und, init, CcIters)
-    und.unpersist()
+    val labels = clusterLabels(spark, sfDir)
     val len = corpus(spark, sfDir)
       .select(col("doc_id"), length(col("text")).as("n_chars"))
     val byCluster = Window.partitionBy(col("cluster"))
@@ -888,26 +882,8 @@ ORDER BY t.doc_id"""
       .orderBy(col("doc_id"))
   }
 
-  val q117Sql: String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH $corpusCte,
-$shingleHashCte,
-$signaturesCte,
-$bandsCte,
-$candCte,
-e2 AS MATERIALIZED (SELECT da AS a, db AS b FROM cand UNION ALL SELECT db AS a, da AS b FROM cand),
-l0 AS MATERIALIZED (SELECT doc_id AS id, doc_id AS lbl FROM corpus),
-"""
-    for (k <- 1 to CcIters) {
-      val p = s"l${k - 1}"
-      sb ++= s"""l$k AS MATERIALIZED (
-  SELECT v.id, least(v.lbl, coalesce(m.ml, v.lbl)) AS lbl
-  FROM $p v LEFT JOIN (
-    SELECT e2.a AS mid, min(p.lbl) AS ml FROM e2 JOIN $p p ON e2.b = p.id GROUP BY e2.a) m
-  ON v.id = m.mid),
-"""
-    }
-    sb ++= s"""final AS (SELECT id, lbl FROM l$CcIters),
+  val q117Sql: String =
+    s"""$clusterCtes,
 len AS (SELECT doc_id, length(text) AS n_chars FROM corpus),
 j AS (
   SELECT f.id AS doc_id, f.lbl AS cluster, len.n_chars
@@ -916,8 +892,6 @@ SELECT doc_id, cluster, n_chars,
   first_value(doc_id) OVER (PARTITION BY cluster ORDER BY n_chars DESC, doc_id) AS survivor_id,
   (doc_id = first_value(doc_id) OVER (PARTITION BY cluster ORDER BY n_chars DESC, doc_id)) AS is_survivor
 FROM j ORDER BY doc_id"""
-    sb.toString
-  }
 
   // --------------------------------------------------------------- q130
   /** Normalization-aware exact dedup — the CCNet/RefinedWeb first pass
@@ -1097,12 +1071,18 @@ ORDER BY da, db"""
       .withColumnRenamed("idb", "db")
       .orderBy(col("da"), col("db"))
 
-  val q149Sql: String =
-    s"""WITH $corpusCte,
-shd AS MATERIALIZED (
+  /** CTE `shd(doc_id, h)`: each doc's distinct shingle hashes. */
+  private val shingleSetCte: String =
+    s"""shd AS MATERIALIZED (
   SELECT DISTINCT doc_id, ${Sql.hash32OfHex("md5(s.sh)")} AS h
-  FROM (SELECT doc_id, unnest(${shingleSql("text")}) AS sh FROM corpus) s),
-cnt AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
+  FROM (SELECT doc_id, unnest(${shingleSql("text")}) AS sh FROM corpus) s)"""
+
+  /** Twin of [[Graft.setSimilarityJoin]]'s candidates over `shd`: CTEs
+    * `cnt(doc_id, n)`, the prefixes, the length-filtered prefix pairs
+    * `<cand>(da, db)` and their intersection sizes `<inter>(da, db,
+    * inter)`. */
+  private def prefixJoinCtes(cand: String, inter: String): String =
+    s"""cnt AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
 ranked AS (
   SELECT shd.doc_id, h, n,
     row_number() OVER (PARTITION BY shd.doc_id ORDER BY h) AS rn
@@ -1110,14 +1090,19 @@ ranked AS (
 pref AS (
   SELECT doc_id, h, n FROM ranked
   WHERE rn <= n - (($SetSimNum * n + ${SetSimDen - 1}) // $SetSimDen) + 1),
-cand AS (
+$cand AS (
   SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
   FROM pref a JOIN pref b ON a.h = b.h AND a.doc_id < b.doc_id
   WHERE $SetSimDen * least(a.n, b.n) >= $SetSimNum * greatest(a.n, b.n)),
-inter AS (
+$inter AS (
   SELECT c.da, c.db, count(*) AS inter
-  FROM cand c JOIN shd a ON a.doc_id = c.da JOIN shd b ON b.doc_id = c.db AND b.h = a.h
-  GROUP BY c.da, c.db)
+  FROM $cand c JOIN shd a ON a.doc_id = c.da JOIN shd b ON b.doc_id = c.db AND b.h = a.h
+  GROUP BY c.da, c.db)"""
+
+  val q149Sql: String =
+    s"""WITH $corpusCte,
+$shingleSetCte,
+${prefixJoinCtes("cand", "inter")}
 SELECT i.da, i.db, na.n AS na, nb.n AS nb, i.inter,
   round(CAST(i.inter AS DOUBLE) / CAST(na.n + nb.n - i.inter AS DOUBLE), 6) AS jaccard
 FROM inter i JOIN cnt na ON na.doc_id = i.da JOIN cnt nb ON nb.doc_id = i.db
@@ -1154,29 +1139,12 @@ ORDER BY i.da, i.db"""
 
   val q157Sql: String =
     s"""WITH $corpusCte,
-shd AS MATERIALIZED (
-  SELECT DISTINCT doc_id, ${Sql.hash32OfHex("md5(s.sh)")} AS h
-  FROM (SELECT doc_id, unnest(${shingleSql("text")}) AS sh FROM corpus) s),
+$shingleSetCte,
 sh AS MATERIALIZED (SELECT doc_id, h FROM shd),
 $signaturesCte,
 $bandsCte,
 $candCte,
-cnt AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-ranked AS (
-  SELECT shd.doc_id, h, n,
-    row_number() OVER (PARTITION BY shd.doc_id ORDER BY h) AS rn
-  FROM shd JOIN cnt ON shd.doc_id = cnt.doc_id),
-pref AS (
-  SELECT doc_id, h, n FROM ranked
-  WHERE rn <= n - (($SetSimNum * n + ${SetSimDen - 1}) // $SetSimDen) + 1),
-scand AS (
-  SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-  FROM pref a JOIN pref b ON a.h = b.h AND a.doc_id < b.doc_id
-  WHERE $SetSimDen * least(a.n, b.n) >= $SetSimNum * greatest(a.n, b.n)),
-sinter AS (
-  SELECT c.da, c.db, count(*) AS inter
-  FROM scand c JOIN shd a ON a.doc_id = c.da JOIN shd b ON b.doc_id = c.db AND b.h = a.h
-  GROUP BY c.da, c.db),
+${prefixJoinCtes("scand", "sinter")},
 truth AS (
   SELECT i.da, i.db FROM sinter i
   JOIN cnt na ON na.doc_id = i.da JOIN cnt nb ON nb.doc_id = i.db
@@ -1232,16 +1200,8 @@ FROM stats"""
       .orderBy(col("vec_id"))
   }
 
-  val q174Sql: String = {
-    val pert = s"list_transform(range(1, len(embedding) + 1), i -> CAST(embedding[i] AS DOUBLE) * 1.01 + CAST(((i - 1) % 5) - 2 AS DOUBLE) * 0.001)"
-    s"""WITH ed AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-vc0 AS (
-  SELECT vec_id, v FROM ed
-  UNION ALL
-  SELECT vec_id + $NearDupOffset AS vec_id, $pert AS v
-  FROM embeddings WHERE vec_id % 10 = 0),
-vc AS MATERIALIZED (SELECT vec_id, v, ${Sql.listNorm("v")} AS nrm FROM vc0),
+  val q174Sql: String =
+    s"""WITH $embCorpusCtes,
 ${graft.ann.AnnQueries.kmeansSqlChain("vc", graft.ann.AnnQueries.KmK, graft.ann.AnnQueries.KmIters, EmbDims, seed = 2)},
 pairs AS (
   SELECT fa.vec_id AS da, fb.vec_id AS db,
@@ -1254,7 +1214,6 @@ dup AS (
 SELECT f.vec_id, f.cid AS cluster, d.dup_of, d.dup_of IS NOT NULL AS is_dup
 FROM fin f LEFT JOIN dup d ON f.vec_id = d.vec_id
 ORDER BY f.vec_id"""
-  }
 
   /** Long-gram length for substring-level duplication. */
   val SharedGramN = 8
@@ -1594,6 +1553,42 @@ FROM g$LkEmRounds ORDER BY g1 DESC, g2 DESC, g3 DESC"""
   val JwLenBand = 1
 
   // --------------------------------------------------------------- q308
+  /** (doc_id, tok): each document's probe token for q308/q309 — the
+    * lower-cased word at position doc_id mod (word count), kept when it
+    * has at least 4 characters. */
+  private def linkageProbes(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.documents(spark, sfDir)
+      .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
+      .filter(size(col("ts")) > 0)
+      .select(col("doc_id"),
+        element_at(col("ts"), (pmod(col("doc_id"), size(col("ts"))) + 1).cast("int"))
+          .as("tok"))
+      .filter(length(col("tok")) >= 4)
+
+  /** (vtok, match_n): the corpus vocabulary of words of at least 4
+    * characters with their counts — q308/q309's match targets. */
+  private def linkageVocab(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.documents(spark, sfDir)
+      .select(explode(split(lower(col("text")), " ")).as("vtok"))
+      .filter(length(col("vtok")) >= 4)
+      .groupBy(col("vtok")).agg(count(lit(1)).as("match_n"))
+
+  /** Twin of [[linkageProbes]]: CTEs `toks`, `pick`, `base(doc_id, tok)`. */
+  private val linkageProbeCtes: String =
+    """toks AS (
+  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents),
+pick AS (
+  SELECT doc_id, ts[CAST(doc_id % len(ts) AS INT) + 1] AS tok
+  FROM toks WHERE len(ts) > 0),
+base AS (SELECT doc_id, tok FROM pick WHERE length(tok) >= 4)"""
+
+  /** Twin of [[linkageVocab]]: CTE `vocab(vtok, match_n)`. */
+  private val linkageVocabCte: String =
+    """vocab AS (
+  SELECT tok AS vtok, count(*) AS match_n FROM (
+    SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents)
+  WHERE length(tok) >= 4 GROUP BY 1)"""
+
   /** Fuzzy dictionary lookup via Jaro–Winkler — the OOV-repair shape a
     * text pipeline runs after tokenization (map noisy/typo'd tokens
     * onto the known vocabulary): each document contributes one
@@ -1626,22 +1621,12 @@ FROM g$LkEmRounds ORDER BY g1 DESC, g2 DESC, g3 DESC"""
     * Best-match is a per-doc window over the candidate slice. No corpus-sized exchange anywhere: the
     * only shuffles are the census and the final sort. */
   def q308JwLinkage(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
-      .filter(size(col("ts")) > 0)
-    val base = toks
-      .select(col("doc_id"),
-        element_at(col("ts"), (pmod(col("doc_id"), size(col("ts"))) + 1).cast("int"))
-          .as("tok"))
-      .filter(length(col("tok")) >= 4)
+    val base = linkageProbes(spark, sfDir)
     val noisy = base.select(col("doc_id"),
       expr("concat(substr(tok, 1, cast(doc_id % length(tok) as int)), " +
         "chr(97 + cast((doc_id * 7) % 26 as int)), " +
         "substr(tok, cast(doc_id % length(tok) as int) + 2))").as("noisy"))
-    val vocab = Tables.documents(spark, sfDir)
-      .select(explode(split(lower(col("text")), " ")).as("vtok"))
-      .filter(length(col("vtok")) >= 4)
-      .groupBy(col("vtok")).agg(count(lit(1)).as("match_n"))
+    val vocab = linkageVocab(spark, sfDir)
     val cand = noisy
       .select(col("doc_id"), col("noisy"),
         explode(sequence(length(col("noisy")) - JwLenBand,
@@ -1660,22 +1645,14 @@ FROM g$LkEmRounds ORDER BY g1 DESC, g2 DESC, g3 DESC"""
   }
 
   val q308Sql: String =
-    s"""WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents),
-pick AS (
-  SELECT doc_id, ts[CAST(doc_id % len(ts) AS INT) + 1] AS tok
-  FROM toks WHERE len(ts) > 0),
-base AS (SELECT doc_id, tok FROM pick WHERE length(tok) >= 4),
+    s"""WITH $linkageProbeCtes,
 noisy AS (
   SELECT doc_id,
     substr(tok, 1, CAST(doc_id % length(tok) AS INT)) ||
     chr(97 + CAST((doc_id * 7) % 26 AS INT)) ||
     substr(tok, CAST(doc_id % length(tok) AS INT) + 2) AS noisy
   FROM base),
-vocab AS (
-  SELECT tok AS vtok, count(*) AS match_n FROM (
-    SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents)
-  WHERE length(tok) >= 4 GROUP BY 1),
+$linkageVocabCte,
 cand AS (
   SELECT n.doc_id, n.noisy, v.vtok, v.match_n,
     round(jaro_winkler_similarity(n.noisy, v.vtok), 6) AS jw
@@ -1725,14 +1702,7 @@ FROM ranked WHERE rk = 1 ORDER BY doc_id"""
     * beyond. Only the census, the pair dedup, and the final sort
     * shuffle. */
   def q309DlLinkage(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
-      .filter(size(col("ts")) > 0)
-    val base = toks
-      .select(col("doc_id"),
-        element_at(col("ts"), (pmod(col("doc_id"), size(col("ts"))) + 1).cast("int"))
-          .as("tok"))
-      .filter(length(col("tok")) >= 4)
+    val base = linkageProbes(spark, sfDir)
     val noisy = base.select(col("doc_id"), expr(
       """CASE WHEN doc_id % 2 = 0 THEN
         |  concat(substr(tok, 1, cast(doc_id % (length(tok)-1) as int)),
@@ -1744,10 +1714,7 @@ FROM ranked WHERE rk = 1 ORDER BY doc_id"""
         |         chr(97 + cast((doc_id * 7) % 26 as int)),
         |         substr(tok, cast(doc_id % length(tok) as int) + 2))
         |END""".stripMargin).as("noisy"))
-    val vocab = Tables.documents(spark, sfDir)
-      .select(explode(split(lower(col("text")), " ")).as("vtok"))
-      .filter(length(col("vtok")) >= 4)
-      .groupBy(col("vtok")).agg(count(lit(1)).as("match_n"))
+    val vocab = linkageVocab(spark, sfDir)
     val vocabIdx = vocab.select(col("vtok"),
       explode(expr(s"graft_deletes(vtok, $DlMax)")).as("blk"))
     val cand = noisy
@@ -1768,12 +1735,7 @@ FROM ranked WHERE rk = 1 ORDER BY doc_id"""
   }
 
   val q309Sql: String =
-    s"""WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents),
-pick AS (
-  SELECT doc_id, ts[CAST(doc_id % len(ts) AS INT) + 1] AS tok
-  FROM toks WHERE len(ts) > 0),
-base AS (SELECT doc_id, tok FROM pick WHERE length(tok) >= 4),
+    s"""WITH $linkageProbeCtes,
 noisy AS (
   SELECT doc_id,
     CASE WHEN doc_id % 2 = 0 THEN
@@ -1787,10 +1749,7 @@ noisy AS (
       substr(tok, CAST(doc_id % length(tok) AS INT) + 2)
     END AS noisy
   FROM base),
-vocab AS (
-  SELECT tok AS vtok, count(*) AS match_n FROM (
-    SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents)
-  WHERE length(tok) >= 4 GROUP BY 1),
+$linkageVocabCte,
 cand AS (
   SELECT n.doc_id, n.noisy, v.vtok,
     CAST(damerau_levenshtein(n.noisy, v.vtok) AS BIGINT) AS dl,

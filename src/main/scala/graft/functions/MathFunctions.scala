@@ -60,6 +60,11 @@ object MathFunctions {
     * 6-dp grid, left as a decimal for the caller to round. */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(38, 6)))
 
+  /** A value on the 6-dp DECIMAL(38, 6) grid: summing gridded terms is
+    * exact and independent of row order and partitioning. Twin:
+    * Sql.grid6. */
+  def grid6(c: Column): Column = round(c, 6).cast(DecimalType(38, 6))
+
   /** A value as a double on the 6-dp grid both engines compare on. */
   def asD(c: Column): Column = round(c.cast("double"), 6)
 

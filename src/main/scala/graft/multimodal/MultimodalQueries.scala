@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.dedup.DedupQueries
 import graft.functions.{MathFunctions => MF}
 import graft.oracle.Sql
 
@@ -22,6 +23,18 @@ import graft.oracle.Sql
   * ([[graft.plans.MediaMath]]), hash-gated end to end.
   */
 object MultimodalQueries {
+
+  /** Twin of DedupQueries.corpus (documents ∪ synthetic near/exact dups
+    * — the id offsets are single-owned by DedupQueries, far above any
+    * real doc_id at any SF), shared by q62, q64 and q80. */
+  private val corpusCte: String =
+    s"""corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + ${DedupQueries.NearDupOffset} AS doc_id, text || '${DedupQueries.NearDupSuffix}' AS text
+  FROM documents WHERE doc_id % 10 = 0
+  UNION ALL
+  SELECT doc_id + ${DedupQueries.ExactDupOffset} AS doc_id, text FROM documents WHERE doc_id % 15 = 0)"""
 
   /** Deterministic fake "decode": byte length, lead byte, a hash-based
     * feature, and a fake channel count. Placeholder for a real codec.
@@ -135,20 +148,6 @@ FROM h ORDER BY doc_id"""
     * chunk hash, and the per-asset rollup joins hash-partitioned
     * frames — every exchange carries (hash, count) pairs, never
     * payload bytes. */
-  /** The dedup corpus (documents ∪ synthetic near/exact dups — the
-    * id offsets are single-owned by DedupQueries, far above any real
-    * doc_id at any SF), shared by q62 and q64. */
-  private def dupCorpus(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    d.unionAll(
-        d.filter(pmod(col("doc_id"), lit(10)) === 0)
-          .select((col("doc_id") + graft.dedup.DedupQueries.NearDupOffset).as("doc_id"),
-            concat(col("text"), lit(graft.dedup.DedupQueries.NearDupSuffix)).as("text")))
-      .unionAll(
-        d.filter(pmod(col("doc_id"), lit(15)) === 0)
-          .select((col("doc_id") + graft.dedup.DedupQueries.ExactDupOffset).as("doc_id"), col("text")))
-  }
-
   /** Per-asset shared-chunk rollup over distinct (doc_id, h) chunk
     * rows — the content-addressable-store accounting shared by q62 and
     * q64: every exchange carries (hash, count) pairs, never payload
@@ -168,7 +167,7 @@ FROM h ORDER BY doc_id"""
   def q62ChunkDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val nChunks = ceil(length(col("text")).cast("double") / ChunkLen).cast("long")
     val idx = sequence(lit(0L), col("n_chunks") - 1)
-    val chunks = dupCorpus(spark, sfDir)
+    val chunks = DedupQueries.corpus(spark, sfDir)
       .select(col("doc_id"), col("text"), nChunks.as("n_chunks"))
       .filter(col("n_chunks") > 0)
       .select(col("doc_id"), explode(transform(idx, i =>
@@ -180,13 +179,7 @@ FROM h ORDER BY doc_id"""
 
   val q62Sql: String = {
     val chunk = s"substr(text, CAST(i * $ChunkLen + 1 AS INTEGER), $ChunkLen)"
-    s"""WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + ${graft.dedup.DedupQueries.NearDupOffset} AS doc_id, text || '${graft.dedup.DedupQueries.NearDupSuffix}' AS text
-  FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id + ${graft.dedup.DedupQueries.ExactDupOffset} AS doc_id, text FROM documents WHERE doc_id % 15 = 0),
+    s"""WITH $corpusCte,
 f AS (
   SELECT doc_id, text,
     CAST(ceil(CAST(length(text) AS DOUBLE) / $ChunkLen) AS BIGINT) AS n_chunks
@@ -227,7 +220,7 @@ GROUP BY doc_id ORDER BY doc_id"""
     * sketch-family pattern (KMV/CMS): approximate operators built from
     * portable arithmetic stay hash-gated. */
   def q64CdcChunks(spark: SparkSession, sfDir: String): DataFrame = {
-    val chunks = dupCorpus(spark, sfDir)
+    val chunks = DedupQueries.corpus(spark, sfDir)
       .filter(length(col("text")) > 0)
       .select(col("doc_id"),
         explode(call_function("graft_cdc_chunks", col("text"), lit(CdcMaskBits))).as("h"))
@@ -272,13 +265,7 @@ GROUP BY doc_id ORDER BY doc_id"""
     val mod = 1L << m
     val gear = "(((unicode(text[i-k]) + 1) * 2654435761) % 4294967296)"
     val chunk = "substr(text, CAST(starts[j] AS INTEGER), CAST(ends[j] - starts[j] + 1 AS INTEGER))"
-    s"""WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + ${graft.dedup.DedupQueries.NearDupOffset} AS doc_id, text || '${graft.dedup.DedupQueries.NearDupSuffix}' AS text
-  FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id + ${graft.dedup.DedupQueries.ExactDupOffset} AS doc_id, text FROM documents WHERE doc_id % 15 = 0),
+    s"""WITH $corpusCte,
 f AS (SELECT doc_id, text, length(text) AS L FROM corpus WHERE length(text) > 0),
 cut AS (
   SELECT doc_id, text, L,
@@ -325,7 +312,7 @@ GROUP BY doc_id ORDER BY doc_id"""
     * would add q22's banding over the same two halves; hash-equality
     * grouping is the deterministic core. */
   def q80Phash(spark: SparkSession, sfDir: String): DataFrame = {
-    val sig = dupCorpus(spark, sfDir)
+    val sig = DedupQueries.corpus(spark, sfDir)
       .filter(length(col("text")) >= graft.plans.PhashMath.Pixels)
       .select(col("doc_id"), call_function("graft_phash", col("text")).as("ph"))
       .select(col("doc_id"),
@@ -368,13 +355,7 @@ GROUP BY doc_id ORDER BY doc_id"""
                      i -> codes[i])) AS BIGINT) * L
                 > total * (((b+1)*L)//$px - (b*L)//$px)
            THEN CAST(pow(2, b - $off) AS BIGINT) ELSE 0 END)) AS BIGINT)"""
-    s"""WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + ${graft.dedup.DedupQueries.NearDupOffset} AS doc_id, text || '${graft.dedup.DedupQueries.NearDupSuffix}' AS text
-  FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id + ${graft.dedup.DedupQueries.ExactDupOffset} AS doc_id, text FROM documents WHERE doc_id % 15 = 0),
+    s"""WITH $corpusCte,
 c AS MATERIALIZED (
   SELECT doc_id, length(text) AS L,
     list_transform(range(1, length(text) + 1), i -> unicode(text[i])) AS codes

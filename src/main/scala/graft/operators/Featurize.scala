@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{MathFunctions => MF}
+import graft.functions.MathFunctions.grid6
 
 /** Caller-frame feature-engineering engines — the machinery behind
   * q199–q202/q207, generalized to any (id, label, text) frame (the
@@ -95,15 +96,13 @@ object Featurize {
       .join(counts, Seq("term", "label"), "left")
       .crossJoin(broadcast(vSize))
       .select(col("term"), col("label").as("cls"),
-        round(log((coalesce(col("n_lt"), lit(0L)) + lit(1L)).cast("double") /
-          (col("t_l") + col("v")).cast("double")), 6)
-          .cast(DecimalType(38, 6)).as("log_lik"))
+        grid6(log((coalesce(col("n_lt"), lit(0L)) + lit(1L)).cast("double") /
+          (col("t_l") + col("v")).cast("double"))).as("log_lik"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val priors = docs.groupBy(col("label")).agg(count(lit(1)).as("n_l"))
       .crossJoin(broadcast(nDocs))
       .select(col("label").as("cls"),
-        round(log(col("n_l").cast("double") / col("n_docs").cast("double")), 6)
-          .cast(DecimalType(38, 6)).as("log_prior"))
+        grid6(log(col("n_l").cast("double") / col("n_docs").cast("double"))).as("log_prior"))
     val tf = tok.groupBy(col("doc_id"), col("label"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val scores = tf.join(broadcast(grid), "term")

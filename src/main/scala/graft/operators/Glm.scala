@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.functions.MathFunctions.grid6
 
 /** Distributed GLM fits on caller frames — the engines behind q185
   * (OLS) and q186 (IRLS logistic), generalized to any column pair/
@@ -14,8 +14,6 @@ import org.apache.spark.sql.types.DecimalType
   * the corpus.
   */
 object Glm {
-
-  private def g(c: Column) = round(c, 6).cast(DecimalType(38, 6))
 
   /** Cramer's-rule solve of 3×3 normal equations (shared with q185's
     * oracle text). */
@@ -34,15 +32,15 @@ object Glm {
       y.cast("double").as("y"))
     val m = base.agg(
       count(lit(1)).cast("double").as("n"),
-      sum(g(col("x1"))).cast("double").as("sx1"),
-      sum(g(col("x2"))).cast("double").as("sx2"),
-      sum(g(col("y"))).cast("double").as("sy"),
-      sum(g(col("x1") * col("x1"))).cast("double").as("sx11"),
-      sum(g(col("x1") * col("x2"))).cast("double").as("sx12"),
-      sum(g(col("x2") * col("x2"))).cast("double").as("sx22"),
-      sum(g(col("x1") * col("y"))).cast("double").as("sx1y"),
-      sum(g(col("x2") * col("y"))).cast("double").as("sx2y"),
-      sum(g(col("y") * col("y"))).cast("double").as("syy"))
+      sum(grid6(col("x1"))).cast("double").as("sx1"),
+      sum(grid6(col("x2"))).cast("double").as("sx2"),
+      sum(grid6(col("y"))).cast("double").as("sy"),
+      sum(grid6(col("x1") * col("x1"))).cast("double").as("sx11"),
+      sum(grid6(col("x1") * col("x2"))).cast("double").as("sx12"),
+      sum(grid6(col("x2") * col("x2"))).cast("double").as("sx22"),
+      sum(grid6(col("x1") * col("y"))).cast("double").as("sx1y"),
+      sum(grid6(col("x2") * col("y"))).cast("double").as("sx2y"),
+      sum(grid6(col("y") * col("y"))).cast("double").as("syy"))
     m.select(col("n").cast("long").as("n_rows"),
         expr(OlsExprs("b0")).as("b0_raw"), expr(OlsExprs("b1")).as("b1_raw"),
         expr(OlsExprs("b2")).as("b2_raw"),
@@ -86,11 +84,11 @@ object Glm {
       val w = p * (lit(1.0) - p)
       val z = (col("b0") + col("b1") * col("x")) + (col("y") - p) / w
       base.crossJoin(broadcast(coef))
-        .agg(sum(g(w)).cast("double").as("sw"),
-          sum(g(w * col("x"))).cast("double").as("swx"),
-          sum(g(w * col("x") * col("x"))).cast("double").as("swxx"),
-          sum(g(w * z)).cast("double").as("swz"),
-          sum(g(w * col("x") * z)).cast("double").as("swxz"))
+        .agg(sum(grid6(w)).cast("double").as("sw"),
+          sum(grid6(w * col("x"))).cast("double").as("swx"),
+          sum(grid6(w * col("x") * col("x"))).cast("double").as("swxx"),
+          sum(grid6(w * z)).cast("double").as("swz"),
+          sum(grid6(w * col("x") * z)).cast("double").as("swxz"))
         .select(expr(LogregB1).as("b1"),
           expr(s"(swz - ($LogregB1) * swx) / sw").as("b0"))
         .select(col("b0"), col("b1"))
@@ -99,7 +97,7 @@ object Glm {
     base.crossJoin(broadcast(coef))
       .agg(count(lit(1)).as("n_rows"),
         max(col("b0")).as("b0r"), max(col("b1")).as("b1r"),
-        sum(g(-(col("y") * log(p) + (lit(1.0) - col("y")) * log(lit(1.0) - p))))
+        sum(grid6(-(col("y") * log(p) + (lit(1.0) - col("y")) * log(lit(1.0) - p))))
           .cast("double").as("llsum"),
         sum(when((p >= 0.5) === (col("y") === 1.0), 1L).otherwise(0L)).as("hits"))
       .select(col("n_rows"),

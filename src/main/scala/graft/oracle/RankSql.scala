@@ -93,6 +93,22 @@ ${P}ranked AS (SELECT id, (0.5 * (1.0 + ${Sql.erf("z")})) * $scale AS score FROM
     sb.toString
   }
 
+  /** CTEs `l1` … `l<rounds>` of min-label propagation, each followed by
+    * ",\n": every id takes the least label among its own and its
+    * neighbours' in the edge CTE `e2(a, b)`, starting from a CTE
+    * `l0(id, lbl)` — the unrolled oracle twin of
+    * graft.graph.ConnectedComponents.propagate. */
+  def minLabelRounds(rounds: Int): String =
+    (1 to rounds).map { k =>
+      val p = s"l${k - 1}"
+      s"""l$k AS MATERIALIZED (
+  SELECT v.id, least(v.lbl, coalesce(m.ml, v.lbl)) AS lbl
+  FROM $p v LEFT JOIN (
+    SELECT e2.a AS mid, min(p.lbl) AS ml FROM e2 JOIN $p p ON e2.b = p.id GROUP BY e2.a) m
+  ON v.id = m.mid),
+"""
+    }.mkString
+
   /** Predicate-style helper type: trustedPred maps a column ref to SQL. */
   type Pred = String => String
 }

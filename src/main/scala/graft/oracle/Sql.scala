@@ -117,6 +117,9 @@ object Sql {
       s"(CASE WHEN ${listDot(v, signList(planeOffset + j, dims))} >= 0 THEN ${1L << j} ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
+  /** Twin of MathFunctions.grid6: `e` on the 6-dp DECIMAL(38,6) grid. */
+  def grid6(e: String): String = s"CAST(round($e, 6) AS DECIMAL(38,6))"
+
   // ----------------------------------------------------- derived graph
   /** Twin of WebGraph.urlOf. `pk` must be a non-negative int column. */
   def urlOf(pk: String): String =
@@ -145,6 +148,24 @@ raw_edges AS MATERIALIZED (
   SELECT DISTINCT trim(src) AS src, split_part(trim(dst), '#', 1) AS dst
   FROM raw_edges
   WHERE lower(split_part(trim(dst), '#', 1)) <> lower(trim(src)))"""
+
+  /** CTE `hedges`: the host projection of `edges` — both ends mapped
+    * to their host, host self-links dropped case-insensitively,
+    * distinct. Twin of WebGraph.hostEdges. */
+  val hostEdgesCte: String =
+    s"""hedges AS MATERIALIZED (
+  SELECT DISTINCT ${urlHost("src")} AS src, ${urlHost("dst")} AS dst
+  FROM edges
+  WHERE lower(${urlHost("dst")}) <> lower(${urlHost("src")}))"""
+
+  /** CTEs `und(u, v)`: each `hedges` link once as (least, greatest),
+    * and `deg(id, d)`: each host's undirected degree. */
+  val hostDegreeCtes: String =
+    """und AS MATERIALIZED (
+  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM hedges),
+deg AS MATERIALIZED (
+  SELECT id, count(*) AS d FROM (
+    SELECT u AS id FROM und UNION ALL SELECT v FROM und) GROUP BY id)"""
 
   /** CTEs for vertices (src ∪ dst), out-degrees, and vertex count, over
     * an `edges(src, dst)` CTE. */

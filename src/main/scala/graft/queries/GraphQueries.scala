@@ -23,6 +23,33 @@ object GraphQueries {
     s"""${Sql.rawEdgesCte},
 ${Sql.edgesCte}"""
 
+  /** [[pageGraphCtes]] plus the host projection `hedges`. */
+  private val hostGraphCtes =
+    s"""$pageGraphCtes,
+${Sql.hostEdgesCte}"""
+
+  /** Host vertex sets over `hedges`: `verts(v)`, `verts(id)` and
+    * `hverts(id)` (the three spellings the oracles below read). */
+  private val hostVertsCte = """verts AS MATERIALIZED (
+  SELECT DISTINCT v FROM (SELECT src AS v FROM hedges UNION SELECT dst FROM hedges))"""
+  private val hostIdsCte = """verts AS MATERIALIZED (
+  SELECT DISTINCT v AS id FROM (SELECT src AS v FROM hedges UNION SELECT dst FROM hedges))"""
+  private val hvertsCte = """hverts AS MATERIALIZED (
+  SELECT DISTINCT id FROM (SELECT src AS id FROM hedges UNION ALL SELECT dst FROM hedges))"""
+
+  /** CTE `name(a, b)`: both orientations of the `edges` CTE's links, no
+    * self-loops, distinct — twin of WebGraph.undirected. */
+  private def bothWaysCte(name: String, edges: String): String =
+    s"""$name AS MATERIALIZED (
+  SELECT a, b FROM (
+    SELECT src AS a, dst AS b FROM $edges UNION SELECT dst AS a, src AS b FROM $edges)
+  WHERE a <> b)"""
+
+  /** CTE `und(u, v)`: each host link once, as (least, greatest). */
+  private val hostUndCte = """und AS MATERIALIZED (
+  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
+  FROM hedges WHERE src <> dst)"""
+
   // ---------------------------------------------------------------- q01
   /** Uniform-init LinkRank over the page graph, memoized per session:
     * q01 and q10 present the SAME ranking (full list vs top-k), so the
@@ -88,11 +115,7 @@ SELECT id, round(score, 6) AS score FROM ranked ORDER BY id"""
       .orderBy(col("id"))
 
   val q03Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 ${RankSql.chain("hedges", "1.0")}
 SELECT id, round(score, 6) AS score FROM ranked ORDER BY id"""
 
@@ -236,11 +259,7 @@ FROM lines ORDER BY id"""
   val q35Sql: String = {
     val pred = (c: String) =>
       s"(CAST(regexp_extract($c, 'part([0-9]+)', 1) AS BIGINT) % 17 = 0)"
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 ${RankSql.chain("hedges", s"CASE WHEN ${pred("id")} THEN 1.0 ELSE 0.1 END",
         trustedPred = Some(pred))}
 SELECT id, round(score, 6) AS score FROM ranked ORDER BY id"""
@@ -274,14 +293,8 @@ ORDER BY score DESC, id LIMIT 20"""
       .orderBy(col("id"))
 
   val q55Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM hedges WHERE src <> dst),
+    s"""WITH $hostGraphCtes,
+$hostUndCte,
 tri AS MATERIALIZED (
   SELECT e1.u AS a, e1.v AS b, e2.v AS c
   FROM und e1
@@ -323,33 +336,13 @@ ORDER BY deg.id"""
         (col("id") === col("component")).as("is_root"))
       .orderBy(col("id"))
 
-  val q66Sql: String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-e2 AS MATERIALIZED (
-  SELECT a, b FROM (
-    SELECT src AS a, dst AS b FROM hedges UNION SELECT dst AS a, src AS b FROM hedges)
-  WHERE a <> b),
+  val q66Sql: String =
+    s"""WITH $hostGraphCtes,
+${bothWaysCte("e2", "hedges")},
 l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS lbl FROM e2),
-"""
-    for (k <- 1 to CcRounds) {
-      val p = s"l${k - 1}"
-      sb ++= s"""l$k AS MATERIALIZED (
-  SELECT v.id, least(v.lbl, coalesce(m.ml, v.lbl)) AS lbl
-  FROM $p v LEFT JOIN (
-    SELECT e2.a AS mid, min(p.lbl) AS ml FROM e2 JOIN $p p ON e2.b = p.id GROUP BY e2.a) m
-  ON v.id = m.mid),
-"""
-    }
-    sb ++= s"""fin AS (SELECT id, lbl FROM l$CcRounds)
+${RankSql.minLabelRounds(CcRounds)}fin AS (SELECT id, lbl FROM l$CcRounds)
 SELECT id, lbl AS component, (id = lbl) AS is_root
 FROM fin ORDER BY id"""
-    sb.toString
-  }
 
   // ---------------------------------------------------------------- q68
   /** Warm-phase round budget after the edge delta — shared with the
@@ -450,13 +443,8 @@ SELECT id, round(score, 6) AS score FROM b_ranked ORDER BY id"""
     val pred = (c: String) =>
       s"(CAST(regexp_extract($c, 'part([0-9]+)', 1) AS BIGINT) % 17 = 0)"
     val sb = new StringBuilder
-    sb ++= s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-hverts AS MATERIALIZED (
-  SELECT DISTINCT id FROM (SELECT src AS id FROM hedges UNION ALL SELECT dst FROM hedges)),
+    sb ++= s"""WITH $hostGraphCtes,
+$hvertsCte,
 d0 AS MATERIALIZED (
   SELECT id, CASE WHEN ${pred("id")} THEN CAST(0 AS BIGINT) ELSE NULL END AS dist FROM hverts),
 """
@@ -553,15 +541,8 @@ FROM an$HitsRounds a JOIN hnf hf ON a.id = hf.id ORDER BY a.id"""
   val q78Sql: String = {
     val num = (c: String) => s"CAST(regexp_extract($c, 'part([0-9]+)', 1) AS BIGINT)"
     val sb = new StringBuilder
-    sb ++= s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-e2 AS MATERIALIZED (
-  SELECT a, b FROM (
-    SELECT src AS a, dst AS b FROM hedges UNION SELECT dst AS a, src AS b FROM hedges)
-  WHERE a <> b),
+    sb ++= s"""WITH $hostGraphCtes,
+${bothWaysCte("e2", "hedges")},
 l0 AS MATERIALIZED (
   SELECT id, (CASE WHEN ${num("id")} % 17 = 0 THEN ${num("id")} % $LpaClasses
               ELSE CAST(-1 AS BIGINT) END) AS lbl,
@@ -614,15 +595,8 @@ SELECT id, lbl, is_seed FROM fin ORDER BY id"""
   }
 
   val q79Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-e2 AS MATERIALIZED (
-  SELECT a, b FROM (
-    SELECT src AS a, dst AS b FROM hedges UNION SELECT dst AS a, src AS b FROM hedges)
-  WHERE a <> b),
+    s"""WITH $hostGraphCtes,
+${bothWaysCte("e2", "hedges")},
 und AS MATERIALIZED (SELECT a AS u, b AS v FROM e2 WHERE a < b),
 deg AS MATERIALIZED (SELECT a AS w, count(*) AS deg FROM e2 GROUP BY a),
 wedges AS (
@@ -734,10 +708,7 @@ FROM fin ORDER BY id"""
   val q89Sql: String = {
     val sb = new StringBuilder
     sb ++= s"""WITH $pageGraphCtes,
-e2 AS MATERIALIZED (
-  SELECT a, b FROM (
-    SELECT src AS a, dst AS b FROM edges UNION SELECT dst AS a, src AS b FROM edges)
-  WHERE a <> b),
+${bothWaysCte("e2", "edges")},
 a0 AS MATERIALIZED (SELECT DISTINCT a AS id FROM e2),
 """
     for (k <- 1 to KcoreRounds) {
@@ -855,11 +826,7 @@ FROM fin ORDER BY id"""
   }
 
   val q97Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 ${RankSql.chain("hedges", "1.0", iters = RankTolBudget,
         damping = RankTolDamping, normalize = false)}
 SELECT id, round(score * 1000, 6) AS score_x1000 FROM ranked ORDER BY id"""
@@ -905,11 +872,7 @@ SELECT id, round(score * 1000, 6) AS score_x1000 FROM ranked ORDER BY id"""
   }
 
   val q107Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 und AS MATERIALIZED (
   SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
   FROM hedges WHERE least(src, dst) <> greatest(src, dst)),
@@ -1000,11 +963,7 @@ FROM hist ORDER BY bucket"""
   }
 
   val q110Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 recip AS (
   SELECT count(*) AS n_reciprocal FROM hedges e
   WHERE EXISTS (SELECT 1 FROM hedges r WHERE r.src = e.dst AND r.dst = e.src))
@@ -1041,11 +1000,7 @@ FROM recip"""
       .orderBy(col("host"))
 
   val q116Sql: String =
-    s"""WITH RECURSIVE $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH RECURSIVE $hostGraphCtes,
 reach AS (
   SELECT src AS a, dst AS b FROM hedges
   UNION
@@ -1094,13 +1049,8 @@ FROM comp c JOIN sizes s ON c.scc = s.scc ORDER BY host"""
   }
 
   val q119Sql: String =
-    s"""WITH RECURSIVE $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-verts AS MATERIALIZED (
-  SELECT DISTINCT v FROM (SELECT src AS v FROM hedges UNION SELECT dst FROM hedges)),
+    s"""WITH RECURSIVE $hostGraphCtes,
+$hostVertsCte,
 s1 AS (SELECT min(v) AS id FROM verts),
 r1 AS (
   SELECT id, 0 AS d FROM s1
@@ -1150,13 +1100,8 @@ ORDER BY host"""
   }
 
   val q135Sql: String =
-    s"""WITH RECURSIVE $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-verts AS MATERIALIZED (
-  SELECT DISTINCT v FROM (SELECT src AS v FROM hedges UNION SELECT dst FROM hedges)),
+    s"""WITH RECURSIVE $hostGraphCtes,
+$hostVertsCte,
 seeds AS (SELECT v AS id FROM verts ORDER BY v LIMIT $ClosenessSeeds),
 r AS (
   SELECT id AS seed, id, 0 AS d FROM seeds
@@ -1208,9 +1153,7 @@ lab AS (
   SELECT id, (CASE WHEN lbl >= 0 THEN 'c' || CAST(lbl AS VARCHAR)
               ELSE 'v:' || id END) AS community
   FROM fin),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM hedges WHERE src <> dst),
+$hostUndCte,
 mm AS (SELECT count(*) AS m FROM und),
 ein AS (
   SELECT a.community, count(*) AS e_in
@@ -1268,15 +1211,12 @@ ORDER BY deg.community"""
   def q151RandomWalks(spark: SparkSession, sfDir: String): DataFrame =
     walkCorpus(spark, sfDir).orderBy(col("walk_id"), col("step"))
 
-  val q151Sql: String = {
+  /** Twin of [[walkCorpus]]: the CTEs up to the walk rows
+    * `w(walk_id, host, step)`. */
+  private val walkCtes: String = {
     val pick = Sql.hash32OfHex("md5(w.walk_id || '#' || CAST(w.step + 1 AS VARCHAR))")
-    s"""WITH RECURSIVE $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-verts AS MATERIALIZED (
-  SELECT DISTINCT v FROM (SELECT src AS v FROM hedges UNION SELECT dst FROM hedges)),
+    s"""WITH RECURSIVE $hostGraphCtes,
+$hostVertsCte,
 adj AS MATERIALIZED (
   SELECT src, dst,
     row_number() OVER (PARTITION BY src ORDER BY dst) AS rn,
@@ -1288,10 +1228,13 @@ w AS (
   SELECT w.walk_id, a.dst, w.step + 1
   FROM w JOIN adj a ON a.src = w.host
     AND a.rn = ($pick % a.deg) + 1
-  WHERE w.step < $WalkLen)
+  WHERE w.step < $WalkLen)"""
+  }
+
+  val q151Sql: String =
+    s"""$walkCtes
 SELECT walk_id, host, step FROM w
 ORDER BY walk_id, step"""
-  }
 
   // ---------------------------------------------------------------- q240
   /** Minimum co-occurrence count for an emitted pair. */
@@ -1337,27 +1280,8 @@ ORDER BY walk_id, step"""
       .orderBy(col("pmi").desc, col("node_a"), col("node_b")).limit(PmiTopK)
   }
 
-  val q240Sql: String = {
-    val pick = Sql.hash32OfHex("md5(w.walk_id || '#' || CAST(w.step + 1 AS VARCHAR))")
-    s"""WITH RECURSIVE $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-verts AS MATERIALIZED (
-  SELECT DISTINCT v FROM (SELECT src AS v FROM hedges UNION SELECT dst FROM hedges)),
-adj AS MATERIALIZED (
-  SELECT src, dst,
-    row_number() OVER (PARTITION BY src ORDER BY dst) AS rn,
-    count(*) OVER (PARTITION BY src) AS deg
-  FROM hedges),
-w AS (
-  SELECT v AS walk_id, v AS host, 0 AS step FROM verts
-  UNION ALL
-  SELECT w.walk_id, a.dst, w.step + 1
-  FROM w JOIN adj a ON a.src = w.host
-    AND a.rn = ($pick % a.deg) + 1
-  WHERE w.step < $WalkLen),
+  val q240Sql: String =
+    s"""$walkCtes,
 wm AS MATERIALIZED (SELECT walk_id, host, step FROM w),
 pairs AS MATERIALIZED (
   SELECT least(a.host, b.host) AS na, greatest(a.host, b.host) AS nb
@@ -1372,7 +1296,6 @@ FROM pc JOIN occ oa ON pc.na = oa.host JOIN occ ob ON pc.nb = ob.host
   CROSS JOIN tot
 WHERE n_pair >= $PmiMinPair
 ORDER BY pmi DESC, node_a, node_b LIMIT $PmiTopK"""
-  }
 
   // ---------------------------------------------------------------- q152
   /** Weighted LinkRank over multiplicity-weighted page edges — the
@@ -1463,11 +1386,7 @@ SELECT id, round(score * 1000, 6) AS score_k FROM fin ORDER BY id"""
       .orderBy(col("host"))
 
   val q164Sql: String =
-    s"""WITH RECURSIVE $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH RECURSIVE $hostGraphCtes,
 reach AS (
   SELECT src AS a, dst AS b FROM hedges
   UNION
@@ -1541,11 +1460,7 @@ FROM verts ORDER BY host"""
   }
 
   val q169Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 ${RankSql.chain("hedges", "1.0")},
 pages AS (
   SELECT DISTINCT v AS url FROM (
@@ -1600,11 +1515,7 @@ FROM sched ORDER BY pos"""
   }
 
   val q170Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 deg AS (SELECT src, count(*) AS n FROM hedges GROUP BY src),
 inter AS (
   SELECT a.src AS ha, b.src AS hb, count(*) AS inter
@@ -1694,11 +1605,7 @@ c$r AS MATERIALIZED (
     (SELECT count(*) FROM m$r) AS n_matched,
     (SELECT count(*) FROM free$r) AS candidate_edges)"""
     }
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 e0 AS MATERIALIZED (
   SELECT u, v, ${Sql.hash32("u || '|' || v")} AS eh FROM (
     SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM hedges
@@ -1764,16 +1671,8 @@ ${(1 to MatchRounds).map(r => s"SELECT * FROM c$r").mkString("\nUNION ALL\n")}
 
   val q224Sql: String = {
     val ks = RichClubKs.mkString("[", ", ", "]")
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM hedges),
-deg AS MATERIALIZED (
-  SELECT id, count(*) AS d FROM (
-    SELECT u AS id FROM und UNION ALL SELECT v FROM und) GROUP BY id),
+    s"""WITH $hostGraphCtes,
+${Sql.hostDegreeCtes},
 ks AS (SELECT unnest($ks) AS k),
 club_sizes AS (
   SELECT k, count(*) AS n_club FROM deg CROSS JOIN ks WHERE d > k GROUP BY k),
@@ -1823,13 +1722,8 @@ ORDER BY k""".stripMargin
 
   val q261Sql: String = {
     val sb = new StringBuilder
-    sb ++= s"""WITH RECURSIVE $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-verts AS MATERIALIZED (
-  SELECT DISTINCT v AS id FROM (SELECT src AS v FROM hedges UNION SELECT dst FROM hedges)),
+    sb ++= s"""WITH RECURSIVE $hostGraphCtes,
+$hostIdsCte,
 seeds AS (SELECT id FROM verts ORDER BY id LIMIT $BetweennessSeeds),
 r AS (
   SELECT id AS seed, id, 0 AS d FROM seeds
@@ -1918,13 +1812,8 @@ GROUP BY 1 ORDER BY host"""
   }
 
   val q262Sql: String =
-    s"""WITH RECURSIVE $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-verts AS MATERIALIZED (
-  SELECT DISTINCT v AS id FROM (SELECT src AS v FROM hedges UNION SELECT dst FROM hedges)),
+    s"""WITH RECURSIVE $hostGraphCtes,
+$hostIdsCte,
 seeds AS (SELECT id FROM verts ORDER BY id LIMIT $EffDiamSeeds),
 r AS (
   SELECT id AS seed, id, 0 AS d FROM seeds
@@ -2007,17 +1896,9 @@ ORDER BY c.d""".stripMargin
 
   val q263Sql: String = {
     val sb = new StringBuilder
-    sb ++= s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-verts AS MATERIALIZED (
-  SELECT DISTINCT v AS id FROM (SELECT src AS v FROM hedges UNION SELECT dst FROM hedges)),
-und AS MATERIALIZED (
-  SELECT a, b FROM (
-    SELECT src AS a, dst AS b FROM hedges UNION SELECT dst AS a, src AS b FROM hedges)
-  WHERE a <> b),
+    sb ++= s"""WITH $hostGraphCtes,
+$hostIdsCte,
+${bothWaysCte("und", "hedges")},
 alive0 AS MATERIALIZED (SELECT id FROM verts)"""
     for (r <- 1 to MisRounds) {
       val h = Sql.hash32(s"'mis:$r:' || a.id")
@@ -2078,11 +1959,7 @@ ORDER BY v.id"""
   }
 
   val q274Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 cocite AS (
   SELECT e1.dst AS a, e2.dst AS b, count(*) AS cocitation
   FROM hedges e1 JOIN hedges e2 ON e1.src = e2.src AND e1.dst < e2.dst
@@ -2188,13 +2065,8 @@ FROM a$SalsaRounds a JOIN h$SalsaRounds h ON a.id = h.id ORDER BY a.id"""
 
   val q282Sql: String = {
     val sb = new StringBuilder
-    sb ++= s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-hverts AS MATERIALIZED (
-  SELECT DISTINCT id FROM (SELECT src AS id FROM hedges UNION ALL SELECT dst FROM hedges)),
+    sb ++= s"""WITH $hostGraphCtes,
+$hvertsCte,
 x0 AS MATERIALIZED (SELECT id, 1.0 AS x FROM hverts),
 """
     for (k <- 1 to KatzRounds) {
@@ -2256,11 +2128,7 @@ SELECT id, round(x, 6) AS katz FROM x$KatzRounds ORDER BY id"""
   }
 
   val q291Sql: String =
-    s"""WITH $pageGraphCtes,
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
+    s"""WITH $hostGraphCtes,
 cyc AS (
   SELECT count(*) AS n_cyclic
   FROM hedges e1 JOIN hedges e2 ON e1.dst = e2.src

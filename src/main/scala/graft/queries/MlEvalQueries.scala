@@ -6,7 +6,8 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
-import graft.functions.MathFunctions.{asD, dec12, dsum}
+import graft.functions.MathFunctions.{asD, dec12, dsum, grid6}
+import graft.oracle.Sql
 
 /** ML training & evaluation loop (SURVEY §2.B ML-eval family, split
   * out of RelationalQueries in r9): correlation/inequality metrics
@@ -375,7 +376,7 @@ object MlEvalQueries {
   }
 
   val q155Sql: String = {
-    val h = graft.oracle.Sql.hash32OfHex("md5('ab:' || CAST(user_id AS VARCHAR))")
+    val h = Sql.hash32OfHex("md5('ab:' || CAST(user_id AS VARCHAR))")
     s"""WITH per_user AS (
       |  SELECT user_id,
       |    max(CASE WHEN event_type = 'purchase'
@@ -402,6 +403,26 @@ object MlEvalQueries {
   }
 
   // --------------------------------------------------------------- q156
+  /** (user_id, n_ev, converted): each user's event count and whether
+    * they purchased on the last day (q155's outcome) — the predictor
+    * and outcome of q156, q161 and q273. */
+  private def perUserConversion(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.events(spark, sfDir)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_ev"),
+        max(when(col("event_type") === "purchase" &&
+          expr("ts div 86400000000000") === AbLastDay, 1L).otherwise(0L))
+          .as("converted"))
+
+  /** Twin of [[perUserConversion]]: CTE `per_user`. */
+  private val perUserCte: String =
+    s"""per_user AS (
+  SELECT user_id, count(*) AS n_ev,
+    max(CASE WHEN event_type = 'purchase'
+             AND epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 = $AbLastDay
+             THEN 1 ELSE 0 END) AS converted
+  FROM events GROUP BY user_id)"""
+
   /** Calibration / reliability curve — the audit run on any score a
     * pipeline thresholds: the predictor is each user's activity SHARE
     * OF THE MOST ACTIVE user (p̂ = n_ev / max_ev — scale-invariant,
@@ -415,12 +436,7 @@ object MlEvalQueries {
     * 1-row broadcast max, one tiny groupBy(bin); nothing event-level
     * crosses twice. */
   def q156Calibration(spark: SparkSession, sfDir: String): DataFrame = {
-    val perUser = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ev"),
-        max(when(col("event_type") === "purchase" &&
-          expr("ts div 86400000000000") === AbLastDay, 1L).otherwise(0L))
-          .as("converted"))
+    val perUser = perUserConversion(spark, sfDir)
     val mx = perUser.agg(max(col("n_ev")).as("max_ev"))
     perUser.crossJoin(broadcast(mx))
       .withColumn("bin", expr("least((n_ev * 10) div max_ev, 9)"))
@@ -436,12 +452,7 @@ object MlEvalQueries {
   }
 
   val q156Sql: String =
-    s"""WITH per_user AS (
-      |  SELECT user_id, count(*) AS n_ev,
-      |    max(CASE WHEN event_type = 'purchase'
-      |             AND epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 = $AbLastDay
-      |             THEN 1 ELSE 0 END) AS converted
-      |  FROM events GROUP BY user_id),
+    s"""WITH $perUserCte,
       |mx AS (SELECT max(n_ev) AS max_ev FROM per_user),
       |binned AS (
       |  SELECT n_ev, converted, max_ev,
@@ -474,22 +485,11 @@ object MlEvalQueries {
     * Shape for 100 TB: one partial-agged groupBy(user), one
     * groupBy(score) re-aggregation, a window over O(scores) rows. */
   def q161Auc(spark: SparkSession, sfDir: String): DataFrame = {
-    val perUser = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ev"),
-        max(when(col("event_type") === "purchase" &&
-          expr("ts div 86400000000000") === AbLastDay, 1L).otherwise(0L))
-          .as("converted"))
-    Graft.auc(perUser, col("n_ev"), col("converted"))
+    Graft.auc(perUserConversion(spark, sfDir), col("n_ev"), col("converted"))
   }
 
   val q161Sql: String =
-    s"""WITH per_user AS (
-      |  SELECT user_id, count(*) AS n_ev,
-      |    max(CASE WHEN event_type = 'purchase'
-      |             AND epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 = $AbLastDay
-      |             THEN 1 ELSE 0 END) AS converted
-      |  FROM events GROUP BY user_id),
+    s"""WITH $perUserCte,
       |hist AS (
       |  SELECT n_ev, CAST(sum(converted) AS BIGINT) AS pos,
       |    CAST(sum(1 - converted) AS BIGINT) AS neg
@@ -785,7 +785,6 @@ FROM res ORDER BY channel"""
   private def LogregB1 = graft.operators.Glm.LogregB1
 
   val q186Sql: String = {
-    def gs(e: String) = s"CAST(round($e, 6) AS DECIMAL(38,6))"
     val sb = new StringBuilder
     sb ++= s"WITH $labeledUsersSql,\nc0 AS (SELECT 0.0 AS b0, 0.0 AS b1),\n"
     for (k <- 1 to LogregIters) {
@@ -793,11 +792,11 @@ FROM res ORDER BY channel"""
       val w = s"($p * (1.0 - $p))"
       val z = s"((c.b0 + c.b1 * u.x) + (u.y - $p) / $w)"
       sb ++= s"""m$k AS (
-  SELECT CAST(sum(${gs(w)}) AS DOUBLE) AS sw,
-    CAST(sum(${gs(s"$w * u.x")}) AS DOUBLE) AS swx,
-    CAST(sum(${gs(s"$w * u.x * u.x")}) AS DOUBLE) AS swxx,
-    CAST(sum(${gs(s"$w * $z")}) AS DOUBLE) AS swz,
-    CAST(sum(${gs(s"$w * u.x * $z")}) AS DOUBLE) AS swxz
+  SELECT CAST(sum(${Sql.grid6(w)}) AS DOUBLE) AS sw,
+    CAST(sum(${Sql.grid6(s"$w * u.x")}) AS DOUBLE) AS swx,
+    CAST(sum(${Sql.grid6(s"$w * u.x * u.x")}) AS DOUBLE) AS swxx,
+    CAST(sum(${Sql.grid6(s"$w * $z")}) AS DOUBLE) AS swz,
+    CAST(sum(${Sql.grid6(s"$w * u.x * $z")}) AS DOUBLE) AS swxz
   FROM per_user u CROSS JOIN c${k - 1} c),
 c$k AS (SELECT (swz - ($LogregB1) * swx) / sw AS b0, $LogregB1 AS b1 FROM m$k),
 """
@@ -805,7 +804,7 @@ c$k AS (SELECT (swz - ($LogregB1) * swx) / sw AS b0, $LogregB1 AS b1 FROM m$k),
     val p = s"(1.0 / (1.0 + exp(-(c.b0 + c.b1 * u.x))))"
     sb ++= s"""fin AS (
   SELECT count(*) AS n_users, max(c.b0) AS b0r, max(c.b1) AS b1r,
-    CAST(sum(${gs(s"-(u.y * ln($p) + (1.0 - u.y) * ln(1.0 - $p))")}) AS DOUBLE) AS llsum,
+    CAST(sum(${Sql.grid6(s"-(u.y * ln($p) + (1.0 - u.y) * ln(1.0 - $p))")}) AS DOUBLE) AS llsum,
     CAST(sum(CASE WHEN ($p >= 0.5) = (u.y = 1.0) THEN 1 ELSE 0 END) AS BIGINT) AS hits
   FROM per_user u CROSS JOIN c$LogregIters c)
 SELECT n_users, round(b0r, 6) AS intercept, round(b1r, 6) AS b_activity,
@@ -895,8 +894,6 @@ FROM fin"""
     * weights are n·round(e^±α, 12) products gridded to 1e-6 DECIMAL
     * at aggregation; the argmin orders by (err, x, polarity). */
   def q235BoostRound(spark: SparkSession, sfDir: String): DataFrame = {
-    val dec = DecimalType(38, 6)
-    def g(c: Column) = round(c, 6).cast(dec)
     // O(distinct x); feeds both rounds + the acc pass
     val hist = graft.Checkpoints.materialize(labeledUsers(spark, sfDir)
       .groupBy(col("x"))
@@ -932,13 +929,13 @@ FROM fin"""
       when(pol === "gt", when(x > thr, 1).otherwise(0))
         .otherwise(when(x <= thr, 1).otherwise(0))
 
-    val s1 = fitStump(hist.select(col("x"), g(col("np").cast("double")).as("wp2"),
-      g(col("nn").cast("double")).as("wn2")))
+    val s1 = fitStump(hist.select(col("x"), grid6(col("np").cast("double")).as("wp2"),
+      grid6(col("nn").cast("double")).as("wn2")))
     val h2 = hist.crossJoin(broadcast(s1)).select(col("x"),
-      g(col("np").cast("double")
+      grid6(col("np").cast("double")
         * round(exp(when(pred(col("x"), col("thr"), col("pol")) === 1,
             -col("alpha")).otherwise(col("alpha"))), 12)).as("wp2"),
-      g(col("nn").cast("double")
+      grid6(col("nn").cast("double")
         * round(exp(when(pred(col("x"), col("thr"), col("pol")) === 0,
             -col("alpha")).otherwise(col("alpha"))), 12)).as("wn2"))
     val s2 = fitStump(h2)
@@ -967,7 +964,6 @@ FROM fin"""
   }
 
   val q235Sql: String = {
-    def gs(e: String) = s"CAST(round($e, 6) AS DECIMAL(38,6))"
     def predSql(x: String, s: String) =
       s"(CASE WHEN $s.pol = 'gt' THEN (CASE WHEN $x > $s.thr THEN 1 ELSE 0 END)" +
         s" ELSE (CASE WHEN $x <= $s.thr THEN 1 ELSE 0 END) END)"
@@ -992,12 +988,12 @@ $out AS (
 hist AS MATERIALIZED (
   SELECT x, CAST(sum(y) AS BIGINT) AS np, CAST(count(*) - sum(y) AS BIGINT) AS nn
   FROM per_user GROUP BY x),
-w1 AS (SELECT x, ${gs("CAST(np AS DOUBLE)")} AS wp2, ${gs("CAST(nn AS DOUBLE)")} AS wn2 FROM hist),
+w1 AS (SELECT x, ${Sql.grid6("CAST(np AS DOUBLE)")} AS wp2, ${Sql.grid6("CAST(nn AS DOUBLE)")} AS wn2 FROM hist),
 ${fit("w1", "s1")},
 w2 AS (
   SELECT h.x,
-    ${gs(s"CAST(h.np AS DOUBLE) * round(exp(CASE WHEN ${predSql("h.x", "s")} = 1 THEN -s.alpha ELSE s.alpha END), 12)")} AS wp2,
-    ${gs(s"CAST(h.nn AS DOUBLE) * round(exp(CASE WHEN ${predSql("h.x", "s")} = 0 THEN -s.alpha ELSE s.alpha END), 12)")} AS wn2
+    ${Sql.grid6(s"CAST(h.np AS DOUBLE) * round(exp(CASE WHEN ${predSql("h.x", "s")} = 1 THEN -s.alpha ELSE s.alpha END), 12)")} AS wp2,
+    ${Sql.grid6(s"CAST(h.nn AS DOUBLE) * round(exp(CASE WHEN ${predSql("h.x", "s")} = 0 THEN -s.alpha ELSE s.alpha END), 12)")} AS wn2
   FROM hist h CROSS JOIN s1 s),
 ${fit("w2", "s2")},
 acc AS (
@@ -1088,7 +1084,6 @@ ORDER BY round"""
     * distributed ALS round costs; factors are (entity, f1, f2) rows,
     * never a dense matrix. */
   def q189AlsSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    def g(c: Column) = round(c, 6).cast(DecimalType(38, 6))
     def asDbl(c: Column) = c.cast("double")
     val inter = graft.Checkpoints.cache(
       Tables.lineitem(spark, sfDir, spreadScan = true)
@@ -1106,11 +1101,11 @@ ORDER BY round"""
     def solveSide(joined: DataFrame, key: String): DataFrame =
       joined
         .groupBy(col(key))
-        .agg(sum(g(col("f1") * col("f1"))).as("a11d"),
-          sum(g(col("f1") * col("f2"))).as("a12d"),
-          sum(g(col("f2") * col("f2"))).as("a22d"),
-          sum(g(col("r") * col("f1"))).as("b1d"),
-          sum(g(col("r") * col("f2"))).as("b2d"))
+        .agg(sum(grid6(col("f1") * col("f1"))).as("a11d"),
+          sum(grid6(col("f1") * col("f2"))).as("a12d"),
+          sum(grid6(col("f2") * col("f2"))).as("a22d"),
+          sum(grid6(col("r") * col("f1"))).as("b1d"),
+          sum(grid6(col("r") * col("f2"))).as("b2d"))
         .select(col(key), asDbl(col("a11d")).as("a11"),
           asDbl(col("a12d")).as("a12"), asDbl(col("a22d")).as("a22"),
           asDbl(col("b1d")).as("b1"), asDbl(col("b2d")).as("b2"))
@@ -1122,13 +1117,13 @@ ORDER BY round"""
     val half = inter
       .join(uf.select(col("u"), col("f1").as("uf1"), col("f2").as("uf2")), "u")
       .join(vi.select(col("i"), col("f1").as("if1"), col("f2").as("if2")), "i")
-      .agg(sum(g((col("r") - (col("uf1") * col("if1") + col("uf2") * col("if2")))
+      .agg(sum(grid6((col("r") - (col("uf1") * col("if1") + col("uf2") * col("if2")))
         * (col("r") - (col("uf1") * col("if1") + col("uf2") * col("if2")))))
         .cast("double").as("se_half"), count(lit(1)).as("n1"))
     val full = inter
       .join(uf.select(col("u"), col("f1").as("uf1"), col("f2").as("uf2")), "u")
       .join(vf.select(col("i"), col("f1").as("if1"), col("f2").as("if2")), "i")
-      .agg(sum(g((col("r") - (col("uf1") * col("if1") + col("uf2") * col("if2")))
+      .agg(sum(grid6((col("r") - (col("uf1") * col("if1") + col("uf2") * col("if2")))
         * (col("r") - (col("uf1") * col("if1") + col("uf2") * col("if2")))))
         .cast("double").as("se_full"), count(lit(1)).as("n2"))
     val cnts = inter.agg(count(lit(1)).as("n_interactions"),
@@ -1147,18 +1142,17 @@ ORDER BY round"""
   private val AlsF2 = s"((${AlsLambda} + a11) * b2 - a12 * b1) / $AlsDet"
 
   val q189Sql: String = {
-    def gs(e: String) = s"CAST(round($e, 6) AS DECIMAL(38,6))"
     def initF(id: String, seed: Int) =
-      s"(0.5 + CAST(${graft.oracle.Sql.universalHash(id, seed)} % 1000 AS DOUBLE) / 2000.0)"
+      s"(0.5 + CAST(${Sql.universalHash(id, seed)} % 1000 AS DOUBLE) / 2000.0)"
     def solve(src: String, key: String) =
       s"""SELECT $key,
   ($AlsF1) AS f1, ($AlsF2) AS f2 FROM (
   SELECT $key,
-    CAST(sum(${gs("f1 * f1")}) AS DOUBLE) AS a11,
-    CAST(sum(${gs("f1 * f2")}) AS DOUBLE) AS a12,
-    CAST(sum(${gs("f2 * f2")}) AS DOUBLE) AS a22,
-    CAST(sum(${gs("r * f1")}) AS DOUBLE) AS b1,
-    CAST(sum(${gs("r * f2")}) AS DOUBLE) AS b2
+    CAST(sum(${Sql.grid6("f1 * f1")}) AS DOUBLE) AS a11,
+    CAST(sum(${Sql.grid6("f1 * f2")}) AS DOUBLE) AS a12,
+    CAST(sum(${Sql.grid6("f2 * f2")}) AS DOUBLE) AS a22,
+    CAST(sum(${Sql.grid6("r * f1")}) AS DOUBLE) AS b1,
+    CAST(sum(${Sql.grid6("r * f2")}) AS DOUBLE) AS b2
   FROM $src GROUP BY $key)"""
     s"""WITH inter AS MATERIALIZED (
   SELECT o.o_custkey AS u, l.l_partkey AS i, l.l_quantity AS r
@@ -1171,10 +1165,10 @@ uf AS MATERIALIZED (
 vf AS MATERIALIZED (
   ${solve("(SELECT t.i, t.r, x.f1, x.f2 FROM inter t JOIN uf x ON t.u = x.u)", "i")}),
 half AS (
-  SELECT CAST(sum(${gs("(t.r - (x.f1 * v.f1 + x.f2 * v.f2)) * (t.r - (x.f1 * v.f1 + x.f2 * v.f2))")}) AS DOUBLE) AS se, count(*) AS n
+  SELECT CAST(sum(${Sql.grid6("(t.r - (x.f1 * v.f1 + x.f2 * v.f2)) * (t.r - (x.f1 * v.f1 + x.f2 * v.f2))")}) AS DOUBLE) AS se, count(*) AS n
   FROM inter t JOIN uf x ON t.u = x.u JOIN vi v ON t.i = v.i),
 me AS (
-  SELECT CAST(sum(${gs("(t.r - (x.f1 * v.f1 + x.f2 * v.f2)) * (t.r - (x.f1 * v.f1 + x.f2 * v.f2))")}) AS DOUBLE) AS se, count(*) AS n
+  SELECT CAST(sum(${Sql.grid6("(t.r - (x.f1 * v.f1 + x.f2 * v.f2)) * (t.r - (x.f1 * v.f1 + x.f2 * v.f2))")}) AS DOUBLE) AS se, count(*) AS n
   FROM inter t JOIN uf x ON t.u = x.u JOIN vf v ON t.i = v.i),
 cnts AS (
   SELECT count(*) AS n_interactions, count(DISTINCT u) AS n_users,
@@ -1296,7 +1290,6 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
     * in data movement. */
   def q237CvFolds(spark: SparkSession, sfDir: String): DataFrame = {
     val dec = DecimalType(38, 6)
-    def g(c: Column) = round(c, 6).cast(dec)
     val cust0 = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).cast("double").as("x"),
@@ -1306,9 +1299,9 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
           lit(CvFolds)).as("fold"))
     val custCk = graft.Checkpoints.materialize(cust0) // feeds the moment pass AND the scoring join
     val fm = custCk.groupBy(col("fold"))
-      .agg(count(lit(1)).as("n"), sum(g(col("x"))).as("sx"),
-        sum(g(col("y"))).as("sy"), sum(g(col("x") * col("x"))).as("sxx"),
-        sum(g(col("x") * col("y"))).as("sxy"))
+      .agg(count(lit(1)).as("n"), sum(grid6(col("x"))).as("sx"),
+        sum(grid6(col("y"))).as("sy"), sum(grid6(col("x") * col("x"))).as("sxx"),
+        sum(grid6(col("x") * col("y"))).as("sxy"))
     val tot = fm.agg(sum(col("n")).as("tn"), sum(col("sx")).as("tsx"),
       sum(col("sy")).as("tsy"), sum(col("sxx")).as("tsxx"),
       sum(col("sxy")).as("tsxy"))
@@ -1325,7 +1318,7 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
     custCk.join(broadcast(beta), Seq("fold"))
       .groupBy(col("fold"), col("n_train"), col("b0"), col("b1"))
       .agg(count(lit(1)).as("n_valid"),
-        sum(g((col("y") - col("b0") - col("b1") * col("x"))
+        sum(grid6((col("y") - col("b0") - col("b1") * col("x"))
           * (col("y") - col("b0") - col("b1") * col("x")))).as("sse"))
       .select(col("fold"), col("n_train"), col("n_valid"),
         round(col("b0"), 6).as("b0"), round(col("b1"), 6).as("b1"),
@@ -1335,16 +1328,15 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
   }
 
   val q237Sql: String = {
-    val h = graft.oracle.Sql.hash32("('cv:' || CAST(o_custkey AS VARCHAR))")
-    def gs(e: String) = s"CAST(round($e, 6) AS DECIMAL(38,6))"
+    val h = Sql.hash32("('cv:' || CAST(o_custkey AS VARCHAR))")
     s"""WITH cust AS MATERIALIZED (
       |  SELECT $h % $CvFolds AS fold,
       |    CAST(count(*) AS DOUBLE) AS x,
       |    CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS y
       |  FROM orders GROUP BY o_custkey),
       |fm AS (
-      |  SELECT fold, count(*) AS n, sum(${gs("x")}) AS sx, sum(${gs("y")}) AS sy,
-      |    sum(${gs("x * x")}) AS sxx, sum(${gs("x * y")}) AS sxy
+      |  SELECT fold, count(*) AS n, sum(${Sql.grid6("x")}) AS sx, sum(${Sql.grid6("y")}) AS sy,
+      |    sum(${Sql.grid6("x * x")}) AS sxx, sum(${Sql.grid6("x * y")}) AS sxy
       |  FROM cust GROUP BY fold),
       |tot AS (SELECT sum(n) AS tn, sum(sx) AS tsx, sum(sy) AS tsy,
       |  sum(sxx) AS tsxx, sum(sxy) AS tsxy FROM fm),
@@ -1360,7 +1352,7 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
       |  FROM tr)
       |SELECT b.fold, b.n_train, count(*) AS n_valid,
       |  round(b.b0, 6) AS b0, round(b.b1, 6) AS b1,
-      |  round(sqrt(CAST(sum(${gs("(c.y - b.b0 - b.b1 * c.x) * (c.y - b.b0 - b.b1 * c.x)")}) AS DOUBLE)
+      |  round(sqrt(CAST(sum(${Sql.grid6("(c.y - b.b0 - b.b1 * c.x) * (c.y - b.b0 - b.b1 * c.x)")}) AS DOUBLE)
       |    / count(*)), 6) AS rmse_valid
       |FROM cust c JOIN beta b ON c.fold = b.fold
       |GROUP BY b.fold, b.n_train, b.b0, b.b1 ORDER BY b.fold""".stripMargin
@@ -1552,8 +1544,8 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
       sum((col("t").cast("double") * col("t") * col("t") - col("t"))
         .cast(DecimalType(38, 6))).as("tiesd"))
     val hs = rg.agg(count(lit(1)).as("k"),
-      sum(round(col("rgd").cast("double") * col("rgd").cast("double")
-        / col("n_g"), 6).cast(DecimalType(38, 6))).as("stermd"))
+      sum(grid6(col("rgd").cast("double") * col("rgd").cast("double")
+        / col("n_g"))).as("stermd"))
     val hRaw = lit(12.0) / (col("n") * (col("n") + lit(1.0))) *
       col("stermd").cast("double") - lit(3.0) * (col("n") + 1)
     val corr = lit(1.0) - col("tiesd").cast("double") /
@@ -1642,7 +1634,7 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
         % lit(1000000L))
       .withColumn("wt", wt)
       .groupBy(col("b"))
-      .agg(round(sum(round(col("wt") * col("v"), 6).cast(DecimalType(38, 6)))
+      .agg(round(sum(grid6(col("wt") * col("v")))
         .cast("double") / sum(col("wt")), 6).as("m"))
     val base = pool.agg(count(lit(1)).as("n"),
       round(sum(col("v").cast(DecimalType(38, 6))).cast("double")
@@ -1658,7 +1650,7 @@ FROM cnts c CROSS JOIN half h CROSS JOIN me m""".stripMargin
   }
 
   val q250Sql: String = {
-    val h = graft.oracle.Sql.hash32OfHex(
+    val h = Sql.hash32OfHex(
       "md5('boot:' || CAST(event_id AS VARCHAR) || ':' || CAST(b AS VARCHAR))")
     val ladder = BootLadder.map { case (t, k) => s"WHEN u < $t THEN $k" }
       .mkString("CASE ", " ", " ELSE 6 END")
@@ -2038,7 +2030,7 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
 
   val q258Sql: String = {
     val z = "((kh / CAST(nh AS DOUBLE) - p0) / sqrt(p0 * (1.0 - p0) / nh))"
-    val phi = graft.oracle.Sql.normalCdf(s"abs($z)", "0.0", "1.0")
+    val phi = Sql.normalCdf(s"abs($z)", "0.0", "1.0")
     s"""WITH ev AS (
       |  SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hod,
       |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS isp
@@ -2165,7 +2157,7 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
         sum(col("y").cast(DecimalType(38, 6))).cast("double").as("sy"),
         sum((col("x") * col("x")).cast(DecimalType(38, 6)))
           .cast("double").as("sxx"),
-        sum(round(col("x") * col("y"), 6).cast(DecimalType(38, 6)))
+        sum(grid6(col("x") * col("y")))
           .cast("double").as("sxy"))
     val bC = (col("n") * col("sxy") - col("sx") * col("sy")) /
       (col("n") * col("sxx") - col("sx") * col("sx"))
@@ -2199,7 +2191,7 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
   }
 
   val q271Sql: String = {
-    val h = graft.oracle.Sql.hash32("'conf:' || CAST(event_id AS VARCHAR)")
+    val h = Sql.hash32("'conf:' || CAST(event_id AS VARCHAR)")
     s"""WITH pool0 AS (
       |  SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS x0,
       |    round(value, 6) AS y, $h % 4 AS fold
@@ -2272,9 +2264,9 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
     val m = peruser.agg(count(lit(1)).as("n"),
       sum(col("pre").cast(dec)).cast("double").as("sx"),
       sum(col("post").cast(dec)).cast("double").as("sy"),
-      sum(round(col("pre") * col("pre"), 6).cast(dec)).cast("double").as("sxx"),
-      sum(round(col("pre") * col("post"), 6).cast(dec)).cast("double").as("sxy"),
-      sum(round(col("post") * col("post"), 6).cast(dec)).cast("double").as("syy"))
+      sum(grid6(col("pre") * col("pre"))).cast("double").as("sxx"),
+      sum(grid6(col("pre") * col("post"))).cast("double").as("sxy"),
+      sum(grid6(col("post") * col("post"))).cast("double").as("syy"))
     val covN = col("n") * col("sxy") - col("sx") * col("sy")
     val varXN = col("n") * col("sxx") - col("sx") * col("sx")
     val varYN = col("n") * col("syy") - col("sy") * col("sy")
@@ -2337,12 +2329,7 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
     * Exactness: wmean is one IEEE division of exact integer sums, and
     * min/max over identical doubles agree bit-for-bit cross-engine. */
   def q273Isotonic(spark: SparkSession, sfDir: String): DataFrame = {
-    val perUser = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ev"),
-        max(when(col("event_type") === "purchase" &&
-          expr("ts div 86400000000000") === AbLastDay, 1L).otherwise(0L))
-          .as("converted"))
+    val perUser = perUserConversion(spark, sfDir)
     val mx = perUser.agg(max(col("n_ev")).as("max_ev"))
     val bins = graft.Checkpoints.materialize(perUser.crossJoin(broadcast(mx))
       .withColumn("bin", expr("least((n_ev * 10) div max_ev, 9)"))
@@ -2377,12 +2364,7 @@ GROUP BY 1 ORDER BY n_points DESC, cluster"""
   }
 
   val q273Sql: String =
-    s"""WITH per_user AS (
-      |  SELECT user_id, count(*) AS n_ev,
-      |    max(CASE WHEN event_type = 'purchase'
-      |             AND epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 = $AbLastDay
-      |             THEN 1 ELSE 0 END) AS converted
-      |  FROM events GROUP BY user_id),
+    s"""WITH $perUserCte,
       |mx AS (SELECT max(n_ev) AS max_ev FROM per_user),
       |bins AS MATERIALIZED (
       |  SELECT least((n_ev * 10) // max_ev, 9) AS bin,
@@ -2666,7 +2648,7 @@ GROUP BY u.j, c.c ORDER BY u.j"""
   }
 
   val q287Sql: String = {
-    val h = graft.oracle.Sql.hash32OfHex("md5('ab:' || CAST(user_id AS VARCHAR))")
+    val h = Sql.hash32OfHex("md5('ab:' || CAST(user_id AS VARCHAR))")
     s"""WITH ud AS MATERIALIZED (
   SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
     max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
@@ -2754,7 +2736,7 @@ FROM agg"""
   }
 
   val q289Sql: String = {
-    val h = graft.oracle.Sql.hash32OfHex("md5('ab:' || CAST(user_id AS VARCHAR))")
+    val h = Sql.hash32OfHex("md5('ab:' || CAST(user_id AS VARCHAR))")
     s"""WITH ud AS MATERIALIZED (
   SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
     max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
@@ -2809,7 +2791,7 @@ FROM r"""
       .groupBy(col("user_id"), expr("ts div 86400000000000").as("day"))
       .agg(count(lit(1)).as("x"),
         coalesce(sum(when(col("event_type") === "purchase",
-          round(col("value"), 6).cast(dec6))), lit(0).cast(dec6)).as("y")))
+          grid6(col("value")))), lit(0).cast(dec6)).as("y")))
     val um = panel.groupBy(col("user_id")).agg(
       (sum(col("x")).cast("double") / count(lit(1))).as("xu"),
       (sum(col("y")).cast("double") / count(lit(1))).as("yu"))
@@ -3079,7 +3061,7 @@ FROM agg"""
       .groupBy(col("event_type"),
         expr("(ts div 3600000000000) % 24").as("hod"))
       .agg(count(lit(1)).as("n_c"),
-        sum(round(col("value"), 6).cast(DecimalType(38, 6))).cast("double").as("sv_c")))
+        sum(grid6(col("value"))).cast("double").as("sv_c")))
     val hods = cells.groupBy(col("hod")).agg(sum(col("n_c")).as("n_h"))
     val tot = cells.agg(sum(col("n_c")).as("n"),
       countDistinct(col("event_type")).as("n_types"))
@@ -3087,7 +3069,7 @@ FROM agg"""
       ((col("n_c") + lit(1.0)) / (col("n_h") + col("n_types")))
     val agg = cells.join(broadcast(hods), "hod").crossJoin(broadcast(tot))
       .select(col("n_c"), col("sv_c"), w.as("w"))
-      .agg(sum(round(col("sv_c"), 6).cast(DecimalType(38, 6))).cast("double").as("sv"),
+      .agg(sum(grid6(col("sv_c"))).cast("double").as("sv"),
         dec12(col("w") * col("sv_c")).as("swv"),
         dec12(col("w") * col("n_c")).as("sw"),
         dec12(col("w") * col("w") * col("n_c")).as("sww"))
@@ -3275,7 +3257,7 @@ FROM w$RakeRounds f ORDER BY f.event_type, f.hod"""
   }
 
   val q299Sql: String = {
-    val h = graft.oracle.Sql.hash32OfHex("md5('ab:' || CAST(user_id AS VARCHAR))")
+    val h = Sql.hash32OfHex("md5('ab:' || CAST(user_id AS VARCHAR))")
     s"""WITH per_user AS MATERIALIZED (
   SELECT user_id, count(*) AS activity,
     max(CASE WHEN event_type = 'purchase'

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.{Graft, Tables}
 import graft.functions.{MathFunctions => MF}
-import graft.functions.MathFunctions.{asD, dsum}
+import graft.functions.MathFunctions.{asD, dsum, grid6}
 
 /** Relational / analytics core (SURVEY §2.B).
   *
@@ -1063,17 +1063,21 @@ ORDER BY c.cohort, c.offset_days"""
       .orderBy(col("doc_id"))
   }
 
+  /** Twin of q143's change feed: CTE `feed(doc_id, version, op, text)`. */
+  private val mergeFeedCte: String =
+    s"""feed AS (
+  SELECT doc_id, 1 AS version, 'U' AS op, text || ' [rev2]' AS text
+  FROM documents WHERE doc_id % 9 = 0
+  UNION ALL
+  SELECT doc_id, 2, 'D', NULL FROM documents WHERE doc_id % 21 = 0
+  UNION ALL
+  SELECT doc_id + $MergeInsertOffset, 1, 'I', 'new ' || text
+  FROM documents WHERE doc_id % 13 = 0)"""
+
   val q143Sql: String =
     s"""WITH base AS (
       |  SELECT doc_id, 0 AS version, 'B' AS op, text FROM documents),
-      |feed AS (
-      |  SELECT doc_id, 1 AS version, 'U' AS op, text || ' [rev2]' AS text
-      |  FROM documents WHERE doc_id % 9 = 0
-      |  UNION ALL
-      |  SELECT doc_id, 2, 'D', NULL FROM documents WHERE doc_id % 21 = 0
-      |  UNION ALL
-      |  SELECT doc_id + $MergeInsertOffset, 1, 'I', 'new ' || text
-      |  FROM documents WHERE doc_id % 13 = 0),
+      |$mergeFeedCte,
       |merged AS (
       |  SELECT doc_id, version, op, text,
       |    row_number() OVER (PARTITION BY doc_id ORDER BY version DESC, op) AS rn
@@ -1116,14 +1120,7 @@ ORDER BY c.cohort, c.offset_days"""
 
   val q150Sql: String =
     s"""WITH base AS (SELECT doc_id AS bid, length(text) AS blen FROM documents),
-      |feed AS (
-      |  SELECT doc_id, 1 AS version, 'U' AS op, text || ' [rev2]' AS text
-      |  FROM documents WHERE doc_id % 9 = 0
-      |  UNION ALL
-      |  SELECT doc_id, 2, 'D', NULL FROM documents WHERE doc_id % 21 = 0
-      |  UNION ALL
-      |  SELECT doc_id + $MergeInsertOffset, 1, 'I', 'new ' || text
-      |  FROM documents WHERE doc_id % 13 = 0),
+      |$mergeFeedCte,
       |merged0 AS (
       |  SELECT doc_id, op, text,
       |    row_number() OVER (PARTITION BY doc_id ORDER BY version DESC, op) AS rn
@@ -1403,8 +1400,8 @@ ORDER BY c.cohort, c.offset_days"""
       .select(col("digit"), coalesce(col("n_obs"), lit(0L)).as("n_obs"),
         col("n"), round(col("n") * col("p"), 6).as("n_exp")))
     val chi = cells.agg(
-      sum(round((col("n_obs") - col("n_exp")) * (col("n_obs") - col("n_exp"))
-        / col("n_exp"), 6).cast(DecimalType(38, 6))).as("chi2d"))
+      sum(grid6((col("n_obs") - col("n_exp")) * (col("n_obs") - col("n_exp"))
+        / col("n_exp"))).as("chi2d"))
     cells.crossJoin(broadcast(chi))
       .select(col("digit"), col("n_obs"), col("n_exp"),
         round(col("n_obs").cast("double") / col("n"), 6).as("obs_share"),

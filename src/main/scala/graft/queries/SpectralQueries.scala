@@ -77,15 +77,8 @@ object SpectralQueries {
          |    (SELECT count(*) FROM und) AS n_edges)""".stripMargin
     s"""WITH ${Sql.rawEdgesCte},
 ${Sql.edgesCte},
-hedges AS MATERIALIZED (
-  SELECT DISTINCT ${Sql.urlHost("src")} AS src, ${Sql.urlHost("dst")} AS dst
-  FROM edges
-  WHERE lower(${Sql.urlHost("dst")}) <> lower(${Sql.urlHost("src")})),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM hedges),
-deg AS MATERIALIZED (
-  SELECT id, count(*) AS d FROM (
-    SELECT u AS id FROM und UNION ALL SELECT v FROM und) GROUP BY id),
+${Sql.hostEdgesCte},
+${Sql.hostDegreeCtes},
 crow AS MATERIALIZED (SELECT CAST(2 * max(d) + 1 AS DOUBLE) AS c FROM deg),
 raw0 AS MATERIALIZED (
   SELECT id, d, CAST(${Sql.hash32("id")} % 1000 AS DOUBLE) / 1000.0 - 0.5 AS raw FROM deg),

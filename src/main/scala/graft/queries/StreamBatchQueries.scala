@@ -17,6 +17,42 @@ import graft.functions.MathFunctions.{asD, dsum}
 object StreamBatchQueries {
 
 
+  /** Runs a bounded stream over the events file to its end and reads
+    * the result back: `plan` builds the streaming plan from the event
+    * stream source (call it once per stream it reads) and the event
+    * time of its `ts`; the plan runs with the availableNow trigger into
+    * a parquet sink (append mode) in a scratch directory, and
+    * `readBack` of the sink comes back materialized, so the scratch
+    * directory can go before the caller consumes the frame. `key`
+    * names the scratch directory. */
+  private[graft] def boundedStream(spark: SparkSession, sfDir: String, key: String)(
+      plan: (() => DataFrame, Column) => DataFrame)(
+      readBack: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.streaming.Trigger
+    // The stream source must declare the FILE's schema (Tables.events
+    // normalizes ts to a ns bigint, which no longer matches the
+    // on-disk type since the r8 regeneration switched ts to µs
+    // TIMESTAMP); event time is derived per-vintage below.
+    val raw = Tables.eventsRaw(spark, sfDir)
+    val eventTime =
+      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+        timestamp_micros(expr("ts div 1000"))
+      else col("ts").cast("timestamp")
+    // events.parquet is a single FILE; the file stream source requires a
+    // directory base path, so glob one character — the base becomes the
+    // sf directory while the pattern still matches only this file.
+    def events(): DataFrame =
+      spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
+    graft.TempDirs.withEphemeral(s"graft_${key}_") { tmp =>
+      val outDir = tmp.resolve("out").toString
+      plan(() => events(), eventTime).writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", tmp.resolve("cp").toString)
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+      graft.Checkpoints.materialize(readBack(spark.read.parquet(outDir)))
+    }
+  }
+
   // ---------------------------------------------------------------- q98
   /** Watermark delay of the streaming twin (and the oracle's emission
     * cutoff): windows whose end is at most max(event time) − this many
@@ -46,41 +82,17 @@ object StreamBatchQueries {
     * micro-batch, file-sink append with exactly-once manifest. The
     * batch read-back + sort is on the aggregated (window, type) frame,
     * never the events. */
-  def q98StreamWindow(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    // The stream source must declare the FILE's schema (Tables.events
-    // normalizes ts to a ns bigint, which no longer matches the
-    // on-disk type since the r8 regeneration switched ts to µs
-    // TIMESTAMP); event time is derived per-vintage below.
-    val raw = Tables.eventsRaw(spark, sfDir)
-    val tsEventTime =
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else col("ts").cast("timestamp")
-    graft.TempDirs.withEphemeral("graft_q98_") { tmp =>
-      val outDir = tmp.resolve("out").toString
-      val cpDir = tmp.resolve("cp").toString
-      // events.parquet is a single FILE; the file stream source requires a
-      // directory base path, so glob one character — the base becomes the
-      // sf directory while the pattern still matches only this file.
-      val agg = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
-        .select(tsEventTime.as("ts"),
+  def q98StreamWindow(spark: SparkSession, sfDir: String): DataFrame =
+    boundedStream(spark, sfDir, "q98") { (events, eventTime) =>
+      events()
+        .select(eventTime.as("ts"),
           col("event_type"), col("value"))
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("tv"))
         .select(unix_micros(col("window.start")).as("window_start_us"),
           col("event_type"), col("n_events"), asD(col("tv")).as("total_value"))
-      agg.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", cpDir)
-        .outputMode("append").trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-      // Materialize eagerly so the temp sink files can be deleted before
-      // the caller consumes the frame.
-      graft.Checkpoints.materialize(spark.read.parquet(outDir)
-        .orderBy(col("window_start_us"), col("event_type")))
-    }
-  }
+    }(_.orderBy(col("window_start_us"), col("event_type")))
 
   val q98Sql: String =
     s"""WITH ev AS (
@@ -120,18 +132,10 @@ object StreamBatchQueries {
     * sessions are evicted on emission), partial agg per micro-batch.
     * Nothing downstream touches the event grain except the one
     * stateful shuffle on user_id. */
-  def q111StreamSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = Tables.eventsRaw(spark, sfDir)
-    val tsEventTime =
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else col("ts").cast("timestamp")
-    graft.TempDirs.withEphemeral("graft_q111_") { tmp =>
-      val outDir = tmp.resolve("out").toString
-      val cpDir = tmp.resolve("cp").toString
-      val agg = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
-        .select(tsEventTime.as("ts"), col("user_id"), col("value"))
+  def q111StreamSessions(spark: SparkSession, sfDir: String): DataFrame =
+    boundedStream(spark, sfDir, "q111") { (events, eventTime) =>
+      events()
+        .select(eventTime.as("ts"), col("user_id"), col("value"))
         .withWatermark("ts", "2 hours")
         .groupBy(col("user_id"), session_window(col("ts"), SessGap))
         .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("tv"),
@@ -140,14 +144,7 @@ object StreamBatchQueries {
           unix_micros(col("session_window.start")).as("session_start_us"),
           unix_micros(col("last_ts")).as("session_end_us"),
           col("n_events"), asD(col("tv")).as("session_value"))
-      agg.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", cpDir)
-        .outputMode("append").trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-      graft.Checkpoints.materialize(spark.read.parquet(outDir)
-        .orderBy(col("user_id"), col("session_start_us")))
-    }
-  }
+    }(_.orderBy(col("user_id"), col("session_start_us")))
 
   val q111Sql: String =
     s"""WITH ev AS (
@@ -186,33 +183,17 @@ object StreamBatchQueries {
     * Shape for 100 TB: dedup state is bounded by the watermark
     * horizon (keys older than the event-time watermark are evicted);
     * the sink carries unique keys only. */
-  def q132StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = Tables.eventsRaw(spark, sfDir)
-    val tsEventTime =
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else col("ts").cast("timestamp")
-    graft.TempDirs.withEphemeral("graft_q132_") { tmp =>
-      val outDir = tmp.resolve("out").toString
-      val cpDir = tmp.resolve("cp").toString
-      val deduped = spark.readStream.schema(raw.schema)
-        .parquet(s"$sfDir/[e]vents.parquet")
-        .select(date_trunc("hour", tsEventTime).as("hour"),
+  def q132StreamDedup(spark: SparkSession, sfDir: String): DataFrame =
+    boundedStream(spark, sfDir, "q132") { (events, eventTime) =>
+      events()
+        .select(date_trunc("hour", eventTime).as("hour"),
           col("user_id"), col("event_type"))
         .withWatermark("hour", "2 hours")
         .dropDuplicates("user_id", "event_type", "hour")
-      deduped.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", cpDir)
-        .outputMode("append").trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-      graft.Checkpoints.materialize(spark.read.parquet(outDir)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_unique"),
-          countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("event_type")))
-    }
-  }
+    }(_.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_unique"),
+        countDistinct(col("user_id")).as("n_users"))
+      .orderBy(col("event_type")))
 
   val q132Sql: String =
     """WITH d AS (
@@ -234,36 +215,19 @@ object StreamBatchQueries {
     * match the moment both sides are present — in the availableNow
     * single-batch drain nothing is watermark-suppressed, so the oracle
     * is the plain batch interval join with no cutoff arithmetic. */
-  def q142StreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = Tables.eventsRaw(spark, sfDir)
-    def ts(c: Column): Column =
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else c.cast("timestamp")
-    graft.TempDirs.withEphemeral("graft_q142_") { tmp =>
-      val outDir = tmp.resolve("out").toString
-      val cpDir = tmp.resolve("cp").toString
-      def src(): DataFrame =
-        spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
-      val errors = src().filter(col("event_type") === "error")
-        .select(col("user_id"), ts(col("ts")).as("ets"), col("event_id").as("eid"))
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user_id"), ts(col("ts")).as("cts"),
+  def q142StreamJoin(spark: SparkSession, sfDir: String): DataFrame =
+    boundedStream(spark, sfDir, "q142") { (events, eventTime) =>
+      val errors = events().filter(col("event_type") === "error")
+        .select(col("user_id"), eventTime.as("ets"), col("event_id").as("eid"))
+      val clicks = events().filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user_id"), eventTime.as("cts"),
           col("event_id").as("cid"))
       graft.streaming.StreamingWindows.recentClickJoin(errors, clicks)
         .select(col("user_id"), col("eid"), col("cid"))
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", cpDir)
-        .outputMode("append").trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-      graft.Checkpoints.materialize(spark.read.parquet(outDir)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_pairs"),
-          countDistinct(col("eid")).as("n_errors_with_click"))
-        .orderBy(col("user_id")))
-    }
-  }
+    }(_.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_pairs"),
+        countDistinct(col("eid")).as("n_errors_with_click"))
+      .orderBy(col("user_id")))
 
   val q142Sql: String =
     """WITH er AS (
@@ -307,28 +271,15 @@ object StreamBatchQueries {
     * tiny aggregate on (type, prev window) and ranks inside each
     * window partition. */
   def q172StreamTrending(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = Tables.eventsRaw(spark, sfDir)
-    val tsEventTime =
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else col("ts").cast("timestamp")
-    val sink = graft.TempDirs.withEphemeral("graft_q172_") { tmp =>
-      val outDir = tmp.resolve("out").toString
-      val cpDir = tmp.resolve("cp").toString
-      val agg = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
-        .select(tsEventTime.as("ts"), col("event_type"))
+    val sink = boundedStream(spark, sfDir, "q172") { (events, eventTime) =>
+      events()
+        .select(eventTime.as("ts"), col("event_type"))
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .select(unix_micros(col("window.start")).as("ws"),
           col("event_type"), col("n_events"))
-      agg.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", cpDir)
-        .outputMode("append").trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-      graft.Checkpoints.materialize(spark.read.parquet(outDir))
-    }
+    }(identity)
     val prev = sink.select((col("ws") + TrendWindowUs).as("ws"),
       col("event_type"), col("n_events").as("prev_n"))
     val w = Window.partitionBy(col("ws"))
@@ -399,38 +350,23 @@ object StreamBatchQueries {
     * (closed sessions are emitted and replaced, idle users evicted on
     * timeout), so an unending 100 TB stream holds O(active users)
     * state, never O(history). */
-  def q302StateSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val raw = Tables.eventsRaw(spark, sfDir)
-    val tsEventTime =
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000"))
-      else col("ts").cast("timestamp")
-    graft.TempDirs.withEphemeral("graft_q302_") { tmp =>
-      val outDir = tmp.resolve("out").toString
-      val cpDir = tmp.resolve("cp").toString
-      val src = spark.readStream.schema(raw.schema).parquet(s"$sfDir/[e]vents.parquet")
+  def q302StateSessions(spark: SparkSession, sfDir: String): DataFrame =
+    boundedStream(spark, sfDir, "q302") { (events, eventTime) =>
+      val src = events()
         .select(col("user_id").as("userId"),
-          unix_micros(tsEventTime).as("tsUs"),
+          unix_micros(eventTime).as("tsUs"),
           floor(col("value") * lit(1e6) + lit(0.5)).cast("double").as("value"))
       val sp = spark
       import sp.implicits._
       val sess = graft.streaming.StreamingWindows.sessionize(
         src.as[graft.streaming.StreamingWindows.Event],
         gapMin = 30, watermarkDelay = "2 hours")
-      val out = sess.toDF().select(col("userId").as("user_id"),
+      sess.toDF().select(col("userId").as("user_id"),
         col("startUs").as("session_start_us"),
         col("endUs").as("session_end_us"),
         col("nEvents").as("n_events"),
         col("total").cast("long").as("value_micros"))
-      out.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", cpDir)
-        .outputMode("append").trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-      graft.Checkpoints.materialize(spark.read.parquet(outDir)
-        .orderBy(col("user_id"), col("session_start_us")))
-    }
-  }
+    }(_.orderBy(col("user_id"), col("session_start_us")))
 
   val q302Sql: String =
     s"""WITH ev AS (

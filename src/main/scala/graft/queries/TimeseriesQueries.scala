@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.{MathFunctions => MF}
-import graft.functions.MathFunctions.{asD, dec12, dsum}
+import graft.functions.MathFunctions.{asD, dec12, dsum, grid6}
 
 /** Time-series analytics (SURVEY §2.B timeseries family, split out
   * of RelationalQueries in r9): anomaly scoring (q63), change points
@@ -107,6 +107,46 @@ object TimeseriesQueries {
       |ORDER BY user_id""".stripMargin
 
   // ---------------------------------------------------------------- q85
+  /** (event_type, day, hr, c): event counts per type, UTC day and hour
+    * of day — pure integer division on the nanosecond ts, no calendar
+    * functions, no timezone surface. */
+  private[graft] def hourlyCounts(events: DataFrame): DataFrame =
+    events
+      .select(col("event_type"), expr("ts div 86400000000000").as("day"),
+        expr("(ts div 3600000000000) % 24").as("hr"))
+      .groupBy(col("event_type"), col("day"), col("hr"))
+      .agg(count(lit(1)).as("c"))
+
+  /** The (type, day) × 24-hour grid of [[hourlyCounts]]: every hour of
+    * each (event_type, day) that has an event, its count (0 for an
+    * hour without events) in column `cnt`. Materializing `hourly` is
+    * the caller's choice. */
+  private[graft] def hourlyCells(hourly: DataFrame, cnt: String): DataFrame = {
+    val grid = hourly.select(col("event_type"), col("day")).distinct()
+      .select(col("event_type"), col("day"),
+        explode(sequence(lit(0L), lit(23L))).as("hr"))
+    grid.join(hourly, Seq("event_type", "day", "hr"), "left")
+      .select(col("event_type"), col("day"), col("hr"),
+        coalesce(col("c"), lit(0L)).as(cnt))
+  }
+
+  /** Twin of [[hourlyCells]] over [[hourlyCounts]]: CTEs `hourly` and
+    * `grid`, then `x(event_type, day, hr, cnt)`; `as` is `AS` or
+    * `AS MATERIALIZED` for `hourly` and `x`. */
+  private def hourlyCellCtes(as: String): String =
+    s"""hourly $as (
+  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+    (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hr, count(*) AS c
+  FROM events GROUP BY 1, 2, 3),
+grid AS (
+  SELECT event_type, day, CAST(h AS BIGINT) AS hr
+  FROM (SELECT DISTINCT event_type, day FROM hourly)
+  CROSS JOIN (SELECT unnest(range(0, 24)) AS h)),
+x $as (
+  SELECT g.event_type, g.day, g.hr, coalesce(h.c, 0) AS cnt
+  FROM grid g LEFT JOIN hourly h
+    ON g.event_type = h.event_type AND g.day = h.day AND g.hr = h.hr)"""
+
   /** Spike rule: an hour whose count exceeds 4× the smoothed history,
     * evaluated from hour 3 on (the smoother needs a short warm-up). */
   val EwmaSpikeFactor = 4L
@@ -127,17 +167,7 @@ object TimeseriesQueries {
     * Hour index is pure integer division on the nanosecond ts — no
     * calendar functions, no timezone surface. */
   def q85Ewma(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = Tables.events(spark, sfDir)
-      .select(col("event_type"), expr("ts div 86400000000000").as("day"),
-        expr("(ts div 3600000000000) % 24").as("hr"))
-      .groupBy(col("event_type"), col("day"), col("hr"))
-      .agg(count(lit(1)).as("c"))
-    val grid = hourly.select(col("event_type"), col("day")).distinct()
-      .select(col("event_type"), col("day"),
-        explode(sequence(lit(0L), lit(23L))).as("hr"))
-    val x = grid.join(hourly, Seq("event_type", "day", "hr"), "left")
-      .select(col("event_type"), col("day"), col("hr"),
-        coalesce(col("c"), lit(0L)).as("cnt"))
+    val x = hourlyCells(hourlyCounts(Tables.events(spark, sfDir)), "cnt")
     val u = when(col("hr") === 0, col("cnt"))
       .otherwise(col("cnt") * expr("shiftleft(1L, cast(hr - 1 as int))"))
     val byDay = Window.partitionBy(col("event_type"), col("day"))
@@ -153,18 +183,7 @@ object TimeseriesQueries {
   }
 
   val q85Sql: String =
-    s"""WITH hourly AS (
-      |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-      |    (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hr, count(*) AS c
-      |  FROM events GROUP BY 1, 2, 3),
-      |grid AS (
-      |  SELECT event_type, day, CAST(h AS BIGINT) AS hr
-      |  FROM (SELECT DISTINCT event_type, day FROM hourly)
-      |  CROSS JOIN (SELECT unnest(range(0, 24)) AS h)),
-      |x AS (
-      |  SELECT g.event_type, g.day, g.hr, coalesce(h.c, 0) AS cnt
-      |  FROM grid g LEFT JOIN hourly h
-      |    ON g.event_type = h.event_type AND g.day = h.day AND g.hr = h.hr),
+    s"""WITH ${hourlyCellCtes("AS")},
       |scaled AS (
       |  SELECT event_type, day, hr, cnt,
       |    (CASE WHEN hr = 0 THEN cnt ELSE cnt * (1::BIGINT << CAST(hr - 1 AS INT)) END) AS u
@@ -254,17 +273,7 @@ object TimeseriesQueries {
     * (the only corpus-scale exchange), then per-type frames of 24·D
     * rows; output is |types| rows. */
   def q121Seasonality(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = Tables.events(spark, sfDir)
-      .select(col("event_type"), expr("ts div 86400000000000").as("day"),
-        expr("(ts div 3600000000000) % 24").as("hr"))
-      .groupBy(col("event_type"), col("day"), col("hr"))
-      .agg(count(lit(1)).as("c"))
-    val grid = hourly.select(col("event_type"), col("day")).distinct()
-      .select(col("event_type"), col("day"),
-        explode(sequence(lit(0L), lit(23L))).as("hr"))
-    val cells = grid.join(hourly, Seq("event_type", "day", "hr"), "left")
-      .select(col("event_type"), col("day"), col("hr"),
-        coalesce(col("c"), lit(0L)).as("c"))
+    val cells = hourlyCells(hourlyCounts(Tables.events(spark, sfDir)), "c")
     val byHour = cells.groupBy(col("event_type"), col("hr"))
       .agg(sum(col("c")).as("sh"), count(lit(1)).as("d"),
         sum(col("c") * col("c")).as("qh"))
@@ -755,13 +764,12 @@ object TimeseriesQueries {
       .withColumn("hod", pmod(col("h"), lit(24L)))
     val seasonal = trended.groupBy(col("hod"))
       .agg(round(avg(col("det")), 6).as("seasonal"), count(lit(1)).as("n_obs"))
-    def gq(c: Column) = round(c, 6).cast(DecimalType(38, 6))
     val stats = trended.join(broadcast(seasonal), "hod")
       .withColumn("resid", col("det") - col("seasonal"))
-      .agg(count(lit(1)).as("n"), sum(gq(col("det"))).cast("double").as("sd"),
-        sum(gq(col("det") * col("det"))).cast("double").as("sdd"),
-        sum(gq(col("resid"))).cast("double").as("sr"),
-        sum(gq(col("resid") * col("resid"))).cast("double").as("srr"))
+      .agg(count(lit(1)).as("n"), sum(grid6(col("det"))).cast("double").as("sd"),
+        sum(grid6(col("det") * col("det"))).cast("double").as("sdd"),
+        sum(grid6(col("resid"))).cast("double").as("sr"),
+        sum(grid6(col("resid") * col("resid"))).cast("double").as("srr"))
       .select(
         round((col("sdd") - col("sd") * col("sd") / col("n")) / col("n"), 6)
           .as("var_detrended"),
@@ -1104,7 +1112,7 @@ object TimeseriesQueries {
   def q248MannKendall(spark: SparkSession, sfDir: String): DataFrame = {
     val hourly = graft.Checkpoints.materialize(Tables.events(spark, sfDir, spreadScan = true)
       .groupBy(col("event_type"), expr("ts div 3600000000000").as("h"))
-      .agg(round(sum(round(col("value"), 6).cast(DecimalType(38, 6)))
+      .agg(round(sum(grid6(col("value")))
         .cast("double"), 6).as("v")))
     val b = hourly.select(col("event_type").as("tb"),
       col("h").as("hb"), col("v").as("vb"))
@@ -1208,7 +1216,7 @@ object TimeseriesQueries {
   def q253Cusum(spark: SparkSession, sfDir: String): DataFrame = {
     val hourly = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
       .groupBy(col("event_type"), expr("ts div 3600000000000").as("h"))
-      .agg(round(sum(round(col("value"), 6).cast(DecimalType(38, 6)))
+      .agg(round(sum(grid6(col("value")))
         .cast("double") / count(lit(1)), 6).as("m")))
     val sd = sqrt((col("n") * col("smm") - col("sm") * col("sm"))
       / (col("n").cast("double") * col("n")))
@@ -1399,17 +1407,7 @@ object TimeseriesQueries {
     * the hourly partial-agg; the grid/windows run on (types×days×24)
     * rows, partitioned by (type, day). */
   def q277DoubleSmoothing(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = Tables.events(spark, sfDir)
-      .select(col("event_type"), expr("ts div 86400000000000").as("day"),
-        expr("(ts div 3600000000000) % 24").as("hr"))
-      .groupBy(col("event_type"), col("day"), col("hr"))
-      .agg(count(lit(1)).as("c"))
-    val grid = hourly.select(col("event_type"), col("day")).distinct()
-      .select(col("event_type"), col("day"),
-        explode(sequence(lit(0L), lit(23L))).as("hr"))
-    val x = grid.join(hourly, Seq("event_type", "day", "hr"), "left")
-      .select(col("event_type"), col("day"), col("hr"),
-        coalesce(col("c"), lit(0L)).as("cnt"))
+    val x = hourlyCells(hourlyCounts(Tables.events(spark, sfDir)), "cnt")
     val w = Window.partitionBy(col("event_type"), col("day"))
       .orderBy(col("hr")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val u = when(col("hr") === 0, col("cnt"))
@@ -1433,18 +1431,7 @@ object TimeseriesQueries {
   }
 
   val q277Sql: String =
-    s"""WITH hourly AS (
-      |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-      |    (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hr, count(*) AS c
-      |  FROM events GROUP BY 1, 2, 3),
-      |grid AS (
-      |  SELECT event_type, day, CAST(h AS BIGINT) AS hr
-      |  FROM (SELECT DISTINCT event_type, day FROM hourly)
-      |  CROSS JOIN (SELECT unnest(range(0, 24)) AS h)),
-      |x AS (
-      |  SELECT g.event_type, g.day, g.hr, coalesce(h.c, 0) AS cnt
-      |  FROM grid g LEFT JOIN hourly h
-      |    ON g.event_type = h.event_type AND g.day = h.day AND g.hr = h.hr),
+    s"""WITH ${hourlyCellCtes("AS")},
       |s1f AS (
       |  SELECT event_type, day, hr, cnt,
       |    first_value(cnt) OVER w AS x0,
@@ -1546,7 +1533,7 @@ object TimeseriesQueries {
     val pw = sums.select(col("event_type"), col("k"),
       (col("cs") * col("cs") + col("ss") * col("ss")).as("power"))
     pw.withColumn("total",
-        sum(round(col("power"), 6).cast(DecimalType(38, 6)))
+        sum(grid6(col("power")))
           .over(Window.partitionBy(col("event_type"))).cast("double"))
       .select(col("event_type"), col("k"),
         (lit(24.0) / col("k")).cast("int").as("period_h"),
@@ -1602,18 +1589,8 @@ FROM pw ORDER BY event_type, k"""
     * (types×days×24) grid, the seasonal join is (day−1, hr+1) against
     * the same gridded frame, error sums 12dp-gridded DECIMAL. */
   def q296ForecastEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
-      .select(col("event_type"), expr("ts div 86400000000000").as("day"),
-        expr("(ts div 3600000000000) % 24").as("hr"))
-      .groupBy(col("event_type"), col("day"), col("hr"))
-      .agg(count(lit(1)).as("c")))
-    val grid = hourly.select(col("event_type"), col("day")).distinct()
-      .select(col("event_type"), col("day"),
-        explode(sequence(lit(0L), lit(23L))).as("hr"))
-    val x = graft.Checkpoints.materialize(
-      grid.join(hourly, Seq("event_type", "day", "hr"), "left")
-        .select(col("event_type"), col("day"), col("hr"),
-          coalesce(col("c"), lit(0L)).as("cnt")))
+    val x = graft.Checkpoints.materialize(hourlyCells(
+      graft.Checkpoints.materialize(hourlyCounts(Tables.events(spark, sfDir))), "cnt"))
     val w = Window.partitionBy(col("event_type"), col("day"))
       .orderBy(col("hr")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val u = when(col("hr") === 0, col("cnt"))
@@ -1649,18 +1626,7 @@ FROM pw ORDER BY event_type, k"""
   }
 
   val q296Sql: String =
-    """WITH hourly AS MATERIALIZED (
-  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hr, count(*) AS c
-  FROM events GROUP BY 1, 2, 3),
-grid AS (
-  SELECT event_type, day, CAST(h AS BIGINT) AS hr
-  FROM (SELECT DISTINCT event_type, day FROM hourly)
-  CROSS JOIN (SELECT unnest(range(0, 24)) AS h)),
-x AS MATERIALIZED (
-  SELECT g.event_type, g.day, g.hr, coalesce(h.c, 0) AS cnt
-  FROM grid g LEFT JOIN hourly h
-    ON g.event_type = h.event_type AND g.day = h.day AND g.hr = h.hr),
+    s"""WITH ${hourlyCellCtes("AS MATERIALIZED")},
 s1f AS (
   SELECT event_type, day, hr, cnt,
     first_value(cnt) OVER w AS x0,
@@ -1834,17 +1800,8 @@ FROM agg"""
     * pivot (deterministic — no ordered string agg), and the motif
     * count is one tiny self-aggregate. */
   def q301Sax(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = graft.Checkpoints.materialize(Tables.events(spark, sfDir)
-      .select(col("event_type"), expr("ts div 86400000000000").as("day"),
-        expr("(ts div 3600000000000) % 24").as("hr"))
-      .groupBy(col("event_type"), col("day"), col("hr"))
-      .agg(count(lit(1)).as("c")))
-    val grid = hourly.select(col("event_type"), col("day")).distinct()
-      .select(col("event_type"), col("day"),
-        explode(sequence(lit(0L), lit(23L))).as("hr"))
-    val x = grid.join(hourly, Seq("event_type", "day", "hr"), "left")
-      .select(col("event_type"), col("day"), col("hr"),
-        coalesce(col("c"), lit(0L)).as("cnt"))
+    val x = hourlyCells(
+      graft.Checkpoints.materialize(hourlyCounts(Tables.events(spark, sfDir))), "cnt")
     val mom = x.groupBy(col("event_type"), col("day"))
       .agg((sum(col("cnt")).cast("double") / 24).as("mu"),
         (sum(col("cnt") * col("cnt")).cast("double") / 24).as("m2"))
@@ -1883,18 +1840,7 @@ FROM agg"""
       .map(i => s"max(CASE WHEN seg = $i THEN ${sym("zseg")} END) AS s$i")
       .mkString(", ")
     val wordcat = (0 until SaxSegments).map(i => s"s$i").mkString(" || ")
-    s"""WITH hourly AS MATERIALIZED (
-  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-    (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hr, count(*) AS c
-  FROM events GROUP BY 1, 2, 3),
-grid AS (
-  SELECT event_type, day, CAST(h AS BIGINT) AS hr
-  FROM (SELECT DISTINCT event_type, day FROM hourly)
-  CROSS JOIN (SELECT unnest(range(0, 24)) AS h)),
-x AS MATERIALIZED (
-  SELECT g.event_type, g.day, g.hr, coalesce(h.c, 0) AS cnt
-  FROM grid g LEFT JOIN hourly h
-    ON g.event_type = h.event_type AND g.day = h.day AND g.hr = h.hr),
+    s"""WITH ${hourlyCellCtes("AS MATERIALIZED")},
 mom AS MATERIALIZED (
   SELECT event_type, day,
     CAST(sum(cnt) AS DOUBLE) / 24 AS mu,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.MathFunctions.{asD, dsum}
+import graft.functions.MathFunctions.{asD, dsum, grid6}
 
 /** Windowed / session analytics (SURVEY §2.B window family, split out
   * of RelationalQueries in r9): ranking windows (q14), sessionization
@@ -184,6 +184,47 @@ object WindowQueries {
       |FROM exp GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   // ---------------------------------------------------------------- q96
+  /** Events with their session's consecutive event pairs: a session
+    * ends at a gap of more than 30 min between a user's consecutive
+    * events, ordered by (ts_us, event_id); `to_type` is the next event
+    * type in the same session, and a session's last event is dropped.
+    * The event_id tiebreaker (r9): µs-truncated timestamps CAN tie
+    * within a user at corpus scale, and lag/lead over a tied order is
+    * engine-nondeterministic; (ts_us, event_id) is total on both sides.
+    * Read by q96, q223 and q259. */
+  private[graft] def sessionTransitions(events: DataFrame): DataFrame = {
+    val byUser = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts_us"), col("event_id"))
+    val bySess = Window.partitionBy(col("user_id"), col("session_id"))
+      .orderBy(col("ts_us"), col("event_id"))
+    events
+      .select(col("user_id"), expr("ts div 1000").as("ts_us"), col("event_type"),
+        col("event_id"))
+      .withColumn("prev_us", lag(col("ts_us"), 1).over(byUser))
+      .withColumn("new_session",
+        when(col("prev_us").isNull ||
+          col("ts_us") - col("prev_us") > 30L * 60 * 1000000, 1).otherwise(0))
+      .withColumn("session_id", sum(col("new_session")).over(byUser))
+      .withColumn("to_type", lead(col("event_type"), 1).over(bySess))
+      .filter(col("to_type").isNotNull)
+  }
+
+  /** Twin of [[sessionTransitions]] up to the session ids: CTEs
+    * `flagged` and `sess(user_id, ts_us, event_type, event_id,
+    * session_id)` over an `ev(user_id, ts_us, event_type, event_id)`
+    * CTE. */
+  private val sessionCtes: String =
+    """flagged AS (
+  SELECT user_id, ts_us, event_type, event_id,
+    CASE WHEN lag(ts_us) OVER w IS NULL
+           OR ts_us - lag(ts_us) OVER w > 30 * 60 * 1000000
+         THEN 1 ELSE 0 END AS new_session
+  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
+sess AS (
+  SELECT user_id, ts_us, event_type, event_id,
+    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS BIGINT) AS session_id
+  FROM flagged)"""
+
   /** In-session event-type transition matrix (first-order Markov
     * chain) — the path-analysis operator over q15's sessions: within
     * each session (same >30-min gap rule), consecutive events form
@@ -198,23 +239,7 @@ object WindowQueries {
     * pairing); transitions partial-agg to a types² frame before the
     * final tiny aggregation. */
   def q96Transitions(spark: SparkSession, sfDir: String): DataFrame = {
-    // event_id tiebreaker (r9): µs-truncated timestamps CAN tie within
-    // a user at corpus scale, and lag/lead over a tied order is
-    // engine-nondeterministic; (ts_us, event_id) is total on both sides
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val bySess = Window.partitionBy(col("user_id"), col("session_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val trans = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("ts div 1000").as("ts_us"), col("event_type"),
-        col("event_id"))
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_us").isNull ||
-          col("ts_us") - col("prev_us") > 30L * 60 * 1000000, 1).otherwise(0))
-      .withColumn("session_id", sum(col("new_session")).over(byUser))
-      .withColumn("to_type", lead(col("event_type"), 1).over(bySess))
-      .filter(col("to_type").isNotNull)
+    val trans = sessionTransitions(Tables.events(spark, sfDir))
       .groupBy(col("event_type").as("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
     val totals = Window.partitionBy(col("from_type"))
@@ -225,18 +250,9 @@ object WindowQueries {
   }
 
   val q96Sql: String =
-    """WITH ev AS (
+    s"""WITH ev AS (
   SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_type, event_id FROM events),
-flagged AS (
-  SELECT user_id, ts_us, event_type, event_id,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-           OR ts_us - lag(ts_us) OVER w > 30 * 60 * 1000000
-         THEN 1 ELSE 0 END AS new_session
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-sess AS (
-  SELECT user_id, ts_us, event_type, event_id,
-    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS BIGINT) AS session_id
-  FROM flagged),
+$sessionCtes,
 trans AS (
   SELECT event_type AS from_type,
     lead(event_type) OVER (PARTITION BY user_id, session_id ORDER BY ts_us, event_id) AS to_type
@@ -262,21 +278,7 @@ FROM cnt ORDER BY from_type, to_type"""
     * scores are 1e-6-gridded log terms decimal-summed (q81's
     * discipline); output is one row per user with ≥1 transition. */
   def q223PathPerplexity(spark: SparkSession, sfDir: String): DataFrame = {
-    // (ts_us, event_id) total order — the q96 tiebreaker discipline
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val bySess = Window.partitionBy(col("user_id"), col("session_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val trans = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("ts div 1000").as("ts_us"), col("event_type"),
-        col("event_id"))
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_us").isNull ||
-          col("ts_us") - col("prev_us") > 30L * 60 * 1000000, 1).otherwise(0))
-      .withColumn("session_id", sum(col("new_session")).over(byUser))
-      .withColumn("to_type", lead(col("event_type"), 1).over(bySess))
-      .filter(col("to_type").isNotNull)
+    val trans = sessionTransitions(Tables.events(spark, sfDir))
       .select(col("user_id"), col("event_type").as("from_type"), col("to_type"))
     val counts = trans.groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
@@ -286,8 +288,7 @@ FROM cnt ORDER BY from_type, to_type"""
     val model = counts.join(fromTotals, "from_type")
       .crossJoin(broadcast(nTypes))
       .select(col("from_type"), col("to_type"),
-        round(log((col("n") + 1L).cast("double") / (col("tot") + col("t")).cast("double")), 6)
-          .cast(DecimalType(38, 6)).as("logp"))
+        grid6(log((col("n") + 1L).cast("double") / (col("tot") + col("t")).cast("double"))).as("logp"))
     trans.join(broadcast(model), Seq("from_type", "to_type"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_trans"),
@@ -299,18 +300,9 @@ FROM cnt ORDER BY from_type, to_type"""
   }
 
   val q223Sql: String =
-    """WITH ev AS (
+    s"""WITH ev AS (
   SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_type, event_id FROM events),
-flagged AS (
-  SELECT user_id, ts_us, event_type, event_id,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-           OR ts_us - lag(ts_us) OVER w > 30 * 60 * 1000000
-         THEN 1 ELSE 0 END AS new_session
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-sess AS (
-  SELECT user_id, ts_us, event_type, event_id,
-    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS BIGINT) AS session_id
-  FROM flagged),
+$sessionCtes,
 trans AS MATERIALIZED (
   SELECT user_id, from_type, to_type FROM (
     SELECT user_id, event_type AS from_type,
@@ -756,20 +748,7 @@ FROM scored ORDER BY user_id""".stripMargin
     * window pass; everything after — P, π rounds, row entropies, H —
     * runs on ≤ 25 rows with 12-dp-gridded DECIMAL sums. */
   def q259EntropyRate(spark: SparkSession, sfDir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val bySess = Window.partitionBy(col("user_id"), col("session_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val cnt = Tables.events(spark, sfDir)
-      .select(col("user_id"), expr("ts div 1000").as("ts_us"),
-        col("event_type"), col("event_id"))
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_us").isNull ||
-          col("ts_us") - col("prev_us") > 30L * 60 * 1000000, 1).otherwise(0))
-      .withColumn("session_id", sum(col("new_session")).over(byUser))
-      .withColumn("to_type", lead(col("event_type"), 1).over(bySess))
-      .filter(col("to_type").isNotNull)
+    val cnt = sessionTransitions(Tables.events(spark, sfDir))
       .groupBy(col("event_type").as("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
     val rowtot = Window.partitionBy(col("from_type"))
@@ -813,16 +792,7 @@ pi$i AS (
     s"""WITH ev AS (
   SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_type, event_id
   FROM events),
-flagged AS (
-  SELECT user_id, ts_us, event_type, event_id,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-           OR ts_us - lag(ts_us) OVER w > 30 * 60 * 1000000
-         THEN 1 ELSE 0 END AS new_session
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-sess AS (
-  SELECT user_id, ts_us, event_type, event_id,
-    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS BIGINT) AS session_id
-  FROM flagged),
+$sessionCtes,
 pairs AS (
   SELECT event_type AS from_type,
     lead(event_type) OVER (PARTITION BY user_id, session_id ORDER BY ts_us, event_id) AS to_type

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.{MathFunctions => MF}
+import graft.functions.MathFunctions.grid6
 import graft.oracle.Sql
 
 /** Feature-engineering operators for LLM training pipelines (SURVEY
@@ -274,8 +275,7 @@ object FeatureQueries {
       .select(explode(split(col("text"), " ")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
     val weighted = counts.select(col("term"), col("cnt"),
-      round(pow(col("cnt").cast("double"), 0.75), 6)
-        .cast(DecimalType(38, 6)).as("w"))
+      grid6(pow(col("cnt").cast("double"), 0.75)).as("w"))
     val win = Window.orderBy(col("term"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val total = weighted.agg(sum(col("w")).cast("double").as("wtot"))

@@ -33,6 +33,17 @@ class StreamBatchEquivSpec extends GraftSpec {
     got.zip(want).foreach { case (g, w) => assert(g == w, s"$g vs $w") }
   }
 
+  test("boundedStream runs a stateless plan to the end of the file and reads the sink back") {
+    val got = StreamBatchQueries.boundedStream(spark, sfDir, "spec") { (events, eventTime) =>
+      events().select(eventTime.as("ts"), col("event_type"))
+    }(_.groupBy(col("event_type")).agg(count(lit(1)).as("n")).orderBy(col("event_type")))
+      .collect().toSeq
+    val want = Tables.events(spark, sfDir)
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n")).orderBy(col("event_type"))
+      .collect().toSeq
+    assert(got.nonEmpty && got == want)
+  }
+
   test("q98 withholds only the windows inside the delay horizon (vs full q16)") {
     val full = WindowQueries.q16TumblingWindow(spark, sfDir).count()
     val emitted = StreamBatchQueries.q98StreamWindow(spark, sfDir).count()

@@ -4,10 +4,18 @@ parquet schema (column names, types, nullability) and the rows in
 stored order (part files in name order, rows in file order) must be
 equal. Floats compare exactly (NaN equals NaN).
 
+The oracle SQL of each key in the two `oracle_sql.json` files is
+compared too: identical, whitespace-only different (equal once every
+run of whitespace is one space and the ends are trimmed), or different.
+
 Usage: compare_dumps.py <parentDir> <changeDir> [key ...]
-Prints one line per differing key, then `== N same, M differ ==`;
-exits non-zero on any difference."""
+Prints one line per differing key, then `== N same, M differ ==`; then
+one line per key whose oracle SQL is not identical (`[SQL-WS]` or
+`[SQL-DIFF]`), then `== oracle sql: N identical, M whitespace-only,
+K different ==`. Exits non-zero on any parquet difference or any
+different oracle SQL."""
 import glob
+import json
 import os
 import sys
 
@@ -59,6 +67,48 @@ def compare(con, a_dir, b_dir, key):
     return None
 
 
+def oracle_sql(out_dir):
+    """{key: sql} of the dump's oracle_sql.json, or None when absent."""
+    path = os.path.join(out_dir, "oracle_sql.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def sql_kind(a, b):
+    """'identical', 'whitespace' or 'different' for two SQL texts (None
+    = the key is missing on that side)."""
+    if a is None or b is None:
+        return "different"
+    if a == b:
+        return "identical"
+    if " ".join(a.split()) == " ".join(b.split()):
+        return "whitespace"
+    return "different"
+
+
+def compare_sql(a_dir, b_dir, wanted):
+    """Prints the oracle SQL comparison; returns the count of keys whose
+    text is different."""
+    sa, sb = oracle_sql(a_dir), oracle_sql(b_dir)
+    if sa is None and sb is None:
+        print("== oracle sql: no oracle_sql.json on either side ==")
+        return 0
+    sa, sb = sa or {}, sb or {}
+    counts = {"identical": 0, "whitespace": 0, "different": 0}
+    for key in wanted or sorted(set(sa) | set(sb)):
+        kind = sql_kind(sa.get(key), sb.get(key))
+        counts[kind] += 1
+        if kind == "whitespace":
+            print("[SQL-WS] %s" % key)
+        elif kind == "different":
+            print("[SQL-DIFF] %s" % key)
+    print("== oracle sql: %d identical, %d whitespace-only, %d different =="
+          % (counts["identical"], counts["whitespace"], counts["different"]))
+    return counts["different"]
+
+
 def main():
     if len(sys.argv) < 3:
         sys.exit(__doc__)
@@ -74,7 +124,8 @@ def main():
             differ += 1
             print("[DIFF] %s: %s" % (key, why))
     print("== %d same, %d differ ==" % (same, differ))
-    sys.exit(1 if differ else 0)
+    sql_differ = compare_sql(a_dir, b_dir, sys.argv[3:])
+    sys.exit(1 if differ or sql_differ else 0)
 
 
 if __name__ == "__main__":
